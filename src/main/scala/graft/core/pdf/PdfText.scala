@@ -32,10 +32,12 @@ object PdfText {
 
   /** %PDF- magic at offset 0 accepts immediately; a later match within the
     * first 1024 bytes (the spec permits junk before the header and readers
-    * scan for it) additionally requires a PDF structure marker
-    * (`stream`/`endobj`) somewhere in the payload — an HTML/text page
-    * merely MENTIONING "%PDF-" early must not be misrouted to the PDF
-    * parser and have its real content dropped (round-7 ADVICE).
+    * scan for it) additionally requires PDF structure — an `endobj`, or a
+    * `stream` keyword that follows a dictionary's `>>` and ends its line —
+    * within the first or last 64 KiB (`StructureWindow`). An HTML/text page
+    * merely MENTIONING "%PDF-" early (or saying "live streaming") must not
+    * be misrouted to the PDF parser and have its real content dropped, and
+    * the check costs O(window), not O(payload), on a multi-MB page.
     */
   def isPdf(bytes: Array[Byte]): Boolean = {
     if (bytes == null) return false
@@ -50,21 +52,33 @@ object PdfText {
       i += 1
     }
     if (!found) return false
-    // corroborate: real junk-prefixed PDFs carry object/stream structure
-    hasAscii(bytes, "endobj") || hasAscii(bytes, "stream")
+    // corroborate: real junk-prefixed PDFs carry object structure near
+    // both ends (the first objects follow the header, the trailer ends it)
+    val w = StructureWindow
+    hasStructure(java.util.Arrays.copyOfRange(bytes, 0, math.min(bytes.length, w))) ||
+      (bytes.length > w && hasStructure(
+        java.util.Arrays.copyOfRange(bytes, math.max(w, bytes.length - w), bytes.length)))
   }
 
-  private def hasAscii(bytes: Array[Byte], needle: String): Boolean = {
-    val m = needle.length
-    var i = 0
-    while (i + m <= bytes.length) {
-      var j = 0
-      while (j < m && bytes(i + j) == needle.charAt(j)) j += 1
-      if (j == m) return true
-      i += 1
+  /** Bytes searched for structure at each end of a late-magic payload. */
+  private val StructureWindow = 64 << 10
+
+  private def hasStructure(b: Array[Byte]): Boolean = {
+    if (indexOf(b, "endobj", 0) >= 0) return true
+    var k = indexOf(b, "stream", 0)
+    while (k >= 0) {
+      var j = k - 1
+      while (j >= 0 && isWhite(b(j))) j -= 1
+      val afterDict = j >= 1 && b(j) == '>' && b(j - 1) == '>'
+      val endsLine = k + 6 < b.length && (b(k + 6) == '\r' || b(k + 6) == '\n')
+      if (afterDict && endsLine) return true
+      k = indexOf(b, "stream", k + 6)
     }
     false
   }
+
+  @inline private def isWhite(b: Byte): Boolean =
+    b == ' ' || b == '\t' || b == '\r' || b == '\n' || b == '\f' || b == 0
 
   private val MaxStreams = 4096
   private val MaxInflatedPerStream = 16 << 20

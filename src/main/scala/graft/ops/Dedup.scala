@@ -823,13 +823,14 @@ object Dedup {
     * fingerprints its materialized strings in the broadcast projection.
     * A 64-bit collision between two distinct shared n-grams of one
     * (doc, eval) pair could in principle lower shared_ngrams by one —
-    * probability ~2⁻⁶⁴ per pair of shared n-grams, and the DuckDB oracle
-    * (which replays the same fingerprint arithmetic in hugeint) verifies
-    * exact equality on the gate corpora.
+    * probability ~2⁻⁶⁴ per pair of shared n-grams. The DuckDB oracle
+    * counts DISTINCT shared n-gram STRINGS, with no fingerprints, so
+    * matching it exactly on the gate corpora shows no such collision there.
     */
   def ngramContaminationAgainst(corpus: DataFrame, evalNgrams: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 13,
       minShared: Int = 1): DataFrame = {
+    require(n > 0, "n > 0")
     val evalFps = evalNgrams.select(col("eval_id"),
       graft.functions.GraftFunctions.fingerprint64(col("ngram")).as("fp"))
     corpus.select(col(idCol).cast("long").as("doc_id"),

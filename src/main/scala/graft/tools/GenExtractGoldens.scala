@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Regenerates the committed golden parquets for the extraction surfaces
@@ -26,14 +24,8 @@ object GenExtractGoldens {
     s"src/test/resources/golden/${name}_sf001.parquet"
 
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = if (args.nonEmpty) args(0) else ToolSession.sf("sf0.01")
+    val spark = ToolSession()
     surfaces.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val tmp = Files.createTempDirectory(s"golden_$name").toString

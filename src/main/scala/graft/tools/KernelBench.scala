@@ -58,55 +58,5 @@ object KernelBench {
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"extract-tables ON: ${sample.length / dt}%.0f docs/s single-thread (tables=$tabs)")
     }
-
-    // phase breakdown + cells/s on one thread (reference publishes
-    // 1M+ cells/s simple path, 100K+ cells/s island path — BASELINE.md)
-    var tParse = 0L
-    var tDetect = 0L
-    var tSerialize = 0L
-    var aParse = 0L
-    var aDetect = 0L
-    var aSerialize = 0L
-    var totalCells = 0L
-    var totalTables = 0L
-    val tid = Thread.currentThread().getId
-    def allocNow(): Long = tmx.getThreadAllocatedBytes(tid)
-    val cfg = graft.core.detect.DetectConfig()
-    val sample = pages.take(8000)
-    sample.foreach { html =>
-      var a0 = allocNow()
-      var t0 = System.nanoTime()
-      val page = graft.core.html.PageParser.parseBytes(html)
-      var t1 = System.nanoTime()
-      tParse += t1 - t0
-      aParse += allocNow() - a0
-      page.regions.foreach(r => totalCells += r.grid.size)
-      a0 = allocNow()
-      t0 = System.nanoTime()
-      val detected = Vector.newBuilder[graft.core.extract.DetectedTable]
-      var idx = 0
-      page.regions.foreach { region =>
-        val outcome = graft.core.detect.Cascade.detect(region.grid, region.kind, cfg)
-        outcome.tables.take(cfg.maxTablesPerSheet).foreach { hit =>
-          detected += graft.core.extract.DetectedTable(idx, region.kind, region.origin, outcome.methodUsed, hit)
-        }
-        idx += 1
-      }
-      val tabs = detected.result()
-      totalTables += tabs.size
-      t1 = System.nanoTime()
-      tDetect += t1 - t0
-      aDetect += allocNow() - a0
-      a0 = allocNow()
-      t0 = System.nanoTime()
-      val text = graft.core.extract.Extractor.canonicalText(page, tabs)
-      graft.core.extract.Extractor.sha256Hex(text)
-      t1 = System.nanoTime()
-      tSerialize += t1 - t0
-      aSerialize += allocNow() - a0
-    }
-    val tot = (tParse + tDetect + tSerialize) / 1e9
-    println(f"phases over ${sample.length} docs: parse=${tParse / 1e9}%.2fs detect=${tDetect / 1e9}%.2fs serialize=${tSerialize / 1e9}%.2fs alloc/doc: parse=${aParse / sample.length}%d B detect=${aDetect / sample.length}%d B serialize=${aSerialize / sample.length}%d B")
-    println(f"single-thread: ${sample.length / tot}%.0f docs/s, ${totalCells / tot}%.0f cells/s (grid cells=${totalCells}, tables=${totalTables})")
   }
 }

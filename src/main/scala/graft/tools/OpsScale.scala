@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Similarity}
@@ -16,23 +16,16 @@ import graft.ops.{Dedup, Similarity}
   *    salted sub-bucket fanout, candidate/verified pairs, wall — including
   *    a planted 5000-vector identical cluster that MUST trip the cap.
   *
-  * Usage: SPARK_GRAFT_AMP=10 sbt "runMain graft.tools.OpsScale [sfDir]"
+  * Usage: SPARK_GRAFT_AMPLIFY=10 sbt "runMain graft.tools.OpsScale [sfDir]"
   * Output: OPSSCALE lines (one per metric block) — recorded in the Bench
   * template's static context after a clean-window run.
   */
 object OpsScale {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val amp = sys.env.getOrElse("SPARK_GRAFT_AMP", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = if (args.nonEmpty) args(0) else ToolSession.sf("sf0.1")
+    val amp = sys.env.getOrElse("SPARK_GRAFT_AMPLIFY", "10").toInt
+    val spark = ToolSession()
     import spark.implicits._
 
     // ---- dup-heavy document corpus: AMP near-identical copies per doc ----

@@ -1,104 +1,32 @@
 package graft.tools
+
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+
+import graft.SparkEntry
+
+/** Writes `.explain("formatted")` of the named SparkEntry queries (no
+  * names = every query) to one markdown file, one section per query.
+  * Plans at sf0.001: the plan shape is the bench scale factors' while
+  * planning takes seconds. PlanShapeSpec pins the shapes that matter.
+  * Usage: runMain graft.tools.Plans <outFile> [names...]
+  */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sfDir = "/root/testdata/sf0.001"
-    val interesting = Seq("q_agg_pricing", "q_join_revenue", "q_window_first_order",
-      "q_dedup_exact", "q_dedup_keep", "q_semi_active_customers", "q_fingerprint",
-      "x_extract_pages", "q_dedup_minhash", "q_ann_topk", "q_ann_lsh", "q_ann_ivf",
-      "q_multimodal", "q_cube_volume", "q_ngram_jaccard", "q_extract_totals",
-      "q_token_counts", "x_extract_metrics", "q_dedup_cluster", "q_dedup_apply",
-      "q_lang_id", "q_dedup_cosine_cluster", "q_dedup_cosine_apply")
-    val sb = new StringBuilder
-    sb.append("# PLANS — physical plans of the headline queries (sf0.001, local[4])\n\n")
-    sb.append("Generated by `sbt \"runMain graft.tools.Plans\"`. What to look for:\n")
-    sb.append("- the extraction pipeline has AT MOST one exchange (the salted\n")
-    sb.append("  pre-parse repartition) before MapPartitions. The Auto skew mode\n")
-    sb.append("  picks between TWO plan variants, both asserted in PlanShapeSpec:\n")
-    sb.append("  a well-split input (>= numPartitions/2 input splits — the normal\n")
-    sb.append("  case for an Iceberg/parquet scan with bounded maxPartitionBytes)\n")
-    sb.append("  gets NO exchange (per-task bytes are already bounded by the scan\n")
-    sb.append("  and the P2 size cap, so an exchange would only move payload); a\n")
-    sb.append("  too-coarse input gets the salted (host, salt, size-bin) exchange.\n")
-    sb.append("- q_dedup_keep: ONE hash exchange on the text hash, NO broadcast\n")
-    sb.append("  (the loser set is unbounded at corpus scale), and column pruning\n")
-    sb.append("  drops `text` below the window exchange (PlanShapeSpec-pinned)\n")
-    sb.append("- q_ann_lsh: the (tbl, bucket, salt) candidate exchange carries NO\n")
-    sb.append("  vector column — embeddings only cross the wire on the id-keyed\n")
-    sb.append("  re-attach joins (PlanShapeSpec-pinned)\n")
-    sb.append("- dimension joins are BroadcastHashJoin, never SortMergeJoin\n")
-    sb.append("- aggregates are partial→final HashAggregate pairs (cube/rollup:\n")
-    sb.append("  Expand feeding ONE partial→final pair — one shuffle for all\n")
-    sb.append("  grouping sets)\n")
-    sb.append("- x_extract_metrics: the lineage rollup groups by the STABLE\n")
-    sb.append("  pmod(xxhash64(url), 32) bucket (partition-count-independent),\n")
-    sb.append("  one partial→final aggregate pair over the kernel output\n")
-    sb.append("- q_token_counts: regexp_extract_all in a codegen'd projection —\n")
-    sb.append("  no UDF, no exchange before the final ordering\n")
-    sb.append("- q_dedup_cluster: the printed plan is the FINAL labels select\n")
-    sb.append("  (each min-label-propagation round materializes, truncating the\n")
-    sb.append("  visible lineage); per-round shape = two key-equality hash joins\n")
-    sb.append("  + a groupBy(id) min — no broadcasts of unbounded sets. Round 5:\n")
-    sb.append("  `edges` and the pointer-jumping `prop` are themselves\n")
-    sb.append("  materialized (Materialize.iterative), so the upstream minhash\n")
-    sb.append("  candidate pipeline executes ONCE, not ~2x per round — the plan\n")
-    sb.append("  below starts from a Scan ExistingRDD instead of the replayed\n")
-    sb.append("  banding join\n")
-    sb.append("- q_lang_id / q_ngram_jaccard / q_ann_ivf: the classifier /\n")
-    sb.append("  jaccard / IVF assignment+probe stages are native doGenCode\n")
-    sb.append("  expressions (graft_lang_id, graft_ngram_jaccard,\n")
-    sb.append("  graft_ivf_nearest_cell, graft_ivf_probe_cells) inside codegen'd\n")
-    sb.append("  projections — NO DeserializeToObject anywhere in these plans\n")
-    sb.append("  (PlanShapeSpec-pinned); the IVF centroid matrix rides the plan\n")
-    sb.append("  as a reference object, not a broadcast closure\n")
-    sb.append("- round 6: operators return UNSORTED pair/label sets — no\n")
-    sb.append("  RangePartitioning exchange feeds any apply-path join (the\n")
-    sb.append("  orderBy in these plans sits at the query SURFACE, after the\n")
-    sb.append("  final anti-join; PlanShapeSpec pins the absence). The\n")
-    sb.append("  incremental-dedup plans signature the batch ONCE (the\n")
-    sb.append("  in-batch self-dedup re-bands precomputed signatures —\n")
-    sb.append("  graft_minhash_band_hashes without graft_minhash_sig), and an\n")
-    sb.append("  index-fed ingest plans NO signature computation at all\n")
-    sb.append("  (PlanShapeSpec-pinned on parquet-loaded MinhashIndex sides)\n")
-    sb.append("- round 7: q_contamination/q_decontaminate compute the corpus\n")
-    sb.append("  tokenization ONCE per doc — the size>=n guard lives inside the\n")
-    sb.append("  n-gram projection (round 6 showed the pushed-down filter\n")
-    sb.append("  re-inlining the split lambda: nodes (2)+(3) both computed it),\n")
-    sb.append("  so exactly one split(lower(...)) appears on the streamed side\n")
-    sb.append("  of the broadcast join (PlanShapeSpec-pinned).\n")
-    sb.append("- round 7: q_dedup_passages = ONE hash exchange keyed by the\n")
-    sb.append("  8-byte window fingerprint carrying (doc_id, pos, fp) scalars\n")
-    sb.append("  only — the window text never shuffles; the occurrence count is\n")
-    sb.append("  a window aggregate over that exchange. q_passage_apply adds\n")
-    sb.append("  the O(duplicated windows) doc-keyed aggregate + left-anti.\n")
-    sb.append("  q_gopher is a pure map-side projection chain (no exchange\n")
-    sb.append("  before the surface sort).\n")
-    sb.append("- round 7 late: q_dedup_lines/q_line_strip mirror the passage\n")
-    sb.append("  shape at line granularity — ONE hash exchange keyed by the\n")
-    sb.append("  8-byte line fingerprint carrying (doc_id, line_no, fp)\n")
-    sb.append("  scalars (one row per line, not per token position; the line\n")
-    sb.append("  text never shuffles). q_c4_clean is a pure map-side\n")
-    sb.append("  projection chain. q_freq_quality is the derive-then-apply\n")
-    sb.append("  pattern: the top-k vocabulary aggregate feeds a BROADCAST\n")
-    sb.append("  into the per-token scoring join, whose match counts\n")
-    sb.append("  partial-aggregate before the one doc-keyed exchange\n")
-    sb.append("  (PlanShapeSpec pins the broadcast).\n")
-    sb.append("- parquet scans show pruned ReadSchema\n\n")
-    val rest = graft.SparkEntry.queries.keys.toSeq.filterNot(interesting.contains).sorted
-    (interesting ++ rest).foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
+    require(args.nonEmpty, "usage: Plans <outFile> [query names...]")
+    val sfDir = ToolSession.sf("sf0.001")
+    val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val spark = ToolSession()
+    val sb = new StringBuilder(s"# Physical plans ($sfDir, local[${ToolSession.cpus}])\n\n")
+    names.foreach { name =>
       val out = new ByteArrayOutputStream()
-      Console.withOut(new PrintStream(out)) { df.explain("formatted") }
+      Console.withOut(new PrintStream(out)) {
+        SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      }
       sb.append(s"## $name\n\n```\n").append(out.toString.trim).append("\n```\n\n")
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
-    println("wrote PLANS.md")
+    Files.writeString(Paths.get(args.head), sb.toString)
+    println(s"PLANS wrote ${names.size} plans to ${args.head}")
     spark.stop()
   }
 }

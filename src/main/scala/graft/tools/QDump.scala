@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Verify's little sibling: dump a NAMED SUBSET of SparkEntry queries (plus
   * the full oracle_sql.json) for a quick single-query DuckDB cross-check
   * while iterating — the full Verify run replays every oracle (the minhash
@@ -17,14 +15,7 @@ object QDump {
     val sfDir = args(0)
     val outDir = args(1)
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       graft.SparkEntry.queries(name)(spark, sfDir)

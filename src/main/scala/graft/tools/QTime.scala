@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Times individual SparkEntry queries (args = query names; default: the
@@ -10,17 +8,11 @@ import graft.SparkEntry
   */
 object QTime {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val sfDir = ToolSession.sfDir("sf0.1")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q_ann_lsh", "q_dedup_minhash", "q_dedup_simhash", "q_ann_topk",
         "q_ann_ivf", "q_multimodal", "q_dedup_apply", "q_dedup_incr_apply")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
     // one throwaway pass to absorb JIT/session warmup, then 2 timed passes
     names.foreach { n => SparkEntry.queries(n)(spark, sfDir).count() }
     (1 to 2).foreach { rep =>

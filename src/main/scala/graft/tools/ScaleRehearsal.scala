@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.spark.{Page, PageGen, Snapshots}
 
 /** Production rehearsal: the FULL resumable path (extract → single-pass
@@ -14,26 +12,18 @@ import graft.spark.{Page, PageGen, Snapshots}
   */
 object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val sfDir = ToolSession.sfDir("sf0.1")
     val amplify = sys.env.getOrElse("SPARK_GRAFT_AMPLIFY", "64").toInt
     val buckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "64").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.local.dir", "/dev/shm/graft-spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
     import spark.implicits._
 
     val corpusDir = Files.createTempDirectory("rehearse_corpus").toString
-    PageGen.pages(spark, sfDir, amplify, genParallelism = cpus * 4)
+    PageGen.pages(spark, sfDir, amplify, genParallelism = ToolSession.cpus * 4)
       .write.mode("overwrite").parquet(corpusDir)
     val pages = spark.read.parquet(corpusDir).as[Page]
     val docs = pages.count()
-    println(s"REHEARSE corpus docs=$docs buckets=$buckets")
+    println(s"REHEARSE corpus docs=$docs buckets=$buckets dir=$corpusDir")
 
     val outDir = Files.createTempDirectory("rehearse_out").toString
     // crash after half the buckets

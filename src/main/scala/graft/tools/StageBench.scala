@@ -1,22 +1,14 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.spark._
 import graft.core.detect.DetectConfig
+/** Scan / skew-exchange / kernel / full-pipeline walls at p = 8, 32. Usage:
+  * StageBench <corpus>, a parquet dir of Page rows (ScaleRehearsal prints its own). */
 object StageBench {
-  def session(p: Int) = {
-    val s = SparkSession.builder().master(s"local[$p]")
-      .config("spark.sql.shuffle.partitions", p.toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.local.dir", "/dev/shm/graft-spark-local")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR"); s
-  }
   def main(args: Array[String]): Unit = {
     val corpus = args(0)
     Seq(8, 32, 8, 32).foreach { p =>
-      val s = session(p)
+      val s = ToolSession(p)
       import s.implicits._
       def timed(name: String)(f: => Long): Unit = {
         val t0 = System.nanoTime(); val n = f

@@ -36,6 +36,21 @@ class GuardsSpec extends AnyFunSuite {
     assert(Dedup.bandHashesOf(Array.emptyLongArray, 16).isEmpty)
   }
 
+  test("ngramContaminationAgainst rejects a non-positive n-gram size") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val corpus = Seq((1L, "a b c d")).toDF("doc_id", "text")
+    val evalNgrams = Seq((7L, "a b")).toDF("eval_id", "ngram")
+    // n = 0 used to emit n+1 junk fingerprints, n < 0 an index error
+    for (n <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException] {
+        Dedup.ngramContaminationAgainst(corpus, evalNgrams, n = n)
+      }
+      assert(e.getMessage.contains("n > 0"))
+    }
+    assert(Dedup.ngramContaminationAgainst(corpus, evalNgrams, n = 2).count() == 1)
+  }
+
   test("connectedComponents throws loudly when maxIter is exhausted") {
     val spark = SparkTestBase.spark
     import spark.implicits._

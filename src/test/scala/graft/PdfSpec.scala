@@ -227,6 +227,18 @@ class PdfSpec extends AnyFunSuite {
     // (round-7 ADVICE: its real content would be dropped to near-empty)
     assert(!PdfText.isPdf(bytes("<html><body><p>About the %PDF-1.7 format</p></body></html>")))
     assert(!PdfText.isPdf(bytes("plain text that says %PDF- and nothing more")))
+    // a bare `stream` is prose, not structure: it must follow a dict's `>>`
+    assert(!PdfText.isPdf(bytes(
+      "<html><body><p>Save as %PDF-1.7</p><p>Watch the live streaming event\n" +
+        "or the replay stream\n</p></body></html>")))
+    // a multi-MB page is searched for structure only near its two ends, so
+    // an `endobj` in the middle does not route it
+    val filler = "<p>plain paragraph text</p>\n" * 100000
+    val big = bytes(s"<html><body><p>%PDF-1.7 spec</p>$filler endobj $filler</body></html>")
+    assert(big.length > 4000000)
+    assert(!PdfText.isPdf(big))
+    // the same junk-prefixed real PDF, padded to multi-MB, still routes
+    assert(PdfText.isPdf(junked ++ bytes(filler)))
   }
 
   test("indirect /Length separated by any whitespace falls back to the scan") {

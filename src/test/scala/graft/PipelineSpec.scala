@@ -25,11 +25,15 @@ class PipelineSpec extends AnyFunSuite {
 
     val bad = Seq(
       Page("u:null", new java.sql.Timestamp(0), null, "", "en"),
-      Page("u:garbage", new java.sql.Timestamp(0), Array.fill[Byte](64)(0x81.toByte), "", "en")
+      Page("u:garbage", new java.sql.Timestamp(0), Array.fill[Byte](64)(0x81.toByte), "", "en"),
+      // gzip magic with no deflate body, and a table that never closes
+      Page("u:gzip", new java.sql.Timestamp(0), Array[Byte](0x1f, 0x8b.toByte, 0, 0, 0), "", "en"),
+      Page("u:unclosed", new java.sql.Timestamp(0), "<table><tr><td>unclosed".getBytes, "", "en")
     ).toDS()
     val out = Pipeline.extract(spark, bad).collect()
-    assert(out.length == 2)
-    assert(out.count(_.parse_failed) == 1) // null html fails; garbage decodes via fallback
+    assert(out.length == 4, "one output row per input page")
+    // null html fails; the rest decode via fallback and parse leniently
+    assert(out.filter(_.parse_failed).map(_.url).toSeq == Seq("u:null"))
   }
 
   test("metrics rollup accounts every doc exactly once") {

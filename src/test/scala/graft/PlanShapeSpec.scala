@@ -310,6 +310,21 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(df.count() > 0, "non-vacuous: some docs pass")
   }
 
+  test("c4Filter: the kept-lines array is evaluated once per doc") {
+    // the gate and the rewrite both read ONE projected kept-lines column.
+    // A Filter on it would be pushed below its projection and re-inline
+    // the kept-lines lambda (the wordNgrams trap): two evaluations per doc.
+    // Count its "javascript" line test across every node's own expressions
+    // (the wordNgrams split-count pin, over the executed plan).
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .withColumn("text", concat(col("text"), lit(".\nA second line that ends well.")))
+    val df = graft.ops.TextOps.c4Filter(docs, minSentences = 1L)
+    assert(df.collect().nonEmpty, "non-vacuous: some pages pass")
+    val evals = nodes(df).flatMap(_.expressions)
+      .map(e => "javascript".r.findAllIn(e.toString).length).sum
+    assert(evals == 1, s"kept lines must be evaluated once per doc, found $evals")
+  }
+
   test("index-fed IVF search plans no corpus-side assignment expression") {
     import graft.ops.IvfIndex
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
