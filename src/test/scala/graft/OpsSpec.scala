@@ -622,6 +622,43 @@ class OpsSpec extends AnyFunSuite {
     assert(rows(LineIndex.load(spark, dir)) == before)
   }
 
+  test("index manifests: index.json bytes are pinned for all four kinds") {
+    import spark.implicits._
+    import graft.ops.{IvfIndex, LineIndex, MinhashIndex, PassageIndex}
+    val docs = Seq((1L, "one two three four five six seven")).toDF("doc_id", "text")
+    def manifest(dir: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "index.json")), java.nio.charset.StandardCharsets.UTF_8)
+    def pinned(params: String) =
+      "{\n  \"format\" : 1,\n" + params +
+        "  \"segments\" : [ \"base\", \"day_1\" ],\n  \"absorbed\" : [ ]\n}"
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+
+    val mh = tmp("pin_mh")
+    val mhIdx = Dedup.minhashIndex(spark, docs, k = 8, bands = 4, shingleN = 2)
+    MinhashIndex.write(mhIdx, mh)
+    assert(MinhashIndex.appendSegment(mhIdx, mh, "day_1"))
+    assert(manifest(mh) ==
+      pinned("  \"k\" : 8,\n  \"bands\" : 4,\n  \"shingle_n\" : 2,\n"))
+
+    val ivf = tmp("pin_ivf")
+    val assigned = Seq((1L, Seq(1.0, 0.0), 0)).toDF("neighbor_id", "cvec", "cell")
+    IvfIndex.write(IvfIndex(Array(Array(1.0, 0.0)), assigned, 4), ivf)
+    assert(IvfIndex.appendSegment(assigned, ivf, "day_1"))
+    assert(manifest(ivf) == pinned("  \"n_list\" : 4,\n"))
+
+    val pas = tmp("pin_pas")
+    val pIdx = PassageIndex(Dedup.passageFingerprints(docs, w = 3), 3)
+    PassageIndex.write(pIdx, pas)
+    assert(PassageIndex.appendSegment(pIdx, pas, "day_1"))
+    assert(manifest(pas) == pinned("  \"w\" : 3,\n"))
+
+    val lin = tmp("pin_lin")
+    val lIdx = LineIndex(Dedup.lineFingerprints(docs))
+    LineIndex.write(lIdx, lin)
+    assert(LineIndex.appendSegment(lIdx, lin, "day_1"))
+    assert(manifest(lin) == pinned(""))
+  }
+
   test("incremental passage screen matches and strips against a corpus fp set") {
     import spark.implicits._
     val shared = "alpha beta gamma delta epsilon"
