@@ -179,7 +179,7 @@ object Dedup {
   def minhashIndex(spark: SparkSession, df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 64, bands: Int = 16, shingleN: Int = 3,
       materialize: Materialize.Strategy = Materialize.fromEnv): MinhashIndex = {
-    require(k % bands == 0, "k must be divisible by bands")
+    MinhashIndex.checkParams(k, bands)
     import graft.functions.DedupFunctions
     val sigs = Materialize(df.select(col(idCol).cast("long").as("id"),
         DedupFunctions.minhashSig(coalesce(col(textCol), lit("")), k, shingleN).as("sig"))

@@ -21,45 +21,25 @@ final case class IvfIndex(
   require(centroids.nonEmpty, "IvfIndex needs at least one centroid")
 }
 
-/** Parquet persistence for [[IvfIndex]] with the same commit discipline as
-  * [[MinhashIndex]] (the shared [[SegmentedManifest]] contract): data
-  * directories land first, the `index.json` manifest ATOMIC_MOVE is the
-  * commit point, assigned-segment appends are idempotent under the segment
-  * name (absorbed names keep replays no-ops across [[compact]]), and
-  * [[vacuum]] reclaims non-live data. Centroids are stored as parquet rows
-  * (cell, vec array<double>) — bit-exact doubles, no text round-trip.
-  * SINGLE WRITER per directory.
+/** Parquet persistence for [[IvfIndex]] in the [[SegmentedManifest]]
+  * store, pinning `n_list`. The centroids sit beside the segments in
+  * `centroids/` as parquet rows (cell, vec array<double>) — bit-exact
+  * doubles, no text round-trip — written once by [[write]] and frozen:
+  * compaction and vacuum never touch them. An append delta is an assigned
+  * frame that must be assigned against THIS index's centroids
+  * ([[Similarity.assignVectors]] on a loaded index); cell ids from
+  * different centroids are not comparable.
   */
-object IvfIndex {
+object IvfIndex extends SegmentedManifest[IvfIndex, DataFrame](
+    "IvfIndex", Seq("n_list"), "assigned" -> Seq("neighbor_id", "cvec", "cell")) {
 
-  /** `absorbed` = segment names rewritten into a compacted segment; kept on
-    * record so [[appendSegment]]'s idempotency survives [[compact]] (same
-    * contract as [[MinhashIndex.Meta]]).
-    */
-  final case class Meta(nList: Int, segments: Seq[String], absorbed: Seq[String]) {
-    def committed: Set[String] = segments.toSet ++ absorbed
-  }
+  protected def parts(idx: IvfIndex): (Seq[Int], Seq[DataFrame]) =
+    (Seq(idx.nList), Seq(idx.assigned))
+  protected def deltaParts(delta: DataFrame): (Option[Seq[Int]], Seq[DataFrame]) =
+    (None, Seq(delta))
 
-  def readMeta(dir: String): Meta = {
-    val root = SegmentedManifest.readTree(dir, "IvfIndex")
-    val (segments, absorbed) = SegmentedManifest.readSegments(root)
-    Meta(root.get("n_list").asInt(), segments, absorbed)
-  }
-
-  private def commitManifest(dir: String, nList: Int, segments: Seq[String],
-      absorbed: Seq[String]): Unit =
-    SegmentedManifest.commit(dir, segments, absorbed)(_.put("n_list", nList))
-
-  private def writeAssigned(assigned: DataFrame, dir: String, segment: String): Unit =
-    assigned.select("neighbor_id", "cvec", "cell").write.mode("overwrite")
-      .parquet(s"$dir/assigned/$segment")
-
-  /** Write a fresh index (centroids + assigned segment `base`), replacing
-    * any manifest already at `dir`. Resets the ingest history (a rebuild is
-    * an explicit new lineage); stale data from a replaced index is orphaned
-    * until [[vacuum]] reclaims it.
-    */
-  def write(idx: IvfIndex, dir: String): Unit = {
+  /** The frozen centroids first, then the store's `base` segment and manifest. */
+  override def write(idx: IvfIndex, dir: String): Unit = {
     val spark = idx.assigned.sparkSession
     import spark.implicits._
     idx.centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
@@ -69,67 +49,18 @@ object IvfIndex {
       // is pure small-file overhead on every load (guide §6)
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/centroids")
-    writeAssigned(idx.assigned, dir, "base")
-    commitManifest(dir, idx.nList, Seq("base"), Seq.empty)
+    super.write(idx, dir)
   }
 
-  /** Append an assigned-vector delta idempotently (the add() step of a
-    * growing ANN corpus): returns false without touching anything when
-    * `segment` is already committed (live or compacted away). The delta
-    * must be assigned against THIS index's centroids
-    * ([[Similarity.assignVectors]] on a loaded index) — cell ids from
-    * different centroids are not comparable, which is also why centroids
-    * are immutable here. Single-writer ([[SegmentedManifest]]).
-    */
-  def appendSegment(delta: DataFrame, dir: String, segment: String): Boolean = {
-    SegmentedManifest.checkSegmentName(segment)
-    val m = readMeta(dir)
-    if (m.committed.contains(segment)) return false
-    writeAssigned(delta, dir, segment)
-    commitManifest(dir, m.nList, m.segments :+ segment, m.absorbed)
-    true
-  }
-
-  /** Compact the assigned segments into one fresh segment (centroids are
-    * frozen and untouched) — bounds the per-ingest small-file growth
-    * exactly like [[MinhashIndex.compact]], with the same crash contract:
-    * data first into a never-committed directory, the manifest ATOMIC_MOVE
-    * is the commit point, absorbed names keep replays no-ops. Returns the
-    * new segment name, or None when already a single segment.
-    * Single-writer, like [[appendSegment]].
-    */
-  def compact(spark: SparkSession, dir: String): Option[String] = {
-    val m = readMeta(dir)
-    if (m.segments.size <= 1) return None
-    val name = SegmentedManifest.freshCompactName(m.committed)
-    val live = spark.read.parquet(m.segments.map(s => s"$dir/assigned/$s"): _*)
-    live.write.mode("overwrite").parquet(s"$dir/assigned/$name")
-    commitManifest(dir, m.nList, Seq(name), (m.absorbed ++ m.segments).distinct)
-    Some(name)
-  }
-
-  /** Delete assigned-segment directories not listed live by the committed
-    * manifest (compacted-away data, crash leftovers, rebuild orphans).
-    * Never touches live segments, the centroids, or the manifest. Returns
-    * the deleted directory names. Single-writer, like [[appendSegment]].
-    */
-  def vacuum(dir: String): Seq[String] =
-    SegmentedManifest.vacuum(dir, Seq("assigned"), readMeta(dir).segments.toSet)
-
-  /** Load the committed index: centroids into the driver-side matrix (it
-    * rides search plans as a codegen reference object), assigned as a
-    * plain parquet scan of the manifest-listed segments.
-    */
-  def load(spark: SparkSession, dir: String): IvfIndex = {
-    val m = readMeta(dir)
-    require(m.segments.nonEmpty, s"IvfIndex at $dir has no committed segments")
+  /** Centroids load into the driver-side matrix (search plans carry it). */
+  protected def build(spark: SparkSession, dir: String, params: Seq[Int],
+      frames: Seq[DataFrame]): IvfIndex = {
     val cents = spark.read.parquet(s"$dir/centroids")
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2)
     // trainCentroids emits min(nList, sample size) centroids, never more
-    require(cents.length <= m.nList,
-      s"centroid count ${cents.length} exceeds n_list ${m.nList}")
-    val assigned = spark.read.parquet(m.segments.map(s => s"$dir/assigned/$s"): _*)
-    IvfIndex(cents, assigned, m.nList)
+    require(cents.length <= params(0),
+      s"centroid count ${cents.length} exceeds n_list ${params(0)}")
+    IvfIndex(cents, frames(0), params(0))
   }
 }

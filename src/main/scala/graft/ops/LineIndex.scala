@@ -14,75 +14,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final case class LineIndex(fps: DataFrame)
 
-/** Parquet persistence for [[LineIndex]] under the shared
-  * [[SegmentedManifest]] contract ([[MinhashIndex]]'s discipline): data
-  * first, manifest ATOMIC_MOVE as the commit point, idempotent
-  * [[appendSegment]] whose domain survives [[compact]] via the absorbed
-  * record, [[vacuum]] for non-live data, SINGLE WRITER per directory.
-  */
-object LineIndex {
-
-  final case class Meta(segments: Seq[String], absorbed: Seq[String]) {
-    def committed: Set[String] = segments.toSet ++ absorbed
-  }
-
-  def readMeta(dir: String): Meta = {
-    val root = SegmentedManifest.readTree(dir, "LineIndex")
-    val (segments, absorbed) = SegmentedManifest.readSegments(root)
-    Meta(segments, absorbed)
-  }
-
-  private def commitManifest(dir: String, segments: Seq[String],
-      absorbed: Seq[String]): Unit =
-    SegmentedManifest.commit(dir, segments, absorbed)(_ => ())
-
-  private def writeFps(fps: DataFrame, dir: String, segment: String): Unit =
-    fps.select("doc_id", "line_no", "fp").write.mode("overwrite")
-      .parquet(s"$dir/fps/$segment")
-
-  /** Write a fresh index as segment `base`, replacing any manifest at
-    * `dir` and resetting the ingest history (explicit rebuild = new
-    * lineage; stale data is orphaned until [[vacuum]]).
-    */
-  def write(idx: LineIndex, dir: String): Unit = {
-    writeFps(idx.fps, dir, "base")
-    commitManifest(dir, Seq("base"), Seq.empty)
-  }
-
-  /** Append one ingest's (rewritten) batch fingerprints idempotently:
-    * false without touching anything when `segment` is already committed
-    * (live or absorbed) — the streaming replay contract.
-    */
-  def appendSegment(delta: LineIndex, dir: String, segment: String): Boolean = {
-    SegmentedManifest.checkSegmentName(segment)
-    val m = readMeta(dir)
-    if (m.committed.contains(segment)) return false
-    writeFps(delta.fps, dir, segment)
-    commitManifest(dir, m.segments :+ segment, m.absorbed)
-    true
-  }
-
-  /** Compact live segments into one fresh segment (crash-safe, replays
-    * stay no-ops — see [[MinhashIndex.compact]]); None when already one.
-    */
-  def compact(spark: SparkSession, dir: String): Option[String] = {
-    val m = readMeta(dir)
-    if (m.segments.size <= 1) return None
-    val name = SegmentedManifest.freshCompactName(m.committed)
-    spark.read.parquet(m.segments.map(s => s"$dir/fps/$s"): _*)
-      .write.mode("overwrite").parquet(s"$dir/fps/$name")
-    commitManifest(dir, Seq(name), (m.absorbed ++ m.segments).distinct)
-    Some(name)
-  }
-
-  /** Delete fp data directories not listed live by the committed manifest. */
-  def vacuum(dir: String): Seq[String] =
-    SegmentedManifest.vacuum(dir, Seq("fps"), readMeta(dir).segments.toSet)
-
-  /** Load the committed index as a plain parquet scan of the live segments. */
-  def load(spark: SparkSession, dir: String): LineIndex = {
-    val m = readMeta(dir)
-    require(m.segments.nonEmpty, s"LineIndex at $dir has no committed segments")
-    LineIndex(spark.read.parquet(m.segments.map(s => s"$dir/fps/$s"): _*))
-  }
+/** Parquet persistence for [[LineIndex]] in the [[SegmentedManifest]] store. */
+object LineIndex extends SegmentedManifest[LineIndex, LineIndex](
+    "LineIndex", Seq.empty, "fps" -> Seq("doc_id", "line_no", "fp")) {
+  protected def parts(idx: LineIndex): (Seq[Int], Seq[DataFrame]) = (Nil, Seq(idx.fps))
+  protected def deltaParts(d: LineIndex) = selfDelta(d)
+  protected def build(spark: SparkSession, dir: String, params: Seq[Int],
+      frames: Seq[DataFrame]): LineIndex = LineIndex(frames(0))
 }

@@ -15,80 +15,14 @@ final case class PassageIndex(fps: DataFrame, w: Int) {
   require(w > 0, "w > 0")
 }
 
-/** Parquet persistence for [[PassageIndex]] under the shared
-  * [[SegmentedManifest]] contract ([[MinhashIndex]]'s discipline): data
-  * first, manifest ATOMIC_MOVE as the commit point, idempotent
-  * [[appendSegment]] whose domain survives [[compact]] via the absorbed
-  * record, [[vacuum]] for non-live data, SINGLE WRITER per directory.
-  * Parameter mismatch fails loudly: windows of different w are not
-  * comparable.
+/** Parquet persistence for [[PassageIndex]] in the [[SegmentedManifest]]
+  * store, pinning `w`: windows of different sizes are not comparable.
   */
-object PassageIndex {
-
-  final case class Meta(w: Int, segments: Seq[String], absorbed: Seq[String]) {
-    def committed: Set[String] = segments.toSet ++ absorbed
-  }
-
-  def readMeta(dir: String): Meta = {
-    val root = SegmentedManifest.readTree(dir, "PassageIndex")
-    val (segments, absorbed) = SegmentedManifest.readSegments(root)
-    Meta(root.get("w").asInt(), segments, absorbed)
-  }
-
-  private def commitManifest(dir: String, w: Int, segments: Seq[String],
-      absorbed: Seq[String]): Unit =
-    SegmentedManifest.commit(dir, segments, absorbed)(_.put("w", w))
-
-  private def writeFps(fps: DataFrame, dir: String, segment: String): Unit =
-    fps.select("doc_id", "pos", "fp").write.mode("overwrite")
-      .parquet(s"$dir/fps/$segment")
-
-  /** Write a fresh index as segment `base`, replacing any manifest at
-    * `dir` and resetting the ingest history (explicit rebuild = new
-    * lineage; stale data is orphaned until [[vacuum]]).
-    */
-  def write(idx: PassageIndex, dir: String): Unit = {
-    writeFps(idx.fps, dir, "base")
-    commitManifest(dir, idx.w, Seq("base"), Seq.empty)
-  }
-
-  /** Append one ingest's (rewritten) batch fingerprints idempotently:
-    * false without touching anything when `segment` is already committed
-    * (live or absorbed) — the streaming replay contract.
-    */
-  def appendSegment(delta: PassageIndex, dir: String, segment: String): Boolean = {
-    SegmentedManifest.checkSegmentName(segment)
-    val m = readMeta(dir)
-    require(m.w == delta.w,
-      s"index at $dir has w=${m.w}; delta has w=${delta.w} — windows of " +
-        "different sizes are not comparable")
-    if (m.committed.contains(segment)) return false
-    writeFps(delta.fps, dir, segment)
-    commitManifest(dir, m.w, m.segments :+ segment, m.absorbed)
-    true
-  }
-
-  /** Compact live segments into one fresh segment (crash-safe, replays
-    * stay no-ops — see [[MinhashIndex.compact]]); None when already one.
-    */
-  def compact(spark: SparkSession, dir: String): Option[String] = {
-    val m = readMeta(dir)
-    if (m.segments.size <= 1) return None
-    val name = SegmentedManifest.freshCompactName(m.committed)
-    spark.read.parquet(m.segments.map(s => s"$dir/fps/$s"): _*)
-      .write.mode("overwrite").parquet(s"$dir/fps/$name")
-    commitManifest(dir, m.w, Seq(name), (m.absorbed ++ m.segments).distinct)
-    Some(name)
-  }
-
-  /** Delete fp data directories not listed live by the committed manifest. */
-  def vacuum(dir: String): Seq[String] =
-    SegmentedManifest.vacuum(dir, Seq("fps"), readMeta(dir).segments.toSet)
-
-  /** Load the committed index as a plain parquet scan of the live segments. */
-  def load(spark: SparkSession, dir: String): PassageIndex = {
-    val m = readMeta(dir)
-    require(m.segments.nonEmpty, s"PassageIndex at $dir has no committed segments")
-    PassageIndex(spark.read.parquet(m.segments.map(s => s"$dir/fps/$s"): _*), m.w)
-  }
+object PassageIndex extends SegmentedManifest[PassageIndex, PassageIndex](
+    "PassageIndex", Seq("w"), "fps" -> Seq("doc_id", "pos", "fp")) {
+  protected def parts(idx: PassageIndex): (Seq[Int], Seq[DataFrame]) =
+    (Seq(idx.w), Seq(idx.fps))
+  protected def deltaParts(d: PassageIndex) = selfDelta(d)
+  protected def build(spark: SparkSession, dir: String, params: Seq[Int],
+      frames: Seq[DataFrame]): PassageIndex = PassageIndex(frames(0), params(0))
 }

@@ -2,11 +2,12 @@ package graft.spark
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.core.detect.DetectConfig
+import graft.ops.{Dedup, LineIndex, Materialize, MinhashIndex, PassageIndex, SegmentedManifest}
 
 /** Per-document crawl metric row (event-time = warc_ts). */
 final case class CrawlMetric(
@@ -240,7 +241,7 @@ object StreamingPipeline {
       textCol: String = "text", k: Int = 64, bands: Int = 16, shingleN: Int = 3,
       threshold: Double = 0.8, horizonMinutes: Int = 120, bucketCap: Int = 64)
       : Dataset[NearDupPair] = {
-    require(k % bands == 0, "k must be divisible by bands")
+    MinhashIndex.checkParams(k, bands)
     require(bucketCap > 0, "bucketCap > 0")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -369,9 +370,8 @@ object StreamingPipeline {
       idCol: String = "doc_id", tsCol: String = "warc_ts", textCol: String = "text",
       k: Int = 64, bands: Int = 16, shingleN: Int = 3,
       threshold: Double = 0.8): DataFrame = {
-    require(k % bands == 0, "k must be divisible by bands")
+    MinhashIndex.checkParams(k, bands)
     import graft.functions.DedupFunctions
-    import graft.ops.Materialize
     val cSigs = Materialize.iterative(
       corpus.select(col(idCol).cast("long").as("corpus_id"),
           DedupFunctions.minhashSig(coalesce(col(textCol), lit("")), k, shingleN)
@@ -428,7 +428,6 @@ object StreamingPipeline {
     */
   def contaminationMatches(docs: DataFrame, evalSet: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 13): DataFrame = {
-    import graft.ops.{Dedup, Materialize}
     val e = Materialize.iterative(
       Dedup.wordNgrams(evalSet, idCol, textCol, n, "eval_id").distinct(),
       Materialize.fromEnv)
@@ -453,7 +452,6 @@ object StreamingPipeline {
     */
   def passageMatches(docs: DataFrame, corpusFps: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", w: Int = 50): DataFrame = {
-    import graft.ops.{Dedup, Materialize}
     val canon = Materialize.iterative(Dedup.canonicalPassageFps(corpusFps),
       Materialize.fromEnv)
     Dedup.passageFingerprints(docs, idCol, textCol, w)
@@ -461,69 +459,39 @@ object StreamingPipeline {
       .select(col("doc_id"), col("pos"), col("fp"), col("corpus_id"), col("corpus_pos"))
   }
 
-  /** One passage-ingest micro-batch against the PERSISTED passage index —
-    * the transform analogue of [[ingestMicroBatch]]: the batch is stripped
-    * of every window the corpus already holds
+  /** One passage-ingest micro-batch against the PERSISTED passage index:
+    * the batch is stripped of every window the corpus already holds
     * ([[graft.ops.Dedup.stripPassagesAgainst]]), then self-stripped within
     * the batch ([[graft.ops.Dedup.stripDuplicatePassages]]); the rewritten
     * rows land in `outDir/rewritten/<segment>`, and the REWRITTEN docs'
     * fingerprints (what the corpus now actually holds) append to the index
     * — so later arrivals dedup against every passage kept before them.
-    *
-    * Idempotent under `segment` with the index append as the COMMIT POINT
-    * (the [[ingestMicroBatch]] contract): a replay before the append
-    * recomputes identically (the pipeline is deterministic given the index
-    * state); a replay after it is a no-op — recomputing would excise the
-    * batch against its OWN appended fingerprints, whose canonical
-    * occurrences now live in the index. `maxSegments > 0` bounds segment
-    * growth via post-commit compact+vacuum. Single-writer per index dir.
+    * Commit, replay and `maxSegments` contract: [[ingestMicroBatch]].
     */
   def ingestPassageMicroBatch(batch: DataFrame, indexDir: String, outDir: String,
       segment: String, idCol: String = "doc_id", textCol: String = "text",
-      maxSegments: Int = 0): Boolean = {
-    import graft.ops.{Dedup, PassageIndex}
-    if (PassageIndex.readMeta(indexDir).committed.contains(segment)) return false
-    val spark = batch.sparkSession
-    val idx = PassageIndex.load(spark, indexDir)
-    val rewritten = Dedup.stripDuplicatePassages(spark,
-      Dedup.stripPassagesAgainst(idx.fps, batch, idCol, textCol, idx.w),
-      idCol, textCol, idx.w)
-    rewritten.write.mode("overwrite").parquet(s"$outDir/rewritten/$segment")
-    val delta = Dedup.passageFingerprints(
-      spark.read.parquet(s"$outDir/rewritten/$segment"), idCol, textCol, idx.w)
-    PassageIndex.appendSegment(graft.ops.PassageIndex(delta, idx.w),
-      indexDir, segment)
-    if (maxSegments > 0 && PassageIndex.readMeta(indexDir).segments.size > maxSegments) {
-      PassageIndex.compact(spark, indexDir)
-      PassageIndex.vacuum(indexDir)
+      maxSegments: Int = 0): Boolean =
+    ingest(PassageIndex, batch, indexDir, segment, maxSegments) { idx =>
+      val spark = batch.sparkSession
+      val rewritten = s"$outDir/rewritten/$segment"
+      Dedup.stripDuplicatePassages(spark,
+        Dedup.stripPassagesAgainst(idx.fps, batch, idCol, textCol, idx.w),
+        idCol, textCol, idx.w).write.mode("overwrite").parquet(rewritten)
+      PassageIndex(Dedup.passageFingerprints(spark.read.parquet(rewritten),
+        idCol, textCol, idx.w), idx.w)
     }
-    true
-  }
 
   /** Streaming passage APPLY — each arriving doc rewritten with every
-    * already-seen passage excised, the index growing with what survives:
-    * the streaming face of the Lee-et-al strip, mirroring
-    * [[dedupApplyStream]] (no Spark state store — the persisted
-    * [[graft.ops.PassageIndex]] IS the state, shared with the batch
-    * operators; micro-batch = ingest unit; earlier-kept passages win
-    * across batches, component-canonical within one).
-    *
-    * `indexDir` must hold an initialized index
-    * ([[graft.ops.PassageIndex.write]] of the corpus fingerprints — or of
-    * an empty frame to start cold).
+    * already-seen passage excised: the streaming face of the Lee-et-al
+    * strip, one [[ingestPassageMicroBatch]] per micro-batch over an
+    * initialized [[graft.ops.PassageIndex]] (design: [[dedupApplyStream]]).
     */
   def passageApplyStream(docs: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, idCol: String = "doc_id", textCol: String = "text",
-      availableNow: Boolean = false, maxSegments: Int = 16): StreamingQuery = {
-    val writer = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestPassageMicroBatch(b.toDF(), indexDir, outDir, s"batch_$batchId",
-          idCol, textCol, maxSegments)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
+      availableNow: Boolean = false, maxSegments: Int = 16): StreamingQuery =
+    foreachBatchStream(docs, checkpointDir, availableNow) { (b, id) =>
+      ingestPassageMicroBatch(b, indexDir, outDir, s"batch_$id", idCol, textCol, maxSegments)
+    }
 
   /** Streaming line screen: every arriving doc's normalized lines matched
     * against a STATIC corpus line-fingerprint set — the streaming face of
@@ -536,7 +504,6 @@ object StreamingPipeline {
     */
   def lineMatches(docs: DataFrame, corpusFps: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    import graft.ops.{Dedup, Materialize}
     val canon = Materialize.iterative(Dedup.canonicalLineFps(corpusFps),
       Materialize.fromEnv)
     Dedup.lineFingerprints(docs, idCol, textCol)
@@ -546,233 +513,180 @@ object StreamingPipeline {
   }
 
   /** One line-ingest micro-batch against the PERSISTED line index — the
-    * line analogue of [[ingestPassageMicroBatch]]: the batch is stripped
-    * of every line the corpus already holds
-    * ([[graft.ops.Dedup.stripLinesAgainst]]), then self-stripped within
-    * the batch ([[graft.ops.Dedup.stripDuplicateLines]]); the rewritten
-    * rows land in `outDir/rewritten/<segment>`, and the rewritten docs'
-    * line fingerprints append to the index. (A line excision cannot
-    * create NEW lines — unlike the passage rewrite — so fingerprinting
-    * the rewritten parquet is a single-source-of-truth choice, not a
-    * semantic necessity: the index holds exactly what the written corpus
-    * holds.)
-    *
-    * Idempotent under `segment` with the index append as the COMMIT POINT
-    * (the [[ingestMicroBatch]] contract); `maxSegments > 0` bounds
-    * segment growth via post-commit compact+vacuum. Single-writer per
-    * index dir.
+    * line analogue of [[ingestPassageMicroBatch]], with
+    * [[graft.ops.Dedup.stripLinesAgainst]] then
+    * [[graft.ops.Dedup.stripDuplicateLines]]. (A line excision cannot
+    * create NEW lines, so fingerprinting the rewritten parquet is a
+    * single-source-of-truth choice, not a semantic necessity: the index
+    * holds exactly what the written corpus holds.)
     */
   def ingestLineMicroBatch(batch: DataFrame, indexDir: String, outDir: String,
       segment: String, idCol: String = "doc_id", textCol: String = "text",
-      maxSegments: Int = 0): Boolean = {
-    import graft.ops.{Dedup, LineIndex}
-    if (LineIndex.readMeta(indexDir).committed.contains(segment)) return false
-    val spark = batch.sparkSession
-    val idx = LineIndex.load(spark, indexDir)
-    val rewritten = Dedup.stripDuplicateLines(spark,
-      Dedup.stripLinesAgainst(idx.fps, batch, idCol, textCol), idCol, textCol)
-    rewritten.write.mode("overwrite").parquet(s"$outDir/rewritten/$segment")
-    val delta = Dedup.lineFingerprints(
-      spark.read.parquet(s"$outDir/rewritten/$segment"), idCol, textCol)
-    LineIndex.appendSegment(graft.ops.LineIndex(delta), indexDir, segment)
-    if (maxSegments > 0 && LineIndex.readMeta(indexDir).segments.size > maxSegments) {
-      LineIndex.compact(spark, indexDir)
-      LineIndex.vacuum(indexDir)
+      maxSegments: Int = 0): Boolean =
+    ingest(LineIndex, batch, indexDir, segment, maxSegments) { idx =>
+      val spark = batch.sparkSession
+      val rewritten = s"$outDir/rewritten/$segment"
+      Dedup.stripDuplicateLines(spark,
+        Dedup.stripLinesAgainst(idx.fps, batch, idCol, textCol), idCol, textCol)
+        .write.mode("overwrite").parquet(rewritten)
+      LineIndex(Dedup.lineFingerprints(spark.read.parquet(rewritten), idCol, textCol))
     }
-    true
-  }
 
   /** Streaming line APPLY — each arriving doc rewritten with every
-    * already-seen boilerplate line excised, the index growing with what
-    * survives: the streaming face of the CCNet line screen, mirroring
-    * [[passageApplyStream]] (no Spark state store — the persisted
-    * [[graft.ops.LineIndex]] IS the state, shared with the batch
-    * operators; earlier-kept lines win across batches).
-    *
-    * `indexDir` must hold an initialized index
-    * ([[graft.ops.LineIndex.write]] of the corpus fingerprints — or of an
-    * empty frame to start cold).
+    * already-seen boilerplate line excised: the streaming face of the CCNet
+    * line screen, one [[ingestLineMicroBatch]] per micro-batch, mirroring
+    * [[passageApplyStream]] over an initialized [[graft.ops.LineIndex]].
     */
   def lineApplyStream(docs: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, idCol: String = "doc_id", textCol: String = "text",
-      availableNow: Boolean = false, maxSegments: Int = 16): StreamingQuery = {
-    val writer = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestLineMicroBatch(b.toDF(), indexDir, outDir, s"batch_$batchId",
-          idCol, textCol, maxSegments)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
+      availableNow: Boolean = false, maxSegments: Int = 16): StreamingQuery =
+    foreachBatchStream(docs, checkpointDir, availableNow) { (b, id) =>
+      ingestLineMicroBatch(b, indexDir, outDir, s"batch_$id", idCol, textCol, maxSegments)
+    }
 
   /** Streaming decontamination APPLY — the kept/flagged verdict per
-    * arriving doc ([[contaminationMatches]] stops at match events; this
-    * closes the loop, mirroring [[dedupApplyStream]]'s verdict surface):
-    * each micro-batch is screened against the static eval set and lands
-    * per-doc verdicts plus the kept rows in segment-keyed parquet.
+    * arriving doc ([[contaminationMatches]] stops at match events): each
+    * micro-batch is screened against the static eval set and lands per-doc
+    * verdicts plus the kept rows in segment-keyed parquet.
     *
-    * Per-doc verdicts need the doc's matches AGGREGATED (did ANY n-gram
-    * hit, and against which eval doc) — a streaming groupBy would demand a
-    * watermark the screen must not wait out (a doc's verdict is final the
-    * moment its micro-batch is screened; the eval set is static). So the
-    * aggregate runs inside foreachBatch: bounded by the micro-batch,
-    * stateless across batches, no state store. The eval n-gram set is
-    * tokenized ONCE at query start and materialized
-    * ([[graft.ops.Dedup.ngramContaminationAgainst]]); each batch pays one
-    * map-side n-gram scan into the broadcast join — the batch operator's
-    * exact plan over micro-batch-sized input.
+    * The per-doc aggregate runs inside the micro-batch: a streaming groupBy
+    * would demand a watermark the screen must not wait out (a doc's verdict
+    * is final once its micro-batch is screened; the eval set is static).
+    * The eval n-gram set is tokenized and materialized ONCE at query start;
+    * each batch pays one map-side n-gram scan into the broadcast join
+    * ([[graft.ops.Dedup.ngramContaminationAgainst]]).
     *
     * Output per segment `batch_<id>`:
     *  - `verdicts/`: (id, verdict ∈ {kept, flagged}, match_id = lowest
     *    matching eval id or null, shared_ngrams with that eval doc).
     *  - `kept/`: the surviving rows, input columns preserved.
     * Replay-idempotent by determinism: the eval set never changes, so a
-    * replayed micro-batch overwrites its segment with identical bytes
-    * (no commit-point ordering needed, unlike the index-growing dedup
-    * apply). Verdicts are the decontaminate operator's semantics exactly:
-    * kept set ≡ [[graft.ops.Dedup.decontaminate]] on the same rows
-    * (StreamingSpec-pinned).
+    * replay overwrites its segment with identical bytes (no commit point).
+    * Kept set ≡ [[graft.ops.Dedup.decontaminate]] on the same rows.
     */
   def decontaminateApplyStream(docs: DataFrame, evalSet: DataFrame, outDir: String,
       checkpointDir: String, idCol: String = "doc_id", textCol: String = "text",
       n: Int = 13, minShared: Int = 1,
       availableNow: Boolean = false): StreamingQuery = {
-    import graft.ops.{Dedup, Materialize}
     val evalNgrams = Materialize.iterative(
       Dedup.wordNgrams(evalSet, idCol, textCol, n, "eval_id").distinct(),
       Materialize.fromEnv)
-    val writer = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val batch = b.toDF()
-        val contam = Dedup.ngramContaminationAgainst(batch, evalNgrams,
-          idCol, textCol, n, minShared)
-        // one row per flagged doc: lowest matching eval id (deterministic),
-        // with that pair's shared count. Materialized: verdicts AND the
-        // kept anti-join both consume it — unmaterialized each re-runs the
-        // screen join.
-        val flagged = Materialize.iterative(
-          contam.groupBy(col("doc_id"))
-            .agg(min(struct(col("eval_id"), col("shared_ngrams"))).as("_m"))
-            .select(col("doc_id").as("_flag_id"),
-              col("_m.eval_id").as("_match_id"),
-              col("_m.shared_ngrams").as("_shared")),
-          Materialize.fromEnv)
-        val ids = batch.select(col(idCol).cast("long").as("id"))
-        ids.join(flagged, ids("id") === col("_flag_id"), "left")
-          .select(col("id"),
-            when(col("_flag_id").isNotNull, lit("flagged"))
-              .otherwise(lit("kept")).as("verdict"),
-            col("_match_id").as("match_id"),
-            col("_shared").as("shared_ngrams"))
-          .write.mode("overwrite").parquet(s"$outDir/verdicts/batch_$batchId")
-        batch.join(flagged, batch(idCol) === col("_flag_id"), "left_anti")
-          .write.mode("overwrite").parquet(s"$outDir/kept/batch_$batchId")
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    foreachBatchStream(docs, checkpointDir, availableNow) { (batch, batchId) =>
+      val contam = Dedup.ngramContaminationAgainst(batch, evalNgrams,
+        idCol, textCol, n, minShared)
+      // one row per flagged doc: lowest matching eval id (deterministic),
+      // with that pair's shared count. Materialized: verdicts AND the
+      // kept anti-join both consume it — unmaterialized each re-runs the
+      // screen join.
+      val flagged = Materialize.iterative(
+        contam.groupBy(col("doc_id"))
+          .agg(min(struct(col("eval_id"), col("shared_ngrams"))).as("_m"))
+          .select(col("doc_id").as("_flag_id"),
+            col("_m.eval_id").as("_match_id"),
+            col("_m.shared_ngrams").as("_shared")),
+        Materialize.fromEnv)
+      val ids = batch.select(col(idCol).cast("long").as("id"))
+      ids.join(flagged, ids("id") === col("_flag_id"), "left")
+        .select(col("id"),
+          when(col("_flag_id").isNotNull, lit("flagged"))
+            .otherwise(lit("kept")).as("verdict"),
+          col("_match_id").as("match_id"),
+          col("_shared").as("shared_ngrams"))
+        .write.mode("overwrite").parquet(s"$outDir/verdicts/batch_$batchId")
+      batch.join(flagged, batch(idCol) === col("_flag_id"), "left_anti")
+        .write.mode("overwrite").parquet(s"$outDir/kept/batch_$batchId")
+    }
   }
 
   /** One dedup-ingest micro-batch against the PERSISTED corpus index: the
     * unit of [[dedupApplyStream]], callable directly for scheduled (cron)
-    * daily ingests. Runs [[graft.ops.Dedup.ingestIncremental]] against the
-    * index at `indexDir`, writes per-doc verdicts and the surviving rows to
-    * segment-keyed parquet directories under `outDir`, then appends the
-    * survivors' signatures to the index ([[graft.ops.MinhashIndex.appendSegment]]).
+    * ingests. Runs [[graft.ops.Dedup.ingestIncremental]] against the index
+    * at `indexDir`, writes per-doc verdicts and the surviving rows to
+    * `outDir/{verdicts,survivors}/<segment>`, then appends the survivors'
+    * signatures to the index. Returns false, touching nothing, when
+    * `segment` is already committed.
     *
-    * Idempotent under `segment` (crash/restart contract): the index append
-    * is the COMMIT POINT and runs last. A replay after a crash before the
-    * append recomputes against the unchanged index (same verdicts — the
-    * pipeline is deterministic) and overwrites the same output directories;
-    * a replay after the append is a no-op (returns false) — recomputing
-    * would be WRONG, the batch would match its own survivors in the grown
-    * index. Readers of `outDir` see only segments whose index append
-    * committed or whose outputs are complete — at-least-once visibility of
-    * the final attempt's files, exactly the parquet-sink contract.
+    * Crash/restart contract, shared by the three ingest families: the
+    * index append is the COMMIT POINT and runs last. A replay before it
+    * recomputes against the unchanged index (the pipeline is deterministic)
+    * and overwrites the same outputs; a replay after it is a no-op —
+    * recomputing would match the batch against its own survivors in the
+    * grown index. `segment` is checked before any write: it is a path
+    * component under `outDir` as well as under the index.
     *
-    * Returns true if the segment was processed, false if already committed.
-    *
-    * `maxSegments > 0` bounds the index's segment count: once an append
-    * pushes the live-segment count past it, the index is compacted into
-    * one fresh base segment and orphaned data vacuumed
-    * ([[graft.ops.MinhashIndex.compact]]/[[graft.ops.MinhashIndex.vacuum]]) —
-    * without this, days of streaming accrete one tiny parquet directory per
-    * micro-batch, the exact small-file storm the snapshot path measured at
-    * 9x wall. Compaction runs strictly AFTER the segment commit point, so
-    * crash/replay semantics are unchanged (a replayed batch stays a no-op
-    * via the manifest's absorbed-name record; a crash mid-compact leaves
-    * the pre-compact manifest fully readable and the next batch retries).
-    *
-    * SINGLE WRITER per index directory (the manifest update is a
-    * read-modify-write — see [[graft.ops.MinhashIndex.appendSegment]]);
-    * the streaming caller satisfies this by construction, scheduled (cron)
-    * callers must not overlap invocations on one index.
+    * `maxSegments > 0` bounds the index's segment count by compact + vacuum
+    * strictly AFTER the commit point, so replays stay no-ops (the absorbed
+    * record) and a crash mid-compact leaves the old manifest readable.
+    * SINGLE WRITER per index directory ([[graft.ops.SegmentedManifest]]):
+    * scheduled callers must not overlap invocations on one index.
     */
   def ingestMicroBatch(batch: DataFrame, indexDir: String, outDir: String,
       segment: String, idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, bucketCap: Int = 65536,
-      maxSegments: Int = 0): Boolean = {
-    import graft.ops.{Dedup, MinhashIndex}
-    if (MinhashIndex.readMeta(indexDir).committed.contains(segment)) return false
-    val spark = batch.sparkSession
-    val idx = MinhashIndex.load(spark, indexDir)
-    val res = Dedup.ingestIncremental(spark, idx, batch, idCol, textCol,
-      threshold, bucketCap)
-    res.verdicts.write.mode("overwrite").parquet(s"$outDir/verdicts/$segment")
-    res.survivors.write.mode("overwrite").parquet(s"$outDir/survivors/$segment")
-    MinhashIndex.appendSegment(res.batchIndex, indexDir, segment)
-    if (maxSegments > 0 && MinhashIndex.readMeta(indexDir).segments.size > maxSegments) {
-      MinhashIndex.compact(spark, indexDir)
-      MinhashIndex.vacuum(indexDir)
+      maxSegments: Int = 0): Boolean =
+    ingest(MinhashIndex, batch, indexDir, segment, maxSegments) { idx =>
+      val res = Dedup.ingestIncremental(batch.sparkSession, idx, batch, idCol, textCol,
+        threshold, bucketCap)
+      res.verdicts.write.mode("overwrite").parquet(s"$outDir/verdicts/$segment")
+      res.survivors.write.mode("overwrite").parquet(s"$outDir/survivors/$segment")
+      res.batchIndex
     }
-    true
-  }
 
   /** Streaming near-dedup APPLY — the kept/dropped verdict per arriving
-    * doc, not just match pairs ([[corpusDedupMatches]] stops at pairs; this
-    * closes the loop): each micro-batch is one incremental-ingest step
-    * against the persisted corpus index, and the index GROWS with the
-    * batch's survivors, so later arrivals dedup against everything kept
-    * before them — corpus-match → dropped_corpus; in-stream near-dup →
-    * the component's min-id arrival survives, the rest → dropped_batch.
+    * doc ([[corpusDedupMatches]] stops at pairs): one [[ingestMicroBatch]]
+    * per micro-batch, and the index GROWS with each batch's survivors, so
+    * later arrivals dedup against everything kept before them —
+    * corpus-match → dropped_corpus; in-stream near-dup → the component's
+    * min-id arrival survives, the rest → dropped_batch.
     *
-    * Semantics: the survivor set is the left fold of
-    * [[graft.ops.Dedup.applyIncremental]] over the micro-batch sequence —
-    * byte-identical to the batch operator when the input fits one
-    * micro-batch, and to a sequence of daily batch ingests otherwise
-    * (micro-batch = ingest unit). Within a micro-batch the verdict is the
-    * batch operator's component-min (NOT a greedy first-arrival
-    * approximation); across micro-batches earlier-kept wins, which is what
-    * a production ingest means by first-arrival.
-    *
-    * Scale/state design: NO Spark state store at all — the state is the
-    * persisted [[graft.ops.MinhashIndex]] (scalar parquet: id + band +
-    * 8-byte hash + signatures), the same artifact the batch pipeline
-    * persists, shared between the two. Per micro-batch the work is
-    * O(batch map + batch × collision-rate join); the corpus side is never
-    * re-signatured. Restart-safety: Spark's checkpoint replays the last
-    * micro-batch and [[ingestMicroBatch]]'s segment commit makes the
-    * replay idempotent.
-    *
-    * `indexDir` must hold an initialized index ([[graft.ops.MinhashIndex.write]]
-    * of the existing corpus — or of an empty frame to start cold).
-    *
-    * `maxSegments` (default 16) keeps the long-running stream's index at a
-    * bounded segment count via post-commit compaction + vacuum (see
-    * [[ingestMicroBatch]]); 0 disables maintenance.
+    * The survivor set is the left fold of
+    * [[graft.ops.Dedup.applyIncremental]] over the micro-batch sequence
+    * (micro-batch = ingest unit): component-min within a batch,
+    * earlier-kept wins across batches. NO Spark state store: the state is
+    * the persisted [[graft.ops.MinhashIndex]], shared with the batch
+    * pipeline, and the segment commit makes a checkpoint replay idempotent.
+    * `indexDir` must hold an initialized index (of the corpus, or of an
+    * empty frame to start cold); `maxSegments` (default 16, 0 disables)
+    * bounds its segment count.
     */
   def dedupApplyStream(docs: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, bucketCap: Int = 65536,
-      availableNow: Boolean = false, maxSegments: Int = 16): StreamingQuery = {
+      availableNow: Boolean = false, maxSegments: Int = 16): StreamingQuery =
+    foreachBatchStream(docs, checkpointDir, availableNow) { (b, id) =>
+      ingestMicroBatch(b, indexDir, outDir, s"batch_$id", idCol, textCol,
+        threshold, bucketCap, maxSegments)
+    }
+
+  /** The one ingest step behind the three `ingest*MicroBatch` families. The
+    * segment name is checked BEFORE any write (`transform` writes under
+    * `outDir/<sub>/<segment>`); a committed segment returns false untouched;
+    * `transform` gets the loaded index, writes the family's outputs and
+    * returns the delta; the append is the commit point; then the
+    * `maxSegments` compact+vacuum policy.
+    */
+  private def ingest[I](store: SegmentedManifest[I, I], batch: DataFrame,
+      indexDir: String, segment: String, maxSegments: Int)(transform: I => I): Boolean = {
+    SegmentedManifest.checkSegmentName(segment)
+    if (store.readMeta(indexDir).committed.contains(segment)) return false
+    val spark = batch.sparkSession
+    store.appendSegment(transform(store.load(spark, indexDir)), indexDir, segment)
+    if (maxSegments > 0 && store.readMeta(indexDir).segments.size > maxSegments) {
+      store.compact(spark, indexDir)
+      store.vacuum(indexDir)
+    }
+    true
+  }
+
+  /** The one `foreachBatch` driver behind the apply streams: checkpointed,
+    * each micro-batch handed to `step` with its id; `availableNow` drains
+    * what exists and stops.
+    */
+  private def foreachBatchStream(docs: DataFrame, checkpointDir: String,
+      availableNow: Boolean)(step: (DataFrame, Long) => Unit): StreamingQuery = {
     val writer = docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestMicroBatch(b.toDF(), indexDir, outDir, s"batch_$batchId",
-          idCol, textCol, threshold, bucketCap, maxSegments)
-        ()
-      }
+      .foreachBatch { (b: Dataset[Row], batchId: Long) => step(b.toDF(), batchId) }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 

@@ -36,6 +36,27 @@ class GuardsSpec extends AnyFunSuite {
     assert(Dedup.bandHashesOf(Array.emptyLongArray, 16).isEmpty)
   }
 
+  test("MinHash operators reject k = 0 and bands = 0 with one loud guard") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    import graft.spark.StreamingPipeline
+    val docs = Seq((1L, "a b c d", new java.sql.Timestamp(0L)))
+      .toDF("doc_id", "text", "warc_ts")
+    // bands = 0 would divide by zero; k = 0 would make every signature
+    // empty, so the streaming operators would silently return nothing
+    for ((k, bands) <- Seq((0, 16), (64, 0), (0, 0))) {
+      val sites = Seq[() => Any](
+        () => graft.ops.MinhashIndex(docs, docs, k, bands, 3),
+        () => Dedup.minhashIndex(spark, docs, k = k, bands = bands),
+        () => StreamingPipeline.nearDupPairs(docs, k = k, bands = bands),
+        () => StreamingPipeline.corpusDedupMatches(docs, docs, k = k, bands = bands))
+      for (site <- sites) {
+        val e = intercept[IllegalArgumentException](site())
+        assert(e.getMessage.contains("positive multiple of bands"), e.getMessage)
+      }
+    }
+  }
+
   test("ngramContaminationAgainst rejects a non-positive n-gram size") {
     val spark = SparkTestBase.spark
     import spark.implicits._

@@ -581,6 +581,12 @@ class OpsSpec extends AnyFunSuite {
     val before = rows(PassageIndex.load(spark, dir))
     assert(before == rows(PassageIndex(
       Dedup.passageFingerprints(a.union(b), w = 5), 5)))
+    // dot-only names resolve to the index root or fps/ itself: rejected,
+    // and the committed index still loads its rows
+    for (bad <- Seq(".", "..")) {
+      intercept[IllegalArgumentException] { PassageIndex.appendSegment(delta, dir, bad) }
+      assert(rows(PassageIndex.load(spark, dir)) == before)
+    }
     // compact: one live segment, identical rows, replays stay no-ops,
     // vacuum reclaims exactly the absorbed dirs (shared-machinery pins —
     // the exhaustive crash/orphan cases live in the MinhashIndex test)

@@ -1,7 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
@@ -715,6 +717,20 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$outDir/survivors/day_1")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(4L))
     assert(MinhashIndex.readMeta(indexDir).segments == Seq("base", "day_1"))
+    // a segment name escaping outDir is rejected before any write: no
+    // directory appears or vanishes under the output sandbox or the index
+    val sandbox = Files.createTempDirectory("dai_escape")
+    val nestedOut = Files.createDirectories(sandbox.resolve("out")).toString
+    def dirs(root: java.nio.file.Path) = {
+      val w = Files.walk(root)
+      try w.iterator().asScala.filter(Files.isDirectory(_)).toSet finally w.close()
+    }
+    val (sandboxBefore, indexBefore) = (dirs(sandbox), dirs(Paths.get(indexDir)))
+    intercept[IllegalArgumentException] {
+      StreamingPipeline.ingestMicroBatch(batch, indexDir, nestedOut, "../../x",
+        threshold = 0.8)
+    }
+    assert(dirs(sandbox) == sandboxBefore && dirs(Paths.get(indexDir)) == indexBefore)
   }
 
   test("near-dup pairs drop null event-time rows instead of wedging the query") {
