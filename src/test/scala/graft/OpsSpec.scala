@@ -873,6 +873,27 @@ class OpsSpec extends AnyFunSuite {
     def nonClone(s: Set[(Long, Long)]) = s.filterNot { case (x, y) => cloneIds(x) && cloneIds(y) }
     assert(nonClone(capped) == nonClone(uncapped),
       "salting a hot bucket must not affect pairs outside the duplicate class")
+    // the cross operator: the clones split 30/30 between corpus and batch.
+    // Its oversized count runs over corpus ∪ batch, so at cap 16 every
+    // clone bucket again splits into nsplit=4 and a cross clone pair
+    // survives with prob 1-(3/4)^32 — ~all 900 of them must.
+    val (cloneA, cloneB) = clones.splitAt(30)
+    val corpus = docsWithDups.filter(col("doc_id") < 100000L)
+      .union(cloneA.toDF("doc_id", "text"))
+    val batch = docsWithDups.filter(col("doc_id") >= 100000L)
+      .union(cloneB.toDF("doc_id", "text"))
+    def runCross(cap: Int) = Dedup.minhashPairsIncremental(spark, corpus, batch, k = 128,
+      bands = 32, threshold = 0.5, bucketCap = cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val crossCapped = runCross(16)
+    val crossUncapped = runCross(Int.MaxValue)
+    assert(crossCapped.subsetOf(crossUncapped),
+      "cross capping may only drop pairs, never invent them")
+    val crossClonePairs = crossCapped.count { case (x, y) => cloneIds(x) && cloneIds(y) }
+    assert(crossClonePairs >= 891, s"expected ~900 cross clone pairs, got $crossClonePairs")
+    assert(nonClone(crossCapped).nonEmpty, "the injected cross duplicates must still pair")
+    assert(nonClone(crossCapped) == nonClone(crossUncapped),
+      "salting a hot bucket must not affect cross pairs outside the duplicate class")
   }
 
   test("content-free docs never pair in minhash or simhash dedup") {
