@@ -392,12 +392,7 @@ object SparkEntry {
     // aggregates the committed pages golden — pinning the A7/A8 rollup
     // arithmetic end to end
     "q_extract_totals" -> ((s, dir) =>
-      Pipeline.extract(s, genPages(s, dir)).toDF().agg(
-        count(lit(1)).as("docs"),
-        sum(col("n_tables")).as("tables_found"),
-        sum(col("n_regions")).as("regions_found"),
-        sum(col("bytes_stripped")).as("bytes_stripped"),
-        sum(when(col("parse_failed"), 1L).otherwise(0L)).as("parse_failures"))),
+      Pipeline.rollup(Pipeline.extract(s, genPages(s, dir)))),
     "x_extract_hints" -> ((s, dir) => {
       // author-declared table metadata (caption/summary/semantic class) —
       // the ExcelMetadataExtractor-analogue surface, ridden on the same

@@ -31,30 +31,27 @@ object Cascade {
       if (config.enableSimpleCase) SimpleCase.detect(g)
       else SimpleResult(isSimpleTable = false, None, 0.0, hasHeaders = true, "disabled")
 
+    // the simple-case hit over simple.span; the method name also prefixes its id
+    def simpleHit(method: String): Vector[TableHit] = {
+      val span = simple.span.get
+      Vector(TableHit(
+        id = s"${method}_${span.r0}_${span.c0}",
+        span = span,
+        confidence = simple.confidence,
+        method = method,
+        hasHeaders = simple.hasHeaders,
+        headers = SimpleCase.extractHeaders(g, span)
+      ))
+    }
+
     // ULTRA-FAST path (reference: detection.py:102-121)
     val cellCount = (g.maxRow + 1).toLong * (g.maxCol + 1)
     if (simple.confidence >= 0.89 && cellCount > 10000 && simple.span.isDefined) {
-      val span = simple.span.get
-      tables = Vector(TableHit(
-        id = s"ultra_fast_${span.r0}_${span.c0}",
-        span = span,
-        confidence = simple.confidence,
-        method = "ultra_fast",
-        hasHeaders = simple.hasHeaders,
-        headers = SimpleCase.extractHeaders(g, span)
-      ))
+      tables = simpleHit("ultra_fast")
       methodUsed = "ultra_fast"
     } else if (simple.confidence >= 0.95 && simple.span.isDefined) {
       // high-confidence simple case (reference: detection.py:124-138)
-      val span = simple.span.get
-      tables = Vector(TableHit(
-        id = s"simple_case_fast_${span.r0}_${span.c0}",
-        span = span,
-        confidence = simple.confidence,
-        method = "simple_case_fast",
-        hasHeaders = simple.hasHeaders,
-        headers = SimpleCase.extractHeaders(g, span)
-      ))
+      tables = simpleHit("simple_case_fast")
       methodUsed = "simple_case_fast"
     }
 
@@ -74,7 +71,7 @@ object Cascade {
         methodUsed = "structured_text_detection"
       } else if (config.enableIslandDetection) {
         val detector = new IslandDetector(
-          maxGap = if (isTextLike) IslandConst.ExcelFileMaxGap else IslandConst.ExcelFileMaxGap,
+          maxGap = IslandConst.ExcelFileMaxGap,
           adaptiveThresholds = config.adaptiveThresholds,
           emptyRowTolerance = config.emptyRowTolerance,
           useFormattingBoundaries = config.useBorderDetection
@@ -91,15 +88,7 @@ object Cascade {
     // fallback simple case (reference: detection.py:171-185)
     if (tables.isEmpty && simple.confidence >= config.confidenceThreshold &&
         simple.span.isDefined) {
-      val span = simple.span.get
-      tables = Vector(TableHit(
-        id = s"simple_case_${span.r0}_${span.c0}",
-        span = span,
-        confidence = simple.confidence,
-        method = "simple_case",
-        hasHeaders = simple.hasHeaders,
-        headers = SimpleCase.extractHeaders(g, span)
-      ))
+      tables = simpleHit("simple_case")
       methodUsed = "simple_case"
     }
 

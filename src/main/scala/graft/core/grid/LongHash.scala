@@ -93,19 +93,6 @@ final class LongHashSet(initialCapacity: Int = 16) extends Serializable {
     c
   }
 
-  def toArraySorted: Array[Long] = {
-    val out = new Array[Long](_size)
-    var i = 0
-    var j = 0
-    while (i < cap) {
-      val k = keys(i)
-      if (k != Empty) { out(j) = k; j += 1 }
-      i += 1
-    }
-    java.util.Arrays.sort(out)
-    out
-  }
-
   private def grow(): Unit = {
     val old = keys
     cap = cap << 1

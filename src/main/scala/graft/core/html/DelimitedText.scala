@@ -96,35 +96,6 @@ object DelimitedText {
     if (bestScore >= 1.5) Some((best, bestScore)) else None
   }
 
-  /** Manual delimiter detection by per-line count consistency
-    * (reference: readers/csv_reader.py:187-231 — the fallback when
-    * csv.Sniffer fails): score = consistent_lines × consistent_count,
-    * candidates , ; \t | : in that priority for ties.
-    */
-  def detectDelimiterManual(sample: String, defaultDelim: Char = ','): Char = {
-    val candidates = Seq(',', ';', '\t', '|', ':')
-    val lines = sample.split("\n", -1).take(10)
-    var best = defaultDelim
-    var bestScore = 0
-    candidates.foreach { d =>
-      var consistentCount = 0
-      var consistentLines = 0
-      var first = true
-      lines.foreach { line =>
-        if (line.trim.nonEmpty) {
-          val count = line.count(_ == d)
-          if (count > 0) {
-            if (first) { consistentCount = count; consistentLines = 1; first = false }
-            else if (consistentCount == count) consistentLines += 1
-          }
-        }
-      }
-      val score = consistentLines * consistentCount
-      if (consistentCount > 0 && score > bestScore) { best = d; bestScore = score }
-    }
-    best
-  }
-
   /** 1M-row safety cap (reference: csv_reader.py:252-255). */
   val MaxRows = 1000000
 

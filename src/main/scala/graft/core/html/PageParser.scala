@@ -80,8 +80,6 @@ object PageParser {
     st.finish()
   }
 
-  def parseBytes(html: Array[Byte]): ParsedPage = parse(Encoding.decode(html))
-
   private final class State extends TokSink {
     val blocks = Vector.newBuilder[String]
     val regions = Vector.newBuilder[GridRegion]

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for web-scale corpora.
@@ -230,62 +230,85 @@ object Dedup {
   def minhashPairs(spark: SparkSession, df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 64, bands: Int = 16, shingleN: Int = 3,
       threshold: Double = 0.8, bucketCap: Int = 65536,
-      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame =
+      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
+    checkBucketCap(bucketCap)
     minhashPairsOfIndex(
       minhashIndex(spark, df, idCol, textCol, k, bands, shingleN, materialize),
       threshold, bucketCap)
+  }
 
   /** [[minhashPairs]] from a prebuilt (or [[MinhashIndex.load]]ed) index —
     * the signature-level self-join entry point.
     */
   def minhashPairsOfIndex(idx: MinhashIndex, threshold: Double = 0.8,
       bucketCap: Int = 65536): DataFrame = {
-    require(bucketCap > 0, "bucketCap > 0")
-    val k = idx.k
-    val banded = idx.banded
+    checkBucketCap(bucketCap)
+    bandJoinPairs(idx, idx, idx.banded, "id_a", "id_b", col("id_a") < col("id_b"),
+      threshold, bucketCap)
+  }
 
-    // bucket-size cap (the lshNearNeighbors analogue): buckets are tiny on
-    // clean data (band equality needs 4 identical signature slots), but a
-    // crawl corpus with a large exact-duplicate class puts the WHOLE class
-    // in one bucket of every band — quadratic pair work. Oversized buckets
-    // salt into ceil(n/bucketCap) sub-buckets; the salt hashes (id, band)
-    // so splits decorrelate across bands and a pair separated in one band
-    // still collides in another: per band a pair co-collides with prob
-    // 1/nsplit, so exact-dup recall is 1-((nsplit-1)/nsplit)^bands (their
-    // signatures agree in every band) — near 1 only while nsplit stays
-    // small relative to bands; exact-dedup first for massive clone classes.
-    val oversized = banded.groupBy(col("band"), col("bhash"))
+  /** The one bucket-cap guard of the LSH operators, run at their entry
+    * before any Spark job: a cap of 0 divides by zero inside a job, a
+    * negative one silently scatters every bucket across negative salts.
+    */
+  private[ops] def checkBucketCap(bucketCap: Int): Unit =
+    require(bucketCap > 0, s"bucketCap > 0, got $bucketCap")
+
+  /** The one bucket-cap salting of the LSH operators: distinct (`idA`,
+    * `idB`) pairs passing `keep` whose (id, `table`, `bucket`) rows in
+    * `left` and `right` share a salted bucket. A large exact-duplicate
+    * class puts the WHOLE class in one bucket of every table (band) —
+    * quadratic pair work — so buckets holding more than `bucketCap` rows of
+    * `population` are counted, broadcast back and split into
+    * nsplit = ceil(n/bucketCap) sub-buckets. The pair distinct runs while
+    * still id-only (16 bytes/pair), so each pair is verified once.
+    *
+    * The salt hashes (id, `table`), NEVER id alone: an id-only salt splits
+    * a class identically in every table and loses the same pairs in all of
+    * them (measured with tools.OpsScale: only the within-salt half of a
+    * planted 5000-identical cluster survived). Decorrelated, a class pair
+    * survives with prob 1-((nsplit-1)/nsplit)^tables — near 1 only while
+    * nsplit stays small; exact-dedup first for massive clone classes.
+    */
+  private[ops] def saltedPairs(population: DataFrame, left: DataFrame, right: DataFrame,
+      table: String, bucket: String, idA: String, idB: String, keep: Column,
+      bucketCap: Int): DataFrame = {
+    val oversized = population.groupBy(col(table), col(bucket))
       .agg(count(lit(1)).as("bn"))
       .filter(col("bn") > bucketCap)
       .withColumn("nsplit", ceil(col("bn") / bucketCap).cast("int"))
-      .select(col("band"), col("bhash"), col("nsplit"))
-    val salted = banded.join(broadcast(oversized), Seq("band", "bhash"), "left")
-      .withColumn("salt",
-        when(col("nsplit").isNull, lit(0))
-          .otherwise(pmod(xxhash64(col("id"), col("band")), col("nsplit")).cast("int")))
-      .select(col("band"), col("bhash"), col("salt"), col("id"))
-
-    // within-bucket candidate pairing; a self-join on the bucket key stays
-    // a plain hash join with bounded per-bucket pair work
-    val a = salted.select(col("band"), col("bhash"), col("salt"), col("id").as("id_a"))
-    val b = salted.select(col("band"), col("bhash"), col("salt"), col("id").as("id_b"))
-    val pairs = a.join(b, Seq("band", "bhash", "salt")).filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct() // dedup across bands BEFORE the verify: 16 bytes/pair
-
-    val sa = idx.sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
-    val sb = idx.sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
-    // UNSORTED by design: this is an operator return value consumed by
-    // joins/CC downstream (keepFirstByPairs, applyIncremental) — a tail
-    // orderBy would pay a range exchange + sort the next join immediately
-    // destroys. Determinism sorts belong at the query surface (SparkEntry).
-    pairs.join(sa, Seq("id_a")).join(sb, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (aggregate(zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x).cast("double") / lit(k)).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+      .select(col(table), col(bucket), col("nsplit"))
+    def salted(rows: DataFrame, id: String) =
+      rows.join(broadcast(oversized), Seq(table, bucket), "left")
+        .withColumn("salt", when(col("nsplit").isNull, lit(0))
+          .otherwise(pmod(xxhash64(col("id"), col(table)), col("nsplit")).cast("int")))
+        .select(col(table), col(bucket), col("salt"), col("id").as(id))
+    salted(left, idA).join(salted(right, idB), Seq(table, bucket, "salt"))
+      .filter(keep).select(col(idA), col(idB)).distinct()
   }
+
+  /** The one MinHash slot-match estimate: the share of signature slots on
+    * which `a` and `b` agree (codegen'd higher-order functions).
+    */
+  private[graft] def slotMatch(a: Column, b: Column, k: Int): Column =
+    aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, x) => acc + x).cast("double") / lit(k)
+
+  /** The one MinHash band-join body of the self-join (`a` = `b`) and the
+    * corpus × batch join: salted band join, two id-keyed signature
+    * re-attach joins, slot-match estimate, threshold. UNSORTED: its
+    * consumers join it at once (a tail sort would be destroyed); surface
+    * queries sort.
+    */
+  private def bandJoinPairs(a: MinhashIndex, b: MinhashIndex, population: DataFrame,
+      idA: String, idB: String, keep: Column, threshold: Double,
+      bucketCap: Int): DataFrame =
+    saltedPairs(population, a.banded, b.banded, "band", "bhash", idA, idB, keep, bucketCap)
+      .join(a.sigs.select(col("id").as(idA), col("sig").as("sig_a")), Seq(idA))
+      .join(b.sigs.select(col("id").as(idB), col("sig").as("sig_b")), Seq(idB))
+      .select(col(idA), col(idB),
+        slotMatch(col("sig_a"), col("sig_b"), a.k).as("est_jaccard"))
+      .filter(col("est_jaccard") >= threshold)
 
   /** Incremental MinHash-LSH: near-dup pairs BETWEEN a new batch and an
     * existing corpus — the daily-ingestion shape of near-dedup. A combined
@@ -317,11 +340,13 @@ object Dedup {
       batch: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       k: Int = 64, bands: Int = 16, shingleN: Int = 3, threshold: Double = 0.8,
       bucketCap: Int = 65536,
-      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame =
+      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
+    checkBucketCap(bucketCap)
     minhashPairsBetween(
       minhashIndex(spark, corpus, idCol, textCol, k, bands, shingleN, materialize),
       minhashIndex(spark, batch, idCol, textCol, k, bands, shingleN, materialize),
       threshold, bucketCap)
+  }
 
   /** [[minhashPairsIncremental]] from prebuilt indexes — the production
     * entry: `corpusIdx` is [[MinhashIndex.load]]ed from the persisted
@@ -336,39 +361,14 @@ object Dedup {
       s"index parameter mismatch: corpus (k=${corpusIdx.k}, bands=${corpusIdx.bands}, " +
         s"shingleN=${corpusIdx.shingleN}) vs batch (k=${batchIdx.k}, " +
         s"bands=${batchIdx.bands}, shingleN=${batchIdx.shingleN})")
-    require(bucketCap > 0, "bucketCap > 0")
-    val k = corpusIdx.k
-    // the oversized count is taken over the COMBINED bucket population
-    val oversized = corpusIdx.banded.select(col("band"), col("bhash"))
-      .union(batchIdx.banded.select(col("band"), col("bhash")))
-      .groupBy(col("band"), col("bhash")).agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > bucketCap)
-      .withColumn("nsplit", ceil(col("bn") / bucketCap).cast("int"))
-      .select(col("band"), col("bhash"), col("nsplit"))
-    def salted(df: DataFrame) = df.join(broadcast(oversized), Seq("band", "bhash"), "left")
-      .withColumn("salt",
-        when(col("nsplit").isNull, lit(0))
-          .otherwise(pmod(xxhash64(col("id"), col("band")), col("nsplit")).cast("int")))
-      .select(col("band"), col("bhash"), col("salt"), col("id"))
-    val cands = salted(corpusIdx.banded).withColumnRenamed("id", "corpus_id")
-      .join(salted(batchIdx.banded).withColumnRenamed("id", "batch_id"),
-        Seq("band", "bhash", "salt"))
-      // a doc resubmitted under its existing corpus id must not emit the
-      // degenerate self-pair (ids are expected globally unique; this is a
-      // no-op then)
-      .filter(col("corpus_id") =!= col("batch_id"))
-      .select(col("corpus_id"), col("batch_id"))
-      .distinct() // dedup across bands BEFORE the verify, still id-only
-    val sa = corpusIdx.sigs.select(col("id").as("corpus_id"), col("sig").as("sig_a"))
-    val sb = batchIdx.sigs.select(col("id").as("batch_id"), col("sig").as("sig_b"))
-    // unsorted operator return (see minhashPairs): applyIncremental joins
-    // this immediately — surface queries add their own orderBy
-    cands.join(sa, Seq("corpus_id")).join(sb, Seq("batch_id"))
-      .select(col("corpus_id"), col("batch_id"),
-        (aggregate(zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x).cast("double") / lit(k)).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+    checkBucketCap(bucketCap)
+    // oversized buckets are counted over corpus ∪ batch; a doc resubmitted
+    // under its corpus id must not pair with itself (a no-op for the
+    // expected globally unique ids)
+    bandJoinPairs(corpusIdx, batchIdx,
+      corpusIdx.banded.select(col("band"), col("bhash"))
+        .union(batchIdx.banded.select(col("band"), col("bhash"))),
+      "corpus_id", "batch_id", col("corpus_id") =!= col("batch_id"), threshold, bucketCap)
   }
 
   /** Incremental near-dedup APPLIED: drop batch docs that near-dup the
@@ -473,14 +473,8 @@ object Dedup {
     // NOT a filter of the bands-amplified stream. Unmaterialized: the
     // delta has exactly one consumer (the appendSegment parquet write).
     val survivorSigs = remSigs.join(losers, col("id") === col("_loser_id"), "left_anti")
-    val survivorIdx = MinhashIndex(
-      survivorSigs,
-      survivorSigs.select(col("id"),
-          posexplode(graft.functions.DedupFunctions
-            .minhashBandHashes(col("sig"), bIdx.bands)))
-        .toDF("id", "band", "bhash"),
-      bIdx.k, bIdx.bands, bIdx.shingleN)
-    IngestResult(survivors, verdicts, survivorIdx)
+    IngestResult(survivors, verdicts,
+      indexFromSigs(survivorSigs, bIdx.k, bIdx.bands, bIdx.shingleN, materialize))
   }
 
   // ---- SimHash ----

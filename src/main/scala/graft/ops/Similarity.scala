@@ -31,12 +31,26 @@ object Similarity {
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec")))
-    val scored = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
-      .join(q, col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("qvec").cast("array<double>"),
-        col("cvec").cast("array<double>")), 6))
+    topKByCosine(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cvec"))
+      .join(q, col("neighbor_id") =!= col("query_id")), k)
+  }
+
+  /** cosine(a, b) over two array columns, rounded to 6 places — the score
+    * every search and verify here reports.
+    */
+  private def cosine6(a: String, b: String): Column =
+    round(cosine(col(a).cast("array<double>"), col(b).cast("array<double>")), 6)
+
+  /** The one cosine top-k tail over candidate (query_id, qvec, neighbor_id,
+    * cvec) rows: score, rank per query (the WindowGroupLimit rank), keep
+    * the top k. The per-query rank ORDER is the semantics of a top-k result
+    * (and the result set is k×queries tiny) — not an operator-tail waste
+    * sort.
+    */
+  private def topKByCosine(candidates: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
+    candidates.withColumn("cos", cosine6("qvec", "cvec"))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
       .orderBy(col("query_id"), col("rank"))
@@ -94,7 +108,8 @@ object Similarity {
     * carries (id, table, bucket) ONLY — never the embedding — so the
     * nTables-way explosion amplifies 16-byte rows, not vectors. Buckets
     * larger than `bucketCap` are salted into ceil(n/bucketCap) sub-buckets
-    * by id hash — bounding worst-case in-bucket pair work at the cost of
+    * by an (id, tbl) hash (`Dedup.saltedPairs`, the one bucket-cap
+    * salting) — bounding worst-case in-bucket pair work at the cost of
     * cross-salt pairs in that one table (other tables still catch them).
     * Bucket sizes come from a tiny (table, bucket) count aggregate that is
     * broadcast back, so the cap costs one metadata-sized join, not a second
@@ -111,6 +126,7 @@ object Similarity {
     import spark.implicits._
     require(nBits > 0 && nBits <= 24, "nBits in (0, 24]")
     require(nTables > 0, "nTables > 0")
+    Dedup.checkBucketCap(bucketCap)
     val dimRow = corpus.select(size(col(vecCol))).limit(1).collect()
     if (dimRow.isEmpty) // empty corpus: empty pair set, correct schema
       return spark.emptyDataset[(Long, Long, Double)].toDF("id_a", "id_b", "cos")
@@ -143,37 +159,11 @@ object Similarity {
       .toDF("id", "tbl", "bucket"),
       materialize)
 
-    // bucket-size cap: count per (tbl, bucket) — a few bytes per OCCUPIED
-    // bucket — keep only oversized ones, broadcast back, salt members
-    val oversized = sigged.groupBy(col("tbl"), col("bucket"))
-      .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > bucketCap)
-      .withColumn("nsplit", ceil(col("bn") / bucketCap).cast("int"))
-      .select(col("tbl"), col("bucket"), col("nsplit"))
-    // the salt hashes (id, tbl) — NOT id alone: a near-identical cluster
-    // lands in the same bucket of EVERY table, and an id-only salt would
-    // split it identically everywhere, losing the same cross-salt pairs in
-    // all nTables at once (measured: exactly the within-salt half of a
-    // planted 5000-identical cluster survived — tools.OpsScale). With the
-    // table in the hash the splits decorrelate: per table a pair
-    // co-collides with prob 1/nsplit, so an identical-cluster pair
-    // survives with prob 1-((nsplit-1)/nsplit)^nTables — near 1 while
-    // nsplit stays small relative to nTables
-    val salted = sigged.join(broadcast(oversized), Seq("tbl", "bucket"), "left")
-      .withColumn("salt",
-        when(col("nsplit").isNull, lit(0))
-          .otherwise(pmod(xxhash64(col("id"), col("tbl")), col("nsplit")).cast("int")))
-      .select(col("tbl"), col("bucket"), col("salt"), col("id"))
-
     // candidate pairs: ids only, deduped across tables BEFORE the verify so
-    // each surviving pair pays the exact cosine once (16 bytes/pair through
-    // this distinct, vs a cosine per colliding table)
-    val a = salted.select(col("tbl"), col("bucket"), col("salt"), col("id").as("id_a"))
-    val b = salted.select(col("tbl"), col("bucket"), col("salt"), col("id").as("id_b"))
-    val pairs = a.join(b, Seq("tbl", "bucket", "salt"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
+    // each surviving pair pays the exact cosine once; oversized
+    // (tbl, bucket) keys salt on (id, tbl)
+    val pairs = Dedup.saltedPairs(sigged, sigged, sigged, "tbl", "bucket", "id_a", "id_b",
+      col("id_a") < col("id_b"), bucketCap)
 
     // exact-cosine verify: re-attach vectors by id — vector bytes cross the
     // wire once per side per candidate, not once per (table × member)
@@ -184,8 +174,7 @@ object Similarity {
     // would pay a range exchange + sort the join destroys. Surface queries
     // (q_ann_lsh) add their own determinism sort.
     pairs.join(va, Seq("id_a")).join(vb, Seq("id_b"))
-      .withColumn("cos", round(cosine(col("v_a").cast("array<double>"),
-        col("v_b").cast("array<double>")), 6))
+      .withColumn("cos", cosine6("v_a", "v_b"))
       .filter(col("cos") >= minCosine)
       .select(col("id_a"), col("id_b"), col("cos"))
   }
@@ -283,23 +272,35 @@ object Similarity {
       nList: Int = 16, nProbe: Int = 4, trainSampleN: Int = 4096, iters: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import spark.implicits._
-    // training sample: bounded (trainSampleN vectors) but the TakeOrdered
-    // below still SCANS the corpus once to find the lowest ids — at 100 TB
-    // prune the scan first (feed a manifest/partition-pruned slice of the
-    // corpus as `corpus`, e.g. the first file split per partition), or
-    // swap the orderBy for a per-partition deterministic sample
-    // (mapPartitions taking the first N/parts rows per split). Kept as the
-    // global TakeOrdered here because the oracle replays centroid training
-    // bit-exactly from "the trainSampleN lowest-id vectors" — a stable,
-    // engine-independent definition.
+    trainedIndex(spark, corpus, nList, trainSampleN, iters, idCol, vecCol)
+      .map(ivfTopKFromIndex(_, queries, k, nProbe, idCol, vecCol))
+      // empty corpus: empty result, correct schema
+      .getOrElse(spark.emptyDataset[(Long, Long, Double, Int)]
+        .toDF("query_id", "neighbor_id", "cos", "rank"))
+  }
+
+  /** The one sample-and-train step: Lloyd k-means on the `trainSampleN`
+    * lowest-id vectors, then the map-side assignment. None on an empty
+    * corpus.
+    *
+    * The sample is bounded but its TakeOrdered still SCANS the corpus once
+    * to find the lowest ids — at 100 TB prune the scan first (feed a
+    * manifest/partition-pruned slice of the corpus as `corpus`, e.g. the
+    * first file split per partition), or swap the orderBy for a
+    * per-partition deterministic sample (mapPartitions taking the first
+    * N/parts rows per split). Kept as the global TakeOrdered here because
+    * the oracle replays centroid training bit-exactly from "the
+    * trainSampleN lowest-id vectors" — a stable, engine-independent
+    * definition.
+    */
+  private def trainedIndex(spark: SparkSession, corpus: DataFrame, nList: Int,
+      trainSampleN: Int, iters: Int, idCol: String, vecCol: String): Option[IvfIndex] = {
+    import spark.implicits._
     val sample = corpus.select(col(idCol), col(vecCol)).orderBy(col(idCol))
       .limit(trainSampleN).select(col(vecCol)).as[Array[Float]].collect()
-    if (sample.isEmpty) // empty corpus: empty result, correct schema
-      return spark.emptyDataset[(Long, Long, Double, Int)]
-        .toDF("query_id", "neighbor_id", "cos", "rank")
+    if (sample.isEmpty) return None
     val cents = trainCentroids(sample, nList, iters)
-    ivfTopKFromIndex(IvfIndex(cents, assignVectors(cents, corpus, idCol, vecCol), nList),
-      queries, k, nProbe, idCol, vecCol)
+    Some(IvfIndex(cents, assignVectors(cents, corpus, idCol, vecCol), nList))
   }
 
   /** Map-side assignment of vectors to FIXED centroids — the add() step of
@@ -332,17 +333,8 @@ object Similarity {
         explode(IvfFunctions.probeCells(col(vecCol), idx.centroids, nProbe)).as("cell"))
       .select(col("query_id"), col("qvec"), col("cell"))
 
-    val scored = idx.assigned.join(broadcast(probes), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("qvec").cast("array<double>"),
-        col("cvec").cast("array<double>")), 6))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
-      // the per-query rank ORDER is the semantics of a top-k result (and
-      // the result set is k×queries tiny) — not an operator-tail waste sort
-      .orderBy(col("query_id"), col("rank"))
+    topKByCosine(idx.assigned.join(broadcast(probes), Seq("cell"))
+      .filter(col("neighbor_id") =!= col("query_id")), k)
   }
 
   /** Build the IVF index for a corpus: deterministic bounded-sample Lloyd
@@ -352,11 +344,8 @@ object Similarity {
   def ivfIndex(spark: SparkSession, corpus: DataFrame, nList: Int = 16,
       trainSampleN: Int = 4096, iters: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding"): IvfIndex = {
-    import spark.implicits._
-    val sample = corpus.select(col(idCol), col(vecCol)).orderBy(col(idCol))
-      .limit(trainSampleN).select(col(vecCol)).as[Array[Float]].collect()
-    require(sample.nonEmpty, "empty corpus: IVF centroid training needs vectors")
-    val cents = trainCentroids(sample, nList, iters)
-    IvfIndex(cents, assignVectors(cents, corpus, idCol, vecCol), nList)
+    val idx = trainedIndex(spark, corpus, nList, trainSampleN, iters, idCol, vecCol)
+    require(idx.nonEmpty, "empty corpus: IVF centroid training needs vectors")
+    idx.get
   }
 }

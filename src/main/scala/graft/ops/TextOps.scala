@@ -72,30 +72,6 @@ object TextOps {
           .as("n_dup_bigrams"))
   }
 
-  /** Quality features: length, alpha ratio, punctuation ratio, digit ratio,
-    * mean word length — all built-ins, one projection.
-    */
-  def withQuality(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    val len = length(t).cast("double")
-    val alpha = length(regexp_replace(t, "[^a-zA-Z]", "")).cast("double")
-    val digits = length(regexp_replace(t, "[^0-9]", "")).cast("double")
-    val punct = length(regexp_replace(t, "[^.,;:!?]", "")).cast("double")
-    val toks = tokenCount(t).cast("double")
-    df.withColumn("n_chars_m", length(t).cast("long"))
-      .withColumn("n_tokens", tokenCount(t))
-      .withColumn("alpha_ratio", round(when(len > 0, alpha / len).otherwise(0.0), 6))
-      .withColumn("digit_ratio", round(when(len > 0, digits / len).otherwise(0.0), 6))
-      .withColumn("punct_ratio", round(when(len > 0, punct / len).otherwise(0.0), 6))
-      .withColumn("mean_word_len", round(when(toks > 0, alpha / toks).otherwise(0.0), 6))
-  }
-
-  /** Quality gate for corpus filtering (C4-style cheap heuristics). */
-  def qualityFilter(df: DataFrame, textCol: String = "text"): DataFrame = {
-    withQuality(df, textCol)
-      .filter(col("n_tokens") >= 10 && col("alpha_ratio") >= 0.5 && col("digit_ratio") <= 0.3)
-  }
-
   // ---- Gopher quality rules (Rae et al. 2021 §A1.1) ----
 
   /** Gopher's eight English function words: a doc passing the other gates

@@ -52,7 +52,6 @@ object PageGen {
       val r = nextLong() >>> 1
       (r % bound).toInt
     }
-    def nextDouble(): Double = (nextLong() >>> 11) * 1.1102230246251565e-16
   }
 
   private val Products = Array("widget", "gadget", "sprocket", "gear", "flange",

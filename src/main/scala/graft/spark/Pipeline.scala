@@ -1,7 +1,7 @@
 package graft.spark
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.detect.DetectConfig
@@ -107,14 +107,8 @@ object Pipeline {
     * manifests, so these rows align with resume lineage.
     */
   def metrics(extracted: Dataset[Extracted], buckets: Int = 32): DataFrame = {
-    extracted.groupBy(pmod(xxhash64(col("url")), lit(buckets)).cast("int").as("bucket"))
-      .agg(
-        count(lit(1)).as("docs"),
-        sum(col("n_tables")).as("tables_found"),
-        sum(col("n_regions")).as("regions_found"),
-        sum(col("bytes_stripped")).as("bytes_stripped"),
-        sum(when(col("parse_failed"), 1L).otherwise(0L)).as("parse_failures")
-      ).orderBy(col("bucket"))
+    rollup(extracted, pmod(xxhash64(col("url")), lit(buckets)).cast("int").as("bucket"))
+      .orderBy(col("bucket"))
   }
 
   /** Physical per-partition variant of [[metrics]] — the partition-balance
@@ -122,12 +116,17 @@ object Pipeline {
     * by construction; use [[metrics]] for the stable queryable surface.
     */
   def partitionMetrics(extracted: Dataset[Extracted]): DataFrame = {
-    extracted.groupBy(col("partition_id")).agg(
+    rollup(extracted, col("partition_id")).orderBy(col("partition_id"))
+  }
+
+  /** The one extraction rollup: docs, tables, regions, stripped bytes and
+    * parse failures per `keys` group (no keys: one corpus-level row).
+    */
+  private[graft] def rollup(extracted: Dataset[_], keys: Column*): DataFrame =
+    extracted.groupBy(keys: _*).agg(
       count(lit(1)).as("docs"),
       sum(col("n_tables")).as("tables_found"),
       sum(col("n_regions")).as("regions_found"),
       sum(col("bytes_stripped")).as("bytes_stripped"),
-      sum(when(col("parse_failed"), 1L).otherwise(0L)).as("parse_failures")
-    ).orderBy(col("partition_id"))
-  }
+      sum(when(col("parse_failed"), 1L).otherwise(0L)).as("parse_failures"))
 }

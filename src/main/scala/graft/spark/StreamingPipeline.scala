@@ -397,9 +397,7 @@ object StreamingPipeline {
       .filter(col("corpus_id") =!= col("doc_id"))
       .join(cSigs, Seq("corpus_id"))
       .select(col("corpus_id"), col("doc_id"), col("ts"),
-        (aggregate(zip_with(col("corpus_sig"), col("sig"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x).cast("double") / lit(k)).as("est_jaccard"))
+        Dedup.slotMatch(col("corpus_sig"), col("sig"), k).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
   }
 

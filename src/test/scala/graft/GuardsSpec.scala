@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.grid.Cell
-import graft.ops.Dedup
+import graft.ops.{Dedup, Similarity}
 import graft.spark.Snapshots
 
 /** Loud-failure guards and backward-compat fallbacks (round-4 ADVICE):
@@ -53,6 +53,32 @@ class GuardsSpec extends AnyFunSuite {
       for (site <- sites) {
         val e = intercept[IllegalArgumentException](site())
         assert(e.getMessage.contains("positive multiple of bands"), e.getMessage)
+      }
+    }
+  }
+
+  test("LSH operators reject a non-positive bucketCap") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val docs = Seq((1L, "a b c d")).toDF("doc_id", "text")
+    val vecs = Seq((1L, Array(1f, 0f))).toDF("vec_id", "embedding")
+    val noVecs = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    // cap 0 divided by zero inside a job; a negative cap marked every
+    // bucket oversized with a negative nsplit and scattered its members
+    // across salts with no error. The guard runs before any Spark job.
+    for (cap <- Seq(0, -1)) {
+      val sites = Seq[() => Any](
+        () => Similarity.lshNearNeighbors(spark, vecs, bucketCap = cap),
+        () => Similarity.lshNearNeighbors(spark, noVecs, bucketCap = cap),
+        () => Dedup.minhashPairs(spark, docs, bucketCap = cap),
+        () => Dedup.minhashPairsIncremental(spark, docs, docs, bucketCap = cap))
+      for ((site, i) <- sites.zipWithIndex) {
+        val group = s"bucket-cap-guard-$cap-$i"
+        spark.sparkContext.setJobGroup(group, group)
+        try intercept[IllegalArgumentException](site())
+        finally spark.sparkContext.clearJobGroup()
+        assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+          s"site $i ran a Spark job before rejecting bucketCap=$cap")
       }
     }
   }
