@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the dedup signature kernels — same
@@ -25,6 +25,49 @@ object DedupKernels {
   def bandHashes(sig: ArrayData, bands: Int): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(
       graft.ops.Dedup.bandHashesOf(sig.toLongArray(), bands))
+
+  /** Share of the `k` signature slots on which `a` and `b` hold the same
+    * value: `aggregate(zip_with(a, b, (x, y) -> x = y ? 1 : 0), 0, +) / k`
+    * without the interpreted higher-order functions (zip_with pads the
+    * shorter array with nulls, and a null slot never matches).
+    */
+  def slotMatch(a: ArrayData, b: ArrayData, k: Int): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i)) m += 1
+      i += 1
+    }
+    m.toDouble / k
+  }
+
+  private val Space = UTF8String.fromString(" ")
+
+  /** `toks` without the indexes listed in `covered`, joined by single
+    * spaces: `concat_ws(" ", filter(toks, (t, i) -> !array_contains(covered,
+    * i)))` in one pass, without the interpreted higher-order function.
+    */
+  def exciseTokens(toks: ArrayData, covered: ArrayData): UTF8String = {
+    val n = toks.numElements()
+    val drop = new Array[Boolean](n)
+    var i = 0
+    while (i < covered.numElements()) {
+      if (!covered.isNullAt(i)) {
+        val c = covered.getInt(i)
+        if (c >= 0 && c < n) drop(c) = true
+      }
+      i += 1
+    }
+    val kept = new Array[UTF8String](n)
+    var k = 0
+    i = 0
+    while (i < n) {
+      if (!drop(i)) { kept(k) = toks.getUTF8String(i); k += 1 }
+      i += 1
+    }
+    UTF8String.concatWs(Space, java.util.Arrays.copyOf(kept, k): _*)
+  }
 
   /** Multiplicative inverse of 31 mod 2^64 (31 is odd, so it exists):
     * rolling window removal divides by powers of 31 exactly.
@@ -165,6 +208,44 @@ case class MinhashBandHashes(child: Expression, bands: Int) extends UnaryExpress
   override def prettyName: String = "graft_minhash_band_hashes"
 }
 
+/** MinHash slot-match estimate of two signatures ([[DedupKernels.slotMatch]]):
+  * a join condition or projection holding it stays inside whole-stage
+  * codegen.
+  */
+case class SlotMatch(left: Expression, right: Expression, k: Int) extends BinaryExpression {
+  override def dataType: DataType = DoubleType
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DedupKernels.slotMatch(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.DedupKernels.slotMatch($a, $b, $k)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): SlotMatch = copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "graft_slot_match"
+}
+
+/** A token array with the covered token indexes removed, space-joined
+  * ([[DedupKernels.exciseTokens]]): the passage strip's rewrite, kept
+  * inside whole-stage codegen.
+  */
+case class ExciseTokens(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = StringType
+
+  override def nullSafeEval(toks: Any, covered: Any): Any =
+    DedupKernels.exciseTokens(toks.asInstanceOf[ArrayData], covered.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (t, c) => s"graft.functions.DedupKernels.exciseTokens($t, $c)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): ExciseTokens = copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "graft_excise_tokens"
+}
+
 /** Sliding-window passage fingerprints over a token array
   * ([[DedupKernels.passageFps]]) — the map stage of the passage-dedup
   * family, kept inside whole-stage codegen.
@@ -196,6 +277,13 @@ object DedupFunctions {
 
   def minhashSig(c: Column, k: Int, shingleN: Int): Column =
     ColumnBridge.column(MinhashSig(ColumnBridge.expression(c), k, shingleN))
+
+  def slotMatch(a: Column, b: Column, k: Int): Column =
+    ColumnBridge.column(SlotMatch(ColumnBridge.expression(a), ColumnBridge.expression(b), k))
+
+  def exciseTokens(toks: Column, covered: Column): Column =
+    ColumnBridge.column(ExciseTokens(ColumnBridge.expression(toks),
+      ColumnBridge.expression(covered)))
 
   def minhashBandHashes(c: Column, bands: Int): Column =
     ColumnBridge.column(MinhashBandHashes(ColumnBridge.expression(c), bands))

@@ -67,6 +67,14 @@ object Dedup {
     else toks.sliding(n).map(_.mkString(" "))
   }
 
+  /** [[shingles]]' tokenizer as a Column: `\s+` split, empty tokens
+    * removed. `array_remove` is a codegen'd built-in; the equivalent
+    * higher-order `filter(_, t => length(t) > 0)` is interpreted, so every
+    * operator holding it fell out of whole-stage codegen and cut its stage
+    * in two, each half a generated class of its own.
+    */
+  private[graft] def tokens(text: Column): Column = array_remove(split(text, "\\s+"), "")
+
   @inline private def mix64(x0: Long): Long = {
     var z = x0 + 0x9E3779B97F4A7C15L
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
@@ -220,8 +228,8 @@ object Dedup {
     * self-join on the band hash (the banded exchange carries 20-byte rows,
     * NOT the 512-byte signature × bands) → pair distinct while still
     * id-only → signatures re-attach by two id-keyed joins against the
-    * once-materialized signature set → slot-match estimate (codegen'd
-    * higher-order functions) → threshold. Signature bytes cross the wire
+    * once-materialized signature set → slot-match estimate (native
+    * codegen'd expression) → threshold. Signature bytes cross the wire
     * O(corpus + candidates) instead of O(corpus × bands) — the same
     * de-amplification as lshNearNeighbors, and the same `bucketCap` guard:
     * a giant exact-duplicate class (routine in crawl data) salts into
@@ -247,8 +255,11 @@ object Dedup {
       threshold, bucketCap)
   }
 
-  /** The one bucket-cap guard of the LSH operators, run at their entry
-    * before any Spark job: a cap of 0 divides by zero inside a job, a
+  /** The one bucket-cap guard of the LSH operators and of the composed
+    * dedup operators built on them (keepFirstTwoPhase, the incremental
+    * apply and ingest steps), run at their entry before any Spark job —
+    * before a pre-pass or signature materialization, too: a cap of 0
+    * divides by zero inside a job, a
     * negative one silently scatters every bucket across negative salts.
     */
   private[ops] def checkBucketCap(bucketCap: Int): Unit =
@@ -288,11 +299,10 @@ object Dedup {
   }
 
   /** The one MinHash slot-match estimate: the share of signature slots on
-    * which `a` and `b` agree (codegen'd higher-order functions).
+    * which `a` and `b` agree (a native codegen'd expression).
     */
   private[graft] def slotMatch(a: Column, b: Column, k: Int): Column =
-    aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x).cast("double") / lit(k)
+    graft.functions.DedupFunctions.slotMatch(a, b, k)
 
   /** The one MinHash band-join body of the self-join (`a` = `b`) and the
     * corpus × batch join: salted band join, two id-keyed signature
@@ -381,10 +391,12 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text", k: Int = 64,
       bands: Int = 16, shingleN: Int = 3, threshold: Double = 0.8,
       bucketCap: Int = 65536,
-      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame =
+      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
+    checkBucketCap(bucketCap)
     applyIncrementalFromIndex(spark,
       minhashIndex(spark, corpus, idCol, textCol, k, bands, shingleN, materialize),
       batch, idCol, textCol, threshold, bucketCap, materialize)
+  }
 
   /** [[applyIncremental]] against a prebuilt (usually [[MinhashIndex.load]]ed)
     * corpus index — the production daily-ingest entry: zero corpus-side map
@@ -395,9 +407,11 @@ object Dedup {
   def applyIncrementalFromIndex(spark: SparkSession, corpusIdx: MinhashIndex,
       batch: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, bucketCap: Int = 65536,
-      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame =
+      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
+    checkBucketCap(bucketCap)
     ingestIncremental(spark, corpusIdx, batch, idCol, textCol, threshold,
       bucketCap, materialize).survivors
+  }
 
   /** One incremental-ingest step, with per-doc verdicts.
     *
@@ -420,6 +434,7 @@ object Dedup {
       batch: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, bucketCap: Int = 65536,
       materialize: Materialize.Strategy = Materialize.fromEnv): IngestResult = {
+    checkBucketCap(bucketCap)
     // the batch is signatured ONCE, here; every later stage (cross verify,
     // in-batch self-dedup, the appendable survivor delta) reuses these sigs
     val bIdx = minhashIndex(spark, batch, idCol, textCol, corpusIdx.k,
@@ -510,9 +525,7 @@ object Dedup {
     // same O(n²) degenerate pair class as empty minhash shingles; drop them
     // before the signature. The predicate replays the simhash tokenizer
     // exactly (split on \s+, non-empty tokens) with codegen'd built-ins.
-    val hasTokens = size(filter(
-      split(lower(coalesce(col(textCol), lit(""))), "\\s+"),
-      t => length(t) > 0)) > 0
+    val hasTokens = size(tokens(lower(coalesce(col(textCol), lit(""))))) > 0
     // native Catalyst expression: the signature stage stays inside
     // whole-stage codegen (no Deserialize→map→Serialize break).
     // materialized: both self-join sides derive from it — without this the
@@ -559,8 +572,10 @@ object Dedup {
     * practice. Each round is two hash joins + a groupBy on id (plain
     * key-equality shuffles); labels are materialized per round
     * ([[Materialize]]) so lineage doesn't grow with iterations. The
-    * converged check compares changed-label counts — one tiny aggregate
-    * per round.
+    * converged check is one pass over the edges: done once both ends of
+    * every edge carry the same label, so a graph of near-cliques stops
+    * after its first round instead of running a second one to see no
+    * label move.
     */
   def connectedComponents(spark: SparkSession, pairs: DataFrame,
       maxIter: Int = 25,
@@ -568,9 +583,9 @@ object Dedup {
     connectedComponentsRounds(spark, pairs, maxIter, materialize)._1
 
   /** [[connectedComponents]] plus the number of propagate+jump rounds it
-    * took to converge (including the final no-change detection round) — the
-    * observable for the O(log diameter) claim: a D-hop path must converge in
-    * ~log2(D)+O(1) rounds, where min-label propagation alone needs D.
+    * took to converge — the observable for the O(log diameter) claim: a
+    * D-hop path must converge in ~log2(D)+O(1) rounds, where min-label
+    * propagation alone needs D.
     */
   def connectedComponentsRounds(spark: SparkSession, pairs: DataFrame,
       maxIter: Int = 25,
@@ -606,14 +621,12 @@ object Dedup {
     var converged = false
     var labels: DataFrame = null
     while (!converged && iter < maxIter) {
-      // 1) propagate: candidate label of v = min over neighbors' labels,
-      //    carrying the pre-round label as _old for the convergence check
+      // 1) propagate: candidate label of v = min over neighbors' labels
       val prop =
         if (iter == 0)
           Materialize.iterative(
             edges.groupBy(col("id_b").as("id")).agg(min(col("id_a")).as("nl"))
-              .select(col("id"), least(col("id"), col("nl")).as("label"),
-                col("id").as("_old")),
+              .select(col("id"), least(col("id"), col("nl")).as("label")),
             materialize)
         else {
           val nbrMin = edges
@@ -625,27 +638,30 @@ object Dedup {
           Materialize.iterative(
             labels.join(nbrMin, Seq("id"), "left")
               .select(col("id"),
-                least(col("label"), coalesce(col("nl"), col("label"))).as("label"),
-                col("label").as("_old")),
+                least(col("label"), coalesce(col("nl"), col("label"))).as("label")),
             materialize)
         }
-      // 2) pointer jumping: label(v) <- label(label(v)) (halves chains)
-      val jumped = Materialize.iterative(
-        prop.join(prop.select(col("id").as("label"), col("label").as("ll")),
-            Seq("label"), "left")
-          .select(col("id"), coalesce(col("ll"), col("label")).as("label"),
-            col("_old")),
-        materialize)
-      // convergence = no label moved this round. _old rides the
-      // materialized frame, so this is a narrow scan of the checkpoint —
-      // not the former jumped⋈labels shuffle join. The first round always
-      // changes on a non-empty pair set (id_a < id_b, so some label
-      // strictly drops) — skip its scan outright.
-      val changed =
-        if (iter == 0) 1L
-        else jumped.filter(col("label") =!= col("_old")).limit(1).count()
-      labels = jumped
-      converged = changed == 0
+      // 2) converged iff no edge joins two labels. Labels only fall, each
+      //    to an id of the node's own component, and label(v) <= v; so a
+      //    label that is constant on a component is that component's min
+      //    id, and a further round would move nothing. One join pass over
+      //    the edges, not the extra propagate + jump round it takes to
+      //    watch no label move — and a converged labelling is its own
+      //    pointer-jumping fixed point, so its jump is skipped: a graph of
+      //    near-cliques finishes on round 0's aggregate.
+      converged = edges
+        .join(prop.select(col("id").as("id_a"), col("label").as("la")), Seq("id_a"))
+        .join(prop.select(col("id").as("id_b"), col("label").as("lb")), Seq("id_b"))
+        .filter(col("la") =!= col("lb"))
+        .isEmpty
+      // 3) pointer jumping: label(v) <- label(label(v)) (halves chains)
+      labels =
+        if (converged) prop
+        else Materialize.iterative(
+          prop.join(prop.select(col("id").as("label"), col("label").as("ll")),
+              Seq("label"), "left")
+            .select(col("id"), coalesce(col("ll"), col("label")).as("label")),
+          materialize)
       iter += 1
     }
     // fail loudly, not silently-wrong cluster ids: practically unreachable
@@ -672,11 +688,16 @@ object Dedup {
   def keepFirstByPairs(spark: SparkSession, df: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id",
       materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
-    val losers = connectedComponents(spark, pairs, materialize = materialize)
-      .filter(col("id") =!= col("cluster_id"))
-      .select(col("id").as("_loser_id"))
+    val losers = componentLosers(spark, pairs, materialize).withColumnRenamed("id", "_loser_id")
     df.join(losers, df(idCol) === col("_loser_id"), "left_anti")
   }
+
+  /** (id) of every paired node that is not its component's min id. */
+  private def componentLosers(spark: SparkSession, pairs: DataFrame,
+      materialize: Materialize.Strategy): DataFrame =
+    connectedComponents(spark, pairs, materialize = materialize)
+      .filter(col("id") =!= col("cluster_id"))
+      .select(col("id"))
 
   /** Near-dedup applied with a QUALITY-aware survivor: keep the
     * highest-`qualityCol` doc of every near-dup component (tie → lowest
@@ -748,14 +769,13 @@ object Dedup {
       bands: Int = 16, shingleN: Int = 3, threshold: Double = 0.8,
       bucketCap: Int = 65536,
       materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
+    checkBucketCap(bucketCap)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("_th"))
     // content-free docs never enter the pre-pass (see scaladoc): the
     // predicate replays shingles()'s tokenizer (\s+ split, non-empty
     // tokens; lowercasing cannot change token presence) with codegen'd
     // built-ins — the exact-hash analogue of the banding's size(sig) > 0
-    val hasTokens = size(filter(
-      split(coalesce(col(textCol), lit("")), "\\s+"),
-      t => length(t) > 0)) > 0
+    val hasTokens = size(tokens(coalesce(col(textCol), lit("")))) > 0
     val exactLosers = Materialize(
       df.filter(hasTokens)
         .select(col(idCol).as("_xid"), sha2(col(textCol), 256).as("_th"))
@@ -764,10 +784,18 @@ object Dedup {
         .select(col("_xid")),
       materialize)
     val exactKept = df.join(exactLosers, df(idCol) === col("_xid"), "left_anti")
-    keepFirstByPairs(spark, exactKept,
+    val nearLosers = componentLosers(spark,
       minhashPairs(spark, exactKept, idCol, textCol, k, bands, shingleN,
         threshold, bucketCap, materialize),
-      idCol, materialize)
+      materialize)
+    // ONE anti-join against both loser sets. Every consumer re-derives the
+    // kept corpus from this plan, and with one anti-join per set the exact
+    // losers' broadcast sat below the corpus side of the near-dup losers'
+    // join: whether AQE shuffled the corpus then depended on which of the
+    // two finished first, so the plan and its generated classes changed
+    // from run to run.
+    df.join(exactLosers.select(col("_xid").cast("long")).union(nearLosers),
+      df(idCol) === col("_xid"), "left_anti")
   }
 
   /** Exact n-gram CONTAMINATION between a training corpus and an
@@ -797,9 +825,12 @@ object Dedup {
       minShared: Int = 1): DataFrame = {
     require(n > 0, "n > 0")
     require(minShared > 0, "minShared > 0")
-    ngramContaminationAgainst(corpus,
-      wordNgrams(evalSet, idCol, textCol, n, "eval_id")
-        .distinct(), // tiny; distinct before broadcast
+    // the eval side fingerprints its n-grams the way the corpus side does
+    // (no n-gram strings: the same fps ngramContaminationAgainst derives
+    // from them). Not deduped before the broadcast: an n-gram repeated
+    // within one eval doc only repeats a match, which the count-distinct
+    // absorbs, and a distinct here cost an exchange and two more stages.
+    contaminationProbe(corpus, ngramFps(evalSet, idCol, textCol, n, "eval_id"),
       idCol, textCol, n, minShared)
   }
 
@@ -814,7 +845,8 @@ object Dedup {
     * fold, no per-position n-gram String), the standard hash-based screen
     * (published pipelines Bloom-filter their n-grams the same way). The
     * corpus side builds NO n-gram strings at all; the (tiny) eval side
-    * fingerprints its materialized strings in the broadcast projection.
+    * fingerprints its materialized strings in the broadcast projection
+    * ([[ngramContamination]] fingerprints its eval tokens directly).
     * A 64-bit collision between two distinct shared n-grams of one
     * (doc, eval) pair could in principle lower shared_ngrams by one —
     * probability ~2⁻⁶⁴ per pair of shared n-grams. The DuckDB oracle
@@ -825,24 +857,41 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text", n: Int = 13,
       minShared: Int = 1): DataFrame = {
     require(n > 0, "n > 0")
-    val evalFps = evalNgrams.select(col("eval_id"),
-      graft.functions.GraftFunctions.fingerprint64(col("ngram")).as("fp"))
-    corpus.select(col(idCol).cast("long").as("doc_id"),
-        filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"),
-          t => length(t) > 0).as("toks"))
-      .select(col("doc_id"),
-        explode(graft.functions.DedupFunctions.passageFps(col("toks"), n)).as("fp"))
+    contaminationProbe(corpus, evalNgrams.select(col("eval_id"),
+        graft.functions.GraftFunctions.fingerprint64(col("ngram")).as("fp")),
+      idCol, textCol, n, minShared)
+  }
+
+  /** The corpus n-gram fingerprints into the broadcast (eval_id, fp) set,
+    * counted per (doc, eval) pair: the one probe of both contamination
+    * entries.
+    */
+  private def contaminationProbe(corpus: DataFrame, evalFps: DataFrame, idCol: String,
+      textCol: String, n: Int, minShared: Int): DataFrame =
+    ngramFps(corpus, idCol, textCol, n, "doc_id")
       .join(broadcast(evalFps), Seq("fp"))
       .groupBy(col("doc_id"), col("eval_id"))
       .agg(countDistinct(col("fp")).as("shared_ngrams"))
       .filter(col("shared_ngrams") >= minShared)
-  }
+
+  /** (outId, fp) per strict word n-gram of each doc: the [[PassageFps]]
+    * window fingerprints at w = n, value-identical to `fingerprint64` of
+    * each [[wordNgrams]] string (FunctionsSpec-pinned). One tokenization
+    * per doc; docs with fewer than n tokens emit nothing.
+    */
+  private def ngramFps(df: DataFrame, idCol: String, textCol: String, n: Int,
+      outId: String): DataFrame =
+    df.select(col(idCol).cast("long").as(outId),
+        tokens(lower(coalesce(col(textCol), lit("")))).as("toks"))
+      .select(col(outId),
+        explode(graft.functions.DedupFunctions.passageFps(col("toks"), n)).as("fp"))
 
   /** Strict word n-grams of a doc column as (outId, ngram) rows — one
     * map-side codegen'd projection (split/transform/slice/explode
     * built-ins, no UDF). Docs with fewer than n tokens emit nothing.
-    * Shared by the batch contamination screen and its streaming face
-    * (the projection is stateless, so it runs unchanged on a stream).
+    * The n-gram strings of the streaming contamination faces and of
+    * TextOps.ngramStats (the projection is stateless, so it runs unchanged
+    * on a stream); the batch screen matches [[ngramFps]] instead.
     *
     * The short-doc guard is FOLDED INTO the projection
     * (`when(size(toks) >= n, transform(...)).otherwise(empty)`) instead of
@@ -861,8 +910,7 @@ object Dedup {
   private[graft] def wordNgrams(df: DataFrame, idCol: String, textCol: String,
       n: Int, outId: String): DataFrame =
     df.select(col(idCol).cast("long").as(outId),
-        filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"),
-          t => length(t) > 0).as("toks"))
+        tokens(lower(coalesce(col(textCol), lit("")))).as("toks"))
       .select(col(outId),
         explode(
           when(size(col("toks")) >= n,
@@ -877,8 +925,13 @@ object Dedup {
   def decontaminate(spark: SparkSession, corpus: DataFrame, evalSet: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 13,
       minShared: Int = 1): DataFrame = {
-    val flagged = ngramContamination(spark, corpus, evalSet, idCol, textCol, n, minShared)
-      .select(col("doc_id").as("_contam_id")).distinct()
+    // materialized (never a no-op): the decontaminated corpus is typically
+    // read twice downstream (the passage strip scans its input, then joins
+    // it back), and every read would re-run the whole n-gram probe
+    val flagged = Materialize.iterative(
+      ngramContamination(spark, corpus, evalSet, idCol, textCol, n, minShared)
+        .select(col("doc_id").as("_contam_id")).distinct(),
+      Materialize.fromEnv)
     corpus.join(flagged, corpus(idCol) === col("_contam_id"), "left_anti")
   }
 
@@ -912,8 +965,7 @@ object Dedup {
     // — instead of materializing every window's ~w-token string just to
     // hash it, which was the passage family's dominant map cost.
     df.select(col(idCol).cast("long").as("doc_id"),
-        filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"),
-          t => length(t) > 0).as("toks"))
+        tokens(lower(coalesce(col(textCol), lit("")))).as("toks"))
       .select(col("doc_id"),
         posexplode(graft.functions.DedupFunctions.passageFps(col("toks"), w)))
       .toDF("doc_id", "pos", "fp")
@@ -991,9 +1043,9 @@ object Dedup {
     * [[dropPassageDups]], then the covered-index set — O(duplicated
     * windows × w) ints, deduped and folded to ONE sorted int array per
     * rewritten doc — rides a key-equality left join back to the corpus;
-    * the rebuild is a map-side higher-order filter (the per-token
-    * `array_contains` is linear in the doc's covered count — bounded by
-    * its token count). Corpus text never shuffles.
+    * the rebuild is one map-side pass over the doc's tokens (the native
+    * `graft_excise_tokens`: O(tokens + covered)). Corpus text never
+    * shuffles while the covered set broadcasts.
     *
     * Returns df's columns with `textCol` replaced.
     */
@@ -1022,13 +1074,11 @@ object Dedup {
       .distinct()
       .groupBy(col("_strip_id"))
       .agg(sort_array(collect_set(col("_ti"))).as("_cov"))
-    val rawToks = filter(split(coalesce(col(textCol), lit("")), "\\s+"),
-      t => length(t) > 0)
     df.join(covered, df(idCol) === col("_strip_id"), "left")
       .withColumn(textCol,
         when(col("_cov").isNull, col(textCol))
-          .otherwise(concat_ws(" ",
-            filter(rawToks, (t, i) => not(array_contains(col("_cov"), i))))))
+          .otherwise(graft.functions.DedupFunctions.exciseTokens(
+            tokens(coalesce(col(textCol), lit(""))), col("_cov"))))
       .drop("_strip_id", "_cov")
   }
 

@@ -112,6 +112,39 @@ class FunctionsSpec extends AnyFunSuite {
     }
   }
 
+  test("tokens, slotMatch and exciseTokens equal the higher-order formulas they replace") {
+    // the ops path's codegen'd forms must be VALUE-identical to the
+    // interpreted higher-order functions they replaced: the tokenizer,
+    // the MinHash slot-match estimate, and the passage strip's rewrite
+    import spark.implicits._
+    import graft.functions.DedupFunctions
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"), col("text"))
+      .union(Seq("", null, "  lead and  trail  ", "🙂 a 🙂 b").zipWithIndex
+        .map { case (t, i) => (-1L - i, t) }.toDF("doc_id", "text"))
+    val raw = coalesce(col("text"), lit(""))
+    val slowToks = filter(split(raw, "\\s+"), t => length(t) > 0)
+    val fastToks = graft.ops.Dedup.tokens(raw)
+    val toks = docs.select(col("doc_id"), slowToks.as("slow"), fastToks.as("fast"),
+      // a covered set per doc: every third token index, one out of range
+      transform(sequence(lit(0), size(slowToks) + 1), i => i * 3).as("cov"))
+    assert(toks.filter(col("slow") =!= col("fast")).isEmpty, "tokens")
+    val excised = toks.select(
+      concat_ws(" ", filter(col("slow"), (t, i) => not(array_contains(col("cov"), i)))).as("slow"),
+      DedupFunctions.exciseTokens(col("fast"), col("cov")).as("fast"))
+    assert(excised.filter(col("slow") =!= col("fast")).isEmpty, "exciseTokens")
+    val sigs = docs.select(col("doc_id"),
+      DedupFunctions.minhashSig(raw, 16, 3).as("sig"))
+    val pairs = sigs.as("a").join(sigs.as("b"), col("a.doc_id") < col("b.doc_id"))
+      .limit(5000)
+      .select(
+        (aggregate(zip_with(col("a.sig"), col("b.sig"), (x, y) => when(x === y, 1).otherwise(0)),
+          lit(0), (acc, x) => acc + x).cast("double") / lit(16)).as("slow"),
+        graft.ops.Dedup.slotMatch(col("a.sig"), col("b.sig"), 16).as("fast"))
+    assert(pairs.filter(not(col("slow") <=> col("fast"))).isEmpty, "slotMatch")
+    assert(pairs.filter(col("fast") > 0).count() > 0, "some pairs share slots")
+  }
+
   test("fingerprint64 expression equals the Scala helper on the corpus") {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

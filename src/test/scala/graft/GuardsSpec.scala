@@ -63,15 +63,23 @@ class GuardsSpec extends AnyFunSuite {
     val docs = Seq((1L, "a b c d")).toDF("doc_id", "text")
     val vecs = Seq((1L, Array(1f, 0f))).toDF("vec_id", "embedding")
     val noVecs = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    // built outside the job groups below: building an index runs a job
+    val idx = Dedup.minhashIndex(spark, docs)
     // cap 0 divided by zero inside a job; a negative cap marked every
     // bucket oversized with a negative nsplit and scattered its members
-    // across salts with no error. The guard runs before any Spark job.
+    // across salts with no error. The guard runs before any Spark job,
+    // also in the composed operators that materialize a pre-pass or the
+    // batch signatures before their first LSH stage.
     for (cap <- Seq(0, -1)) {
       val sites = Seq[() => Any](
         () => Similarity.lshNearNeighbors(spark, vecs, bucketCap = cap),
         () => Similarity.lshNearNeighbors(spark, noVecs, bucketCap = cap),
         () => Dedup.minhashPairs(spark, docs, bucketCap = cap),
-        () => Dedup.minhashPairsIncremental(spark, docs, docs, bucketCap = cap))
+        () => Dedup.minhashPairsIncremental(spark, docs, docs, bucketCap = cap),
+        () => Dedup.keepFirstTwoPhase(spark, docs, bucketCap = cap),
+        () => Dedup.applyIncremental(spark, docs, docs, bucketCap = cap),
+        () => Dedup.applyIncrementalFromIndex(spark, idx, docs, bucketCap = cap),
+        () => Dedup.ingestIncremental(spark, idx, docs, bucketCap = cap))
       for ((site, i) <- sites.zipWithIndex) {
         val group = s"bucket-cap-guard-$cap-$i"
         spark.sparkContext.setJobGroup(group, group)

@@ -29,6 +29,43 @@ class PlanShapeSpec extends AnyFunSuite {
   private def nodes(df: DataFrame): Seq[SparkPlan] =
     nodes(df.queryExecution.executedPlan)
 
+  /** The executed plan of every query `body` runs, materializations
+    * included. Listener events arrive asynchronously, so a marker query
+    * run after `body` closes the capture.
+    */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val marker = "plan_capture_marker"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.analyzed.output.map(_.name) == Seq(marker)) closed.countDown()
+        else if (closed.getCount > 0) plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(marker).collect()
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS), "plan capture timed out")
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
+  /** The operators compiled into one whole-stage class: its subtree down
+    * to the stage's inputs.
+    */
+  private def stageOps(w: org.apache.spark.sql.execution.WholeStageCodegenExec): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: org.apache.spark.sql.execution.InputAdapter => Nil
+      case _ => p +: p.children.flatMap(walk)
+    }
+    walk(w.child)
+  }
+
   test("lshNearNeighbors: the banded candidate exchange carries no vector column") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val df = Similarity.lshNearNeighbors(spark, emb, nBits = 12, nTables = 16,
@@ -252,6 +289,74 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!projStr.contains("DeserializeToObject"))
     assert("split\\(lower\\(".r.findAllIn(projStr).length == 1,
       "one tokenization per doc")
+  }
+
+  test("decontaminate under the passage strip runs the eval n-gram probe once") {
+    // the strip reads its input twice (fingerprints, then the join back),
+    // and an unmaterialized flagged set put the whole 13-gram probe —
+    // corpus tokenize + explode, eval broadcast join, count-distinct —
+    // into both branches of the sink query whenever the corpus arrived
+    // hash-partitioned by doc_id (as the near-dup apply's anti-join
+    // leaves it): the count-distinct then needs no exchange, so there is
+    // no exchange to reuse. Counted across the query and every
+    // materialization it triggers.
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val raw = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = raw.repartition(col("doc_id"))
+    val evalSet = raw.filter(pmod(col("doc_id"), lit(97)) === 0)
+    val plans = executedPlans {
+      Dedup.stripDuplicatePassages(spark,
+        Dedup.decontaminate(spark, docs, evalSet, n = 13), w = 25).collect()
+    }
+    def isProbeInput(p: SparkPlan): Boolean = p match {
+      case g: GenerateExec => g.generator.toString.contains("graft_passage_fps") &&
+        g.generator.toString.contains(", 13)")
+      case _ => false
+    }
+    val probes = plans.flatMap(nodes).collect {
+      case j: BroadcastHashJoinExec
+          if j.leftKeys.flatMap(_.references.map(_.name)) == Seq("fp") &&
+            nodes(j.left).exists(isProbeInput) => j
+    }
+    assert(probes.size == 1, s"eval n-gram probe must run once, ran ${probes.size} times")
+  }
+
+  test("connectedComponents runs no whole-stage-codegen'd limit") {
+    // a limit compiled into a whole-stage class names its row counter from
+    // a JVM-wide counter, so every convergence check generated a new class
+    import org.apache.spark.sql.execution.{GlobalLimitExec, LocalLimitExec, WholeStageCodegenExec}
+    import spark.implicits._
+    val chain = (0 until 9).map(i => (100L + i, 101L + i)).toDF("id_a", "id_b")
+    val plans = executedPlans { Dedup.connectedComponents(spark, chain).collect() }
+    val limits = plans.flatMap(nodes).collect { case w: WholeStageCodegenExec => w }
+      .flatMap(stageOps).filter {
+        case _: LocalLimitExec | _: GlobalLimitExec => true
+        case _ => false
+      }
+    assert(limits.isEmpty, s"whole-stage-codegen'd limits: $limits")
+  }
+
+  test("connectedComponents generates the same classes on every run") {
+    // the generated classes are cache keys by source: a literal or counter
+    // baked into the code makes every run compile anew. AQE is off here:
+    // which of two shuffles finishes first can move a runtime join
+    // re-plan, a timing effect this pin is not about.
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import spark.implicits._
+    val chain = (0 until 9).map(i => (100L + i, 101L + i)).toDF("id_a", "id_b")
+    def sources(): Seq[String] =
+      executedPlans { Dedup.connectedComponents(spark, chain).collect() }
+        .flatMap(nodes).collect { case w: WholeStageCodegenExec => w.doCodeGen()._2.body }
+        .sorted
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val (first, second) = (sources(), sources())
+      assert(first.nonEmpty)
+      val changed = first.diff(second).size + second.diff(first).size
+      assert(changed == 0, s"generated classes that differ between two runs (of ${first.size})")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("line dedup: one fp-keyed scalar exchange, no range partitioning") {
