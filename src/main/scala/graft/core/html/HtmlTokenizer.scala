@@ -25,7 +25,14 @@ object HtmlTokenizer {
   final case class EndTag(name: String) extends Tok
   final case class Text(content: String) extends Tok
 
-  private val RawTextTags = Set("script", "style", "noscript", "textarea")
+  /** Elements whose content is raw text, skipped to the matching close tag.
+    * A literal match compiles to a switch on the cached hashCode plus one
+    * equals, so tag names the tokenizer did not intern match too.
+    */
+  private def isRawText(name: String): Boolean = name match {
+    case "script" | "style" | "noscript" | "textarea" => true
+    case _ => false
+  }
 
   def tokenize(html: String, out: Tok => Unit): Unit =
     tokenize(html, new TokSink {
@@ -98,7 +105,7 @@ object HtmlTokenizer {
           val selfClosing = (packed & 1L) == 1L
           i = (packed >>> 1).toInt
           // raw-text elements: skip to the matching close tag verbatim
-          if (!selfClosing && RawTextTags.contains(name)) {
+          if (!selfClosing && isRawText(name)) {
             val close = "</" + name
             val idx = indexOfIgnoreCase(html, close, i)
             if (idx < 0) i = n

@@ -62,11 +62,18 @@ object PageParser {
     var n = 0
   }
 
-  private val Dropped = Set("head", "nav", "header", "footer", "aside", "form",
-    "iframe", "svg", "select", "button")
-  private val BlockTags = Set("p", "div", "section", "article", "main", "h1", "h2",
-    "h3", "h4", "h5", "h6", "li", "ul", "ol", "blockquote", "br", "tr", "table", "pre",
-    "body", "html")
+  // tag classes: a literal match is a hashCode switch plus one equals
+  private def isDropped(name: String): Boolean = name match {
+    case "head" | "nav" | "header" | "footer" | "aside" | "form" | "iframe" | "svg" |
+        "select" | "button" => true
+    case _ => false
+  }
+  private def isBlock(name: String): Boolean = name match {
+    case "p" | "div" | "section" | "article" | "main" | "h1" | "h2" | "h3" | "h4" | "h5" |
+        "h6" | "li" | "ul" | "ol" | "blockquote" | "br" | "tr" | "table" | "pre" | "body" |
+        "html" => true
+    case _ => false
+  }
   private val MinBlockChars = 10
   private val MaxLinkRatio = 0.5
   // deepest nested-<table> level that gets its own builder/region; deeper
@@ -104,7 +111,7 @@ object PageParser {
     var nestedOverflow = 0
 
     def onStartTag(name: String, attrs: Map[String, String], selfClosing: Boolean): Unit = {
-      if (Dropped.contains(name)) {
+      if (isDropped(name)) {
         if (!selfClosing) dropDepth += 1
       } else if (dropDepth > 0) {
         () // inside dropped subtree
@@ -139,14 +146,14 @@ object PageParser {
           if (!selfClosing) anchorDepth += 1
         case "br" =>
           if (preDepth > 0) preText.append('\n') else blockText.append('\n')
-        case n if BlockTags.contains(n) =>
+        case n if isBlock(n) =>
           flushBlock()
         case _ => ()
       }
     }
 
     def onEndTag(name: String): Unit = {
-      if (Dropped.contains(name)) {
+      if (isDropped(name)) {
         if (dropDepth > 0) dropDepth -= 1
       } else if (dropDepth > 0) {
         ()
@@ -173,7 +180,7 @@ object PageParser {
             if (preDepth == 0) finishPre()
           }
         case "a" => if (anchorDepth > 0) anchorDepth -= 1
-        case n if BlockTags.contains(n) => flushBlock()
+        case n if isBlock(n) => flushBlock()
         case _ => ()
       }
     }

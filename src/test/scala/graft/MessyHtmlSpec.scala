@@ -84,6 +84,17 @@ class MessyHtmlSpec extends AnyFunSuite {
     assert(g.get(1, 1).value == "y")
   }
 
+  test("tag classes match uncommon and spaced tag names, which are not interned") {
+    // SELECT / NOSCRIPT / BLOCKQUOTE are outside the tokenizer's interned
+    // names, and a space before '>' takes the end tag off the interned path
+    val html = "<SELECT>hidden option text</SELECT ><Button>click me now</Button >" +
+      "<NoScript>raw <table><tr><td>ghost</td><td>x</td></tr></table></NOSCRIPT >" +
+      "<BLOCKQUOTE>a quoted paragraph</BLOCKQUOTE >text after the quote"
+    val page = PageParser.parse(html)
+    assert(page.regions.isEmpty, "noscript content is raw text, not a table")
+    assert(page.textBlocks == Vector("a quoted paragraph", "text after the quote"))
+  }
+
   test("unclosed td/tr are closed implicitly") {
     val html = "<table><tr><td>a<td>b<tr><td>c<td>d</table>"
     val page = PageParser.parse(html)

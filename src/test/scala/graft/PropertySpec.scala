@@ -229,6 +229,67 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  test("PyFloat repr equals the legacy search, or beats it, on 10^6 seeded doubles") {
+    import java.math.BigDecimal
+    val rng = new java.util.SplittableRandom(7)
+    def next(i: Int): Double = (i & 7) match {
+      case 0 | 1 => // any finite double
+        var d = java.lang.Double.longBitsToDouble(rng.nextLong())
+        while (d.isNaN || d.isInfinite) d = java.lang.Double.longBitsToDouble(rng.nextLong())
+        d
+      case 2 => rng.nextDouble()
+      case 3 => rng.nextDouble(-1e12, 1e12)
+      case 4 => rng.nextInt(401).toDouble / (1 + rng.nextInt(400))
+      case 5 => rng.nextLong(100000000L).toDouble / 100
+      case 6 => // where the legacy search went wrong: ulp 2^7..2^10 and 2^32
+        Math.scalb(1.0 + rng.nextDouble(), Array(59, 60, 61, 62, 84)(rng.nextInt(5)))
+      case _ => Math.scalb(1.0 + rng.nextDouble(), rng.nextInt(-1074, 1024))
+    }
+    val n = 1000000
+    val byExponent = scala.collection.mutable.TreeMap.empty[Int, Int]
+    val untargeted = Vector.newBuilder[String]
+    var i = 0
+    while (i < n) {
+      val d = next(i)
+      val now = PyFloat.repr(d)
+      val old = LegacyPyFloat.repr(d)
+      if (now != old) {
+        val exact = new BigDecimal(d)
+        val a = new BigDecimal(now)
+        val b = new BigDecimal(old)
+        assert(java.lang.Double.parseDouble(now) == d, s"$now does not round-trip to $old")
+        val (la, lb) = (a.stripTrailingZeros.precision, b.stripTrailingZeros.precision)
+        assert(la <= lb, s"$now longer than $old")
+        // shortest first, then nearest: only an equally long string must be no farther
+        assert(la < lb || a.subtract(exact).abs.compareTo(b.subtract(exact).abs) <= 0,
+          s"$now farther than $old")
+        val e = Math.getExponent(d)
+        byExponent(e) = byExponent.getOrElse(e, 0) + 1
+        if ((i & 7) != 6) untargeted += s"$old -> $now"
+      }
+      i += 1
+    }
+    info(s"${byExponent.values.sum} of $n differ from the legacy search; by binary exponent: " +
+      byExponent.mkString(", "))
+    info(s"outside the targeted exponents: ${untargeted.result().mkString(", ")}")
+  }
+
+  test("PyFloat's fixed-point logarithms are exact over a double's exponents") {
+    import java.math.{BigDecimal, BigInteger}
+    def floorLog10(x: BigDecimal): Int = x.precision - x.scale - 1
+    def pow2(e: Int) = new BigDecimal(Math.scalb(1.0, e))
+    for (e <- -1074 to 971) {
+      assert(PyFloat.flog10pow2(e) == floorLog10(pow2(e)), s"flog10pow2($e)")
+      if (e > -1074)
+        assert(PyFloat.flog10threeQuartersPow2(e) == floorLog10(pow2(e).multiply(new BigDecimal("0.75"))),
+          s"flog10threeQuartersPow2($e)")
+    }
+    for (e <- -292 to 324) {
+      val bits = BigInteger.TEN.pow(math.abs(e)).bitLength
+      assert(PyFloat.flog2pow10(e) == (if (e >= 0) bits - 1 else -bits), s"flog2pow10($e)")
+    }
+  }
+
   test("zero-copy sha256Hex == digest of String.getBytes(UTF_8)") {
     // the serialize path hashes the canonical text via incremental manual
     // UTF-8 encoding (no getBytes copy); it must be bit-identical to the

@@ -46,6 +46,23 @@ class PyCompatSpec extends AnyFunSuite {
     }
   }
 
+  test("PyFloat.repr matches every row of the CPython fixture") {
+    // rows of (IEEE-754 bits, CPython repr), from tools/gen_pyfloat_fixture.py
+    val in = getClass.getResourceAsStream("/pyfloat/cpython_repr.tsv")
+    require(in != null, "missing test resource /pyfloat/cpython_repr.tsv")
+    val src = scala.io.Source.fromInputStream(in, "UTF-8")
+    val rows = try src.getLines().filterNot(_.startsWith("#")).toVector finally src.close()
+    assert(rows.size > 20000)
+    val bad = rows.flatMap { row =>
+      val tab = row.indexOf('\t')
+      val d = java.lang.Double.longBitsToDouble(
+        java.lang.Long.parseUnsignedLong(row.substring(0, tab), 16))
+      val got = PyFloat.repr(d)
+      if (got == row.substring(tab + 1)) None else Some(s"$row -> $got")
+    }
+    assert(bad.isEmpty, s"${bad.size} rows differ:\n${bad.take(20).mkString("\n")}")
+  }
+
   test("TypeInfer matches reference csv_reader._infer_type") {
     // (raw, python str(converted), data_type) — captured from the reference
     val pins = Seq(
