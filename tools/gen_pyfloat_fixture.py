@@ -1,16 +1,16 @@
 #!/usr/bin/env python3
 """Write the CPython repr(float) fixture that pins graft.core.grid.PyFloat.
 
-Usage: python3 tools/gen_pyfloat_fixture.py [--seed N] [--out PATH]
+Usage: python3 tools/gen_pyfloat_fixture.py [--out PATH]
 
-Standard library only, seeded, offline. Each row is `<16 hex digits of the
-IEEE-754 bits>\t<repr(float)>`; lines starting with '#' are comments. The
-rows cover random bit patterns, [0, 1) uniforms, 2-decimal money values,
-small ratios like the detection cascade's confidences, subnormals (5e-324
-among them), powers of two 2^52..2^90 and their neighbours, the binary
-exponents where a per-length printf search is neither shortest nor nearest,
-powers of ten, and the neighbourhoods of the notation switches at 1e16 and
-1e-4 / 1e-5.
+Standard library only, offline, seeded with SEED (the header records it).
+Each row is `<16 hex digits of the IEEE-754 bits>\t<repr(float)>`; lines
+starting with '#' are comments. The rows cover random bit patterns, [0, 1)
+uniforms, 2-decimal money values, small ratios like the detection cascade's
+confidences, subnormals (5e-324 among them), powers of two 2^52..2^90 and
+their neighbours, the binary exponents where a per-length printf search is
+neither shortest nor nearest, powers of ten, and the neighbourhoods of the
+notation switches at 1e16 and 1e-4 / 1e-5.
 """
 import argparse
 import math
@@ -19,6 +19,7 @@ import random
 import struct
 import sys
 
+SEED = 20181
 DEFAULT_OUT = os.path.normpath(os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "..",
     "src", "test", "resources", "pyfloat", "cpython_repr.tsv"))
@@ -92,10 +93,9 @@ def values(rng):
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--seed", type=int, default=20181)
     ap.add_argument("--out", default=DEFAULT_OUT)
     args = ap.parse_args()
-    rng = random.Random(args.seed)
+    rng = random.Random(SEED)
     seen = set()
     rows = []
     for v in values(rng):
@@ -106,8 +106,8 @@ def main():
         rows.append("%016x\t%r" % (b, v))
     os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
     with open(args.out, "w", newline="\n") as f:
-        f.write("# bits\trepr -- python3 tools/gen_pyfloat_fixture.py --seed %d (CPython %s)\n"
-                % (args.seed, sys.version.split()[0]))
+        f.write("# bits\trepr -- python3 tools/gen_pyfloat_fixture.py, seed %d (CPython %s)\n"
+                % (SEED, sys.version.split()[0]))
         f.write("\n".join(rows) + "\n")
     print("wrote %d rows to %s" % (len(rows), args.out))
 

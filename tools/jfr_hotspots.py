@@ -2,29 +2,28 @@
 """Aggregate the CPU samples of a JDK Flight Recorder file by frame.
 
 Usage:
-  python3 tools/jfr_hotspots.py REC.jfr [--bench-result RESULT.json | --skip S]
-      [--top 25] [--thread "Executor task launch worker"]
+  python3 tools/jfr_hotspots.py REC.jfr --bench-result RESULT.json
       [--caller java.util.Formatter ...]
 
 Reads `jdk.ExecutionSample` events through the JDK's `jfr print` (streamed,
-so a large recording is never held in memory). Keeps the samples of threads
-whose name contains --thread (default: Spark's executor task threads) taken
-after the set-up: --bench-result reads the set-up seconds (session start,
-input generation, warm-up) from the perfbench result file of the recorded
-run, --skip gives them by hand. Prints:
+so a large recording is never held in memory) at the recording depth DEPTH.
+Keeps the samples of Spark's executor task threads (THREAD) taken after the
+set-up: --bench-result reads the set-up seconds (session start, input
+generation, warm-up) from the perfbench result file of the recorded run.
+Prints:
 
 - each frame's self share (top of stack) and inclusive share (anywhere in
-  the stack, once per sample), the --top of each;
+  the stack, once per sample), the TOP of each;
 - for each --caller prefix, the first `graft.` frame (outside the prefix)
   below the first frame that starts with it, with its line: who calls into
   that JDK code, or into that graft class.
 
-Record with a deep stack (the default depth of 64 cuts regex and Formatter
-stacks before their callers), e.g.
+Record with a stack depth of DEPTH (the default depth of 64 cuts regex and
+Formatter stacks before their callers), e.g.
   JAVA_TOOL_OPTIONS="-XX:FlightRecorderOptions:stackdepth=512 \\
     -XX:StartFlightRecording=filename=/tmp/rec.jfr,settings=profile" \\
     python3 perfbench/run.py --workload extract_mix --seed 3 --seconds 6 --trace 0
-  python3 tools/jfr_hotspots.py /tmp/rec.jfr \
+  python3 tools/jfr_hotspots.py /tmp/rec.jfr \\
     --bench-result .bench_build/results/extract_mix-seed3-trace0.json
 """
 import argparse
@@ -36,12 +35,15 @@ import sys
 
 FRAME = re.compile(r"^\s+(\S+)\((.*?)\)(?:\s+line:\s*(-?\d+))?")
 TIME = re.compile(r"startTime = (\d+):(\d+):(\d+(?:\.\d+)?)")
-THREAD = re.compile(r'sampledThread = "(.*)" \(')
+SAMPLED_THREAD = re.compile(r'sampledThread = "(.*)" \(')
+DEPTH = 512
+THREAD = "Executor task launch worker"
+TOP = 25
 
 
-def samples(path, depth):
+def samples(path):
     """Yield (seconds since midnight, thread name, [(frame, line), ...] top first)."""
-    cmd = ["jfr", "print", "--events", "jdk.ExecutionSample", "--stack-depth", str(depth), path]
+    cmd = ["jfr", "print", "--events", "jdk.ExecutionSample", "--stack-depth", str(DEPTH), path]
     proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, text=True, bufsize=1 << 20)
     t, thread, frames, in_stack = None, None, [], False
     for line in proc.stdout:
@@ -63,7 +65,7 @@ def samples(path, depth):
                 if m:
                     t = int(m.group(1)) * 3600 + int(m.group(2)) * 60 + float(m.group(3))
             elif s.startswith("sampledThread"):
-                m = THREAD.search(s)
+                m = SAMPLED_THREAD.search(s)
                 thread = m.group(1) if m else s
             elif s.startswith("stackTrace = ["):
                 in_stack = True
@@ -74,30 +76,24 @@ def samples(path, depth):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("jfr")
-    ap.add_argument("--skip", type=float, default=0.0,
-                    help="seconds after the first sample to drop (set-up)")
-    ap.add_argument("--bench-result",
-                    help="perfbench result JSON of the recorded run; its set-up seconds set --skip")
-    ap.add_argument("--top", type=int, default=25)
-    ap.add_argument("--thread", default="Executor task launch worker")
+    ap.add_argument("--bench-result", required=True,
+                    help="perfbench result JSON of the recorded run; its set-up seconds are dropped")
     ap.add_argument("--caller", action="append", default=[],
                     help="frame prefix, e.g. java.util.Formatter; repeatable")
-    ap.add_argument("--depth", type=int, default=512)
     args = ap.parse_args()
-    if args.bench_result:
-        with open(args.bench_result) as f:
-            r = json.load(f)
-        args.skip = r["setup_session_s"] + sum(r["setup_generate_s"]) + r["setup_warmup_s"]
+    with open(args.bench_result) as f:
+        r = json.load(f)
+    skip = r["setup_session_s"] + sum(r["setup_generate_s"]) + r["setup_warmup_s"]
 
     self_n, incl_n = collections.Counter(), collections.Counter()
     callers = {p: collections.Counter() for p in args.caller}
     t0, kept, dropped = None, 0, 0
-    for t, thread, frames in samples(args.jfr, args.depth):
+    for t, thread, frames in samples(args.jfr):
         if t0 is None:
             t0 = t
-        if args.thread not in thread or not frames:
+        if THREAD not in thread or not frames:
             continue
-        if (t - t0) % 86400 < args.skip:
+        if (t - t0) % 86400 < skip:
             dropped += 1
             continue
         kept += 1
@@ -113,17 +109,17 @@ def main():
                           "(no graft. caller)")
             counter[caller] += 1
 
-    print("%d %r samples kept, %d dropped in the first %.1f s" % (kept, args.thread, dropped, args.skip))
+    print("%d %r samples kept, %d dropped in the first %.1f s" % (kept, THREAD, dropped, skip))
     if not kept:
         return
     for title, counter in (("self", self_n), ("inclusive", incl_n)):
-        print("\n%s share (top %d)" % (title, args.top))
-        for name, n in counter.most_common(args.top):
+        print("\n%s share (top %d)" % (title, TOP))
+        for name, n in counter.most_common(TOP):
             print("  %5.1f%%  %6d  %s" % (100.0 * n / kept, n, name))
     for prefix, counter in callers.items():
         total = sum(counter.values())
         print("\nfirst graft. caller below %s (%d samples, %.1f%%)" % (prefix, total, 100.0 * total / kept))
-        for name, n in counter.most_common(args.top):
+        for name, n in counter.most_common(TOP):
             print("  %6d  %s" % (n, name))
 
 
