@@ -350,7 +350,7 @@ object SparkEntry {
         .orderBy(col("doc_id"))),
     // deterministic hash-Bernoulli downsample: the 2/16 slice by the first
     // md5 nibble of doc_id (cross-engine hash so the oracle replays it
-    // bit-for-bit; the production key is xxhash64 — Sampling.xxhashKey).
+    // bit-for-bit; the production key would be Spark's native xxhash64).
     // Map-side filter: no shuffle, stable under repartitioning and task
     // retries, and slices nest (numer=2 superset of numer=1).
     "q_sample_hash" -> ((s, dir) =>
@@ -738,7 +738,7 @@ object SparkEntry {
     // moov/mvhd + trak/tkhd box walk); the DuckDB oracle recomputes every
     // field from the generator's id arithmetic — a round-trip equality
     // proof over all three modalities (tools/gen_multimodal_sql.py). The
-    // featureStats rollup and the 16-dim stub embedding stay OpsSpec-gated.
+    // 16-dim stub embedding stays OpsSpec-gated.
     "q_multimodal" -> ((s, dir) =>
       Multimodal.extractFeatures(Multimodal.syntheticMedia(s, dir)).toDF()
         .select(col("media_id"), col("kind"), col("n_bytes"), col("decode_ok"),

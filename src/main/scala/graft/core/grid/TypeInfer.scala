@@ -388,7 +388,10 @@ object TypeInfer {
       case _ => classifyExtractor(cur.valueCs, cur.valueCsFrom, cur.valueCsUntil)
     }
 
-  /** [[cellPlainFloat]] for a loaded cursor position. */
+  /** `PlainFloatRe.matches(value.trim)` at a loaded cursor position,
+    * without materializing the value: the horizontal header path's
+    * per-cell numeric test (no comma stripping).
+    */
   private[core] def cursorPlainFloat(cur: GridCursor): Boolean = {
     val cs = cur.valueCs
     var a = cur.valueCsFrom
@@ -472,19 +475,6 @@ object TypeInfer {
       if (d3 == 0) return false
     }
     cur() == -1
-  }
-
-  /** `PlainFloatRe.matches(c.value.trim)` without materializing: the
-    * horizontal header path's per-cell numeric test (no comma stripping).
-    */
-  private[core] def cellPlainFloat(c: Cell): Boolean = {
-    val cs = c.valueCs
-    if (cs == null) return false
-    var a = c.valueCsFrom
-    var b = c.valueCsUntil
-    while (a < b && cs.charAt(a) <= ' ') a += 1
-    while (b > a && cs.charAt(b - 1) <= ' ') b -= 1
-    matchesFloat(cs, a, b, skipCommas = false)
   }
 
   private def isBoolWordAscii(cs: CharSequence, a: Int, b: Int): Boolean = {

@@ -19,22 +19,6 @@ object Dedup {
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_count"))
   }
 
-  /** Rows dropped by exact dedup (the duplicates themselves). Null-safe on
-    * the hash (sha2(null) is null): null-text docs form ONE duplicate group,
-    * matching `exact`/`keepFirst` (GROUP BY and window partitioning both
-    * group nulls) — a plain equi-join would silently drop them.
-    */
-  def exactDuplicates(df: DataFrame, idCol: String = "doc_id", textCol: String = "text")
-      : DataFrame = {
-    val hashed = df.withColumn("text_hash", sha2(col(textCol), 256))
-    val keep = hashed.groupBy(col("text_hash"))
-      .agg(min(col(idCol)).as("keep_id"))
-      .withColumnRenamed("text_hash", "keep_hash")
-    hashed.join(keep, hashed("text_hash") <=> keep("keep_hash"))
-      .filter(col(idCol) =!= col("keep_id"))
-      .select(col(idCol).as("dup_id"), col("keep_id"))
-  }
-
   /** Exact dedup APPLIED: the kept corpus (lowest id per text hash), via
     * `min(id) over (partition by hash)` — ONE hash-keyed shuffle, no join,
     * and crucially no broadcast of the (unbounded) duplicate-loser set.
@@ -826,45 +810,16 @@ object Dedup {
     require(n > 0, "n > 0")
     require(minShared > 0, "minShared > 0")
     // the eval side fingerprints its n-grams the way the corpus side does
-    // (no n-gram strings: the same fps ngramContaminationAgainst derives
-    // from them). Not deduped before the broadcast: an n-gram repeated
-    // within one eval doc only repeats a match, which the count-distinct
-    // absorbs, and a distinct here cost an exchange and two more stages.
+    // (no n-gram strings). Not deduped before the broadcast: an n-gram
+    // repeated within one eval doc only repeats a match, which the
+    // count-distinct absorbs, and a distinct here cost an exchange and two
+    // more stages.
     contaminationProbe(corpus, ngramFps(evalSet, idCol, textCol, n, "eval_id"),
       idCol, textCol, n, minShared)
   }
 
-  /** [[ngramContamination]] against a PRECOMPUTED distinct eval n-gram set
-    * (eval_id, ngram) — the entry the streaming faces use so the eval side
-    * is tokenized once at query start (materialized) instead of once per
-    * micro-batch. Same plan shape: corpus n-grams map-side into the
-    * broadcast join, the count-distinct is the only exchange.
-    *
-    * Round 8: matching is by the 64-bit polynomial FINGERPRINT of the
-    * n-gram (the [[PassageFps]] expression at w = n — per-token polynomial
-    * fold, no per-position n-gram String), the standard hash-based screen
-    * (published pipelines Bloom-filter their n-grams the same way). The
-    * corpus side builds NO n-gram strings at all; the (tiny) eval side
-    * fingerprints its materialized strings in the broadcast projection
-    * ([[ngramContamination]] fingerprints its eval tokens directly).
-    * A 64-bit collision between two distinct shared n-grams of one
-    * (doc, eval) pair could in principle lower shared_ngrams by one —
-    * probability ~2⁻⁶⁴ per pair of shared n-grams. The DuckDB oracle
-    * counts DISTINCT shared n-gram STRINGS, with no fingerprints, so
-    * matching it exactly on the gate corpora shows no such collision there.
-    */
-  def ngramContaminationAgainst(corpus: DataFrame, evalNgrams: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text", n: Int = 13,
-      minShared: Int = 1): DataFrame = {
-    require(n > 0, "n > 0")
-    contaminationProbe(corpus, evalNgrams.select(col("eval_id"),
-        graft.functions.GraftFunctions.fingerprint64(col("ngram")).as("fp")),
-      idCol, textCol, n, minShared)
-  }
-
   /** The corpus n-gram fingerprints into the broadcast (eval_id, fp) set,
-    * counted per (doc, eval) pair: the one probe of both contamination
-    * entries.
+    * counted per (doc, eval) pair.
     */
   private def contaminationProbe(corpus: DataFrame, evalFps: DataFrame, idCol: String,
       textCol: String, n: Int, minShared: Int): DataFrame =
@@ -877,7 +832,11 @@ object Dedup {
   /** (outId, fp) per strict word n-gram of each doc: the [[PassageFps]]
     * window fingerprints at w = n, value-identical to `fingerprint64` of
     * each [[wordNgrams]] string (FunctionsSpec-pinned). One tokenization
-    * per doc; docs with fewer than n tokens emit nothing.
+    * per doc; docs with fewer than n tokens emit nothing. A 64-bit
+    * collision between two distinct shared n-grams of one (doc, eval) pair
+    * could lower shared_ngrams by one (~2⁻⁶⁴ per pair of shared n-grams);
+    * the DuckDB oracle counts distinct n-gram STRINGS, and matches exactly
+    * on the gate corpora.
     */
   private def ngramFps(df: DataFrame, idCol: String, textCol: String, n: Int,
       outId: String): DataFrame =
@@ -889,9 +848,8 @@ object Dedup {
   /** Strict word n-grams of a doc column as (outId, ngram) rows — one
     * map-side codegen'd projection (split/transform/slice/explode
     * built-ins, no UDF). Docs with fewer than n tokens emit nothing.
-    * The n-gram strings of the streaming contamination faces and of
-    * TextOps.ngramStats (the projection is stateless, so it runs unchanged
-    * on a stream); the batch screen matches [[ngramFps]] instead.
+    * The n-gram strings of TextOps.ngramStats; the contamination screen
+    * matches [[ngramFps]] instead.
     *
     * The short-doc guard is FOLDED INTO the projection
     * (`when(size(toks) >= n, transform(...)).otherwise(empty)`) instead of
@@ -908,7 +866,8 @@ object Dedup {
     * nothing, preserving the old filter's drop semantics exactly.
     */
   private[graft] def wordNgrams(df: DataFrame, idCol: String, textCol: String,
-      n: Int, outId: String): DataFrame =
+      n: Int, outId: String): DataFrame = {
+    require(n > 0, "n > 0")
     df.select(col(idCol).cast("long").as(outId),
         tokens(lower(coalesce(col(textCol), lit("")))).as("toks"))
       .select(col(outId),
@@ -917,6 +876,7 @@ object Dedup {
             transform(sequence(lit(0), size(col("toks")) - n),
               i => concat_ws(" ", slice(col("toks"), i + 1, lit(n)))))
             .otherwise(array().cast("array<string>"))).as("ngram"))
+  }
 
   /** The decontaminated corpus: every doc flagged by
     * [[ngramContamination]] is dropped via a key-equality left-anti join
@@ -1084,7 +1044,7 @@ object Dedup {
 
   /** One row per DISTINCT fingerprint of a (doc_id, pos, fp) window set,
     * carrying its canonical (lexicographic-min) occurrence — the compacted
-    * corpus-side artifact for incremental/streaming passage screens: a
+    * corpus-side artifact for the incremental passage screen: a
     * boilerplate fingerprint with millions of corpus occurrences joins as
     * ONE row instead of amplifying every batch match by its corpus
     * multiplicity.
@@ -1112,20 +1072,6 @@ object Dedup {
     passageFingerprints(batch, idCol, textCol, w)
       .join(canonicalPassageFps(corpusFps), Seq("fp"))
       .select(col("doc_id"), col("pos"), col("fp"), col("corpus_id"), col("corpus_pos"))
-
-  /** Incremental passage STRIP: excise from `batch` every window already
-    * present in the corpus fingerprint set (every corpus match is
-    * non-canonical by construction — the corpus came first). In-batch
-    * self-duplication is [[stripDuplicatePassages]]' job; a full daily
-    * ingest composes the two (corpus screen, then in-batch), then appends
-    * the surviving batch's [[passageFingerprints]] to the corpus artifact.
-    */
-  def stripPassagesAgainst(corpusFps: DataFrame, batch: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text", w: Int = 50): DataFrame =
-    exciseWindows(batch,
-      passageMatchesAgainst(corpusFps, batch, idCol, textCol, w)
-        .select(col("doc_id"), col("pos")),
-      idCol, textCol, w)
 
   // ---- cross-doc exact line dedup (the CCNet/RefinedWeb line-level screen) ----
 
@@ -1239,19 +1185,6 @@ object Dedup {
       .join(canonicalLineFps(corpusFps), Seq("fp"))
       .select(col("doc_id"), col("line_no"), col("fp"),
         col("corpus_id"), col("corpus_line"))
-
-  /** Incremental line STRIP: excise from `batch` every line already held
-    * by the corpus fingerprint set (every corpus match is non-canonical —
-    * the corpus came first). In-batch self-duplication is
-    * [[stripDuplicateLines]]' job; a full ingest composes the two, then
-    * appends the surviving batch's [[lineFingerprints]].
-    */
-  def stripLinesAgainst(corpusFps: DataFrame, batch: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    exciseLines(batch,
-      lineMatchesAgainst(corpusFps, batch, idCol, textCol)
-        .select(col("doc_id"), col("line_no")),
-      idCol, textCol)
 
   /** Exact n-gram Jaccard for a candidate pair set (verification stage). */
   def ngramJaccard(a: String, b: String, n: Int = 3): Double = {

@@ -409,57 +409,4 @@ object Multimodal {
       it.map(decode)
     }
   }
-
-  // ---- resize / frame-sample planning (pure geometry; the pixel work
-  // would happen in the same mapPartitions batch as decode) ----
-
-  /** Aspect-preserving resize plan: fit (w,h) inside (maxW,maxH) without
-    * upscaling. Deterministic integer geometry — the part of a resize op
-    * that is decoder-independent.
-    */
-  def resizeDims(w: Int, h: Int, maxW: Int, maxH: Int): (Int, Int) = {
-    require(maxW > 0 && maxH > 0, "bounds must be positive")
-    if (w <= 0 || h <= 0) return (0, 0)
-    if (w <= maxW && h <= maxH) return (w, h)
-    // floor-scale on the binding axis, keep >=1
-    val scale = math.min(maxW.toDouble / w, maxH.toDouble / h)
-    (math.max(1, math.floor(w * scale).toInt), math.max(1, math.floor(h * scale).toInt))
-  }
-
-  /** Deterministic frame sampling for video payloads: `k` frame indices
-    * spread uniformly over [0, nFrames) (FFmpeg-style thumbnail strategy —
-    * midpoints of k equal spans, so the first/last frames' letterboxing
-    * slates are avoided).
-    */
-  def sampleFrames(nFrames: Int, k: Int): Array[Int] = {
-    if (nFrames <= 0 || k <= 0) return Array.empty
-    if (k >= nFrames) return Array.range(0, nFrames)
-    Array.tabulate(k)(i => ((2 * i + 1) * nFrames / (2 * k)).min(nFrames - 1))
-  }
-
-  /** Batch resize-plan + frame-sample over decoded features — the Spark
-    * shape of the brief's resize/frame-sample ops: one projection over the
-    * decode output, no extra pass over payload bytes.
-    */
-  def withResizePlan(features: Dataset[MediaFeatures], maxW: Int = 512, maxH: Int = 512,
-      sampleK: Int = 4): DataFrame = {
-    import features.sparkSession.implicits._
-    features.map { f =>
-      val (tw, th) = resizeDims(f.width, f.height, maxW, maxH)
-      (f.media_id, f.kind, f.decode_ok, f.width, f.height, tw, th,
-        sampleFrames(f.n_frames, sampleK))
-    }.toDF("media_id", "kind", "decode_ok", "width", "height",
-      "target_width", "target_height", "sampled_frames")
-  }
-
-  /** Kind-level stats over extracted features (hash aggregate). */
-  def featureStats(features: Dataset[MediaFeatures]): DataFrame = {
-    features.toDF().groupBy(col("kind")).agg(
-      count(lit(1)).as("n"),
-      sum(when(col("decode_ok"), 1L).otherwise(0L)).as("decoded"),
-      sum(col("n_bytes")).as("total_bytes"),
-      round(avg(col("width")), 2).as("avg_width"),
-      round(avg(col("n_frames")), 2).as("avg_frames")
-    ).orderBy(col("kind"))
-  }
 }

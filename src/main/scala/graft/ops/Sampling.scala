@@ -26,16 +26,12 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** The production sampling key: xxhash64 of the id column (Spark-native,
-    * codegen'd, ~1 ns/row). Any deterministic hash column works — the
-    * query surface uses [[md5Nibble]] instead solely because the DuckDB
-    * oracle must replay the hash bit-for-bit and xxhash64 is not portable.
-    */
-  def xxhashKey(idCol: Column): Column = xxhash64(idCol)
-
   /** First hex nibble (0-15) of md5 of the stringified column — a
     * cross-engine-portable 4-bit hash for oracle-checked sampling surfaces.
     * Identical in Spark and DuckDB (md5 of the UTF-8 bytes, lowercase hex).
+    * Production sampling would key on Spark's native `xxhash64` (any
+    * deterministic hash column works); the query surface uses this one
+    * because the DuckDB oracle must replay the hash bit-for-bit.
     */
   def md5Nibble(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 1), 16, 10).cast("int")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** The one store behind every persisted index ([[MinhashIndex]],
-  * [[IvfIndex]], [[PassageIndex]], [[LineIndex]]): a UNION ALL of parquet
+  * [[IvfIndex]]): a UNION ALL of parquet
   * segments behind one atomic manifest. A companion declares its kind name,
   * its ordered int parameters, its data sub-directories with their column
   * lists, and how to take its case class apart and build it back; the

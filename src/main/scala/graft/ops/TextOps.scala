@@ -136,51 +136,6 @@ object TextOps {
           col("n_stop_hits") >= 2L).as("pass"))
   }
 
-  /** The composed Gopher FILTER: rows of `df` passing the full rule set,
-    * original columns preserved. Built as one boolean predicate whose
-    * word and line tallies each fold their source array ONCE
-    * (`aggregate(words, counters, merge, finish-to-boolean)`), with the
-    * raw-text symbol count threaded through the fold's init struct — so
-    * even under maximal filter pushdown (Catalyst inlines the predicate
-    * down to the scan) the doc is tokenized exactly once per gate side.
-    * Map-side only; at 100 TB this is one codegen'd scan stage.
-    */
-  def gopherFilter(df: DataFrame, textCol: String = "text",
-      minWords: Long = 50L, maxWords: Long = 100000L): DataFrame = {
-    val t = coalesce(col(textCol), lit(""))
-    val sym = (length(t) - length(translate(t, "#…", ""))).cast("long") +
-      ((length(t) - length(regexp_replace(t, "\\.\\.\\.", ""))) / 3).cast("long")
-    val passWords = aggregate(
-      filter(split(t, "\\s+"), x => length(x) > 0),
-      struct(lit(0L).as("n"), lit(0L).as("len"), lit(0L).as("stop"),
-        lit(0L).as("alpha"), sym.as("sym")),
-      (acc, x) => struct(
-        (acc("n") + 1L).as("n"),
-        (acc("len") + length(x)).as("len"),
-        (acc("stop") + when(lower(x).isin(GopherStopWords: _*), 1L).otherwise(0L))
-          .as("stop"),
-        (acc("alpha") + when(x.rlike("\\p{L}"), 1L).otherwise(0L)).as("alpha"),
-        acc("sym").as("sym")),
-      acc => acc("n") >= minWords && acc("n") <= maxWords &&
-        acc("len") >= acc("n") * 3 && acc("len") <= acc("n") * 10 &&
-        acc("sym") * 10 <= acc("n") &&
-        acc("alpha") * 10 >= acc("n") * 8 &&
-        acc("stop") >= 2L)
-    val passLines = aggregate(
-      split(t, "\n"),
-      struct(lit(0L).as("n"), lit(0L).as("bullet"), lit(0L).as("ellipsis")),
-      (acc, l) => struct(
-        (acc("n") + 1L).as("n"),
-        (acc("bullet") +
-          when(substring(l, 1, 1).isin(BulletChars: _*), 1L).otherwise(0L)).as("bullet"),
-        (acc("ellipsis") +
-          when(endswith(l, lit("...")) || endswith(l, lit("…")), 1L).otherwise(0L))
-          .as("ellipsis")),
-      acc => acc("bullet") * 10 <= acc("n") * 9 &&
-        acc("ellipsis") * 10 <= acc("n") * 3)
-    df.filter(passWords && passLines)
-  }
-
   // ---- C4 line-level cleaning (Raffel et al. 2020 §2.2) ----
 
   /** Characters trimmed from both ends of every line before the C4 rules
@@ -195,8 +150,7 @@ object TextOps {
     * whitespace-separated words, and (3) it does not contain the word
     * "javascript" (case-insensitive). Lines are trimmed of
     * [[LineTrimChars]] first and kept in TRIMMED form (the C4 rules are
-    * defined over stripped lines). One codegen'd higher-order expression —
-    * both surfaces below share it so filter and metrics can never drift.
+    * defined over stripped lines). One codegen'd higher-order expression.
     */
   private def c4KeptLines(t: Column): Column =
     filter(
@@ -243,38 +197,6 @@ object TextOps {
         col("text_clean"))
   }
 
-  /** The composed C4 FILTER + TRANSFORM: pages passing the page gates
-    * survive with `textCol` replaced by the cleaned text. The kept-lines
-    * array is computed in ONE projection and both the gate and the rewrite
-    * read that column (round-7 verdict finding: the previous
-    * filter-then-withColumn shape evaluated [[c4KeptLines]] twice per doc —
-    * once folded into the pushed-down Filter, once in the rewrite
-    * projection). The gate cannot be a Filter node at all: a filter on a
-    * derived column is pushed below its defining projection and re-inlines
-    * the kept-lines lambda (the wordNgrams trap), so the drop is expressed
-    * as `explode(when(pass, array(clean)).otherwise(empty))` — a Generate
-    * never reorders below the projection that defines its input, and the
-    * kept column is non-cheap and multi-referenced, so CollapseProject
-    * keeps the projections separate. One kept-lines evaluation per doc
-    * (PlanShapeSpec-pinned). OpsSpec pins row- and byte-parity with
-    * `c4Metrics(...).filter(page_pass)`.
-    */
-  def c4Filter(df: DataFrame, textCol: String = "text",
-      minSentences: Long = 5L): DataFrame = {
-    val t = coalesce(col(textCol), lit(""))
-    val keep = df.columns.filter(_ != textCol)
-    val kept = df.select(
-      (df.columns.map(col) :+ t.as("_c4_t") :+ c4KeptLines(t).as("_c4_kept")): _*)
-    val nSent = aggregate(col("_c4_kept"), lit(0L), (a, l) => a + terminalMarks(l))
-    val pass = !contains(lower(col("_c4_t")), lit("lorem ipsum")) &&
-      !contains(col("_c4_t"), lit("{")) && nSent >= minSentences
-    kept.select(
-        (keep.map(col) :+
-          explode(when(pass, array(concat_ws("\n", col("_c4_kept"))))
-            .otherwise(array().cast("array<string>"))).as(textCol)): _*)
-      .select(df.columns.map(col): _*)
-  }
-
   /** Corpus-wide n-gram statistics: occurrence count and document
     * frequency per distinct word n-gram (the standard corpus-analysis /
     * boilerplate-discovery rollup — the most frequent n-grams of a crawl
@@ -301,12 +223,14 @@ object TextOps {
     * result is a tiny reusable artifact (persist it between runs at
     * production scale).
     */
-  def topTokens(df: DataFrame, textCol: String = "text", k: Int = 1000): DataFrame =
+  def topTokens(df: DataFrame, textCol: String = "text", k: Int = 1000): DataFrame = {
+    require(k > 0, "k > 0")
     df.select(explode(filter(split(lower(coalesce(col(textCol), lit(""))), "\\s+"),
         t => length(t) > 0)).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("n_occ"))
       .orderBy(col("n_occ").desc, col("token"))
       .limit(k)
+  }
 
   /** Corpus-frequency quality signal (the CCNet-family idea with exact
     * integers instead of an LM: prose drawn from the corpus's common

@@ -63,16 +63,3 @@ final case class Extracted(
     spans: Seq[SpanOut],
     hints: Seq[HintOut]
 )
-
-/** Per-partition lineage/metrics row (north rule: parse failures are
-  * metrics, not job aborts).
-  */
-final case class PartitionMetrics(
-    partition_id: Int,
-    docs: Long,
-    tables_found: Long,
-    regions_found: Long,
-    bytes_stripped: Long,
-    parse_failures: Long,
-    wall_ms: Long
-)

@@ -111,14 +111,6 @@ object Pipeline {
       .orderBy(col("bucket"))
   }
 
-  /** Physical per-partition variant of [[metrics]] — the partition-balance
-    * diagnostic (skew/salting checks). Row set depends on partition count
-    * by construction; use [[metrics]] for the stable queryable surface.
-    */
-  def partitionMetrics(extracted: Dataset[Extracted]): DataFrame = {
-    rollup(extracted, col("partition_id")).orderBy(col("partition_id"))
-  }
-
   /** The one extraction rollup: docs, tables, regions, stripped bytes and
     * parse failures per `keys` group (no keys: one corpus-level row).
     */

@@ -53,9 +53,6 @@ object Snapshots {
     readManifestFile(snapshotsDir(outDir).resolve(name))
   }
 
-  def readSnapshot(outDir: String, snapshotId: Long): Option[Manifest] =
-    readManifestFile(snapshotsDir(outDir).resolve(s"snap-$snapshotId.json"))
-
   private def readManifestFile(p: Path): Option[Manifest] = {
     if (!Files.exists(p)) return None
     val root = mapper.readTree(Files.readAllBytes(p))

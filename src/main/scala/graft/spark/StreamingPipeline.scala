@@ -7,22 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.core.detect.DetectConfig
-import graft.ops.{Dedup, LineIndex, Materialize, MinhashIndex, PassageIndex, SegmentedManifest}
-
-/** Per-document crawl metric row (event-time = warc_ts). */
-final case class CrawlMetric(
-    host: String,
-    warc_ts: Timestamp,
-    n_tables: Int,
-    parse_failed: Boolean,
-    bytes_stripped: Long
-)
-
-/** One closed crawl session for a host (gap-based sessionization state). */
-final case class CrawlSession(host: String, start: Timestamp, end: Timestamp, docs: Long)
-
-/** flatMapGroupsWithState state record. */
-final case class SessionState(startMs: Long, endMs: Long, docs: Long)
+import graft.ops.{Dedup, Materialize, MinhashIndex, SegmentedManifest}
 
 /** A streaming near-duplicate pair (event-time = the later arrival).
   * Emission is at-least-once: a pair colliding in several minhash bands is
@@ -75,122 +60,6 @@ object StreamingPipeline {
     }
   }
 
-  private def hostOf(url: String): String = {
-    val i = url.indexOf("://")
-    if (i < 0) return ""
-    val from = i + 3
-    val j = url.indexOf('/', from)
-    if (j < 0) url.substring(from) else url.substring(from, j)
-  }
-
-  /** Kernel → per-document metric rows keyed by host with event time.
-    * Works identically on batch and streaming Datasets.
-    */
-  def crawlMetrics(pages: Dataset[Page], config: DetectConfig = DetectConfig())
-      : Dataset[CrawlMetric] = {
-    import pages.sparkSession.implicits._
-    pages.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      it.map { p =>
-        val e = Pipeline.extractOne(p, config, pid)
-        CrawlMetric(hostOf(p.url), p.warc_ts, e.n_tables, e.parse_failed, e.bytes_stripped)
-      }
-    }
-  }
-
-  /** Event-time windowed crawl metrics with a watermark: per (window, host)
-    * doc/table/failure/bytes counts. In streaming append mode a window is
-    * emitted exactly once, when the watermark passes its end; late rows
-    * beyond the watermark are dropped. On a batch Dataset the same code is
-    * a plain window aggregate (watermark is a no-op), so batch output is
-    * the oracle for the streamed output.
-    */
-  def windowedMetrics(pages: Dataset[Page], config: DetectConfig = DetectConfig(),
-      windowDur: String = "1 hour", watermark: String = "2 hours"): DataFrame = {
-    crawlMetrics(pages, config)
-      .withWatermark("warc_ts", watermark)
-      .groupBy(window(col("warc_ts"), windowDur).as("win"), col("host"))
-      .agg(
-        count(lit(1)).as("docs"),
-        sum(col("n_tables").cast("long")).as("tables"),
-        sum(when(col("parse_failed"), 1L).otherwise(0L)).as("parse_failures"),
-        sum(col("bytes_stripped")).as("bytes_stripped"))
-      .select(col("win.start").as("window_start"), col("host"),
-        col("docs"), col("tables"), col("parse_failures"), col("bytes_stripped"))
-  }
-
-  /** Streaming exact dedup — the streaming analogue of `Dedup.exact`: the
-    * first arrival per canonical-text SHA-256 survives. State is kept only
-    * within the watermark horizon (`dropDuplicatesWithinWatermark`), so it
-    * stays bounded on an unbounded crawl — a plain streaming
-    * dropDuplicates would accumulate every hash seen forever. Exact-dup
-    * pages almost always recur within a crawl window (mirrors, retries),
-    * which is the horizon this bounds; cross-epoch dedup belongs to the
-    * batch `Dedup.exact` pass over the accumulated snapshot.
-    */
-  def dedupStream(pages: Dataset[Page], config: DetectConfig = DetectConfig(),
-      watermark: String = "2 hours"): DataFrame = {
-    import pages.sparkSession.implicits._
-    pages.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      it.map { p =>
-        val e = Pipeline.extractOne(p, config, pid)
-        (p.url, p.warc_ts, e.text_sha256, e.parse_failed)
-      }
-    }.toDF("url", "warc_ts", "text_sha256", "parse_failed")
-      .filter(!col("parse_failed"))
-      .withWatermark("warc_ts", watermark)
-      .dropDuplicatesWithinWatermark("text_sha256")
-  }
-
-  /** Gap-based crawl sessionization per host via flatMapGroupsWithState
-    * with an event-time timeout: a session closes (and is emitted, append
-    * mode) when the watermark passes its end + gap. The custom-state
-    * analogue of the batch q_events_sessions query.
-    */
-  def sessionize(pages: Dataset[Page], gapMinutes: Int = 30,
-      watermark: String = "2 hours"): Dataset[CrawlSession] = {
-    import pages.sparkSession.implicits._
-    val gapMs = gapMinutes * 60000L
-    val keyed = crawlMetrics(pages)
-      .withWatermark("warc_ts", watermark)
-      .groupByKey(_.host)
-
-    def update(host: String, events: Iterator[CrawlMetric],
-        state: GroupState[SessionState]): Iterator[CrawlSession] = {
-      if (state.hasTimedOut) {
-        val s = state.get
-        state.remove()
-        Iterator.single(CrawlSession(host, new Timestamp(s.startMs), new Timestamp(s.endMs),
-          s.docs))
-      } else {
-        val ts = events.map(_.warc_ts.getTime).toArray
-        java.util.Arrays.sort(ts)
-        val closed = Vector.newBuilder[CrawlSession]
-        var cur = state.getOption
-        ts.foreach { t =>
-          cur match {
-            case Some(s) if t - s.endMs <= gapMs =>
-              cur = Some(SessionState(s.startMs, math.max(s.endMs, t), s.docs + 1))
-            case Some(s) =>
-              closed += CrawlSession(host, new Timestamp(s.startMs), new Timestamp(s.endMs),
-                s.docs)
-              cur = Some(SessionState(t, t, 1))
-            case None =>
-              cur = Some(SessionState(t, t, 1))
-          }
-        }
-        cur.foreach { s =>
-          state.update(s)
-          state.setTimeoutTimestamp(s.endMs + gapMs)
-        }
-        closed.result().iterator
-      }
-    }
-
-    keyed.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
   /** Streaming MinHash-LSH near-duplicate pairs — the streaming analogue of
     * [[graft.ops.Dedup.minhashPairs]] for continuously landing crawl data:
     * online near-dup detection against everything seen within the event-time
@@ -216,7 +85,7 @@ object StreamingPipeline {
     *    clone class floods one bucket per band; capping bounds both state
     *    and per-arrival verify work at the cost of recall INSIDE the flood
     *    window (first-cap-wins, deterministic by event time then id).
-    *    Exact-dup suppression ([[dedupStream]]) belongs upstream of this.
+    *    Exact-dup suppression belongs upstream of this.
     *  - Emission is at-least-once across bands (see [[NearDupPair]]);
     *    within a bucket a pair is emitted once.
     *  - The banded exchange carries the FULL signature with every band row
@@ -230,8 +99,7 @@ object StreamingPipeline {
     *    participate in an event-time-bounded operator (they would NPE the
     *    state function and wedge the query on checkpoint replay).
     *  - Cross-horizon duplicates are out of scope by design — that is the
-    *    batch `minhashPairs` pass over the accumulated snapshot, exactly
-    *    like dedupStream vs Dedup.exact.
+    *    batch `minhashPairs` pass over the accumulated snapshot.
     *
     * Restarting from a checkpoint with a DIFFERENT `k` fails loudly (the
     * stored signature stride no longer matches); a smaller `bucketCap`
@@ -401,201 +269,6 @@ object StreamingPipeline {
       .filter(col("est_jaccard") >= threshold)
   }
 
-  /** Streaming contamination screen: arriving docs matched against a
-    * STATIC evaluation set by exact word-n-gram overlap — the streaming
-    * face of [[graft.ops.Dedup.ngramContamination]] (flag eval-leaking
-    * docs as they land, before they ever reach the training corpus).
-    *
-    * Fully STATELESS: the doc side is a map-side n-gram projection (the
-    * same codegen'd built-ins as batch — stateless, so it runs unchanged
-    * on a stream) into a stream-static inner join against the
-    * (benchmark-sized, effectively broadcast) eval n-gram set — no
-    * watermark, no state store. Emits ONE row per matched (doc, eval,
-    * ngram) in append mode; the per-pair distinct count — batch's
-    * shared_ngrams — is the sink-side aggregate, exactly the
-    * at-least-once + idempotent-sink pattern of [[nearDupPairs]] /
-    * [[corpusDedupMatches]] (a streaming groupBy would otherwise need a
-    * watermark the screen does not want: a doc's verdict must not wait
-    * out an event-time horizon). The eval set is materialized once at
-    * query start (stream-static re-evaluates the static side per
-    * micro-batch; Materialize.iterative — the loop case).
-    *
-    * Distinct (doc_id, eval_id, ngram) rows equal the batch operator's
-    * pre-aggregate join output; grouping them reproduces shared_ngrams
-    * exactly (StreamingSpec pins both).
-    */
-  def contaminationMatches(docs: DataFrame, evalSet: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text", n: Int = 13): DataFrame = {
-    val e = Materialize.iterative(
-      Dedup.wordNgrams(evalSet, idCol, textCol, n, "eval_id").distinct(),
-      Materialize.fromEnv)
-    Dedup.wordNgrams(docs, idCol, textCol, n, "doc_id")
-      .join(e, Seq("ngram"))
-      .select(col("doc_id"), col("eval_id"), col("ngram"))
-  }
-
-  /** Streaming passage screen: every arriving doc's `w`-token windows
-    * matched against a STATIC corpus passage-fingerprint set — the
-    * streaming face of [[graft.ops.Dedup.passageMatchesAgainst]] (flag
-    * boilerplate passages the corpus already holds, as docs land).
-    * Fully STATELESS, the [[contaminationMatches]] shape: the doc side is
-    * a map-side fingerprint projection into a stream-static inner join on
-    * the 8-byte fingerprint — no watermark, no state store. The corpus
-    * side is deduped to one row per fingerprint and materialized ONCE at
-    * query start (stream-static re-evaluates the static plan per
-    * micro-batch; [[graft.ops.Materialize.iterative]]). Emits one row per
-    * matched (doc window, canonical corpus occurrence) in append mode;
-    * distinct rows equal the batch operator's output over the same docs
-    * (StreamingSpec-pinned).
-    */
-  def passageMatches(docs: DataFrame, corpusFps: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text", w: Int = 50): DataFrame = {
-    val canon = Materialize.iterative(Dedup.canonicalPassageFps(corpusFps),
-      Materialize.fromEnv)
-    Dedup.passageFingerprints(docs, idCol, textCol, w)
-      .join(canon, Seq("fp"))
-      .select(col("doc_id"), col("pos"), col("fp"), col("corpus_id"), col("corpus_pos"))
-  }
-
-  /** One passage-ingest micro-batch against the PERSISTED passage index:
-    * the batch is stripped of every window the corpus already holds
-    * ([[graft.ops.Dedup.stripPassagesAgainst]]), then self-stripped within
-    * the batch ([[graft.ops.Dedup.stripDuplicatePassages]]); the rewritten
-    * rows land in `outDir/rewritten/<segment>`, and the REWRITTEN docs'
-    * fingerprints (what the corpus now actually holds) append to the index
-    * — so later arrivals dedup against every passage kept before them.
-    * Commit, replay and `maxSegments` contract: [[ingestMicroBatch]].
-    */
-  def ingestPassageMicroBatch(batch: DataFrame, indexDir: String, outDir: String,
-      segment: String, idCol: String = "doc_id", textCol: String = "text",
-      maxSegments: Int = 0): Boolean =
-    ingest(PassageIndex, batch, indexDir, segment, maxSegments) { idx =>
-      val spark = batch.sparkSession
-      val rewritten = s"$outDir/rewritten/$segment"
-      Dedup.stripDuplicatePassages(spark,
-        Dedup.stripPassagesAgainst(idx.fps, batch, idCol, textCol, idx.w),
-        idCol, textCol, idx.w).write.mode("overwrite").parquet(rewritten)
-      PassageIndex(Dedup.passageFingerprints(spark.read.parquet(rewritten),
-        idCol, textCol, idx.w), idx.w)
-    }
-
-  /** Streaming passage APPLY — each arriving doc rewritten with every
-    * already-seen passage excised: the streaming face of the Lee-et-al
-    * strip, one [[ingestPassageMicroBatch]] per micro-batch over an
-    * initialized [[graft.ops.PassageIndex]] (design: [[dedupApplyStream]]).
-    */
-  def passageApplyStream(docs: DataFrame, indexDir: String, outDir: String,
-      checkpointDir: String, idCol: String = "doc_id", textCol: String = "text",
-      availableNow: Boolean = false, maxSegments: Int = 16): StreamingQuery =
-    foreachBatchStream(docs, checkpointDir, availableNow) { (b, id) =>
-      ingestPassageMicroBatch(b, indexDir, outDir, s"batch_$id", idCol, textCol, maxSegments)
-    }
-
-  /** Streaming line screen: every arriving doc's normalized lines matched
-    * against a STATIC corpus line-fingerprint set — the streaming face of
-    * [[graft.ops.Dedup.lineMatchesAgainst]] (flag boilerplate lines the
-    * corpus already holds, as docs land). Fully STATELESS, the
-    * [[passageMatches]] shape: map-side fingerprint projection into a
-    * stream-static inner join on the 8-byte fingerprint — no watermark,
-    * no state store; the corpus side is deduped to one row per
-    * fingerprint and materialized ONCE at query start.
-    */
-  def lineMatches(docs: DataFrame, corpusFps: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val canon = Materialize.iterative(Dedup.canonicalLineFps(corpusFps),
-      Materialize.fromEnv)
-    Dedup.lineFingerprints(docs, idCol, textCol)
-      .join(canon, Seq("fp"))
-      .select(col("doc_id"), col("line_no"), col("fp"),
-        col("corpus_id"), col("corpus_line"))
-  }
-
-  /** One line-ingest micro-batch against the PERSISTED line index — the
-    * line analogue of [[ingestPassageMicroBatch]], with
-    * [[graft.ops.Dedup.stripLinesAgainst]] then
-    * [[graft.ops.Dedup.stripDuplicateLines]]. (A line excision cannot
-    * create NEW lines, so fingerprinting the rewritten parquet is a
-    * single-source-of-truth choice, not a semantic necessity: the index
-    * holds exactly what the written corpus holds.)
-    */
-  def ingestLineMicroBatch(batch: DataFrame, indexDir: String, outDir: String,
-      segment: String, idCol: String = "doc_id", textCol: String = "text",
-      maxSegments: Int = 0): Boolean =
-    ingest(LineIndex, batch, indexDir, segment, maxSegments) { idx =>
-      val spark = batch.sparkSession
-      val rewritten = s"$outDir/rewritten/$segment"
-      Dedup.stripDuplicateLines(spark,
-        Dedup.stripLinesAgainst(idx.fps, batch, idCol, textCol), idCol, textCol)
-        .write.mode("overwrite").parquet(rewritten)
-      LineIndex(Dedup.lineFingerprints(spark.read.parquet(rewritten), idCol, textCol))
-    }
-
-  /** Streaming line APPLY — each arriving doc rewritten with every
-    * already-seen boilerplate line excised: the streaming face of the CCNet
-    * line screen, one [[ingestLineMicroBatch]] per micro-batch, mirroring
-    * [[passageApplyStream]] over an initialized [[graft.ops.LineIndex]].
-    */
-  def lineApplyStream(docs: DataFrame, indexDir: String, outDir: String,
-      checkpointDir: String, idCol: String = "doc_id", textCol: String = "text",
-      availableNow: Boolean = false, maxSegments: Int = 16): StreamingQuery =
-    foreachBatchStream(docs, checkpointDir, availableNow) { (b, id) =>
-      ingestLineMicroBatch(b, indexDir, outDir, s"batch_$id", idCol, textCol, maxSegments)
-    }
-
-  /** Streaming decontamination APPLY — the kept/flagged verdict per
-    * arriving doc ([[contaminationMatches]] stops at match events): each
-    * micro-batch is screened against the static eval set and lands per-doc
-    * verdicts plus the kept rows in segment-keyed parquet.
-    *
-    * The per-doc aggregate runs inside the micro-batch: a streaming groupBy
-    * would demand a watermark the screen must not wait out (a doc's verdict
-    * is final once its micro-batch is screened; the eval set is static).
-    * The eval n-gram set is tokenized and materialized ONCE at query start;
-    * each batch pays one map-side n-gram scan into the broadcast join
-    * ([[graft.ops.Dedup.ngramContaminationAgainst]]).
-    *
-    * Output per segment `batch_<id>`:
-    *  - `verdicts/`: (id, verdict ∈ {kept, flagged}, match_id = lowest
-    *    matching eval id or null, shared_ngrams with that eval doc).
-    *  - `kept/`: the surviving rows, input columns preserved.
-    * Replay-idempotent by determinism: the eval set never changes, so a
-    * replay overwrites its segment with identical bytes (no commit point).
-    * Kept set ≡ [[graft.ops.Dedup.decontaminate]] on the same rows.
-    */
-  def decontaminateApplyStream(docs: DataFrame, evalSet: DataFrame, outDir: String,
-      checkpointDir: String, idCol: String = "doc_id", textCol: String = "text",
-      n: Int = 13, minShared: Int = 1,
-      availableNow: Boolean = false): StreamingQuery = {
-    val evalNgrams = Materialize.iterative(
-      Dedup.wordNgrams(evalSet, idCol, textCol, n, "eval_id").distinct(),
-      Materialize.fromEnv)
-    foreachBatchStream(docs, checkpointDir, availableNow) { (batch, batchId) =>
-      val contam = Dedup.ngramContaminationAgainst(batch, evalNgrams,
-        idCol, textCol, n, minShared)
-      // one row per flagged doc: lowest matching eval id (deterministic),
-      // with that pair's shared count. Materialized: verdicts AND the
-      // kept anti-join both consume it — unmaterialized each re-runs the
-      // screen join.
-      val flagged = Materialize.iterative(
-        contam.groupBy(col("doc_id"))
-          .agg(min(struct(col("eval_id"), col("shared_ngrams"))).as("_m"))
-          .select(col("doc_id").as("_flag_id"),
-            col("_m.eval_id").as("_match_id"),
-            col("_m.shared_ngrams").as("_shared")),
-        Materialize.fromEnv)
-      val ids = batch.select(col(idCol).cast("long").as("id"))
-      ids.join(flagged, ids("id") === col("_flag_id"), "left")
-        .select(col("id"),
-          when(col("_flag_id").isNotNull, lit("flagged"))
-            .otherwise(lit("kept")).as("verdict"),
-          col("_match_id").as("match_id"),
-          col("_shared").as("shared_ngrams"))
-        .write.mode("overwrite").parquet(s"$outDir/verdicts/batch_$batchId")
-      batch.join(flagged, batch(idCol) === col("_flag_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$outDir/kept/batch_$batchId")
-    }
-  }
-
   /** One dedup-ingest micro-batch against the PERSISTED corpus index: the
     * unit of [[dedupApplyStream]], callable directly for scheduled (cron)
     * ingests. Runs [[graft.ops.Dedup.ingestIncremental]] against the index
@@ -604,10 +277,9 @@ object StreamingPipeline {
     * signatures to the index. Returns false, touching nothing, when
     * `segment` is already committed.
     *
-    * Crash/restart contract, shared by the three ingest families: the
-    * index append is the COMMIT POINT and runs last. A replay before it
-    * recomputes against the unchanged index (the pipeline is deterministic)
-    * and overwrites the same outputs; a replay after it is a no-op —
+    * Crash/restart contract: the index append is the COMMIT POINT and runs
+    * last. A replay before it recomputes against the unchanged index (the
+    * pipeline is deterministic) and overwrites the same outputs; a replay after it is a no-op —
     * recomputing would match the batch against its own survivors in the
     * grown index. `segment` is checked before any write: it is a path
     * component under `outDir` as well as under the index.
@@ -621,14 +293,21 @@ object StreamingPipeline {
   def ingestMicroBatch(batch: DataFrame, indexDir: String, outDir: String,
       segment: String, idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, bucketCap: Int = 65536,
-      maxSegments: Int = 0): Boolean =
-    ingest(MinhashIndex, batch, indexDir, segment, maxSegments) { idx =>
-      val res = Dedup.ingestIncremental(batch.sparkSession, idx, batch, idCol, textCol,
-        threshold, bucketCap)
-      res.verdicts.write.mode("overwrite").parquet(s"$outDir/verdicts/$segment")
-      res.survivors.write.mode("overwrite").parquet(s"$outDir/survivors/$segment")
-      res.batchIndex
+      maxSegments: Int = 0): Boolean = {
+    SegmentedManifest.checkSegmentName(segment)
+    if (MinhashIndex.readMeta(indexDir).committed.contains(segment)) return false
+    val spark = batch.sparkSession
+    val res = Dedup.ingestIncremental(spark, MinhashIndex.load(spark, indexDir), batch,
+      idCol, textCol, threshold, bucketCap)
+    res.verdicts.write.mode("overwrite").parquet(s"$outDir/verdicts/$segment")
+    res.survivors.write.mode("overwrite").parquet(s"$outDir/survivors/$segment")
+    MinhashIndex.appendSegment(res.batchIndex, indexDir, segment)
+    if (maxSegments > 0 && MinhashIndex.readMeta(indexDir).segments.size > maxSegments) {
+      MinhashIndex.compact(spark, indexDir)
+      MinhashIndex.vacuum(indexDir)
     }
+    true
+  }
 
   /** Streaming near-dedup APPLY — the kept/dropped verdict per arriving
     * doc ([[corpusDedupMatches]] stops at pairs): one [[ingestMicroBatch]]
@@ -650,41 +329,14 @@ object StreamingPipeline {
   def dedupApplyStream(docs: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8, bucketCap: Int = 65536,
-      availableNow: Boolean = false, maxSegments: Int = 16): StreamingQuery =
-    foreachBatchStream(docs, checkpointDir, availableNow) { (b, id) =>
-      ingestMicroBatch(b, indexDir, outDir, s"batch_$id", idCol, textCol,
-        threshold, bucketCap, maxSegments)
-    }
-
-  /** The one ingest step behind the three `ingest*MicroBatch` families. The
-    * segment name is checked BEFORE any write (`transform` writes under
-    * `outDir/<sub>/<segment>`); a committed segment returns false untouched;
-    * `transform` gets the loaded index, writes the family's outputs and
-    * returns the delta; the append is the commit point; then the
-    * `maxSegments` compact+vacuum policy.
-    */
-  private def ingest[I](store: SegmentedManifest[I, I], batch: DataFrame,
-      indexDir: String, segment: String, maxSegments: Int)(transform: I => I): Boolean = {
-    SegmentedManifest.checkSegmentName(segment)
-    if (store.readMeta(indexDir).committed.contains(segment)) return false
-    val spark = batch.sparkSession
-    store.appendSegment(transform(store.load(spark, indexDir)), indexDir, segment)
-    if (maxSegments > 0 && store.readMeta(indexDir).segments.size > maxSegments) {
-      store.compact(spark, indexDir)
-      store.vacuum(indexDir)
-    }
-    true
-  }
-
-  /** The one `foreachBatch` driver behind the apply streams: checkpointed,
-    * each micro-batch handed to `step` with its id; `availableNow` drains
-    * what exists and stops.
-    */
-  private def foreachBatchStream(docs: DataFrame, checkpointDir: String,
-      availableNow: Boolean)(step: (DataFrame, Long) => Unit): StreamingQuery = {
+      availableNow: Boolean = false, maxSegments: Int = 16): StreamingQuery = {
     val writer = docs.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: Dataset[Row], batchId: Long) => step(b.toDF(), batchId) }
+      .foreachBatch { (b: Dataset[Row], id: Long) =>
+        ingestMicroBatch(b.toDF(), indexDir, outDir, s"batch_$id", idCol, textCol,
+          threshold, bucketCap, maxSegments)
+        () // a replayed, already-committed batch is a no-op either way
+      }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.grid.Cell
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, Similarity, TextOps}
 import graft.spark.Snapshots
 
 /** Loud-failure guards and backward-compat fallbacks (round-4 ADVICE):
@@ -91,19 +91,45 @@ class GuardsSpec extends AnyFunSuite {
     }
   }
 
-  test("ngramContaminationAgainst rejects a non-positive n-gram size") {
+  test("ngramContamination and decontaminate reject a non-positive n-gram size") {
     val spark = SparkTestBase.spark
     import spark.implicits._
     val corpus = Seq((1L, "a b c d")).toDF("doc_id", "text")
-    val evalNgrams = Seq((7L, "a b")).toDF("eval_id", "ngram")
+    val evalSet = Seq((7L, "a b")).toDF("doc_id", "text")
     // n = 0 used to emit n+1 junk fingerprints, n < 0 an index error
     for (n <- Seq(0, -1)) {
-      val e = intercept[IllegalArgumentException] {
-        Dedup.ngramContaminationAgainst(corpus, evalNgrams, n = n)
+      val sites = Seq[() => Any](
+        () => Dedup.ngramContamination(spark, corpus, evalSet, n = n),
+        () => Dedup.decontaminate(spark, corpus, evalSet, n = n))
+      for (site <- sites) {
+        val e = intercept[IllegalArgumentException](site())
+        assert(e.getMessage.contains("n > 0"))
       }
-      assert(e.getMessage.contains("n > 0"))
     }
-    assert(Dedup.ngramContaminationAgainst(corpus, evalNgrams, n = 2).count() == 1)
+    assert(Dedup.ngramContamination(spark, corpus, evalSet, n = 2).count() == 1)
+  }
+
+  test("n-gram and top-k text statistics reject a non-positive size before any job") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val docs = Seq((1L, "a b c d")).toDF("doc_id", "text")
+    // n = 0 emitted an empty-string n-gram per token position, n < 0
+    // aborted a task; k = 0 made the vocabulary empty, so every doc
+    // scored n_common = 0
+    for (v <- Seq(0, -1)) {
+      val sites = Seq[() => Any](
+        () => TextOps.ngramStats(docs, n = v),
+        () => TextOps.topTokens(docs, k = v),
+        () => TextOps.tokenFrequencyQuality(docs, k = v))
+      for ((site, i) <- sites.zipWithIndex) {
+        val group = s"text-stats-guard-$v-$i"
+        spark.sparkContext.setJobGroup(group, group)
+        try intercept[IllegalArgumentException](site())
+        finally spark.sparkContext.clearJobGroup()
+        assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+          s"site $i ran a Spark job before rejecting $v")
+      }
+    }
   }
 
   test("connectedComponents throws loudly when maxIter is exhausted") {

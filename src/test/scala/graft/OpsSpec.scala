@@ -27,8 +27,9 @@ class OpsSpec extends AnyFunSuite {
 
   test("exact dedup finds injected duplicates") {
     val df = docsWithDups
-    val dups = Dedup.exactDuplicates(df).collect()
-    val dupIds = dups.map(_.getLong(0)).toSet
+    // the duplicates are every id that is not its text hash's keep_id
+    val keepIds = Dedup.exact(df).select("keep_id").collect().map(_.getLong(0)).toSet
+    val dupIds = df.select("doc_id").collect().map(_.getLong(0)).toSet -- keepIds
     assert(dupIds.contains(100001L))
     assert(dupIds.contains(100003L))
     assert(!dupIds.contains(100002L), "near-dup must not be an exact dup")
@@ -198,6 +199,12 @@ class OpsSpec extends AnyFunSuite {
     val bad = Dedup.minhashIndex(spark, b, k = 32, bands = 8)
     intercept[IllegalArgumentException] {
       MinhashIndex.appendSegment(bad, dir, "batch_2")
+    }
+    // dot-only names resolve to the index root or a data dir itself:
+    // rejected, and the committed index still loads its rows
+    for (name <- Seq(".", "..")) {
+      intercept[IllegalArgumentException] { MinhashIndex.appendSegment(delta, dir, name) }
+      assert(sigRows(MinhashIndex.load(spark, dir)) == sigRows(wholesale))
     }
   }
 
@@ -459,7 +466,7 @@ class OpsSpec extends AnyFunSuite {
     assert(outU(2L) == "p q")
   }
 
-  test("C4 line cleaning applies every published rule; filter == metrics gate") {
+  test("C4 line cleaning applies every published rule") {
     import spark.implicits._
     val docs = Seq(
       // kept content + dropped nav (no terminal punct) + dropped short line
@@ -486,15 +493,6 @@ class OpsSpec extends AnyFunSuite {
     assert(m(5L) == ((2L, 1L, 1L, true,
       "He said \"this is the quoted ending line.\"")), "quote-terminated kept")
     assert(m(6L) == ((1L, 0L, 0L, false, "")), "null text -> empty, page fails")
-    // the composed filter == metrics gate + rewrite, byte-identical
-    val viaMetrics = TextOps.c4Metrics(docs, minSentences = 1L)
-      .filter(col("page_pass"))
-      .select(col("doc_id"), col("text_clean").as("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val viaFilter = TextOps.c4Filter(docs, minSentences = 1L)
-      .select(col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(viaFilter == viaMetrics, "c4Filter == c4Metrics.filter(page_pass)")
   }
 
   test("token-frequency quality scores common vocabulary high, gibberish low") {
@@ -547,90 +545,18 @@ class OpsSpec extends AnyFunSuite {
       "untouched doc byte-exact incl. empty line")
     assert(out(4L) == "repeat me now\nsomething else entirely", "self-repeat excised")
     assert(out(5L) == null, "null text passes through")
-    // incremental face: batch lines already in the corpus fps are excised
+    // incremental face: batch lines already in the corpus fps match the
+    // corpus-canonical occurrence
     val corpusFps = Dedup.lineFingerprints(docs)
     val batch = Seq((10L, s"Fresh batch line.\n$boiler")).toDF("doc_id", "text")
-    val incr = Dedup.stripLinesAgainst(corpusFps, batch)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(incr == Set((10L, "Fresh batch line.")))
-    // and matches carry the corpus-canonical occurrence
     val mrows = Dedup.lineMatchesAgainst(corpusFps, batch)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(3), r.getInt(4))).toSet
     assert(mrows == Set((10L, 1, 1L, 1)))
   }
 
-  test("passage index: round-trip, idempotent append, compaction, param guard") {
+  test("index manifests: index.json bytes are pinned for both kinds") {
     import spark.implicits._
-    import graft.ops.PassageIndex
-    val a = Seq((1L, "one two three four five six seven")).toDF("doc_id", "text")
-    val b = Seq((2L, "eight nine ten eleven twelve thirteen")).toDF("doc_id", "text")
-    def rows(idx: PassageIndex) =
-      idx.fps.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("pfp_idx").toString
-    PassageIndex.write(PassageIndex(Dedup.passageFingerprints(a, w = 5), 5), dir)
-    val loaded = PassageIndex.load(spark, dir)
-    assert(loaded.w == 5 && rows(loaded) == rows(
-      PassageIndex(Dedup.passageFingerprints(a, w = 5), 5)))
-    val delta = PassageIndex(Dedup.passageFingerprints(b, w = 5), 5)
-    assert(PassageIndex.appendSegment(delta, dir, "day_1"))
-    assert(!PassageIndex.appendSegment(delta, dir, "day_1"), "replay = no-op")
-    intercept[IllegalArgumentException] {
-      PassageIndex.appendSegment(
-        PassageIndex(Dedup.passageFingerprints(b, w = 4), 4), dir, "day_2")
-    }
-    val before = rows(PassageIndex.load(spark, dir))
-    assert(before == rows(PassageIndex(
-      Dedup.passageFingerprints(a.union(b), w = 5), 5)))
-    // dot-only names resolve to the index root or fps/ itself: rejected,
-    // and the committed index still loads its rows
-    for (bad <- Seq(".", "..")) {
-      intercept[IllegalArgumentException] { PassageIndex.appendSegment(delta, dir, bad) }
-      assert(rows(PassageIndex.load(spark, dir)) == before)
-    }
-    // compact: one live segment, identical rows, replays stay no-ops,
-    // vacuum reclaims exactly the absorbed dirs (shared-machinery pins —
-    // the exhaustive crash/orphan cases live in the MinhashIndex test)
-    val seg = PassageIndex.compact(spark, dir)
-    assert(seg.isDefined)
-    val m = PassageIndex.readMeta(dir)
-    assert(m.segments == Seq(seg.get) && m.absorbed.toSet == Set("base", "day_1"))
-    assert(rows(PassageIndex.load(spark, dir)) == before)
-    assert(!PassageIndex.appendSegment(delta, dir, "day_1"),
-      "replay after compaction must stay a no-op")
-    assert(PassageIndex.vacuum(dir).toSet == Set("fps/base", "fps/day_1"))
-    assert(rows(PassageIndex.load(spark, dir)) == before)
-  }
-
-  test("line index: round-trip, idempotent append, compaction, vacuum") {
-    import spark.implicits._
-    import graft.ops.LineIndex
-    val a = Seq((1L, "first corpus line.\nsecond corpus line.")).toDF("doc_id", "text")
-    val b = Seq((2L, "a later ingest line.")).toDF("doc_id", "text")
-    def rows(idx: LineIndex) =
-      idx.fps.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("lfp_idx").toString
-    LineIndex.write(LineIndex(Dedup.lineFingerprints(a)), dir)
-    assert(rows(LineIndex.load(spark, dir)) ==
-      rows(LineIndex(Dedup.lineFingerprints(a))))
-    val delta = LineIndex(Dedup.lineFingerprints(b))
-    assert(LineIndex.appendSegment(delta, dir, "day_1"))
-    assert(!LineIndex.appendSegment(delta, dir, "day_1"), "replay = no-op")
-    val before = rows(LineIndex.load(spark, dir))
-    assert(before == rows(LineIndex(Dedup.lineFingerprints(a.union(b)))))
-    val seg = LineIndex.compact(spark, dir)
-    assert(seg.isDefined)
-    val m = LineIndex.readMeta(dir)
-    assert(m.segments == Seq(seg.get) && m.absorbed.toSet == Set("base", "day_1"))
-    assert(rows(LineIndex.load(spark, dir)) == before)
-    assert(!LineIndex.appendSegment(delta, dir, "day_1"),
-      "replay after compaction must stay a no-op")
-    assert(LineIndex.vacuum(dir).toSet == Set("fps/base", "fps/day_1"))
-    assert(rows(LineIndex.load(spark, dir)) == before)
-  }
-
-  test("index manifests: index.json bytes are pinned for all four kinds") {
-    import spark.implicits._
-    import graft.ops.{IvfIndex, LineIndex, MinhashIndex, PassageIndex}
+    import graft.ops.{IvfIndex, MinhashIndex}
     val docs = Seq((1L, "one two three four five six seven")).toDF("doc_id", "text")
     def manifest(dir: String) = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, "index.json")), java.nio.charset.StandardCharsets.UTF_8)
@@ -651,21 +577,9 @@ class OpsSpec extends AnyFunSuite {
     IvfIndex.write(IvfIndex(Array(Array(1.0, 0.0)), assigned, 4), ivf)
     assert(IvfIndex.appendSegment(assigned, ivf, "day_1"))
     assert(manifest(ivf) == pinned("  \"n_list\" : 4,\n"))
-
-    val pas = tmp("pin_pas")
-    val pIdx = PassageIndex(Dedup.passageFingerprints(docs, w = 3), 3)
-    PassageIndex.write(pIdx, pas)
-    assert(PassageIndex.appendSegment(pIdx, pas, "day_1"))
-    assert(manifest(pas) == pinned("  \"w\" : 3,\n"))
-
-    val lin = tmp("pin_lin")
-    val lIdx = LineIndex(Dedup.lineFingerprints(docs))
-    LineIndex.write(lIdx, lin)
-    assert(LineIndex.appendSegment(lIdx, lin, "day_1"))
-    assert(manifest(lin) == pinned(""))
   }
 
-  test("incremental passage screen matches and strips against a corpus fp set") {
+  test("incremental passage screen matches against a corpus fp set") {
     import spark.implicits._
     val shared = "alpha beta gamma delta epsilon"
     val corpus = Seq(
@@ -682,12 +596,6 @@ class OpsSpec extends AnyFunSuite {
     val m = Dedup.passageMatchesAgainst(corpusFps, batch, w = 5)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(3), r.getInt(4)))
     assert(m.toSeq == Seq((10L, 2, 1L, 2)))
-    // strip-against: the corpus-held window excised from the batch doc,
-    // the clean doc byte-exact
-    val kept = Dedup.stripPassagesAgainst(corpusFps, batch, w = 5)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(kept(10L) == "n1 n2 n3")
-    assert(kept(12L) == "fresh content with nothing shared at all present here")
   }
 
   test("url canonicalization: case, ports, tracking params, slash, fragment") {
@@ -776,7 +684,7 @@ class OpsSpec extends AnyFunSuite {
     assert(m(6L) == (0L, 0L, 1L, "version <IP>.5 ok"))
   }
 
-  test("gopher metrics tally exactly and the fold-gate filter agrees") {
+  test("gopher metrics tally exactly") {
     import spark.implicits._
     // 13 words x 10: mean word length 400/130 ~ 3.08, 80 stop hits -> pass
     val prose = Seq.fill(10)("the cat and dog have fun with that toy to be of note")
@@ -800,11 +708,6 @@ class OpsSpec extends AnyFunSuite {
       r7.getLong(6), r7.getLong(7), r7.getLong(8)) == (8L, 34L, 0L, 6L, 3L, 3L, 1L, 2L))
     val passes = m.collect { case (id, r) if r.getBoolean(9) => id }.toSet
     assert(passes == Set(1L))
-    // the composed filter (single-fold gate expression) agrees with the
-    // metrics projection's pass column on every doc
-    val filtered = graft.ops.TextOps.gopherFilter(docs)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(filtered == passes)
     // per-gate non-vacuity: each crafted failure fails for its own reason
     assert(m(2L).getLong(7) * 10 > m(2L).getLong(6) * 9, "doc 2 trips the bullet gate")
     assert(m(3L).getLong(5) * 10 > m(3L).getLong(1), "doc 3 trips the symbol gate")
@@ -826,7 +729,7 @@ class OpsSpec extends AnyFunSuite {
     assert(s1.subsetOf(s2) && s1.size < s2.size)
     assert(s2.nonEmpty && s2.size < 400)
     // the production xxhash64 key: same invariance
-    val xkey = Sampling.xxhashKey(col("doc_id"))
+    val xkey = xxhash64(col("doc_id"))
     assert(ids(Sampling.bernoulliByHash(docs, xkey, 10, 100)) ==
       ids(Sampling.bernoulliByHash(docs.repartition(5), xkey, 10, 100)))
   }
@@ -1230,24 +1133,6 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("multimodal resize plan and frame sampling are exact geometry") {
-    assert(Multimodal.resizeDims(1920, 1080, 512, 512) == (512, 288))
-    assert(Multimodal.resizeDims(100, 200, 512, 512) == (100, 200), "no upscaling")
-    assert(Multimodal.resizeDims(1, 10000, 512, 512) == (1, 512), "floor keeps >=1")
-    assert(Multimodal.sampleFrames(100, 4).toSeq == Seq(12, 37, 62, 87), "span midpoints")
-    assert(Multimodal.sampleFrames(3, 8).toSeq == Seq(0, 1, 2), "k >= n returns all")
-    assert(Multimodal.sampleFrames(0, 4).isEmpty)
-    val media = Multimodal.syntheticMedia(spark, sfDir, limitN = 30)
-    val planned = Multimodal.withResizePlan(Multimodal.extractFeatures(media), 64, 64, 3)
-      .collect()
-    planned.filter(r => r.getString(1) == "image" && r.getBoolean(2)).foreach { r =>
-      assert(r.getInt(5) <= 64 && r.getInt(6) <= 64, s"resize bound violated: $r")
-    }
-    planned.filter(_.getString(1) == "video").foreach { r =>
-      assert(r.getSeq[Int](7).size <= 3)
-    }
-  }
-
   test("multimodal pipeline preserves schema and batch error isolation") {
     val media = Multimodal.syntheticMedia(spark, sfDir, limitN = 50)
     val feats = Multimodal.extractFeatures(media).collect()
@@ -1260,8 +1145,7 @@ class OpsSpec extends AnyFunSuite {
       assert(f.height == 16 + ((f.media_id / 7) % 480).toInt)
       assert(Set("png", "gif", "jpeg").contains(f.format))
     }
-    val stats = Multimodal.featureStats(Multimodal.extractFeatures(media)).collect()
-    assert(stats.map(_.getString(0)).toSet == Set("audio", "image", "video"))
+    assert(feats.map(_.kind).toSet == Set("audio", "image", "video"))
   }
 
   test("image header decoders recover exact dimensions and isolate corruption") {

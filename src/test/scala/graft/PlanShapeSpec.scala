@@ -393,43 +393,6 @@ class PlanShapeSpec extends AnyFunSuite {
       "unsorted operator return")
   }
 
-  test("gopher filter: map-side only, one tokenization per gate side") {
-    // the composed gate is two aggregate() folds finishing to booleans,
-    // with the symbol count threaded through the word fold's init — so
-    // even after Catalyst pushes the predicate to the scan, the plan
-    // holds exactly TWO split() calls (one \s+ word fold, one \n line
-    // fold) and no exchange at all
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val df = graft.ops.TextOps.gopherFilter(docs)
-    df.collect()
-    assert(nodes(df).collect { case e: ShuffleExchangeExec => e }.isEmpty,
-      "gopher filter must not shuffle")
-    // count inside the Filter CONDITION (the scan node's DataFilters line
-    // echoes the same predicate text, which would double-count)
-    val conds = nodes(df).collect {
-      case f: org.apache.spark.sql.execution.FilterExec => f.condition.toString
-    }
-    assert(conds.nonEmpty, "expected a Filter node")
-    val splits = conds.map(c => "split\\(".r.findAllIn(c).length).sum
-    assert(splits == 2, s"expected one split per fold, found $splits in $conds")
-    assert(df.count() > 0, "non-vacuous: some docs pass")
-  }
-
-  test("c4Filter: the kept-lines array is evaluated once per doc") {
-    // the gate and the rewrite both read ONE projected kept-lines column.
-    // A Filter on it would be pushed below its projection and re-inline
-    // the kept-lines lambda (the wordNgrams trap): two evaluations per doc.
-    // Count its "javascript" line test across every node's own expressions
-    // (the wordNgrams split-count pin, over the executed plan).
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .withColumn("text", concat(col("text"), lit(".\nA second line that ends well.")))
-    val df = graft.ops.TextOps.c4Filter(docs, minSentences = 1L)
-    assert(df.collect().nonEmpty, "non-vacuous: some pages pass")
-    val evals = nodes(df).flatMap(_.expressions)
-      .map(e => "javascript".r.findAllIn(e.toString).length).sum
-    assert(evals == 1, s"kept lines must be evaluated once per doc, found $evals")
-  }
-
   test("index-fed IVF search plans no corpus-side assignment expression") {
     import graft.ops.IvfIndex
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -507,38 +470,6 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(nShuffles(Pipeline.NoShuffle, coarse) == 0)
   }
 
-  test("bucketed tables join with ZERO exchanges (co-located join path)") {
-    import graft.spark.Bucketing
-    val tmp = java.nio.file.Files.createTempDirectory("buckets").toString
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("lang"), col("n_chars"))
-    val anno = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("source"))
-    // disable broadcast so the plan shows the big-big co-located shape
-    // (at corpus scale neither side fits a broadcast; on this test corpus
-    // Spark would otherwise just broadcast the tiny side)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      Bucketing.writeBucketed(docs, "b_docs", s"$tmp/b_docs", "doc_id", 8)
-      Bucketing.writeBucketed(anno, "b_anno", s"$tmp/b_anno", "doc_id", 8)
-      val joined = Bucketing.bucketedJoin(spark, "b_docs", "b_anno", "doc_id")
-      assert(joined.count() == docs.count())
-      val all = nodes(joined)
-      assert(!all.exists(_.isInstanceOf[ShuffleExchangeExec]),
-        "a same-key same-count bucketed join must not shuffle either side")
-      assert(!all.exists(_.isInstanceOf[BroadcastExchangeExec]),
-        "the co-located path needs no broadcast either")
-      // sortBy in the layout also removes the per-side Sort from the SMJ
-      assert(all.exists(_.nodeName.contains("SortMergeJoin")),
-        s"expected a sort-merge join over bucketed scans: ${all.map(_.nodeName)}")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS b_docs")
-      spark.sql("DROP TABLE IF EXISTS b_anno")
-    }
-  }
-
   test("AQE re-plans a static sort-merge join into broadcast at runtime") {
     // static planning is denied broadcast (threshold -1); AQE's runtime
     // size statistics see the tiny filtered build side and convert the
@@ -598,7 +529,10 @@ class PlanShapeSpec extends AnyFunSuite {
   test("keepFirst equals the anti-join formulation") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val viaWindow = Dedup.keepFirst(docs).select(col("doc_id")).collect().map(_.getLong(0)).sorted
-    val losers = Dedup.exactDuplicates(docs).select(col("dup_id"))
+    // exact's per-hash keep_id: every other id is a duplicate loser
+    val keepIds = Dedup.exact(docs).select(col("keep_id"))
+    val losers = docs.join(keepIds, col("doc_id") === col("keep_id"), "left_anti")
+      .select(col("doc_id").as("dup_id"))
     val viaAnti = docs.join(losers, col("doc_id") === col("dup_id"), "left_anti")
       .select(col("doc_id")).collect().map(_.getLong(0)).sorted
     assert(viaWindow.sameElements(viaAnti))

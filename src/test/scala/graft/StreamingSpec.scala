@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.spark.{Page, PageGen, Pipeline, StreamingPipeline}
+import graft.spark.{PageGen, Pipeline, StreamingPipeline}
 
 /** Streaming variant: incremental file arrival → same kernel → parquet
   * sink; restart continues from the checkpoint without reprocessing.
@@ -48,112 +48,6 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   private val T0 = 1735689600000L // 2025-01-01T00:00:00Z
-  private def mkPage(host: String, minute: Int, n: Int = 0): Page =
-    Page(s"https://$host/p$minute-$n", new Timestamp(T0 + minute * 60000L),
-      ("<html><body><p>a reasonably long paragraph of page text here</p>" +
-        "<table><tr><th>k</th><th>v</th></tr><tr><td>a</td><td>1</td></tr>" +
-        "<tr><td>b</td><td>2</td></tr></table></body></html>").getBytes("UTF-8"),
-      "", "en")
-
-  test("watermarked windowed metrics emit closed windows once, matching batch") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[Page]
-    val q = StreamingPipeline.windowedMetrics(mem.toDS())
-      .writeStream.format("memory").queryName("wm_out").outputMode("append").start()
-    try {
-      // hour-0: a.example x2 + b.example x1; hour-1: a.example x1
-      mem.addData(mkPage("a.example", 5), mkPage("a.example", 20), mkPage("b.example", 30),
-        mkPage("a.example", 70))
-      q.processAllAvailable()
-      // advance event time to 05:00 → watermark (2h) passes hours 0-2
-      mem.addData(mkPage("late.example", 300))
-      q.processAllAvailable()
-      // watermark takes effect on the NEXT trigger
-      mem.addData(mkPage("late.example", 360))
-      q.processAllAvailable()
-      val emitted = spark.sql(
-        "SELECT window_start, host, docs, tables FROM wm_out ORDER BY window_start, host")
-        .collect().map(r => (r.getTimestamp(0).getTime, r.getString(1), r.getLong(2)))
-      val expected = Array(
-        (T0, "a.example", 2L), (T0, "b.example", 1L), (T0 + 3600000L, "a.example", 1L))
-      assert(emitted.toSeq == expected.toSeq, s"got ${emitted.toVector}")
-
-      // batch oracle: the same code over the same rows as a static Dataset
-      val batchRows = Seq(mkPage("a.example", 5), mkPage("a.example", 20),
-        mkPage("b.example", 30), mkPage("a.example", 70)).toDS()
-      val batch = StreamingPipeline.windowedMetrics(batchRows)
-        .select("window_start", "host", "docs")
-        .collect().map(r => (r.getTimestamp(0).getTime, r.getString(1), r.getLong(2))).toSet
-      assert(emitted.toSet.subsetOf(batch), "streamed windows must equal the batch aggregate")
-    } finally q.stop()
-  }
-
-  private def mkContentPage(host: String, minute: Int, content: String, n: Int = 0): Page =
-    Page(s"https://$host/p$minute-$n", new Timestamp(T0 + minute * 60000L),
-      (s"<html><body><p>the $content paragraph carries enough words to be kept" +
-        s" as a real text block in extraction</p></body></html>").getBytes("UTF-8"),
-      "", "en")
-
-  test("streaming exact dedup keeps one arrival per text hash (bounded state)") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[Page]
-    val q = StreamingPipeline.dedupStream(mem.toDS())
-      .writeStream.format("memory").queryName("dedup_out").outputMode("append").start()
-    try {
-      // alpha twice in the first batch + beta once
-      mem.addData(mkContentPage("a.example", 0, "alpha"),
-        mkContentPage("b.example", 1, "alpha", 1), mkContentPage("c.example", 2, "beta"))
-      q.processAllAvailable()
-      // another alpha inside the watermark horizon is dropped; gamma passes
-      mem.addData(mkContentPage("d.example", 3, "alpha", 2),
-        mkContentPage("e.example", 4, "gamma"))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT url, text_sha256 FROM dedup_out").collect()
-        .map(r => (r.getString(0), r.getString(1)))
-      assert(rows.length == 3, s"one survivor per distinct text, got ${rows.toVector}")
-      assert(rows.map(_._2).distinct.length == 3, "three distinct hashes")
-      val urls = rows.map(_._1).toSet
-      assert(urls.contains("https://c.example/p2-0") && urls.contains("https://e.example/p4-0"))
-      assert(urls.exists(u => u.startsWith("https://a.example") || u.startsWith("https://b.example")))
-      assert(!urls.contains("https://d.example/p3-0"), "in-watermark duplicate must be dropped")
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState sessionization closes sessions by gap and timeout") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[Page]
-    val q = StreamingPipeline.sessionize(mem.toDS(), gapMinutes = 30)
-      .writeStream.format("memory").queryName("sess_out").outputMode("append").start()
-    try {
-      // a: one session 00:00-00:20 (3 docs); b: single-doc session at 00:00
-      mem.addData(mkPage("a.example", 0), mkPage("a.example", 10, 1),
-        mkPage("a.example", 20, 2), mkPage("b.example", 0))
-      q.processAllAvailable()
-      // a: second session at 02:00-02:05 → the 100-min gap closes session 1
-      mem.addData(mkPage("a.example", 120), mkPage("a.example", 125, 1))
-      q.processAllAvailable()
-      // push the watermark far enough (06:00 - 2h = 04:00) to time out both
-      // remaining sessions; timeouts fire on the trigger AFTER the watermark
-      // advances
-      mem.addData(mkPage("c.example", 360))
-      q.processAllAvailable()
-      mem.addData(mkPage("c.example", 361, 1))
-      q.processAllAvailable()
-      val sessions = spark.sql(
-        "SELECT host, start, end, docs FROM sess_out ORDER BY host, start")
-        .collect().map(r => (r.getString(0), r.getTimestamp(1).getTime,
-          r.getTimestamp(2).getTime, r.getLong(3)))
-      val min = 60000L
-      val expected = Seq(
-        ("a.example", T0, T0 + 20 * min, 3L),
-        ("a.example", T0 + 120 * min, T0 + 125 * min, 2L),
-        ("b.example", T0, T0, 1L))
-      assert(sessions.toSeq == expected, s"got ${sessions.toVector}")
-    } finally q.stop()
-  }
 
   // ---- streaming near-dup pairs (minhash-LSH over bounded bucket state) ----
 
@@ -403,90 +297,18 @@ class StreamingSpec extends AnyFunSuite {
       assert(v8.head.getString(1) == "dropped_corpus" && v8.head.getLong(2) == 4L)
   }
 
-  test("streaming contamination matches reproduce the batch screen exactly") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.ops.Dedup
-    val evalDoc = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val evalSet = Seq((100L, evalDoc)).toDF("doc_id", "text")
-    val arrivals = Seq(
-      (1L, evalDoc), // identical: 7 shared 4-grams
-      (2L, "prefix words then alpha beta gamma delta and a different tail"),
-      (3L, "entirely unrelated content with no shared runs at all here"),
-      (4L, "alpha beta gamma") // < n tokens
-    )
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamingPipeline.contaminationMatches(
-        mem.toDS().toDF("doc_id", "text"), evalSet, n = 4)
-      .writeStream.format("memory").queryName("contam").outputMode("append").start()
-    try {
-      mem.addData(arrivals.take(2): _*)
-      q.processAllAvailable()
-      mem.addData(arrivals.drop(2): _*) // second micro-batch
-      q.processAllAvailable()
-      // distinct match rows == the batch pre-aggregate join output, and
-      // the sink-side aggregate reproduces shared_ngrams exactly
-      val counts = spark.sql(
-        """SELECT doc_id, eval_id, count(DISTINCT ngram) AS shared
-          |FROM contam GROUP BY 1, 2""".stripMargin)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val batch = Dedup.ngramContamination(spark,
-          arrivals.toDF("doc_id", "text"), evalSet, n = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(counts == batch && counts == Set((1L, 100L, 7L), (2L, 100L, 1L)),
-        s"streamed screen must equal batch: $counts vs $batch")
-    } finally q.stop()
-  }
-
-  test("streaming passage screen reproduces the batch incremental operator") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import graft.ops.Dedup
-    val shared = "alpha beta gamma delta epsilon"
-    val corpus = Seq((1L, s"c1 c2 $shared"), (3L, s"x $shared"))
-      .toDF("doc_id", "text")
-    val corpusFps = Dedup.passageFingerprints(corpus, w = 5)
-    val arrivals = Seq(
-      (10L, s"n1 n2 $shared n3"), // holds the corpus passage
-      (12L, "fresh content with nothing shared at all present here"),
-      (14L, s"$shared trailing words") // second micro-batch, also matches
-    )
-    val mem = MemoryStream[(Long, String)]
-    val q = StreamingPipeline.passageMatches(
-        mem.toDS().toDF("doc_id", "text"), corpusFps, w = 5)
-      .writeStream.format("memory").queryName("pscreen").outputMode("append").start()
-    try {
-      mem.addData(arrivals.take(2): _*)
-      q.processAllAvailable()
-      mem.addData(arrivals.drop(2): _*)
-      q.processAllAvailable()
-      val streamed = spark.sql("SELECT doc_id, pos, fp, corpus_id, corpus_pos FROM pscreen")
-        .distinct().collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getInt(4)))
-        .toSet
-      val batch = Dedup.passageMatchesAgainst(corpusFps,
-          arrivals.toDF("doc_id", "text"), w = 5)
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getInt(4)))
-        .toSet
-      assert(streamed == batch && streamed.map(_._1) == Set(10L, 14L),
-        s"streamed screen must equal batch: $streamed vs $batch")
-    } finally q.stop()
-  }
-
-  test("gopher filter and pii scrub run unchanged on a stream (stateless)") {
+  test("pii scrub runs unchanged on a stream (stateless)") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.ops.TextOps
-    val passDoc = Seq.fill(10)("the cat and dog have fun with that toy to be of note")
+    val prose = Seq.fill(10)("the cat and dog have fun with that toy to be of note")
       .mkString(" ")
     val arrivals = Seq(
-      (1L, passDoc),
-      (2L, "too short to pass"),
-      (3L, s"$passDoc reach me at a@b.co from 10.0.0.1"))
+      (1L, prose),
+      (2L, "a short doc"),
+      (3L, s"$prose reach me at a@b.co from 10.0.0.1"))
     val mem = MemoryStream[(Long, String)]
-    val q = TextOps.piiMetrics(
-        TextOps.gopherFilter(mem.toDS().toDF("doc_id", "text")))
+    val q = TextOps.piiMetrics(mem.toDS().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("gpii").outputMode("append").start()
     try {
       mem.addData(arrivals.take(2): _*)
@@ -495,70 +317,13 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       val streamed = spark.sql("SELECT doc_id, n_emails, n_ips FROM gpii")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val batch = TextOps.piiMetrics(
-          TextOps.gopherFilter(arrivals.toDF("doc_id", "text")))
+      val batch = TextOps.piiMetrics(arrivals.toDF("doc_id", "text"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
-      // doc 2 fails the word floor; docs 1 and 3 pass, doc 3 carries pii
-      assert(streamed.map(_._1) == Set(1L, 3L))
+      // every doc passes through; only doc 3 carries pii
+      assert(streamed == Set((1L, 0L, 0L), (2L, 0L, 0L), (3L, 1L, 1L)))
       assert(streamed == batch,
         s"stateless ops must be batch-identical on a stream: $streamed vs $batch")
     } finally q.stop()
-  }
-
-  test("streaming passage apply folds micro-batches over the growing index") {
-    import spark.implicits._
-    import graft.ops.{Dedup, PassageIndex}
-    val corpus = Seq((1L, "c1 c2 alpha beta gamma delta epsilon")).toDF("doc_id", "text")
-    val b1 = Seq(
-      (10L, "n1 n2 alpha beta gamma delta epsilon p1 p2 p3 p4 p5"), // corpus passage + a NEW one
-      (12L, "q1 alpha beta gamma delta epsilon")) // corpus passage only
-    val b2 = Seq(
-      (20L, "z1 p1 p2 p3 p4 p5 z2"), // matches batch-1's SURVIVING passage
-      (22L, "fresh words entirely unlike anything else here")) // untouched
-    val indexDir = Files.createTempDirectory("pas_idx").toString
-    val inDir = Files.createTempDirectory("pas_in").toString
-    val outDir = Files.createTempDirectory("pas_out").toString
-    val ckpt = Files.createTempDirectory("pas_ckpt").toString
-    PassageIndex.write(
-      PassageIndex(Dedup.passageFingerprints(corpus, w = 5), 5), indexDir)
-    b1.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(inDir)
-    Thread.sleep(1100)
-    b2.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(inDir)
-    val src = spark.readStream.schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamingPipeline.passageApplyStream(src, indexDir, outDir, ckpt,
-      availableNow = true)
-    q.awaitTermination(120000)
-    def seg(name: String) = spark.read.parquet(s"$outDir/rewritten/$name")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    // batch 0: the corpus-held passage excised from BOTH docs; doc 10's
-    // fresh p-run survives and its fingerprints join the index
-    assert(seg("batch_0") == Map(
-      10L -> "n1 n2 p1 p2 p3 p4 p5", 12L -> "q1"))
-    // batch 1: the p-run is now corpus-held (earlier-kept wins across
-    // micro-batches) — excised from doc 20; clean doc byte-exact
-    assert(seg("batch_1") == Map(
-      20L -> "z1 z2", 22L -> "fresh words entirely unlike anything else here"))
-    // the fold replay with the batch operators over the observed segments
-    var grownFps = Dedup.passageFingerprints(corpus, w = 5)
-    for ((rows, name) <- Seq(b1 -> "batch_0", b2 -> "batch_1")) {
-      val expect = Dedup.stripDuplicatePassages(spark,
-          Dedup.stripPassagesAgainst(grownFps, rows.toDF("doc_id", "text"), w = 5),
-          w = 5)
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(seg(name) == expect, s"$name must equal the batch composition")
-      grownFps = grownFps.union(Dedup.passageFingerprints(
-        expect.toSeq.toDF("doc_id", "text"), w = 5))
-    }
-    // the grown index holds corpus + rewritten fps exactly, and a segment
-    // replay after the commit point is a no-op
-    val idxRows = PassageIndex.load(spark, indexDir).fps
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val expectRows = grownFps
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(idxRows == expectRows)
-    assert(!StreamingPipeline.ingestPassageMicroBatch(
-      b1.toDF("doc_id", "text"), indexDir, outDir, "batch_0"))
   }
 
   test("C4 line cleaning runs unchanged on a stream (stateless)") {
@@ -570,7 +335,10 @@ class StreamingSpec extends AnyFunSuite {
       (2L, "lorem ipsum makes this page die.\nA fine sentence otherwise present."),
       (3L, "Enable javascript to continue now.\nOnly one surviving sentence here."))
     val mem = MemoryStream[(Long, String)]
-    val q = TextOps.c4Filter(mem.toDS().toDF("doc_id", "text"), minSentences = 1L)
+    def cleaned(df: org.apache.spark.sql.DataFrame) =
+      TextOps.c4Metrics(df, minSentences = 1L).filter(col("page_pass"))
+        .select(col("doc_id"), col("text_clean").as("text"))
+    val q = cleaned(mem.toDS().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("c4s").outputMode("append").start()
     try {
       mem.addData(arrivals.take(1): _*)
@@ -579,122 +347,13 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       val streamed = spark.sql("SELECT doc_id, text FROM c4s")
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      val batch = TextOps.c4Filter(arrivals.toDF("doc_id", "text"), minSentences = 1L)
+      val batch = cleaned(arrivals.toDF("doc_id", "text"))
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       // doc 2 dies on the lorem gate; 1 and 3 pass with lines cleaned
       assert(streamed.map(_._1) == Set(1L, 3L))
       assert(streamed == batch,
         s"stateless ops must be batch-identical on a stream: $streamed vs $batch")
     } finally q.stop()
-  }
-
-  test("streaming line apply folds micro-batches over the growing index") {
-    import spark.implicits._
-    import graft.ops.{Dedup, LineIndex}
-    val boiler = "Subscribe to our newsletter today!"
-    val corpus = Seq((1L, s"corpus opening line.\n$boiler")).toDF("doc_id", "text")
-    val b1 = Seq(
-      (10L, s"$boiler\nNew promo line batch one!\nUnique ten."), // corpus line + a NEW shared line
-      (12L, s"Unique twelve.\n$boiler")) // corpus line only
-    val b2 = Seq(
-      (20L, "New promo line batch one!\nUnique twenty."), // matches batch-1's SURVIVING line
-      (22L, "Fresh line unlike anything.")) // untouched
-    val indexDir = Files.createTempDirectory("ln_idx").toString
-    val inDir = Files.createTempDirectory("ln_in").toString
-    val outDir = Files.createTempDirectory("ln_out").toString
-    val ckpt = Files.createTempDirectory("ln_ckpt").toString
-    LineIndex.write(LineIndex(Dedup.lineFingerprints(corpus)), indexDir)
-    b1.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(inDir)
-    Thread.sleep(1100)
-    b2.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(inDir)
-    val src = spark.readStream.schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamingPipeline.lineApplyStream(src, indexDir, outDir, ckpt,
-      availableNow = true)
-    q.awaitTermination(120000)
-    def seg(name: String) = spark.read.parquet(s"$outDir/rewritten/$name")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    // batch 0: the corpus-held boilerplate excised from BOTH docs; doc
-    // 10's fresh promo line survives and its fingerprint joins the index
-    assert(seg("batch_0") == Map(
-      10L -> "New promo line batch one!\nUnique ten.", 12L -> "Unique twelve."))
-    // batch 1: the promo line is now corpus-held (earlier-kept wins
-    // across micro-batches); clean doc byte-exact
-    assert(seg("batch_1") == Map(
-      20L -> "Unique twenty.", 22L -> "Fresh line unlike anything."))
-    // fold replay with the batch operators over the observed segments
-    var grownFps = Dedup.lineFingerprints(corpus)
-    for ((rows, name) <- Seq(b1 -> "batch_0", b2 -> "batch_1")) {
-      val expect = Dedup.stripDuplicateLines(spark,
-          Dedup.stripLinesAgainst(grownFps, rows.toDF("doc_id", "text")))
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(seg(name) == expect, s"$name must equal the batch composition")
-      grownFps = grownFps.union(Dedup.lineFingerprints(
-        expect.toSeq.toDF("doc_id", "text")))
-    }
-    // grown index = corpus + rewritten fps exactly; post-commit replay no-op
-    val idxRows = LineIndex.load(spark, indexDir).fps
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val expectRows = grownFps
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(idxRows == expectRows)
-    assert(!StreamingPipeline.ingestLineMicroBatch(
-      b1.toDF("doc_id", "text"), indexDir, outDir, "batch_0"))
-    // the stateless match screen equals the batch incremental operator
-    val matches = StreamingPipeline.lineMatches(
-      b1.toDF("doc_id", "text"), Dedup.lineFingerprints(corpus))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val batchMatches = Dedup.lineMatchesAgainst(
-      Dedup.lineFingerprints(corpus), b1.toDF("doc_id", "text"))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(matches == batchMatches && matches == Set((10L, 0), (12L, 1)))
-  }
-
-  test("streaming decontamination apply: kept set equals batch decontaminate") {
-    import spark.implicits._
-    import graft.ops.Dedup
-    val evalDoc = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val evalSet = Seq((100L, evalDoc)).toDF("doc_id", "text")
-    val allDocs = Seq(
-      (1L, evalDoc), // identical: flagged (7 shared 4-grams)
-      (2L, "prefix words then alpha beta gamma delta and a different tail"), // flagged (1)
-      (3L, "entirely unrelated content with no shared runs at all here"), // kept
-      (4L, "alpha beta gamma"), // < n tokens: kept
-      (5L, "second clean arrival with entirely fresh vocabulary throughout") // kept
-    )
-    val inDir = Files.createTempDirectory("dca_in").toString
-    val outDir = Files.createTempDirectory("dca_out").toString
-    val ckpt = Files.createTempDirectory("dca_ckpt").toString
-    // two landed files -> two micro-batches
-    allDocs.take(2).toDF("doc_id", "text").coalesce(1)
-      .write.mode("append").parquet(inDir)
-    Thread.sleep(1100)
-    allDocs.drop(2).toDF("doc_id", "text").coalesce(1)
-      .write.mode("append").parquet(inDir)
-    val src = spark.readStream.schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val q = StreamingPipeline.decontaminateApplyStream(src, evalSet, outDir, ckpt,
-      n = 4, availableNow = true)
-    q.awaitTermination(120000)
-    // kept union across segments == the batch decontaminate on all rows
-    // (the screen is stateless across batches: verdicts are per-doc)
-    val keptStreamed = spark.read.parquet(s"$outDir/kept/*")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val keptBatch = Dedup.decontaminate(spark, allDocs.toDF("doc_id", "text"),
-        evalSet, n = 4)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(keptStreamed == keptBatch && keptStreamed == Set(3L, 4L, 5L))
-    // verdicts carry the match evidence
-    val verdicts = spark.read.parquet(s"$outDir/verdicts/*")
-      .collect().map(r => r.getLong(0) -> (r.getString(1),
-        if (r.isNullAt(2)) -1L else r.getLong(2),
-        if (r.isNullAt(3)) -1L else r.getLong(3))).toMap
-    assert(verdicts == Map(
-      1L -> ("flagged", 100L, 7L),
-      2L -> ("flagged", 100L, 1L),
-      3L -> ("kept", -1L, -1L),
-      4L -> ("kept", -1L, -1L),
-      5L -> ("kept", -1L, -1L)))
   }
 
   test("ingest micro-batch commit is idempotent under segment replay") {
