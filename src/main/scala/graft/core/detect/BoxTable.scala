@@ -4,9 +4,13 @@ import scala.collection.mutable
 import graft.core.grid.{CellGrid, GridCursor, Span, TableHit}
 
 /** Detector for fully bordered tables
-  * (reference: detectors/box_table_detector.py).
+  * (reference: detectors/box_table_detector.py), at the reference's
+  * min_table_size of 2 × 2.
   */
-final class BoxTable(minRows: Int = 2, minCols: Int = 2, boxConfidence: Double = 0.95) {
+object BoxTable {
+  private val MinRows = 2
+  private val MinCols = 2
+  private val BoxConfidence = 0.95
 
   /** reference: box_table_detector.py:33-100. */
   def detect(g: CellGrid): Vector[TableHit] = {
@@ -34,7 +38,7 @@ final class BoxTable(minRows: Int = 2, minCols: Int = 2, boxConfidence: Double =
                 tables += TableHit(
                   id = s"box_${span.r0}_${span.c0}",
                   span = span,
-                  confidence = boxConfidence,
+                  confidence = BoxConfidence,
                   method = "box_table",
                   hasHeaders = hasHeaders,
                   headers = if (hasHeaders) SimpleCase.extractHeaders(g, span) else Vector.empty,
@@ -68,7 +72,7 @@ final class BoxTable(minRows: Int = 2, minCols: Int = 2, boxConfidence: Double =
       if (!cur.moveTo(r, startCol) || !cur.hasBorderLeft) stop = true
       else { endRow = r; r += 1 }
     }
-    if (endRow - startRow + 1 < minRows || endCol - startCol + 1 < minCols) None
+    if (endRow - startRow + 1 < MinRows || endCol - startCol + 1 < MinCols) None
     else Some(Span(startRow, startCol, endRow, endCol))
   }
 

@@ -16,9 +16,20 @@ object GridKind {
 
 final case class DetectionOutcome(tables: Vector[TableHit], methodUsed: String)
 
-/** Confidence-ordered detector cascade (reference: detection.py:84-231). */
+/** Confidence-ordered detector cascade (reference: detection.py:84-231),
+  * at the reference Config's defaults.
+  */
 object Cascade {
 
+  /** Islands and the simple-case fallback need this confidence. */
+  val ConfidenceThreshold = 0.6
+  /** Tables smaller than this share of the grid's cells are dropped. */
+  val MinTablePercentage = 0.005
+
+  /** `config` is not read: detection has no per-run setting. The parameter
+    * stays because perfbench's `TracedKernel` passes one and compiles
+    * against these sources unchanged.
+    */
   def detect(g: CellGrid, kind: GridKind, config: DetectConfig = DetectConfig()): DetectionOutcome = {
     val totalSheetCells = g.size
     val isText = kind == GridKind.DelimitedText
@@ -27,9 +38,7 @@ object Cascade {
     var tables = Vector.empty[TableHit]
     var methodUsed = "none"
 
-    val simple =
-      if (config.enableSimpleCase) SimpleCase.detect(g)
-      else SimpleResult(isSimpleTable = false, None, 0.0, hasHeaders = true, "disabled")
+    val simple = SimpleCase.detect(g)
 
     // the simple-case hit over simple.span; the method name also prefixes its id
     def simpleHit(method: String): Vector[TableHit] = {
@@ -57,7 +66,7 @@ object Cascade {
 
     // box tables for formatted grids (reference: detection.py:141-147)
     if (tables.isEmpty && !isTextLike) {
-      val boxTables = new BoxTable(config.minTableRows, config.minTableCols).detect(g)
+      val boxTables = BoxTable.detect(g)
       if (boxTables.nonEmpty) {
         tables = boxTables
         methodUsed = "box_table_detection"
@@ -69,38 +78,30 @@ object Cascade {
       if (isText) {
         tables = StructuredText.detectTables(g)
         methodUsed = "structured_text_detection"
-      } else if (config.enableIslandDetection) {
-        val detector = new IslandDetector(
-          maxGap = IslandConst.ExcelFileMaxGap,
-          adaptiveThresholds = config.adaptiveThresholds,
-          emptyRowTolerance = config.emptyRowTolerance,
-          useFormattingBoundaries = config.useBorderDetection
-        )
-        val islands = detector.detectIslands(g)
-        val good = islands.filter(_.confidence >= config.confidenceThreshold)
+      } else {
+        val good = IslandDetector.detectIslands(g).filter(_.confidence >= ConfidenceThreshold)
         if (good.nonEmpty) {
-          tables = detector.toTableHits(good, config.confidenceThreshold, g)
+          tables = IslandDetector.toTableHits(good, ConfidenceThreshold, g)
           methodUsed = "island_detection_fast"
         }
       }
     }
 
     // fallback simple case (reference: detection.py:171-185)
-    if (tables.isEmpty && simple.confidence >= config.confidenceThreshold &&
-        simple.span.isDefined) {
+    if (tables.isEmpty && simple.confidence >= ConfidenceThreshold && simple.span.isDefined) {
       tables = simpleHit("simple_case")
       methodUsed = "simple_case"
     }
 
     // adaptive relative-size filter (reference: detection.py:188-195)
-    if (config.adaptiveThresholds && config.minTablePercentage > 0 && totalSheetCells > 0) {
-      val minCells = (totalSheetCells * config.minTablePercentage).toInt
+    if (totalSheetCells > 0) {
+      val minCells = (totalSheetCells * MinTablePercentage).toInt
       tables = tables.filter(t => tableCellCount(t.span, g) >= minCells)
     }
 
     // prefer-large sort (reference: detection.py:198-199) — stable, like
     // Python's list.sort
-    if (config.preferLargeTables && tables.size > 1)
+    if (tables.size > 1)
       tables = tables.sortBy(t => -tableCellCount(t.span, g))
 
     DetectionOutcome(tables, methodUsed)

@@ -18,10 +18,6 @@ object IslandConst {
   val BaseConfidence = 0.5
 
   val ColumnConsistencyThreshold = 0.8
-  val MinEmptyRowsToSplit = 1
-  val DefaultMaxGap = 1
-  val TextFileMaxGap = 0
-  val ExcelFileMaxGap = 1
 
   val RelativeSizeLarge = 0.05
   val RelativeSizeMedium = 0.01
@@ -55,68 +51,32 @@ object Keywords {
     Vector("total", "subtotal", "sum", "sub-total", "grand total", "net", "gross", "overall")
 }
 
-/** Detection-time configuration (reference: config.py:8-142 +
-  * detection.py:36-82). The per-run knobs of the reference's Config that
-  * are reachable from its detection path are all represented; detector
-  * CONSTANTS (IslandConst etc.) stay frozen so confidence arithmetic is
-  * bit-identical to the reference.
+/** Per-run extraction configuration. The reference's detection `Config`
+  * (config.py:8-142 + detection.py:36-82) is a set of per-run knobs; here
+  * they are fixed at the reference defaults, which is what every query,
+  * tool and benchmark runs: confidence threshold 0.6 and the 0.5 %
+  * relative-size filter ([[Cascade]]), min table size 2 × 2 ([[BoxTable]]),
+  * adaptive island sizes, formatting-boundary splits and a one-row gap
+  * tolerance ([[IslandDetector]]), simple-case and island detection on,
+  * prefer-large ordering. The one setting left is `extractTables`.
   */
 final case class DetectConfig(
-    confidenceThreshold: Double = 0.6,
-    adaptiveThresholds: Boolean = true,
-    minTablePercentage: Double = 0.005,
-    preferLargeTables: Boolean = true,
-    emptyRowTolerance: Int = 1,
-    useBorderDetection: Boolean = true,
-    maxTablesPerSheet: Int = 50,
-    // reference min_table_size (rows, cols) — consumed by the box-table
-    // detector, exactly as in the reference (box_table_detector.py:22-29)
-    minTableRows: Int = 2,
-    minTableCols: Int = 2,
-    // reference enable_simple_case_detection / enable_island_detection
-    enableSimpleCase: Boolean = true,
-    enableIslandDetection: Boolean = true,
-    // reference max_file_size_mb analogue for byte payloads (P2 size cap)
-    maxHtmlBytes: Int = 64 * 1024 * 1024,
     // run DataFrame extraction (header orientation/quality/shape) in the
     // kernel. OFF by default, mirroring the reference where detection and
     // DataFrameExtractor are separate stages and the published throughput
     // (1M+ cells/s) is detection-only; x_extract_tables turns it on.
     extractTables: Boolean = false
-) extends Serializable
+) extends Serializable {
+  def maxHtmlBytes: Int = DetectConfig.MaxHtmlBytes
+  def maxTablesPerSheet: Int = DetectConfig.MaxTablesPerSheet
+}
 
-/** Env-var loading mirroring the reference's Config.from_env
-  * (config.py:112-142), GRAFT_-prefixed. The `env` accessor is injectable
-  * for tests; production callers use the default sys.env-backed one.
-  */
+/** The per-document cost bounds (SURVEY §2 P2/O4). */
 object DetectConfig {
-  def fromEnv(env: String => Option[String] = k => sys.env.get(k)): DetectConfig = {
-    val d = DetectConfig()
-    def bool(k: String, dflt: Boolean) = env(k).map(_.trim.toLowerCase == "true").getOrElse(dflt)
-    def int(k: String, dflt: Int) = env(k).map(_.trim.toInt).getOrElse(dflt)
-    def dbl(k: String, dflt: Double) = env(k).map(_.trim.toDouble).getOrElse(dflt)
-    DetectConfig(
-      confidenceThreshold = dbl("GRAFT_CONFIDENCE_THRESHOLD", d.confidenceThreshold),
-      adaptiveThresholds = bool("GRAFT_ADAPTIVE_THRESHOLDS", d.adaptiveThresholds),
-      minTablePercentage = dbl("GRAFT_MIN_TABLE_PERCENTAGE", d.minTablePercentage),
-      preferLargeTables = bool("GRAFT_PREFER_LARGE_TABLES", d.preferLargeTables),
-      emptyRowTolerance = int("GRAFT_EMPTY_ROW_TOLERANCE", d.emptyRowTolerance),
-      useBorderDetection = bool("GRAFT_USE_BORDER_DETECTION", d.useBorderDetection),
-      maxTablesPerSheet = int("GRAFT_MAX_TABLES_PER_SHEET", d.maxTablesPerSheet),
-      minTableRows = int("GRAFT_MIN_TABLE_ROWS", d.minTableRows),
-      minTableCols = int("GRAFT_MIN_TABLE_COLS", d.minTableCols),
-      enableSimpleCase = bool("GRAFT_ENABLE_SIMPLE_CASE_DETECTION", d.enableSimpleCase),
-      enableIslandDetection = bool("GRAFT_ENABLE_ISLAND_DETECTION", d.enableIslandDetection),
-      // Long arithmetic + clamp: an env value >= 2048 MB would overflow Int
-      // to a negative cap and silently mark the whole corpus parse_failed;
-      // non-positive values (no sane meaning for a byte cap) keep the
-      // default instead of failing every page
-      maxHtmlBytes = {
-        val mb = int("GRAFT_MAX_HTML_MB", d.maxHtmlBytes / (1024 * 1024))
-        if (mb <= 0) d.maxHtmlBytes
-        else math.min(mb.toLong * 1024L * 1024L, Int.MaxValue.toLong).toInt
-      },
-      extractTables = bool("GRAFT_EXTRACT_TABLES", d.extractTables)
-    )
-  }
+  /** Larger payloads become parse-failure rows without being decoded
+    * (the reference's max_file_size_mb analogue for byte payloads).
+    */
+  val MaxHtmlBytes: Int = 64 * 1024 * 1024
+  /** Tables kept per region (reference config max_tables_per_sheet). */
+  val MaxTablesPerSheet: Int = 50
 }

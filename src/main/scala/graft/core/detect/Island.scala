@@ -346,23 +346,19 @@ final class DataIsland extends Serializable {
   }
 }
 
-/** Connected-component table detection
-  * (reference: detectors/island_detector.py:542-2223).
+/** Connected-component table detection on formatted grids
+  * (reference: detectors/island_detector.py:542-2223) with the settings
+  * the cascade gives it: 8-neighbour flood fill at gap 1, islands of at
+  * least 4 cells (more on large grids: adaptive thresholds),
+  * formatting-boundary splits, and reconnection across a one-row gap.
+  * Stateless, so the cascade allocates no detector per grid.
   */
-final class IslandDetector(
-    val maxGap: Int = IslandConst.DefaultMaxGap,
-    val minIslandSize: Int = 4,
-    val includeDiagonal: Boolean = true,
-    val columnConsistencyThreshold: Double = IslandConst.ColumnConsistencyThreshold,
-    val minEmptyRowsToSplit: Int = IslandConst.MinEmptyRowsToSplit,
-    val useStructuralAnalysis: Boolean = false,
-    val adaptiveThresholds: Boolean = true,
-    val useFormattingBoundaries: Boolean = true,
-    val emptyRowTolerance: Int = 1
-) extends Serializable {
+object IslandDetector {
 
-  @inline private def rowOf(k: Long): Int = (k >> 32).toInt
-  @inline private def colOf(k: Long): Int = k.toInt
+  private val MinIslandSize = 4
+
+  @inline private[detect] def rowOf(k: Long): Int = (k >> 32).toInt
+  @inline private[detect] def colOf(k: Long): Int = k.toInt
   @inline private def key(r: Int, c: Int): Long = (r.toLong << 32) | (c & 0xffffffffL)
 
   /** reference: island_detector.py:594-732. */
@@ -371,15 +367,9 @@ final class IslandDetector(
 
     val totalSheetCells = g.size
     val effectiveMinSize =
-      if (adaptiveThresholds) {
-        val adaptive =
-          if (totalSheetCells > 10000) math.max(20, (totalSheetCells * 0.001).toInt)
-          else if (totalSheetCells > 1000) math.max(10, (totalSheetCells * 0.005).toInt)
-          else minIslandSize
-        math.max(minIslandSize, adaptive)
-      } else minIslandSize
-
-    if (useStructuralAnalysis) return detectIslandsStructural(g)
+      if (totalSheetCells > 10000) math.max(20, (totalSheetCells * 0.001).toInt)
+      else if (totalSheetCells > 1000) math.max(10, (totalSheetCells * 0.005).toInt)
+      else MinIslandSize
 
     val cs = g.coordsSorted // cached on the grid — no per-detect coord array
     var islands = Vector.newBuilder[DataIsland]
@@ -428,14 +418,11 @@ final class IslandDetector(
     }
     var out = islands.result().sortBy(isl => (-isl.cells.size, isl.minRow, isl.minCol))
 
-    var formattingSplitsApplied = false
-    if (useFormattingBoundaries && out.nonEmpty) {
-      val originalCount = out.size
-      out = applyFormattingSplits(out, g)
-      formattingSplitsApplied = out.size > originalCount
-    }
+    val originalCount = out.size
+    out = applyFormattingSplits(out, g)
+    val formattingSplitsApplied = out.size > originalCount
 
-    if (emptyRowTolerance > 0 && out.size > 1)
+    if (out.size > 1)
       out = reconnectGapSeparated(out, g)
 
     if (out.size > 1) {
@@ -481,11 +468,11 @@ final class IslandDetector(
       val r = idx / w
       val c = idx - r * w
       island.addCell(r, c)
-      var dr = -maxGap
-      while (dr <= maxGap) {
-        var dc = -maxGap
-        while (dc <= maxGap) {
-          if (!(dr == 0 && dc == 0) && (includeDiagonal || dr == 0 || dc == 0)) {
+      var dr = -1
+      while (dr <= 1) {
+        var dc = -1
+        while (dc <= 1) {
+          if (!(dr == 0 && dc == 0)) {
             val nr = r + dr
             val nc = c + dc
             if (nr >= 0 && nc >= 0 && nr < h && nc < w) {
@@ -524,11 +511,11 @@ final class IslandDetector(
       val r = rowOf(k)
       val c = colOf(k)
       island.addCell(r, c)
-      var dr = -maxGap
-      while (dr <= maxGap) {
-        var dc = -maxGap
-        while (dc <= maxGap) {
-          if (!(dr == 0 && dc == 0) && (includeDiagonal || dr == 0 || dc == 0)) {
+      var dr = -1
+      while (dr <= 1) {
+        var dc = -1
+        while (dc <= 1) {
+          if (!(dr == 0 && dc == 0)) {
             if (r + dr >= 0 && c + dc >= 0) {
               val nk = key(r + dr, c + dc)
               if (dataCells.contains(nk) && !visited.contains(nk)) {
@@ -548,7 +535,7 @@ final class IslandDetector(
   }
 
   /** reference: island_detector.py:846-915. */
-  def mergeNearby(islands: Vector[DataIsland], mergeDistance: Int, g: CellGrid)
+  private def mergeNearby(islands: Vector[DataIsland], mergeDistance: Int, g: CellGrid)
       : Vector[DataIsland] = {
     if (islands.size <= 1) return islands
     val merged = Vector.newBuilder[DataIsland]
@@ -608,7 +595,7 @@ final class IslandDetector(
   }
 
   /** reference: island_detector.py:979-1082. */
-  def shouldMergePair(a: DataIsland, b: DataIsland, maxDistance: Int): Boolean = {
+  private def shouldMergePair(a: DataIsland, b: DataIsland, maxDistance: Int): Boolean = {
     if (a.minRow < 0 || b.minRow < 0) return false
     val vDist = math.max(0, math.max(b.minRow - a.maxRow - 1, a.minRow - b.maxRow - 1))
     val hDist = math.max(0, math.max(b.minCol - a.maxCol - 1, a.minCol - b.maxCol - 1))
@@ -629,7 +616,7 @@ final class IslandDetector(
   }
 
   /** reference: island_detector.py:1084-1176. */
-  def gapIsEmpty(a: DataIsland, b: DataIsland, g: CellGrid): Boolean = {
+  private def gapIsEmpty(a: DataIsland, b: DataIsland, g: CellGrid): Boolean = {
     if (a.minRow < 0 || b.minRow < 0) return true
     var gapColStart = -1
     var gapColEnd = -1
@@ -681,129 +668,6 @@ final class IslandDetector(
     if (!(b.minRow <= a.minRow && a.maxRow <= b.maxRow &&
         b.minCol <= a.minCol && a.maxCol <= b.maxCol)) return false
     a.cells.subsetOf(b.cells)
-  }
-
-  // ---------- structural analysis (text files) ----------
-
-  /** reference: island_detector.py:1357-1398. */
-  def detectIslandsStructural(g: CellGrid): Vector[DataIsland] = {
-    val rowPatterns = analyzeRowPatterns(g)
-    val rowGroups = groupRowsByPattern(rowPatterns)
-
-    val totalSheetCells = g.size
-    val effectiveMinSize =
-      if (adaptiveThresholds && totalSheetCells > 1000)
-        math.max(minIslandSize, (totalSheetCells * 0.005).toInt)
-      else minIslandSize
-
-    val islands = Vector.newBuilder[DataIsland]
-    rowGroups.foreach { group =>
-      if (group.size >= effectiveMinSize) {
-        val island = islandFromRows(g, group)
-        if (island != null && island.cells.size >= effectiveMinSize) {
-          island.totalSheetCells = totalSheetCells
-          island.calculateMetrics(g)
-          islands += island
-        }
-      }
-    }
-    islands.result().sortBy(i => (i.minRow, i.minCol))
-  }
-
-  /** reference: island_detector.py:1400-1427. coordsSorted is (row, col)
-    * ascending, so each row's columns arrive contiguously and sorted — the
-    * pattern carries them as a sorted primitive array (no boxed sets).
-    */
-  private def analyzeRowPatterns(g: CellGrid): Vector[(Int, (Int, Int, Array[Int]))] = {
-    val cs = g.coordsSorted
-    val out = Vector.newBuilder[(Int, (Int, Int, Array[Int]))]
-    var i = 0
-    while (i < cs.length) {
-      val r = rowOf(cs(i))
-      var j = i
-      while (j < cs.length && rowOf(cs(j)) == r) j += 1
-      val cols = new Array[Int](j - i)
-      var k = i
-      while (k < j) { cols(k - i) = colOf(cs(k)); k += 1 }
-      out += ((r, (cols(0), cols(cols.length - 1), cols)))
-      i = j
-    }
-    out.result()
-  }
-
-  /** reference: island_detector.py:1429-1498. */
-  private def groupRowsByPattern(patterns: Vector[(Int, (Int, Int, Array[Int]))])
-      : Vector[Vector[Int]] = {
-    if (patterns.isEmpty) return Vector.empty
-    val groups = Vector.newBuilder[Vector[Int]]
-    var current = Vector.newBuilder[Int]
-    current += patterns.head._1
-    var prevRow = patterns.head._1
-    var prevPattern = patterns.head._2
-    var currentSize = 1
-    patterns.tail.foreach { case (row, pattern) =>
-      val gap = row - prevRow - 1
-      if (gap > emptyRowTolerance) {
-        val similarity = columnSimilarity(prevPattern, pattern)
-        if (similarity < columnConsistencyThreshold || gap > minEmptyRowsToSplit) {
-          groups += current.result()
-          current = Vector.newBuilder[Int]
-          current += row
-          currentSize = 1
-        } else { current += row; currentSize += 1 }
-      } else {
-        val similarity = columnSimilarity(prevPattern, pattern)
-        if (similarity >= columnConsistencyThreshold) { current += row; currentSize += 1 }
-        else {
-          groups += current.result()
-          current = Vector.newBuilder[Int]
-          current += row
-          currentSize = 1
-        }
-      }
-      prevRow = row
-      prevPattern = pattern
-    }
-    if (currentSize > 0) groups += current.result()
-    groups.result()
-  }
-
-  /** 0.5·range-overlap + 0.5·colset-Jaccard
-    * (reference: island_detector.py:1500-1535). Column sets are sorted
-    * distinct arrays; the merge walk computes the identical Jaccard.
-    */
-  def columnSimilarity(p1: (Int, Int, Array[Int]), p2: (Int, Int, Array[Int])): Double = {
-    val (min1, max1, cols1) = p1
-    val (min2, max2, cols2) = p2
-    val rangeOverlap = math.min(max1, max2) - math.max(min1, min2) + 1
-    val rangeUnion = math.max(max1, max2) - math.min(min1, min2) + 1
-    if (rangeUnion <= 0) return 0.0
-    val rangeSim = rangeOverlap.toDouble / rangeUnion
-    val colsSim =
-      if (cols1.isEmpty && cols2.isEmpty) 1.0
-      else if (cols1.isEmpty || cols2.isEmpty) 0.0
-      else {
-        var i = 0
-        var j = 0
-        var inter = 0
-        while (i < cols1.length && j < cols2.length) {
-          if (cols1(i) == cols2(j)) { inter += 1; i += 1; j += 1 }
-          else if (cols1(i) < cols2(j)) i += 1
-          else j += 1
-        }
-        val union = cols1.length + cols2.length - inter
-        if (union > 0) inter.toDouble / union else 0.0
-      }
-    0.5 * rangeSim + 0.5 * colsSim
-  }
-
-  private def islandFromRows(g: CellGrid, rows: Vector[Int]): DataIsland = {
-    val island = new DataIsland
-    val rowSet = rows.toSet
-    g.coordsSorted.foreach { k =>
-      if (rowSet.contains(rowOf(k))) island.addCell(rowOf(k), colOf(k))
-    }
-    if (island.cells.nonEmpty) island else null
   }
 
   // ---------- formatting-based splitting ----------
@@ -893,8 +757,6 @@ final class IslandDetector(
       borderSignatureOf(nibs), cellCount)
   }
 
-  import IslandDetector.{SigBuckets, SimilarityMap}
-
   /** reference: island_detector.py:1858-1938. Allocation-free per call:
     * bucket counts live in a 6-slot array indexed in the Python dict
     * insertion order (all/none/horizontal/vertical/mixed/outer).
@@ -938,7 +800,7 @@ final class IslandDetector(
   }
 
   /** reference: island_detector.py:1940-1985. */
-  def borderSimilarity(s1: String, s2: String): Double = {
+  private def borderSimilarity(s1: String, s2: String): Double = {
     if (s1 == s2) return 1.0
     SimilarityMap.getOrElse((s1, s2), SimilarityMap.getOrElse((s2, s1), 0.3))
   }
@@ -1046,7 +908,6 @@ final class IslandDetector(
     }
     if (startRow <= island.maxRow) ranges += ((startRow, island.maxRow))
     val newIslands = Vector.newBuilder[DataIsland]
-    var count = 0
     ranges.foreach { case (r0, r1) =>
       val ni = new DataIsland
       ni.totalSheetCells = island.totalSheetCells
@@ -1054,10 +915,9 @@ final class IslandDetector(
         val r = rowOf(k)
         if (r >= r0 && r <= r1) ni.addCell(r, colOf(k))
       }
-      if (ni.cells.size >= minIslandSize) {
+      if (ni.cells.size >= MinIslandSize) {
         ni.calculateMetrics(g)
         newIslands += ni
-        count += 1
       }
     }
     val res = newIslands.result()
@@ -1098,11 +958,9 @@ final class IslandDetector(
   }
 
   /** reference: island_detector.py:2156-2223. */
-  def shouldReconnect(a: DataIsland, b: DataIsland, g: CellGrid): Boolean = {
+  private def shouldReconnect(a: DataIsland, b: DataIsland, g: CellGrid): Boolean = {
     if (a.minRow < 0 || b.minRow < 0) return false
-    if (b.minRow <= a.maxRow) return false
-    val vGap = b.minRow - a.maxRow - 1
-    if (vGap > emptyRowTolerance || vGap < 1) return false
+    if (b.minRow != a.maxRow + 2) return false // exactly one row between
     val colStart = math.max(a.minCol, b.minCol)
     val colEnd = math.min(a.maxCol, b.maxCol)
     if (colStart > colEnd) return false
@@ -1141,18 +999,14 @@ final class IslandDetector(
       }
     }
   }
-}
 
-object IslandDetector {
   // bucket order matches Python dict insertion order for ties:
-  // all, none, horizontal, vertical, mixed, outer. Module-level (one
-  // allocation per JVM): the cascade constructs a fresh detector per
-  // grid, so per-instance constants would be rebuilt per grid.
-  private[detect] val SigBuckets = Array(FmtConst.AllBorders, FmtConst.NoBorders,
+  // all, none, horizontal, vertical, mixed, outer
+  private val SigBuckets = Array(FmtConst.AllBorders, FmtConst.NoBorders,
     FmtConst.HorizontalOnly, FmtConst.VerticalOnly, FmtConst.MixedBorders,
     FmtConst.OuterOnly)
 
-  private[detect] val SimilarityMap: Map[(String, String), Double] = {
+  private val SimilarityMap: Map[(String, String), Double] = {
     import FmtConst._
     Map(
       (HorizontalOnly, AllBorders) -> 0.7,

@@ -20,19 +20,10 @@ object StructuredText {
   private val InstrumentKeywords = Seq("sample", "well", "name", "value", "result",
     "concentration", "absorbance", "fluorescence", "mean", "std", "cv", "temperature")
 
-  /** reference: structured_text_detector.py:23-32. */
-  def detector: IslandDetector = new IslandDetector(
-    maxGap = 2,
-    minIslandSize = 2,
-    includeDiagonal = false,
-    useStructuralAnalysis = true
-  )
-
   /** reference: structured_text_detector.py:34-117. */
   def detectTables(g: CellGrid): Vector[TableHit] = {
     if (g == null || !g.hasData) return Vector.empty
-    val det = detector
-    val islands = det.detectIslands(g)
+    val islands = structuralIslands(g)
     val wideTables = detectWideTables(g)
 
     val tables = mutable.ArrayBuffer.empty[TableHit]
@@ -48,7 +39,7 @@ object StructuredText {
           case None =>
             val colCount = island.maxCol - island.minCol + 1
             if (colCount < 50) { // wide islands left to the wide-table detector
-              det.toTableHits(Vector(island), 0.3, g).headOption.foreach { t0 =>
+              IslandDetector.toTableHits(Vector(island), 0.3, g).headOption.foreach { t0 =>
                 val t = enhanceMetadata(g, t0)
                 tables += t
                 processed += rangeKey
@@ -64,6 +55,125 @@ object StructuredText {
     }
 
     tables.sortBy(t => (t.span.r0, t.span.c0)).toVector
+  }
+
+  // ---------- structural island analysis ----------
+  // The reference's island detector for text (structured_text_detector.py:23-32)
+  // sets use_structural_analysis, which returns before the flood fill:
+  // rows are grouped by column pattern, min island size 2.
+
+  private val MinIslandSize = 2
+
+  /** reference: island_detector.py:1357-1398. */
+  private def structuralIslands(g: CellGrid): Vector[DataIsland] = {
+    val rowGroups = groupRowsByPattern(analyzeRowPatterns(g))
+
+    val totalSheetCells = g.size
+    val effectiveMinSize =
+      if (totalSheetCells > 1000) math.max(MinIslandSize, (totalSheetCells * 0.005).toInt)
+      else MinIslandSize
+
+    val islands = Vector.newBuilder[DataIsland]
+    rowGroups.foreach { group =>
+      if (group.size >= effectiveMinSize) {
+        val island = islandFromRows(g, group)
+        if (island != null && island.cells.size >= effectiveMinSize) {
+          island.totalSheetCells = totalSheetCells
+          island.calculateMetrics(g)
+          islands += island
+        }
+      }
+    }
+    islands.result().sortBy(i => (i.minRow, i.minCol))
+  }
+
+  /** reference: island_detector.py:1400-1427. coordsSorted is (row, col)
+    * ascending, so each row's columns arrive contiguously and sorted — the
+    * pattern carries them as a sorted primitive array (no boxed sets).
+    */
+  private def analyzeRowPatterns(g: CellGrid): Vector[(Int, (Int, Int, Array[Int]))] = {
+    val cs = g.coordsSorted
+    val out = Vector.newBuilder[(Int, (Int, Int, Array[Int]))]
+    var i = 0
+    while (i < cs.length) {
+      val r = IslandDetector.rowOf(cs(i))
+      var j = i
+      while (j < cs.length && IslandDetector.rowOf(cs(j)) == r) j += 1
+      val cols = new Array[Int](j - i)
+      var k = i
+      while (k < j) { cols(k - i) = IslandDetector.colOf(cs(k)); k += 1 }
+      out += ((r, (cols(0), cols(cols.length - 1), cols)))
+      i = j
+    }
+    out.result()
+  }
+
+  /** reference: island_detector.py:1429-1498. A row joins the current
+    * group when at most one empty row precedes it (empty_row_tolerance)
+    * and its column pattern is similar enough; a wider gap always splits,
+    * since it exceeds min_empty_rows_to_split as well.
+    */
+  private def groupRowsByPattern(patterns: Vector[(Int, (Int, Int, Array[Int]))])
+      : Vector[Vector[Int]] = {
+    if (patterns.isEmpty) return Vector.empty
+    val groups = Vector.newBuilder[Vector[Int]]
+    var current = Vector.newBuilder[Int]
+    current += patterns.head._1
+    var prevRow = patterns.head._1
+    var prevPattern = patterns.head._2
+    patterns.tail.foreach { case (row, pattern) =>
+      if (row - prevRow - 1 <= 1 &&
+          columnSimilarity(prevPattern, pattern) >= IslandConst.ColumnConsistencyThreshold)
+        current += row
+      else {
+        groups += current.result()
+        current = Vector.newBuilder[Int]
+        current += row
+      }
+      prevRow = row
+      prevPattern = pattern
+    }
+    groups += current.result()
+    groups.result()
+  }
+
+  /** 0.5·range-overlap + 0.5·colset-Jaccard
+    * (reference: island_detector.py:1500-1535). Column sets are sorted
+    * distinct arrays; the merge walk computes the identical Jaccard.
+    */
+  private def columnSimilarity(p1: (Int, Int, Array[Int]), p2: (Int, Int, Array[Int])): Double = {
+    val (min1, max1, cols1) = p1
+    val (min2, max2, cols2) = p2
+    val rangeOverlap = math.min(max1, max2) - math.max(min1, min2) + 1
+    val rangeUnion = math.max(max1, max2) - math.min(min1, min2) + 1
+    if (rangeUnion <= 0) return 0.0
+    val rangeSim = rangeOverlap.toDouble / rangeUnion
+    val colsSim =
+      if (cols1.isEmpty && cols2.isEmpty) 1.0
+      else if (cols1.isEmpty || cols2.isEmpty) 0.0
+      else {
+        var i = 0
+        var j = 0
+        var inter = 0
+        while (i < cols1.length && j < cols2.length) {
+          if (cols1(i) == cols2(j)) { inter += 1; i += 1; j += 1 }
+          else if (cols1(i) < cols2(j)) i += 1
+          else j += 1
+        }
+        val union = cols1.length + cols2.length - inter
+        if (union > 0) inter.toDouble / union else 0.0
+      }
+    0.5 * rangeSim + 0.5 * colsSim
+  }
+
+  private def islandFromRows(g: CellGrid, rows: Vector[Int]): DataIsland = {
+    val island = new DataIsland
+    val rowSet = rows.toSet
+    g.coordsSorted.foreach { k =>
+      val r = IslandDetector.rowOf(k)
+      if (rowSet.contains(r)) island.addCell(r, IslandDetector.colOf(k))
+    }
+    if (island.cells.nonEmpty) island else null
   }
 
   /** reference: structured_text_detector.py:119-193. */

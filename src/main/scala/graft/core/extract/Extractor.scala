@@ -52,8 +52,8 @@ object Extractor {
     val tableExtractor = if (config.extractTables) new TableExtractor() else null
     var regionIdx = 0
     page.regions.foreach { region =>
-      val outcome = Cascade.detect(region.grid, region.kind, config)
-      outcome.tables.take(config.maxTablesPerSheet).foreach { hit =>
+      val outcome = Cascade.detect(region.grid, region.kind)
+      outcome.tables.take(DetectConfig.MaxTablesPerSheet).foreach { hit =>
         if (tableExtractor != null) {
           // stats-only variant: the span ships (rows, cols, quality) — the
           // TableData row Vectors extract() builds were always discarded

@@ -175,9 +175,12 @@ private[graft] final class SpanStats(val g: CellGrid, val r0: Int, val c0: Int,
   * header extraction, and the 4-component quality score.
   */
 object TableExtractor {
+  // the reference DataFrameExtractor constructor defaults
+  private val MinDataRows = 2
+  private val MinDataDensity = 0.3
   // module-level (one allocation per JVM): a TableExtractor is
-  // constructed per extracted span, so instance constants would be
-  // rebuilt per table
+  // constructed per extracting page, so instance constants would be
+  // rebuilt per page
   private val PlateFormats: Seq[(Int, Seq[(Int, Int)])] = Seq(
     6 -> Seq((2, 3), (3, 2)),
     24 -> Seq((4, 6), (6, 4)),
@@ -187,8 +190,8 @@ object TableExtractor {
   )
 }
 
-final class TableExtractor(minDataRows: Int = 2, minDataDensity: Double = 0.3) {
-  import TableExtractor.PlateFormats
+final class TableExtractor {
+  import TableExtractor.{MinDataDensity, MinDataRows, PlateFormats}
 
   /** The cursor-backed span view (see [[SpanStats]]); None iff the span is
     * degenerate. Shared by [[extract]] and [[extractStats]] so the two
@@ -202,20 +205,20 @@ final class TableExtractor(minDataRows: Int = 2, minDataDensity: Double = 0.3) {
   }
 
   /** reference: dataframe_extractor.py:52-116. */
-  def extract(g: CellGrid, span: Span, detectHeaders: Boolean = true)
+  def extract(g: CellGrid, span: Span)
       : (Option[TableData], Option[HeaderResult], Double) = {
     val st = spanStats(g, span) match {
       case None => return (None, None, 0.0)
       case Some(s) => s
     }
     val density = calcDensity(st)
-    if (density < minDataDensity) return (None, None, 0.0)
+    if (density < MinDataDensity) return (None, None, 0.0)
 
-    val headerInfo = if (detectHeaders) Some(detectHeaderInfo(st)) else None
+    val headerInfo = Some(detectHeaderInfo(st))
     val table = createTable(st, headerInfo)
     table match {
       case None => (None, headerInfo, 0.0)
-      case Some(t) if t.rowCount < minDataRows =>
+      case Some(t) if t.rowCount < MinDataRows =>
         if (headerInfo.exists(_.tableType == "plate_map")) (table, headerInfo, 0.95)
         else (None, headerInfo, 0.0)
       case Some(t) =>
@@ -633,7 +636,7 @@ final class TableExtractor(minDataRows: Int = 2, minDataDensity: Double = 0.3) {
     */
   private def detectHorizontalScore(st: SpanStats): (Double, Int) = {
     if (st.rows == 0 || st.cols < 2) return (0.0, 0)
-    val maxHeaderCols = math.min(3, st.cols - minDataRows)
+    val maxHeaderCols = math.min(3, st.cols - MinDataRows)
     if (maxHeaderCols < 1) return (0.0, 0)
     val headerBase =
       if (st.rows <= 64) {
@@ -807,7 +810,7 @@ final class TableExtractor(minDataRows: Int = 2, minDataDensity: Double = 0.3) {
       case Some(hi) if hi.hasHeaders => score += hi.confidence * 0.3
       case _ => score += 0.1
     }
-    if (rows >= minDataRows && cols > 0) {
+    if (rows >= MinDataRows && cols > 0) {
       val aspect = math.min(rows.toDouble / cols, cols.toDouble / rows)
       score += math.min(1.0, aspect / 0.1) * 0.2
     }
@@ -830,12 +833,12 @@ final class TableExtractor(minDataRows: Int = 2, minDataDensity: Double = 0.3) {
       case Some(s) => s
     }
     val density = calcDensity(st)
-    if (density < minDataDensity) return (None, None, 0.0)
+    if (density < MinDataDensity) return (None, None, 0.0)
     val headerInfo = Some(detectHeaderInfo(st))
     tableShape(st, headerInfo) match {
       case None => (None, headerInfo, 0.0)
       case Some((fr, fc, nr, nc)) =>
-        if (nr < minDataRows) {
+        if (nr < MinDataRows) {
           if (headerInfo.exists(_.tableType == "plate_map"))
             (Some((nr, nc)), headerInfo, 0.95)
           else (None, headerInfo, 0.0)

@@ -18,7 +18,6 @@ import graft.core.extract.Extractor
   */
 object Pipeline {
 
-  val MaxHtmlBytes: Int = 64 * 1024 * 1024 // default P2 cap (DetectConfig.maxHtmlBytes)
   val SaltBuckets: Int = 8
 
   /** Salted repartitioning key: host ⊕ per-url salt ⊕ size bin. */
@@ -29,23 +28,21 @@ object Pipeline {
       .withColumn("_szbin", least(lit(3), floor(log2(length(col("html")) + 1) / 4)))
   }
 
-  /** Skew policy. Auto: shuffle on the salted key only when the input's own
-    * partitioning is too coarse to feed the target parallelism. When the
-    * input is a well-split table (Iceberg/parquet scans bound bytes-per-task
-    * via maxPartitionBytes, and P2 caps bytes-per-document), per-task parse
-    * work is already balanced by construction and moving the payload through
-    * an exchange would only add cost — at 100 TB that exchange IS the job.
-    * Force: always shuffle (unclustered inputs, pathological hosts).
+  /** Extract every page into `numPartitions` (default: the session's
+    * shuffle partitions) tasks' worth of work.
+    *
+    * Skew policy: shuffle on the salted key only when the input's own
+    * partitioning is too coarse to feed the target parallelism (fewer than
+    * max(2, n/2) partitions). When the input is a well-split table
+    * (Iceberg/parquet scans bound bytes-per-task via maxPartitionBytes, and
+    * P2 caps bytes-per-document), per-task parse work is already balanced
+    * by construction and moving the payload through an exchange would only
+    * add cost — at 100 TB that exchange IS the job. The decision rests on
+    * what the plan shows (its partition count), not on a setting.
     */
-  sealed trait SkewMode
-  case object Auto extends SkewMode
-  case object ForceShuffle extends SkewMode
-  case object NoShuffle extends SkewMode
-
   def extract(spark: SparkSession, pages: Dataset[Page],
       config: DetectConfig = DetectConfig(),
-      numPartitions: Int = 0,
-      skewMode: SkewMode = Auto): Dataset[Extracted] = {
+      numPartitions: Int = 0): Dataset[Extracted] = {
     import spark.implicits._
     val n =
       if (numPartitions > 0) numPartitions
@@ -53,13 +50,8 @@ object Pipeline {
     // physical-plan partition count: queryExecution.toRdd reuses the already
     // analyzed plan instead of materializing a fresh deserializing RDD lineage
     val inputParts = pages.queryExecution.toRdd.getNumPartitions
-    val shuffle = skewMode match {
-      case ForceShuffle => true
-      case NoShuffle => false
-      case Auto => inputParts < math.max(2, n / 2)
-    }
     val balanced =
-      if (shuffle)
+      if (inputParts < math.max(2, n / 2))
         withSkewKey(pages)
           .repartition(n, col("_host"), col("_salt"), col("_szbin"))
           .drop("_host", "_salt", "_szbin")
@@ -76,7 +68,7 @@ object Pipeline {
     */
   def extractOne(p: Page, config: DetectConfig, pid: Int): Extracted = {
     try {
-      if (p.html == null || p.html.length > config.maxHtmlBytes)
+      if (p.html == null || p.html.length > DetectConfig.MaxHtmlBytes)
         return Extracted(p.url, p.lang, "", "", 0, 0, 0L, parse_failed = true, pid,
           Seq.empty, Seq.empty)
       val res = Extractor.extractHtml(p.html, config)

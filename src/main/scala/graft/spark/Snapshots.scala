@@ -10,7 +10,6 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.detect.DetectConfig
 
 /** Iceberg-layout-compatible snapshot shim over parquet (SURVEY.md §7.4).
   *
@@ -133,7 +132,6 @@ object Snapshots {
       pages: Dataset[Page],
       outDir: String,
       buckets: Int,
-      config: DetectConfig = DetectConfig(),
       failAfterBuckets: Int = -1
   ): (Int, Int) = {
     import spark.implicits._
@@ -154,7 +152,7 @@ object Snapshots {
         .drop("_bucket")
         .as[Page]
       val dataRoot = Paths.get(outDir, "data")
-      Pipeline.extract(spark, pendingPages, config)
+      Pipeline.extract(spark, pendingPages)
         .toDF()
         .withColumn("_bucket", bucketOf) // deterministic re-derivation from url
         // cluster the OUTPUT by bucket before the partitioned write: without

@@ -51,9 +51,9 @@ object StreamingPipeline {
   /** The same kernel, applied to a streaming Dataset (stateless map — the
     * plan stays a streaming-compatible MapPartitions).
     */
-  def extractStream(pages: Dataset[Page], config: DetectConfig = DetectConfig())
-      : Dataset[Extracted] = {
+  def extractStream(pages: Dataset[Page]): Dataset[Extracted] = {
     import pages.sparkSession.implicits._
+    val config = DetectConfig()
     pages.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       it.map(p => Pipeline.extractOne(p, config, pid))
@@ -345,8 +345,8 @@ object StreamingPipeline {
     * catch-up runs); otherwise runs continuously.
     */
   def run(spark: SparkSession, inputDir: String, outputDir: String, checkpointDir: String,
-      config: DetectConfig = DetectConfig(), availableNow: Boolean = false): StreamingQuery = {
-    val extracted = extractStream(readPages(spark, inputDir), config)
+      availableNow: Boolean = false): StreamingQuery = {
+    val extracted = extractStream(readPages(spark, inputDir))
     val writer = extracted.writeStream
       .format("parquet")
       .option("path", outputDir)

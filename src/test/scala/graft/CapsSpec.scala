@@ -24,51 +24,30 @@ class CapsSpec extends AnyFunSuite {
   }
 
   test("O4: max_tables_per_sheet caps detected tables per region") {
-    val fix = FixtureLoader.fixtures.find(_.name == "multi_table").get
-    val html = s"<html><body>${FixtureLoader.renderHtml(fix)}</body></html>"
-    val dflt = Extractor.extractHtml(html.getBytes("UTF-8"))
-    assert(dflt.tables.size >= 2, s"fixture should yield >=2 tables, got ${dflt.tables.size}")
-    val capped = Extractor.extractHtml(html.getBytes("UTF-8"),
-      DetectConfig(maxTablesPerSheet = 1))
-    assert(capped.tables.size == 1, s"cap=1 must keep one table, got ${capped.tables.size}")
+    // one table region holding 51 fully bordered 2x2 boxes, each followed
+    // by an empty row: the box detector finds all 51, the cap keeps 50
+    val boxes = (0 until 51).map { b =>
+      (0 until 2).map(r => "<tr>" + (0 until 2).map(c =>
+        s"<td>b$b-$r$c</td>").mkString + "</tr>").mkString + "<tr><td></td><td></td></tr>"
+    }.mkString
+    val html = s"<html><body><table border=\"1\">$boxes</table></body></html>"
+    val res = Extractor.extractHtml(html.getBytes("UTF-8"))
+    assert(res.regions == 1)
+    assert(res.tables.size == DetectConfig.MaxTablesPerSheet && res.tables.size == 50,
+      s"expected the 50-table cap, got ${res.tables.size}")
+    assert(res.tables.forall(_.hit.method == "box_table"), res.tables.map(_.hit.method).distinct)
   }
 
-  test("GRAFT_EMPTY_ROW_TOLERANCE=0 splits the gap-bridged table (live knob e2e)") {
-    // two 3x3 blocks separated by EXACTLY one empty row: tolerance 1
-    // (default) bridges it into one island, tolerance 0 splits
+  test("a one-row gap is bridged into one island table") {
+    // two 3x3 blocks separated by EXACTLY one empty row: the island
+    // detector reconnects across a one-row gap
     def block(v0: Int) =
       (0 until 3).map(r => "<tr>" + (0 until 3).map(c =>
         s"<td>w${v0 + r * 3 + c}</td>").mkString + "</tr>").mkString
     val html = "<html><body><table>" + block(1) +
       "<tr><td></td><td></td><td></td></tr>" + block(10) + "</table></body></html>"
     val bridged = Extractor.extractHtml(html.getBytes("UTF-8"))
-    val cfg = DetectConfig.fromEnv(Map("GRAFT_EMPTY_ROW_TOLERANCE" -> "0").get)
-    assert(cfg.emptyRowTolerance == 0)
-    val split = Extractor.extractHtml(html.getBytes("UTF-8"), cfg)
-    assert(split.tables.size > bridged.tables.size,
-      s"tolerance 0 must split the 1-row gap: default=${bridged.tables.map(_.hit.span)} " +
-        s"strict=${split.tables.map(_.hit.span)}")
-  }
-
-  test("GRAFT_USE_BORDER_DETECTION=false disables formatting-boundary splits (live knob e2e)") {
-    val cfg = DetectConfig.fromEnv(Map("GRAFT_USE_BORDER_DETECTION" -> "false").get)
-    assert(!cfg.useBorderDetection)
-    // the knob must be live end-to-end: at least one golden fixture's
-    // outcome changes when formatting-boundary detection is disabled
-    val changed = FixtureLoader.fixtures.filter { fix =>
-      val html = s"<html><body>${FixtureLoader.renderHtml(fix)}</body></html>"
-      val on = Extractor.extractHtml(html.getBytes("UTF-8"))
-      val off = Extractor.extractHtml(html.getBytes("UTF-8"), cfg)
-      on.tables.map(t => (t.hit.span, t.hit.confidence, t.hit.method)) !=
-        off.tables.map(t => (t.hit.span, t.hit.confidence, t.hit.method))
-    }.map(_.name)
-    assert(changed.nonEmpty,
-      "disabling border detection changed no fixture outcome — knob is dead")
-  }
-
-  test("GRAFT_MAX_HTML_MB >= 2048 no longer overflows to a negative cap") {
-    val cfg = DetectConfig.fromEnv(Map("GRAFT_MAX_HTML_MB" -> "4096").get)
-    assert(cfg.maxHtmlBytes == Int.MaxValue, s"got ${cfg.maxHtmlBytes}")
-    assert(cfg.maxHtmlBytes > 0, "a negative cap would mark every page parse_failed")
+    assert(bridged.tables.map(t => (t.hit.method, t.hit.span.a1)) ==
+      Vector(("island_detection", "A1:C7")), bridged.tables.map(_.hit))
   }
 }

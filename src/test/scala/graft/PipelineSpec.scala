@@ -47,7 +47,7 @@ class PipelineSpec extends AnyFunSuite {
     // the lineage rollup is partition-count-INDEPENDENT: same rows whether
     // the extraction ran on 1 partition or many (oracle-checkability)
     val coarse = Pipeline.metrics(
-      Pipeline.extract(spark, pages.coalesce(1), skewMode = Pipeline.NoShuffle))
+      Pipeline.extract(spark, pages.coalesce(1), numPartitions = 1))
       .collect().map(_.toString).sorted
     assert(coarse.toSeq == m.map(_.toString).sorted.toSeq,
       "stable-bucket metrics must not depend on partitioning")
@@ -135,21 +135,35 @@ class PipelineSpec extends AnyFunSuite {
   test("extraction output is invariant to partitioning and skew mode") {
     // the 100 TB contract: WHERE a row is processed must never change WHAT
     // is extracted — the shuffle decision is pure placement
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val pages = PageGen.pages(spark, sfDir)
-    def run(mode: Pipeline.SkewMode, n: Int) =
-      Pipeline.extract(spark, pages, numPartitions = n, skewMode = mode)
+    def run(input: Dataset[Page], n: Int, salted: Boolean) = {
+      val df = Pipeline.extract(spark, input, numPartitions = n)
         .select("url", "text_sha256", "n_tables", "n_regions")
-        .orderBy("url").collect().map(_.toString).toVector
-    val a = run(Pipeline.NoShuffle, 4)
-    val b = run(Pipeline.ForceShuffle, 16)
-    val c = run(Pipeline.Auto, 32)
-    assert(a == b, "NoShuffle(4) != ForceShuffle(16)")
-    assert(b == c, "ForceShuffle(16) != Auto(32)")
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      assert(plan.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.toString.contains("_salt") => e
+      }.nonEmpty == salted, plan)
+      df.orderBy("url").collect().map(_.toString).toVector
+    }
+    // 8 input partitions at n = 4: no salted exchange; 1 input partition
+    // at n = 16: the salted exchange
+    val a = run(pages.repartition(8), 4, salted = false)
+    val b = run(pages.coalesce(1), 16, salted = true)
+    val c = Pipeline.extract(spark, pages)
+      .select("url", "text_sha256", "n_tables", "n_regions")
+      .orderBy("url").collect().map(_.toString).toVector
+    assert(a == b, "repartition(8) at n=4 != coalesce(1) at n=16")
+    assert(b == c, "coalesce(1) at n=16 != default")
   }
 
-  test("config knobs are reachable end-to-end (min_table_size via env loading)") {
+  test("a bordered table inside prose is detected by the box path end to end") {
     import spark.implicits._
-    import graft.core.detect.DetectConfig
     val fix = FixtureLoader.fixtures.find(_.name == "box_bordered").get
     val html =
       s"<html><body><p>intro prose for context</p>${FixtureLoader.renderHtml(fix)}</body></html>"
@@ -158,19 +172,6 @@ class PipelineSpec extends AnyFunSuite {
     val dflt = Pipeline.extract(spark, page).collect()(0)
     assert(dflt.spans.exists(_.method.startsWith("box_table")),
       s"default config should detect via the box path, got ${dflt.spans.map(_.method)}")
-    val cfg = DetectConfig.fromEnv(
-      Map("GRAFT_MIN_TABLE_ROWS" -> "9", "GRAFT_MIN_TABLE_COLS" -> "9").get)
-    assert(cfg.minTableRows == 9 && cfg.minTableCols == 9)
-    assert(cfg.confidenceThreshold == DetectConfig().confidenceThreshold,
-      "unset env keys keep defaults")
-    val strict = Pipeline.extract(spark, page, cfg).collect()(0)
-    assert(!strict.spans.exists(_.method.startsWith("box_table")),
-      s"a 9x9 minimum must reject the small box table, got ${strict.spans.map(_.method)}")
-    // detection-disable knobs are reachable too
-    val noIsland = DetectConfig.fromEnv(Map(
-      "GRAFT_ENABLE_ISLAND_DETECTION" -> "false",
-      "GRAFT_ENABLE_SIMPLE_CASE_DETECTION" -> "false").get)
-    assert(!noIsland.enableIslandDetection && !noIsland.enableSimpleCase)
   }
 
   test("amplified corpus pages are unique and deterministic") {

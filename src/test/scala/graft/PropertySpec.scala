@@ -32,6 +32,31 @@ class PropertySpec extends AnyFunSuite {
     g
   }
 
+  /** The cells of the 8-connected components with at least `minSize`
+    * cells, by plain BFS.
+    */
+  private def componentCells(cells: Set[(Int, Int)], minSize: Int): Set[(Int, Int)] = {
+    val seen = scala.collection.mutable.Set.empty[(Int, Int)]
+    val out = Set.newBuilder[(Int, Int)]
+    cells.foreach { start =>
+      if (seen.add(start)) {
+        val comp = scala.collection.mutable.ArrayBuffer(start)
+        var i = 0
+        while (i < comp.size) {
+          val (r, c) = comp(i)
+          for (dr <- -1 to 1; dc <- -1 to 1) {
+            val n = (r + dr, c + dc)
+            if (cells.contains(n) && seen.add(n)) comp += n
+          }
+          i += 1
+        }
+        if (comp.size >= minSize) out ++= comp
+      }
+    }
+    out.result()
+  }
+
+
   test("SpanCodec round-trips in-range spans and rejects out-of-range/negative") {
     import graft.core.grid.SpanCodec
     val inRange = for {
@@ -179,30 +204,33 @@ class PropertySpec extends AnyFunSuite {
         dense.put(Cell.str(s"v$r-$c", r, c))
         sparse.put(Cell.str(s"v$r-$c", r, c))
       }
-      val det = new IslandDetector(adaptiveThresholds = false, minIslandSize = 1)
-      def obs(g: CellGrid) = det.detectIslands(g).map(i =>
+      def obs(g: CellGrid) = IslandDetector.detectIslands(g).map(i =>
         (i.toRange, i.cells.size, i.confidence, i.density, i.hasHeaders))
       obs(dense) == obs(sparse)
     })
   }
 
-  test("islands partition the non-empty cells (no cell lost, no overlap)") {
-    check(Prop.forAll(Gen.listOfN(60, cellGen)) { coords =>
-      val g = gridOf(coords.distinct)
-      val det = new IslandDetector(adaptiveThresholds = false, minIslandSize = 1,
-        useFormattingBoundaries = false, emptyRowTolerance = 0)
-      val islands = det.detectIslands(g)
-      val total = islands.map(_.cells.size).sum
-      // merge steps can union islands but never drop or duplicate cells
-      total == g.size
+  test("islands partition the cells of the 8-connected components of at least 4 cells") {
+    // unformatted cells give no formatting split, so the islands are the
+    // flood fill's components (>= 4 cells) after the reconnect and merge
+    // steps, which can union islands but never drop or duplicate a cell
+    check(Prop.forAll(Gen.chooseNum(40, 250).flatMap(Gen.listOfN(_, cellGen))) { coords =>
+      val cells = coords.distinct
+      val islands = IslandDetector.detectIslands(gridOf(cells))
+      val keys = islands.map { isl =>
+        val b = Set.newBuilder[(Int, Int)]
+        isl.cells.foreach(k => b += (((k >> 32).toInt, k.toInt)))
+        b.result()
+      }
+      val disjoint = keys.map(_.size).sum == keys.flatten.toSet.size
+      disjoint && keys.flatten.toSet == componentCells(cells.toSet, minSize = 4)
     })
   }
 
   test("island bounds always contain their cells") {
     check(Prop.forAll(Gen.listOfN(40, cellGen)) { coords =>
       val g = gridOf(coords.distinct)
-      val det = new IslandDetector(adaptiveThresholds = false, minIslandSize = 1)
-      det.detectIslands(g).forall { isl =>
+      IslandDetector.detectIslands(g).forall { isl =>
         var ok = true
         isl.cells.foreach { k =>
           val r = (k >> 32).toInt
