@@ -12,10 +12,6 @@ object DelimitedText {
 
   val Delimiters: Seq[Char] = Seq('\t', ',', '|', ';', ' ')
 
-  // precompiled: String.split(regex) compiles a Pattern per call for
-  // multi-char patterns — a per-line cost on the pre-region hot path
-  private val WsRe = java.util.regex.Pattern.compile("\\s+")
-
   /** `line.split(delim.toString, -1)` for a literal char without the
     * per-call Pattern.compile (keeps trailing empty fields).
     */
@@ -37,22 +33,45 @@ object DelimitedText {
     out
   }
 
-  /** reference: text_reader.py:242-301 (_score_delimiter_enhanced). */
-  def scoreDelimiterEnhanced(lines: Seq[String], delimiter: Char): Double = {
-    if (lines.isEmpty) return 0.0
-    val columnCounts = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var validLines = 0
-    lines.foreach { line =>
-      if (line.nonEmpty && line.trim.nonEmpty) {
-        val count =
-          if (delimiter == ' ') WsRe.split(line).count(_.trim.nonEmpty)
-          else line.count(_ == delimiter) + 1
-        if (count > 1) {
-          columnCounts += count
-          validLines += 1
-        }
-      }
+  private val SpaceCol = Delimiters.indexOf(' ')
+  // ASCII char → 1 + its column in Delimiters (0: not a delimiter; the
+  // space delimiter counts runs instead)
+  private val DelimCol: Array[Int] = {
+    val t = new Array[Int](128)
+    Delimiters.indices.foreach(k => if (k != SpaceCol) t(Delimiters(k)) = k + 1)
+    t
+  }
+
+  /** Columns `line` splits into under each of `Delimiters` (same order), in
+    * one char scan: for the space delimiter the maximal runs of regex-`\s`
+    * non-whitespace that hold a char above ' ' (≡
+    * `line.split("\\s+").count(_.trim.nonEmpty)`, the runs `parse` keeps),
+    * for the others the delimiter count plus 1.
+    */
+  private[graft] def columnCounts(line: String): Array[Int] = {
+    val out = Array.fill(Delimiters.length)(1)
+    out(SpaceCol) = 0
+    var visible = false // the current non-\s run holds a char above ' '
+    var i = 0
+    while (i < line.length) {
+      val c = line.charAt(i)
+      if (isWsSplitChar(c)) {
+        if (visible) out(SpaceCol) += 1
+        visible = false
+      } else if (c > ' ') visible = true
+      if (c < 128 && DelimCol(c) > 0) out(DelimCol(c) - 1) += 1
+      i += 1
     }
+    if (visible) out(SpaceCol) += 1
+    out
+  }
+
+  /** reference: text_reader.py:242-301 (_score_delimiter_enhanced), over
+    * the column counts of the non-blank sample lines under one delimiter.
+    */
+  private def scoreDelimiterEnhanced(lineCounts: Seq[Int]): Double = {
+    val columnCounts = lineCounts.filter(_ > 1)
+    val validLines = columnCounts.size
     if (columnCounts.isEmpty || validLines < 2) return 0.0
     val unique = columnCounts.distinct
     if (unique.size == 1) {
@@ -85,13 +104,15 @@ object DelimitedText {
       .map(l => (if (l.length > 2000) l.substring(0, 2000) else l).trim)
       .toVector
     if (sampleLines.isEmpty) return None
+    // the lines are trimmed, so non-blank is non-empty
+    val counts = sampleLines.filter(_.nonEmpty).map(columnCounts)
     // stable best: first delimiter in canonical order wins ties (tab first,
     // matching the reference's dict-order max)
     var best: Char = '\t'
     var bestScore = -1.0
-    Delimiters.foreach { d =>
-      val s = scoreDelimiterEnhanced(sampleLines, d)
-      if (s > bestScore) { best = d; bestScore = s }
+    Delimiters.indices.foreach { k =>
+      val s = scoreDelimiterEnhanced(counts.map(_(k)))
+      if (s > bestScore) { best = Delimiters(k); bestScore = s }
     }
     if (bestScore >= 1.5) Some((best, bestScore)) else None
   }
@@ -117,10 +138,12 @@ object DelimitedText {
     * comma/pipe/semicolon → CSV (typed cells, island detection), space →
     * TXT (string cells, structured-text detection).
     */
-  // java-regex \s (the WsRe split class): ASCII whitespace only — NOT
-  // Character.isWhitespace
+  // java-regex \s (what the reference's split on whitespace runs uses):
+  // ASCII whitespace only — NOT Character.isWhitespace
   @inline private def isWsSplitChar(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
+    c <= ' ' && ((WsSplitBits >>> c) & 1L) != 0L
+  private final val WsSplitBits = (1L << ' ') | (1L << '\t') | (1L << '\n') | (1L << '\u000B') |
+    (1L << '\f') | (1L << '\r')
 
   def parse(text: String, delimiter: Char): (CellGrid, GridKind) = {
     // SPAN-BACKED PARSE (round 5): cells reference [from, until) spans of
@@ -157,7 +180,7 @@ object DelimitedText {
       if (le == lineStart) { // empty line: advance the row counter only
         r += 1
       } else if (delimiter == ' ') {
-        // ≡ WsRe.split(line).filter(_.trim.nonEmpty): maximal non-\s runs,
+        // ≡ line.split("\\s+").filter(_.trim.nonEmpty): maximal non-\s runs,
         // kept only when String.trim leaves something; the cell value is
         // the trimmed run (Cell.str(v.trim)), raw == value
         var k = 0

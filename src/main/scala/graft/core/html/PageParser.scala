@@ -1,9 +1,10 @@
 package graft.core.html
 
+import scala.annotation.switch
 import scala.collection.mutable
 import graft.core.detect.GridKind
 import graft.core.grid.{A1, Cell, CellGrid, Span, SpanCodec}
-import graft.core.html.HtmlTokenizer.TokSink
+import graft.core.html.HtmlTokenizer.{Tag, TokSink}
 
 /** A tabular region found in a page, in document order. */
 /** Author-declared table metadata captured from markup — the web analogue
@@ -37,8 +38,12 @@ final case class ParsedPage(
   * (text_reader.py:161-301).
   *
   * Contract (deterministic, documented for the fixture renderer):
+  *  - tags dispatch on their `HtmlTokenizer.Tag` code through the one
+  *    class table `Tag.Flags` (dropped, block, raw-text, table-structure);
+  *    no tag name string is built or compared. Attributes are parsed, from
+  *    the tokenizer's attribute span, only for `table`, `td` and `th`
   *  - dropped subtrees: head, nav, header, footer, aside, form, iframe, svg,
-  *    select, button (+ script/style/noscript at the tokenizer level)
+  *    select, button (+ script/style/noscript/textarea at the tokenizer level)
   *  - a text block is kept iff trimmed length >= 10 and the ratio of
   *    anchor-text chars is <= 0.5
   *  - `<th>`, font-weight >= 700, or a b/strong wrapper mark a cell bold
@@ -62,18 +67,6 @@ object PageParser {
     var n = 0
   }
 
-  // tag classes: a literal match is a hashCode switch plus one equals
-  private def isDropped(name: String): Boolean = name match {
-    case "head" | "nav" | "header" | "footer" | "aside" | "form" | "iframe" | "svg" |
-        "select" | "button" => true
-    case _ => false
-  }
-  private def isBlock(name: String): Boolean = name match {
-    case "p" | "div" | "section" | "article" | "main" | "h1" | "h2" | "h3" | "h4" | "h5" |
-        "h6" | "li" | "ul" | "ol" | "blockquote" | "br" | "tr" | "table" | "pre" | "body" |
-        "html" => true
-    case _ => false
-  }
   private val MinBlockChars = 10
   private val MaxLinkRatio = 0.5
   // deepest nested-<table> level that gets its own builder/region; deeper
@@ -110,56 +103,60 @@ object PageParser {
     val tableStack = mutable.ArrayBuffer.empty[TableBuilder]
     var nestedOverflow = 0
 
-    def onStartTag(name: String, attrs: Map[String, String], selfClosing: Boolean): Unit = {
-      if (isDropped(name)) {
+    def onStartTag(tag: Int, src: String, nameFrom: Int, attrFrom: Int, attrUntil: Int,
+        selfClosing: Boolean): Unit = {
+      val flags = Tag.Flags(tag)
+      if ((flags & Tag.Dropped) != 0) {
         if (!selfClosing) dropDepth += 1
       } else if (dropDepth > 0) {
         () // inside dropped subtree
       } else if (table != null) {
-        name match {
-          case "table" =>
+        if ((flags & Tag.TableStructure) != 0) (tag: @switch) match {
+          case Tag.Table =>
             if (nestedOverflow > 0 || tableStack.length >= MaxTableNesting)
               nestedOverflow += 1
             else {
               tableStack += table
-              table = new TableBuilder(attrs)
+              table = new TableBuilder(HtmlTokenizer.attributes(src, attrFrom, attrUntil))
             }
-          case "tr" if nestedOverflow == 0 => table.startRow()
-          case "td" | "th" if nestedOverflow == 0 => table.startCell(name == "th", attrs)
-          case "caption" if nestedOverflow == 0 => table.startCaption()
+          case Tag.Tr => if (nestedOverflow == 0) table.startRow()
+          case Tag.Td | Tag.Th =>
+            if (nestedOverflow == 0)
+              table.startCell(tag == Tag.Th, HtmlTokenizer.attributes(src, attrFrom, attrUntil))
+          case Tag.Caption => if (nestedOverflow == 0) table.startCaption()
           // deliberate asymmetry in the beyond-cap overflow region: nested
           // TEXT still flows into the tracked cell (the documented
           // degraded-structure behavior — content is preserved as plain
           // text), but bold is a STRUCTURAL formatting signal and must not
           // cross the cap into the tracked table's header heuristics
-          case "b" | "strong" => if (nestedOverflow == 0) table.sawBold()
+          case Tag.B | Tag.Strong => if (nestedOverflow == 0) table.sawBold()
           case _ => ()
         }
-      } else name match {
-        case "table" =>
+      } else (tag: @switch) match {
+        case Tag.Table =>
           flushBlock()
-          table = new TableBuilder(attrs)
-        case "pre" =>
+          table = new TableBuilder(HtmlTokenizer.attributes(src, attrFrom, attrUntil))
+        case Tag.Pre =>
           flushBlock()
           preDepth += 1
-        case "a" =>
+        case Tag.A =>
           if (!selfClosing) anchorDepth += 1
-        case "br" =>
+        case Tag.Br =>
           if (preDepth > 0) preText.append('\n') else blockText.append('\n')
-        case n if isBlock(n) =>
-          flushBlock()
-        case _ => ()
+        case _ =>
+          if ((flags & Tag.Block) != 0) flushBlock()
       }
     }
 
-    def onEndTag(name: String): Unit = {
-      if (isDropped(name)) {
+    def onEndTag(tag: Int, src: String, nameFrom: Int, nameUntil: Int): Unit = {
+      val flags = Tag.Flags(tag)
+      if ((flags & Tag.Dropped) != 0) {
         if (dropDepth > 0) dropDepth -= 1
       } else if (dropDepth > 0) {
         ()
       } else if (table != null) {
-        name match {
-          case "table" =>
+        (tag: @switch) match {
+          case Tag.Table =>
             if (nestedOverflow > 0) nestedOverflow -= 1
             else {
               val g = table.build()
@@ -168,20 +165,19 @@ object PageParser {
                 if (tableStack.nonEmpty) tableStack.remove(tableStack.length - 1)
                 else null
             }
-          case "tr" if nestedOverflow == 0 => table.endRow()
-          case "td" | "th" if nestedOverflow == 0 => table.endCell()
-          case "caption" if nestedOverflow == 0 => table.endCaption()
+          case Tag.Tr => if (nestedOverflow == 0) table.endRow()
+          case Tag.Td | Tag.Th => if (nestedOverflow == 0) table.endCell()
+          case Tag.Caption => if (nestedOverflow == 0) table.endCaption()
           case _ => ()
         }
-      } else name match {
-        case "pre" =>
+      } else (tag: @switch) match {
+        case Tag.Pre =>
           if (preDepth > 0) {
             preDepth -= 1
             if (preDepth == 0) finishPre()
           }
-        case "a" => if (anchorDepth > 0) anchorDepth -= 1
-        case n if isBlock(n) => flushBlock()
-        case _ => ()
+        case Tag.A => if (anchorDepth > 0) anchorDepth -= 1
+        case _ => if ((flags & Tag.Block) != 0) flushBlock()
       }
     }
 
@@ -236,7 +232,8 @@ object PageParser {
     private def emitTextBlock(raw: String, linkChars: Int): Unit = {
       val norm = normalizeWs(raw)
       if (norm.isEmpty) return
-      val totalChars = norm.count(!_.isWhitespace)
+      // link-free blocks (most of them) skip the count: their ratio is 0
+      val totalChars = if (linkChars > 0) countNonWs(norm, 0, norm.length) else 0
       val linkRatio = if (totalChars > 0) linkChars.toDouble / totalChars else 0.0
       if (norm.length >= MinBlockChars && linkRatio <= MaxLinkRatio) blocks += norm
       else bytesStripped += utf8Len(norm)
@@ -256,6 +253,12 @@ object PageParser {
     }
   }
 
+  /** `Character.isWhitespace`, answering printable ASCII without the
+    * class-table lookup.
+    */
+  @inline private def isWs(c: Char): Boolean =
+    (c <= ' ' || c >= '\u0080') && Character.isWhitespace(c)
+
   /** Collapse whitespace runs to single spaces, trim. */
   def normalizeWs(s: String): String = {
     // fast path: already normalized (no leading/trailing/double/odd ws)
@@ -263,7 +266,7 @@ object PageParser {
     var j = 0
     while (clean && j < s.length) {
       val c = s.charAt(j)
-      if (c.isWhitespace && (c != ' ' || (j + 1 < s.length && s.charAt(j + 1) == ' ')))
+      if (isWs(c) && (c != ' ' || (j + 1 < s.length && s.charAt(j + 1) == ' ')))
         clean = false
       j += 1
     }
@@ -274,7 +277,7 @@ object PageParser {
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (c.isWhitespace) {
+      if (isWs(c)) {
         if (!lastWs) sb.append(' ')
         lastWs = true
       } else {
@@ -294,7 +297,7 @@ object PageParser {
     var n = 0
     var i = from
     while (i < until) {
-      if (!Character.isWhitespace(s.charAt(i))) n += 1
+      if (!isWs(s.charAt(i))) n += 1
       i += 1
     }
     n
@@ -422,7 +425,7 @@ object PageParser {
       var i = from
       while (i < until) {
         val c = src.charAt(i)
-        if (Character.isWhitespace(c)) {
+        if (isWs(c)) {
           if (!lastWs) slab.append(' ')
           lastWs = true
         } else {
@@ -454,80 +457,94 @@ object PageParser {
       // advance past cells covered by earlier rowspans
       while (occupied.contains(key(row, col))) col += 1
 
-      // clamp spans against hostile pages: colspan at the HTML-spec 1000,
-      // rowspan spec limit is 65534 but the eager shadow walk below does
-      // rowspan×colspan occupied-set inserts, so bound the PRODUCT at 64k
-      // (a crafted rowspan=colspan=2e9 would otherwise hang the parser on
-      // one document — crawl input is adversarial by default)
-      val colspan = math.min(1000,
-        math.max(1, cellAttrs.get("colspan").flatMap(parseIntOpt).getOrElse(1)))
-      val rowspan = math.min(math.max(1, MaxShadowArea / colspan),
-        math.max(1, cellAttrs.get("rowspan").flatMap(parseIntOpt).getOrElse(1)))
-      val style = Css.parse(cellAttrs.getOrElse("style", ""))
-
       // retract the single possible trailing normalized space (normalizeWs
       // drops it); the slab span is then exactly the normalized cell text
       if (slab.length > cellStart && slab.charAt(slab.length - 1) == ' ')
         slab.truncate(slab.length - 1)
+      if (cellAttrs.isEmpty) {
+        // the bare <td>/<th>: 1×1 and unstyled, so no CSS to parse and no
+        // merge shadow to mark
+        if (slab.length > cellStart)
+          stageCell(cellBold, Css.borders(Css.NoStyle, tableBorder), 1, 1, null, null, null, 0.0)
+        col += 1
+      } else {
+        // clamp spans against hostile pages: colspan at the HTML-spec 1000,
+        // rowspan spec limit is 65534 but the eager shadow walk below does
+        // rowspan×colspan occupied-set inserts, so bound the PRODUCT at 64k
+        // (a crafted rowspan=colspan=2e9 would otherwise hang the parser on
+        // one document — crawl input is adversarial by default)
+        val colspan = math.min(1000,
+          math.max(1, cellAttrs.get("colspan").flatMap(parseIntOpt).getOrElse(1)))
+        val rowspan = math.min(math.max(1, MaxShadowArea / colspan),
+          math.max(1, cellAttrs.get("rowspan").flatMap(parseIntOpt).getOrElse(1)))
+        if (slab.length > cellStart) {
+          val style = Css.parse(cellAttrs.getOrElse("style", ""))
+          val bold = cellBold || style.get("font-weight").exists(isBoldWeight)
+          val align = style.get("text-align").map(_.trim.toLowerCase)
+            .orElse(cellAttrs.get("align").map(_.trim.toLowerCase)).orNull
+          val bg = style.get("background-color").map(_.trim)
+            .orElse(cellAttrs.get("bgcolor").map(_.trim)).orNull
+          val fc = style.get("color").map(_.trim).orNull
+          val fs = style.get("font-size").flatMap(Css.pxValue).getOrElse(0.0)
+          stageCell(bold, Css.borders(style, tableBorder), rowspan, colspan, align, bg, fc, fs)
+        }
+        // mark covered cells (merge shadows + future rowspan slots)
+        var r = row
+        while (r < row + rowspan) {
+          var c = col
+          while (c < col + colspan) {
+            if (!(r == row && c == col)) occupied.add(key(r, c))
+            c += 1
+          }
+          r += 1
+        }
+        col += colspan
+      }
+    }
+
+    /** Stage the non-empty normalized cell text slab[cellStart, length) at
+      * (row, col) with its resolved formatting.
+      */
+    private def stageCell(bold: Boolean, borders: Array[String], rowspan: Int, colspan: Int,
+        align: String, bg: String, fc: String, fs: Double): Unit = {
       val vFrom = cellStart
       val vUntil = slab.length
-      if (vUntil > vFrom) {
-        val borders = Css.borders(style, tableBorder)
-        val merged = colspan > 1 || rowspan > 1
-        val mergeRange =
-          if (merged) Span(row, col, row + rowspan - 1, col + colspan - 1).a1 else null
-        val bold = cellBold || style.get("font-weight").exists(isBoldWeight)
-        val align = style.get("text-align").map(_.trim.toLowerCase)
-          .orElse(cellAttrs.get("align").map(_.trim.toLowerCase)).orNull
-        val bg = style.get("background-color").map(_.trim)
-          .orElse(cellAttrs.get("bgcolor").map(_.trim)).orNull
-        val fc = style.get("color").map(_.trim).orNull
-        val fs = style.get("font-size").flatMap(Css.pxValue).getOrElse(0.0)
-        // the value is normalized (no edge whitespace), so inferSpan's trim
-        // is a no-op and identity cells span exactly [vFrom, vUntil)
-        graft.core.grid.TypeInfer.inferSpan(slab, vFrom, vUntil, inferRes)
-        val dt = inferRes.dt
-        val slimTier = align == null && mergeRange == null && fs == 0.0 &&
-          fc == null && bg == null
-        if (slimTier) {
-          val fmtBits = Cell.packBits(bold, merged, borders(0), borders(1),
-            borders(2), borders(3))
-          val pack = fmtBits | (Cell.dtCode(dt) << 10)
-          if (inferRes.identity) {
-            val enc = SpanCodec.encodeIdentity(vFrom, vUntil,
-              inferRes.vFrom, inferRes.vUntil)
-            if (enc != SpanCodec.Invalid) stage(row, col, enc, pack, null)
-            else stage(row, col, 0L, 0, // encode overflow: object fallback
-              Cell.spanned(slab, vFrom, vUntil, inferRes.vFrom, inferRes.vUntil,
-                dt, row, col, fmtBits))
-          } else {
-            val enc = SpanCodec.encodeRaw(vFrom, vUntil)
-            if (enc != SpanCodec.Invalid) stage(row, col, enc, pack, inferRes.py)
-            else stage(row, col, 0L, 0,
-              Cell.convertedSpan(inferRes.py, slab, vFrom, vUntil, dt, row, col, fmtBits))
-          }
+      val merged = colspan > 1 || rowspan > 1
+      val mergeRange =
+        if (merged) Span(row, col, row + rowspan - 1, col + colspan - 1).a1 else null
+      // the value is normalized (no edge whitespace), so inferSpan's trim
+      // is a no-op and identity cells span exactly [vFrom, vUntil)
+      graft.core.grid.TypeInfer.inferSpan(slab, vFrom, vUntil, inferRes)
+      val dt = inferRes.dt
+      val slimTier = align == null && mergeRange == null && fs == 0.0 &&
+        fc == null && bg == null
+      if (slimTier) {
+        val fmtBits = Cell.packBits(bold, merged, borders(0), borders(1),
+          borders(2), borders(3))
+        val pack = fmtBits | (Cell.dtCode(dt) << 10)
+        if (inferRes.identity) {
+          val enc = SpanCodec.encodeIdentity(vFrom, vUntil,
+            inferRes.vFrom, inferRes.vUntil)
+          if (enc != SpanCodec.Invalid) stage(row, col, enc, pack, null)
+          else stage(row, col, 0L, 0, // encode overflow: object fallback
+            Cell.spanned(slab, vFrom, vUntil, inferRes.vFrom, inferRes.vUntil,
+              dt, row, col, fmtBits))
         } else {
-          val value = slab.str(vFrom, vUntil)
-          val py = if (inferRes.identity) value else inferRes.py
-          stage(row, col, 0L, 0, Cell.of(py, value, dt, row, col,
-            isBold = bold, alignment = align,
-            borderTop = borders(0), borderBottom = borders(1),
-            borderLeft = borders(2), borderRight = borders(3),
-            isMerged = merged, mergeRange = mergeRange,
-            fontSize = fs, fontColor = fc, backgroundColor = bg))
+          val enc = SpanCodec.encodeRaw(vFrom, vUntil)
+          if (enc != SpanCodec.Invalid) stage(row, col, enc, pack, inferRes.py)
+          else stage(row, col, 0L, 0,
+            Cell.convertedSpan(inferRes.py, slab, vFrom, vUntil, dt, row, col, fmtBits))
         }
+      } else {
+        val value = slab.str(vFrom, vUntil)
+        val py = if (inferRes.identity) value else inferRes.py
+        stage(row, col, 0L, 0, Cell.of(py, value, dt, row, col,
+          isBold = bold, alignment = align,
+          borderTop = borders(0), borderBottom = borders(1),
+          borderLeft = borders(2), borderRight = borders(3),
+          isMerged = merged, mergeRange = mergeRange,
+          fontSize = fs, fontColor = fc, backgroundColor = bg))
       }
-      // mark covered cells (merge shadows + future rowspan slots)
-      var r = row
-      while (r < row + rowspan) {
-        var c = col
-        while (c < col + colspan) {
-          if (!(r == row && c == col)) occupied.add(key(r, c))
-          c += 1
-        }
-        r += 1
-      }
-      col += colspan
     }
 
     def build(): CellGrid = {
@@ -606,14 +623,17 @@ object PageParser {
       out
     }
 
+    val NoStyle: Map[String, String] = Map.empty
+
     private val NoBorders = new Array[String](4)
+    private val ThinBorders = Array("thin", "thin", "thin", "thin")
 
     /** border level per side: (top, bottom, left, right); null = absent.
-      * The common no-border cell returns a shared all-null array (read-only
-      * consumers) instead of allocating per cell.
+      * An unstyled cell returns a shared array (read-only consumers)
+      * instead of allocating per cell.
       */
     def borders(style: Map[String, String], tableBorder: Boolean): Array[String] = {
-      if (!tableBorder && style.isEmpty) return NoBorders
+      if (style.isEmpty) return if (tableBorder) ThinBorders else NoBorders
       val out = new Array[String](4)
       if (tableBorder) { out(0) = "thin"; out(1) = "thin"; out(2) = "thin"; out(3) = "thin" }
       style.get("border").foreach { v =>

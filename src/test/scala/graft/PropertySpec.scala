@@ -128,28 +128,166 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
-  test("TokSink span path reproduces the legacy Tok event stream") {
-    val htmlGen = Gen.listOf(Gen.oneOf("<table>", "<tr>", "<td>", "</td>", "text", "&amp;",
-      "<", ">", "a &lt; b", "<p class='x'>", "</p>", "<!--c-->", "plain & raw")).map(_.mkString)
+  /** Records each tokenizer event as one line: `S:name:sortedAttrs:selfClosing`,
+    * `E:name`, `T:hasAmp:rawSpan`.
+    */
+  private class Recorder extends HtmlTokenizer.TokSink {
+    val lines = Vector.newBuilder[String]
+    def onStartTag(tag: Int, src: String, nameFrom: Int, attrFrom: Int, attrUntil: Int,
+        selfClosing: Boolean): Unit = {
+      val attrs = HtmlTokenizer.attributes(src, attrFrom, attrUntil)
+      lines += s"S:${HtmlTokenizer.tagName(tag, src, nameFrom, attrFrom)}:" +
+        s"${attrs.toSeq.sorted.mkString(",")}:$selfClosing"
+    }
+    def onEndTag(tag: Int, src: String, nameFrom: Int, nameUntil: Int): Unit =
+      lines += s"E:${HtmlTokenizer.tagName(tag, src, nameFrom, nameUntil)}"
+    def onText(src: String, from: Int, until: Int, hasAmp: Boolean): Unit =
+      lines += s"T:$hasAmp:${src.substring(from, until)}"
+  }
+
+  private def events(html: String): Vector[String] = {
+    val rec = new Recorder
+    HtmlTokenizer.tokenize(html, rec)
+    rec.lines.result()
+  }
+
+  /** Seeded tag soup: mixed-case, unknown and non-ASCII tag names, quoted
+    * values holding `>` and `/`, unquoted values, self-closing tags,
+    * raw-text elements closed in another case, unterminated comments and
+    * tags, stray `<` in text, and enough table markup for grids to form.
+    */
+  private def tagSoup(seed: Long): String = {
+    val r = new java.util.Random(seed)
+    def pick(xs: Array[String]): String = xs(r.nextInt(xs.length))
+    def cased(s: String): String = r.nextInt(4) match {
+      case 0 => s.toUpperCase
+      case 1 => s.map(c => if (r.nextBoolean()) c.toUpper else c)
+      case _ => s
+    }
+    val names = Array("td", "td", "td", "tr", "tr", "th", "table", "caption", "b", "strong",
+      "a", "p", "div", "pre", "br", "span", "li", "h2", "thead", "tbody", "head", "nav",
+      "form", "svg", "button", "blockquote", "font", "x-widget", "my-tag1", "i",
+      "tdé", "ñav", "bloc\u212Aquote", "dİv", "ｔｄ")
+    val rawNames = Array("script", "style", "textarea", "noscript")
+    val attrs = Array("colspan=2", "rowspan=\"3\"", "COLSPAN = '2'", "rowspan=0",
+      "style=\"font-weight:bold;border:2px solid\"", "style='text-align:right'",
+      "style=\"background-color: #eee; color:red; font-size:14px\"", "bgcolor=#eee",
+      "align=CENTER", "title=\"a>b\"", "href=\"/x/y/\"", "data-x='1/>2'", "nowrap",
+      "border=1", "border=\"0\"", "summary=\"s&amp;t\"", "id=t1", "class=\"c d\"", "=x",
+      "/", "a=b/", "href=x/>", "Title=\"Té\"", "colspan=\"2\" colspan=\"4\"")
+    val seps = Array(" ", " ", "\t", "\n", "\u2003", "\u00A0", "")
+    val texts = Array("1", "42", "3.5", "-7", "1,234.5", "2024-01-02", "x", "Total",
+      "Tom & Jerry", "a < b", "x<1", "<", "<<", "&amp;", "&#65;", "&#x42;", "&nbsp;",
+      "&bogus;", "  ", "\n", "é中", "some words of running text here.")
+    val sb = new StringBuilder
+    val pieces = 10 + r.nextInt(70)
+    var k = 0
+    while (k < pieces) {
+      r.nextInt(24) match {
+        case 0 | 1 | 2 | 3 | 4 | 5 | 6 => // start tag
+          sb.append('<').append(cased(pick(names)))
+          var a = r.nextInt(4) - 1
+          while (a > 0) { sb.append(pick(seps)).append(pick(attrs)); a -= 1 }
+          sb.append(pick(Array(">", ">", ">", "/>", " />", " / >", "")))
+        case 7 | 8 | 9 => // end tag, clean or odd
+          val n = cased(pick(names))
+          sb.append(pick(Array(s"</$n>", s"</$n>", s"</$n >", s"</ $n>", s"</$n x>",
+            "</>", s"</$n\u2003>", s"</$n\u0001>", s"</$n")))
+        case 10 => // raw-text element, closed in any case or not at all
+          val n = pick(rawNames)
+          sb.append('<').append(cased(n)).append('>').append("if (a<b && c>d) </p> x")
+          if (r.nextInt(8) > 0) sb.append("</").append(cased(n)).append(pick(Array(">", " >", "")))
+        case 11 =>
+          sb.append(pick(Array("<!--c-->", "<!-- a > b -->", "<!DOCTYPE html>", "<?xml v?>",
+            "<!x>", "<!-- never closed", "<?")))
+        case 12 | 13 => // a table whose cells carry attributes and closing slack
+          sb.append('<').append(cased("table")).append(pick(Array("", " border=1", " summary=s")))
+            .append('>')
+          var row = 2 + r.nextInt(4)
+          while (row > 0) {
+            sb.append('<').append(cased("tr")).append('>')
+            var col = 2 + r.nextInt(3)
+            while (col > 0) {
+              val n = cased(if (r.nextInt(5) == 0) "th" else "td")
+              sb.append('<').append(n)
+              if (r.nextInt(3) == 0) sb.append(' ').append(pick(attrs))
+              sb.append('>').append(pick(texts))
+              if (r.nextBoolean()) sb.append("</").append(n).append('>')
+              col -= 1
+            }
+            if (r.nextBoolean()) sb.append("</").append(cased("tr")).append('>')
+            row -= 1
+          }
+          if (r.nextInt(6) > 0) sb.append("</").append(cased("table")).append('>')
+        case 14 => // delimited text in a pre block
+          val d = pick(Array(",", "\t", "|", ";", " "))
+          sb.append('<').append(cased("pre")).append('>')
+          var line = 2 + r.nextInt(4)
+          while (line > 0) {
+            sb.append(Seq.fill(3)(pick(texts).trim).mkString(d)).append('\n')
+            line -= 1
+          }
+          sb.append("</").append(cased("pre")).append('>')
+        case _ =>
+          sb.append(pick(texts))
+      }
+      k += 1
+    }
+    sb.toString
+  }
+
+  private def sha256Hex(lines: Iterator[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    lines.foreach { l => md.update(l.getBytes("UTF-8")); md.update('\n'.toByte) }
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  test("tag-soup corpus: tokenizer events and extracted text match the pinned digests") {
+    // both digests were computed with the tokenizer that built string tag
+    // names and an attribute map per start tag, before tag codes and
+    // attribute spans: any change of behaviour on these documents moves them
+    val docs = (0 until 5000).map(i => tagSoup(i.toLong))
+    val evDigest = sha256Hex(docs.iterator.flatMap(d => events(d).iterator ++ Iterator("\u0000")))
+    val exDigest = sha256Hex(docs.iterator.map(d =>
+      graft.core.extract.Extractor.extractHtml(d.getBytes("UTF-8")).sha256))
+    assert(evDigest == "1e1d6471ab34b0e4d142aaa3f785171bcada4f38b3ce8d6b1340b1af88171bda")
+    assert(exDigest == "4746b596d6749a1d12d0c78b0d9ff2a58eb73cc4197a05d187ca3a4712ff4cc3")
+  }
+
+  test("start-tag attribute spans end at the tag's close and parse alone") {
+    // the span must hold everything its attributes need: a bounded rescan
+    // gives the map an unbounded one does, and the span ends at `>`, at the
+    // `/` of `/>`, or at the end of an unterminated tag
+    val htmlGen = Gen.listOf(Gen.oneOf("<td", "<TABLE", "<p", " colspan=2", " a='x>y'",
+      " b=\"/>\"", " c=d/", " /", " =v", " e", ">", "/>", "text", "&amp;", " ", "\t",
+      "<", "'", "\"")).map(_.mkString)
     check(Prop.forAll(htmlGen) { h =>
-      val legacy = Vector.newBuilder[String]
-      graft.core.html.HtmlTokenizer.tokenize(h, {
-        case graft.core.html.HtmlTokenizer.StartTag(n, a, sc) =>
-          legacy += s"S:$n:${a.toSeq.sorted}:$sc"
-        case graft.core.html.HtmlTokenizer.EndTag(n) => legacy += s"E:$n"
-        case graft.core.html.HtmlTokenizer.Text(c) => legacy += s"T:$c"
-      }: graft.core.html.HtmlTokenizer.Tok => Unit)
-      val sinked = Vector.newBuilder[String]
-      graft.core.html.HtmlTokenizer.tokenize(h, new graft.core.html.HtmlTokenizer.TokSink {
-        def onStartTag(n: String, a: Map[String, String], sc: Boolean): Unit =
-          sinked += s"S:$n:${a.toSeq.sorted}:$sc"
-        def onEndTag(n: String): Unit = sinked += s"E:$n"
-        def onText(src: String, from: Int, until: Int, hasAmp: Boolean): Unit = {
-          val t = src.substring(from, until)
-          sinked += s"T:${if (hasAmp) graft.core.html.HtmlTokenizer.decodeEntities(t) else t}"
-        }
+      val spans = Vector.newBuilder[(Int, Int, Boolean)]
+      HtmlTokenizer.tokenize(h, new Recorder {
+        override def onStartTag(tag: Int, src: String, nameFrom: Int, attrFrom: Int,
+            attrUntil: Int, selfClosing: Boolean): Unit =
+          spans += ((attrFrom, attrUntil, selfClosing))
       })
-      legacy.result() == sinked.result()
+      spans.result().forall { case (from, until, selfClosing) =>
+        val endsAtClose =
+          if (selfClosing) h.startsWith("/>", until)
+          else until == h.length || h.charAt(until) == '>'
+        endsAtClose &&
+          HtmlTokenizer.attributes(h, from, until) == HtmlTokenizer.attributes(h, from, h.length)
+      }
+    })
+  }
+
+  test("DelimitedText.columnCounts == the regex split counts they replace") {
+    val ws = java.util.regex.Pattern.compile("\\s+")
+    def oracle(line: String, d: Char): Int =
+      if (d == ' ') ws.split(line).count(_.trim.nonEmpty) else line.count(_ == d) + 1
+    val lineGen = Gen.listOf(Gen.oneOf("a", "bb", "1.5", " ", "  ", "\t", "\u000B", "\f",
+      "\r", "\n", "\u0000", "\u0001", "\u001F", "\u00A0", "\u2003", ",", "|", ";", ""))
+      .map(_.mkString)
+    val delims = graft.core.html.DelimitedText.Delimiters
+    check(Prop.forAll(lineGen) { line =>
+      graft.core.html.DelimitedText.columnCounts(line).toSeq == delims.map(oracle(line, _))
     })
   }
 
@@ -350,9 +488,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("tokenizer never throws on arbitrary strings") {
     check(Prop.forAll(Gen.asciiPrintableStr) { s =>
-      var count = 0
-      HtmlTokenizer.tokenize(s, _ => count += 1)
-      count >= 0
+      events(s).size >= 0
     })
     check(Prop.forAll(Gen.listOf(Gen.oneOf("<table>", "<tr>", "</td>", "<b", "text", "&amp;",
       "<!--", "-->", "\"", "<td colspan='2'>", "</pre>", "<a href=x>"))) { parts =>
