@@ -16,11 +16,105 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object DedupKernels {
   // static entry points for doGenCode (codegen emits direct calls)
-  def simhash(s: UTF8String): Long = graft.ops.Dedup.simhash(s.toString)
+  def simhash(s: UTF8String): Long = simhash(TokenScan(s))
 
   def minhashSig(s: UTF8String, k: Int, shingleN: Int): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(
-      graft.ops.Dedup.minhashSignature(s.toString, k, shingleN))
+    UnsafeArrayData.fromPrimitiveArray(minhashSignature(TokenScan(s), k, shingleN))
+
+  /** splitmix64's finalizer: the per-slot remix of the MinHash signature
+    * and the band fold.
+    */
+  @inline private[graft] def mix64(x0: Long): Long = {
+    var z = x0 + 0x9E3779B97F4A7C15L
+    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+    z ^ (z >>> 31)
+  }
+
+  /** Slot i's remix seed, i * 0xA24BAED4963EE407 (mod 2^64); `k` beyond
+    * the table computes its own.
+    */
+  private val Seeds: Array[Long] = seeds(256)
+  private def seeds(k: Int): Array[Long] = Array.tabulate(k)(_.toLong * 0xA24BAED4963EE407L)
+
+  /** 64-bit simhash over the doc's tokens: per token, the bit votes of
+    * mix64 of its FNV-1a hash.
+    */
+  private[graft] def simhash(t: TokenScan): Long = {
+    val counts = new Array[Int](64)
+    while (t.next()) {
+      val h = mix64(t.fnv(TokenScan.FnvBasis, t.start, t.end))
+      var i = 0
+      while (i < 64) {
+        if (((h >>> i) & 1L) == 1L) counts(i) += 1 else counts(i) -= 1
+        i += 1
+      }
+    }
+    var out = 0L
+    var i = 0
+    while (i < 64) { if (counts(i) > 0) out |= (1L << i); i += 1 }
+    out
+  }
+
+  /** k-permutation MinHash signature over the doc's word `shingleN`-grams
+    * (all its tokens as one shingle when it has fewer): slot i is the
+    * minimum over shingles of mix64(fnv ^ seed_i), where fnv is the FNV-1a
+    * hash of the shingle's tokens joined by single spaces. The fold reads
+    * the tokens in place (a ring of the last `shingleN` token bounds), so
+    * no shingle or token string is built. A doc without tokens has an
+    * EMPTY signature.
+    */
+  private[graft] def minhashSignature(t: TokenScan, k: Int, shingleN: Int): Array[Long] = {
+    require(shingleN > 0, s"shingleN > 0, got $shingleN")
+    val starts = new Array[Int](shingleN)
+    val ends = new Array[Int](shingleN)
+    val seed = if (k <= Seeds.length) Seeds else seeds(k)
+    var sig = Array.emptyLongArray
+    var count = 0
+    var slot = 0
+    while (t.next()) {
+      if (count == 0) { sig = new Array[Long](k); java.util.Arrays.fill(sig, Long.MaxValue) }
+      starts(slot) = t.start
+      ends(slot) = t.end
+      count += 1
+      slot += 1
+      if (slot == shingleN) slot = 0
+      // once full, `slot` is the ring's oldest token
+      if (count >= shingleN) remix(sig, seed, k, window(t, starts, ends, slot, shingleN))
+    }
+    if (count > 0 && count < shingleN) remix(sig, seed, k, window(t, starts, ends, 0, count))
+    sig
+  }
+
+  /** FNV-1a of the `m` ring tokens from slot `first`, joined by spaces. */
+  private def window(t: TokenScan, starts: Array[Int], ends: Array[Int], first: Int,
+      m: Int): Long = {
+    var h = TokenScan.FnvBasis
+    var r = first
+    var j = 0
+    while (j < m) {
+      if (j > 0) { h ^= ' '; h *= TokenScan.FnvPrime }
+      h = t.fnv(h, starts(r), ends(r))
+      r += 1
+      if (r == starts.length) r = 0
+      j += 1
+    }
+    h
+  }
+
+  /** Folds one shingle hash into the `k` signature slots. */
+  private def remix(sig: Array[Long], seed: Array[Long], k: Int, h: Long): Unit = {
+    var i = 0
+    while (i < k) {
+      val m = mix64(h ^ seed(i))
+      val s = sig(i)
+      val d = m - s
+      // all ones iff m < s (signed, overflow-safe): a branch-free min
+      val lt = (d ^ ((m ^ s) & (d ^ m))) >> 63
+      sig(i) = s ^ ((s ^ m) & lt)
+      i += 1
+    }
+  }
 
   def bandHashes(sig: ArrayData, bands: Int): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(
@@ -154,7 +248,7 @@ object DedupKernels {
   }
 }
 
-/** 64-bit simhash over whitespace tokens (graft.ops.Dedup.simhash). */
+/** 64-bit simhash over whitespace tokens ([[DedupKernels.simhash]]). */
 case class Simhash64(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
 
@@ -170,7 +264,7 @@ case class Simhash64(child: Expression) extends UnaryExpression {
   override def prettyName: String = "graft_simhash64"
 }
 
-/** k-permutation minhash signature (graft.ops.Dedup.minhashSignature). */
+/** k-permutation minhash signature ([[DedupKernels.minhashSignature]]). */
 case class MinhashSig(child: Expression, k: Int, shingleN: Int)
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)

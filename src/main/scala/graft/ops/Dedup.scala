@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{DedupFunctions, DedupKernels, TokenScan}
+
 /** Deduplication operators for web-scale corpora.
   *
   * Scale notes (100 TB): every variant is a shuffle-on-key design with
@@ -37,15 +39,16 @@ object Dedup {
   // ---- MinHash + LSH ----
 
 
-  /** Word shingles (n-grams of whitespace tokens), lowercased. A text with
-    * no tokens (null / empty / whitespace-only) has NO shingles — not one
-    * empty shingle — so content-free docs don't share a degenerate shingle
-    * set (they would otherwise all minhash-collide into one band bucket:
-    * an O(n²) pair bomb at corpus scale).
+  /** Word shingles (n-grams of whitespace tokens), lowercased under
+    * `Locale.ROOT` (the JVM's default locale never moves a signature). A
+    * text with no tokens (null / empty / whitespace-only) has NO shingles —
+    * not one empty shingle — so content-free docs don't share a degenerate
+    * shingle set (they would otherwise all minhash-collide into one band
+    * bucket: an O(n²) pair bomb at corpus scale).
     */
   def shingles(text: String, n: Int): Iterator[String] = {
     if (text == null) return Iterator.empty
-    val toks = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+    val toks = text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
     if (toks.length == 0) Iterator.empty
     else if (toks.length < n) Iterator.single(toks.mkString(" "))
     else toks.sliding(n).map(_.mkString(" "))
@@ -59,66 +62,30 @@ object Dedup {
     */
   private[graft] def tokens(text: Column): Column = array_remove(split(text, "\\s+"), "")
 
-  @inline private def mix64(x0: Long): Long = {
-    var z = x0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  private def hash64(s: String): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.length) {
-      h ^= s.charAt(i)
-      h *= 0x100000001b3L
-      i += 1
-    }
-    h
-  }
-
-  /** k-permutation minhash signature via per-seed remixing of one base hash
-    * (map-side only, no shuffle).
-    *
-    * Round 8: the per-shingle FNV base hash folds the window's token chars
-    * (tokens joined by single spaces) directly — value-identical to
-    * `hash64(shingle.mkString(" "))` by construction (FNV-1a is a left
-    * fold over chars), without allocating a joined String per shingle
-    * (previously ~one window-sized String + copy per token position).
-    * Externally pinned: the q_dedup_minhash DuckDB oracle replays this
-    * exact FNV fold over the joined shingle text in hugeint arithmetic.
+  /** True iff `text` has a whitespace token, i.e. [[shingles]]' `\s+`
+    * split leaves a non-empty one (lowercasing cannot change that): a
+    * non-`\s` char exists. The regex match stops at the first one, where
+    * `size(tokens(text)) > 0` split the whole doc into token strings.
     */
-  def minhashSignature(text: String, k: Int, shingleN: Int = 3): Array[Long] = {
-    if (text == null) return Array.emptyLongArray
-    val toks = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
-    // no tokens → EMPTY signature (callers filter these out before
-    // banding; an all-MaxValue sentinel would band-collide uniformly)
-    if (toks.length == 0) return Array.emptyLongArray
-    val sig = Array.fill(k)(Long.MaxValue)
-    def addWindow(from: Int, until: Int): Unit = {
-      var h = 0xcbf29ce484222325L
-      var j = from
-      while (j < until) {
-        if (j > from) { h ^= ' '; h *= 0x100000001b3L }
-        val s = toks(j)
-        var i = 0
-        while (i < s.length) { h ^= s.charAt(i); h *= 0x100000001b3L; i += 1 }
-        j += 1
-      }
-      var i = 0
-      while (i < k) {
-        val m = mix64(h ^ (i.toLong * 0xA24BAED4963EE407L))
-        if (m < sig(i)) sig(i) = m
-        i += 1
-      }
-    }
-    if (toks.length < shingleN) addWindow(0, toks.length)
-    else {
-      var s0 = 0
-      while (s0 <= toks.length - shingleN) { addWindow(s0, s0 + shingleN); s0 += 1 }
-    }
-    sig
-  }
+  private def hasTokens(text: Column): Column = coalesce(text, lit("")).rlike("\\S")
+
+  /** k-permutation minhash signature (map-side only, no shuffle): slot i
+    * is the minimum over the [[shingles]] of mix64(fnv ^ i·0xA24BAED4963EE407),
+    * fnv being the FNV-1a hash of the shingle text. No tokens → an EMPTY
+    * signature (callers filter these out before banding; an all-MaxValue
+    * sentinel would band-collide uniformly).
+    *
+    * One byte-level scanner computes it ([[graft.functions.TokenScan]],
+    * [[graft.functions.DedupKernels.minhashSignature]]): an all-ASCII doc
+    * is shingled straight from its UTF-8 bytes, with no decode, regex,
+    * lowercase copy or token string; any other doc goes through the same
+    * scanner over its `toLowerCase(Locale.ROOT)` chars. FunctionsSpec pins
+    * both against the `shingles()`-based formula, and the q_dedup_minhash
+    * DuckDB oracle replays the same fold in hugeint arithmetic.
+    */
+  def minhashSignature(text: String, k: Int, shingleN: Int = 3): Array[Long] =
+    if (text == null) Array.emptyLongArray
+    else DedupKernels.minhashSignature(TokenScan(text), k, shingleN)
 
   /** Per-band FNV fold over a signature (the LSH banding hash).
     *
@@ -142,7 +109,7 @@ object Dedup {
       var h = 0xcbf29ce484222325L ^ b.toLong
       var i = b * rowsPerBand
       while (i < (b + 1) * rowsPerBand) {
-        h = mix64(h ^ sig(i))
+        h = DedupKernels.mix64(h ^ sig(i))
         i += 1
       }
       out(b) = h
@@ -171,8 +138,7 @@ object Dedup {
   def minhashIndex(spark: SparkSession, df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 64, bands: Int = 16, shingleN: Int = 3,
       materialize: Materialize.Strategy = Materialize.fromEnv): MinhashIndex = {
-    MinhashIndex.checkParams(k, bands)
-    import graft.functions.DedupFunctions
+    MinhashIndex.checkParams(k, bands, shingleN)
     val sigs = Materialize(df.select(col(idCol).cast("long").as("id"),
         DedupFunctions.minhashSig(coalesce(col(textCol), lit("")), k, shingleN).as("sig"))
       .filter(size(col("sig")) > 0),
@@ -198,7 +164,6 @@ object Dedup {
     */
   def indexFromSigs(sigs: DataFrame, k: Int, bands: Int, shingleN: Int,
       materialize: Materialize.Strategy = Materialize.fromEnv): MinhashIndex = {
-    import graft.functions.DedupFunctions
     val banded = sigs.select(col("id"),
         posexplode(DedupFunctions.minhashBandHashes(col("sig"), bands)))
       .toDF("id", "band", "bhash")
@@ -478,25 +443,11 @@ object Dedup {
 
   // ---- SimHash ----
 
-  /** 64-bit simhash over whitespace tokens. */
-  def simhash(text: String): Long = {
-    if (text == null) return 0L
-    val counts = new Array[Int](64)
-    text.toLowerCase.split("\\s+").foreach { tok =>
-      if (tok.nonEmpty) {
-        val h = mix64(hash64(tok))
-        var i = 0
-        while (i < 64) {
-          if (((h >>> i) & 1L) == 1L) counts(i) += 1 else counts(i) -= 1
-          i += 1
-        }
-      }
-    }
-    var out = 0L
-    var i = 0
-    while (i < 64) { if (counts(i) > 0) out |= (1L << i); i += 1 }
-    out
-  }
+  /** 64-bit simhash over whitespace tokens, tokenized by the MinHash
+    * signature's scanner ([[graft.functions.DedupKernels.simhash]]).
+    */
+  def simhash(text: String): Long =
+    if (text == null) 0L else DedupKernels.simhash(TokenScan(text))
 
   /** SimHash near-dup pairs: block on 4×16-bit chunks (any pair within
     * hamming distance ≤3 shares at least one chunk — pigeonhole), verify
@@ -507,15 +458,13 @@ object Dedup {
       materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
     // content-free docs (no whitespace tokens) all share simhash 0 — the
     // same O(n²) degenerate pair class as empty minhash shingles; drop them
-    // before the signature. The predicate replays the simhash tokenizer
-    // exactly (split on \s+, non-empty tokens) with codegen'd built-ins.
-    val hasTokens = size(tokens(lower(coalesce(col(textCol), lit(""))))) > 0
+    // before the signature (see hasTokens)
     // native Catalyst expression: the signature stage stays inside
     // whole-stage codegen (no Deserialize→map→Serialize break).
     // materialized: both self-join sides derive from it — without this the
     // per-doc simhash (a full token scan) computes twice
     val sigs = Materialize(
-      df.filter(hasTokens).select(col(idCol).cast("long").as("id"),
+      df.filter(hasTokens(col(textCol))).select(col(idCol).cast("long").as("id"),
         graft.functions.DedupFunctions.simhash64(coalesce(col(textCol), lit("")))
           .as("sim")),
       materialize)
@@ -753,15 +702,13 @@ object Dedup {
       bands: Int = 16, shingleN: Int = 3, threshold: Double = 0.8,
       bucketCap: Int = 65536,
       materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
+    MinhashIndex.checkParams(k, bands, shingleN)
     checkBucketCap(bucketCap)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("_th"))
     // content-free docs never enter the pre-pass (see scaladoc): the
-    // predicate replays shingles()'s tokenizer (\s+ split, non-empty
-    // tokens; lowercasing cannot change token presence) with codegen'd
-    // built-ins — the exact-hash analogue of the banding's size(sig) > 0
-    val hasTokens = size(tokens(coalesce(col(textCol), lit("")))) > 0
+    // exact-hash analogue of the banding's size(sig) > 0
     val exactLosers = Materialize(
-      df.filter(hasTokens)
+      df.filter(hasTokens(col(textCol)))
         .select(col(idCol).as("_xid"), sha2(col(textCol), 256).as("_th"))
         .withColumn("_keep", min(col("_xid")).over(w))
         .filter(col("_xid") =!= col("_keep"))

@@ -25,7 +25,7 @@ final case class MinhashIndex(
     k: Int,
     bands: Int,
     shingleN: Int) {
-  MinhashIndex.checkParams(k, bands)
+  MinhashIndex.checkParams(k, bands, shingleN)
 }
 
 /** Parquet persistence for [[MinhashIndex]] in the [[SegmentedManifest]]
@@ -37,11 +37,17 @@ object MinhashIndex extends SegmentedManifest[MinhashIndex, MinhashIndex](
     "sigs" -> Seq("id", "sig"), "banded" -> Seq("id", "band", "bhash")) {
 
   /** The one MinHash parameter rule, shared by every operator taking
-    * (k, bands): `bands` equal, non-empty slices of a non-empty signature.
+    * (k, bands, shingleN) and run at its entry, before any Spark job:
+    * `bands` equal, non-empty slices of a non-empty signature, over
+    * non-empty shingles (a shingle of `shingleN <= 0` tokens hashes no
+    * text, so every doc would get the same signature and the whole corpus
+    * would become one near-duplicate class).
     */
-  def checkParams(k: Int, bands: Int): Unit =
+  def checkParams(k: Int, bands: Int, shingleN: Int): Unit = {
     require(k > 0 && bands > 0 && k % bands == 0,
       s"k=$k must be a positive multiple of bands=$bands")
+    require(shingleN > 0, s"shingleN > 0, got $shingleN")
+  }
 
   protected def parts(idx: MinhashIndex): (Seq[Int], Seq[DataFrame]) =
     (Seq(idx.k, idx.bands, idx.shingleN), Seq(idx.sigs, idx.banded))

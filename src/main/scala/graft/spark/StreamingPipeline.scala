@@ -109,7 +109,7 @@ object StreamingPipeline {
       textCol: String = "text", k: Int = 64, bands: Int = 16, shingleN: Int = 3,
       threshold: Double = 0.8, horizonMinutes: Int = 120, bucketCap: Int = 64)
       : Dataset[NearDupPair] = {
-    MinhashIndex.checkParams(k, bands)
+    MinhashIndex.checkParams(k, bands, shingleN)
     require(bucketCap > 0, "bucketCap > 0")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -238,7 +238,7 @@ object StreamingPipeline {
       idCol: String = "doc_id", tsCol: String = "warc_ts", textCol: String = "text",
       k: Int = 64, bands: Int = 16, shingleN: Int = 3,
       threshold: Double = 0.8): DataFrame = {
-    MinhashIndex.checkParams(k, bands)
+    MinhashIndex.checkParams(k, bands, shingleN)
     import graft.functions.DedupFunctions
     val cSigs = Materialize.iterative(
       corpus.select(col(idCol).cast("long").as("corpus_id"),

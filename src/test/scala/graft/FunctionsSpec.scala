@@ -71,37 +71,48 @@ class FunctionsSpec extends AnyFunSuite {
     }
   }
 
-  test("minhashSignature equals the per-shingle-string reference formula") {
-    // round 8 folds the FNV base hash over token chars without building
-    // the joined shingle string — pin value-identity against a literal
-    // hash64(shingle.mkString(" ")) reference (plus the DuckDB oracle,
-    // which replays the same fold in hugeint arithmetic)
-    def fnv(s: String): Long = {
-      var h = 0xcbf29ce484222325L
-      s.foreach { c => h ^= c; h *= 0x100000001b3L }
-      h
-    }
-    def mix64(x0: Long): Long = {
-      var z = x0 + 0x9E3779B97F4A7C15L
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
-    def refSig(text: String, k: Int, n: Int): Array[Long] = {
-      val sh = graft.ops.Dedup.shingles(text, n).toSeq
-      if (sh.isEmpty) Array.emptyLongArray
-      else {
-        val sig = Array.fill(k)(Long.MaxValue)
-        sh.foreach { s =>
-          val base = fnv(s)
-          (0 until k).foreach { i =>
-            val h = mix64(base ^ (i.toLong * 0xA24BAED4963EE407L))
-            if (h < sig(i)) sig(i) = h
-          }
+  // the literal per-shingle-string MinHash and per-token-string simhash
+  // formulas the byte-level signature scanner must reproduce
+  private def fnv(s: String): Long = {
+    var h = 0xcbf29ce484222325L
+    s.foreach { c => h ^= c; h *= 0x100000001b3L }
+    h
+  }
+  private def mix64(x0: Long): Long = {
+    var z = x0 + 0x9E3779B97F4A7C15L
+    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+    z ^ (z >>> 31)
+  }
+  private def refSig(text: String, k: Int, n: Int): Array[Long] = {
+    val sh = graft.ops.Dedup.shingles(text, n).toSeq
+    if (sh.isEmpty) Array.emptyLongArray
+    else {
+      val sig = Array.fill(k)(Long.MaxValue)
+      sh.foreach { s =>
+        val base = fnv(s)
+        (0 until k).foreach { i =>
+          val h = mix64(base ^ (i.toLong * 0xA24BAED4963EE407L))
+          if (h < sig(i)) sig(i) = h
         }
-        sig
       }
+      sig
     }
+  }
+  private def refSimhash(text: String): Long = {
+    val counts = new Array[Int](64)
+    text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty).foreach { t =>
+      val h = mix64(fnv(t))
+      (0 until 64).foreach(i => counts(i) += (if (((h >>> i) & 1L) == 1L) 1 else -1))
+    }
+    (0 until 64).foldLeft(0L)((out, i) => if (counts(i) > 0) out | (1L << i) else out)
+  }
+
+  test("minhashSignature equals the per-shingle-string reference formula") {
+    // the signature folds the FNV base hash over the doc's token units
+    // without building the joined shingle string — pin value-identity
+    // against a literal hash64(shingle.mkString(" ")) reference (plus the
+    // DuckDB oracle, which replays the same fold in hugeint arithmetic)
     import spark.implicits._
     val texts = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("text")).as[String].collect().toSeq ++
@@ -110,6 +121,79 @@ class FunctionsSpec extends AnyFunSuite {
       assert(graft.ops.Dedup.minhashSignature(t, 8, n).toSeq == refSig(t, 8, n).toSeq,
         s"n=$n text=${String.valueOf(t).take(40)}")
     }
+  }
+
+  test("byte-level minhashSig and simhash equal the reference on random mixed texts") {
+    // the UTF8String kernels read an all-ASCII doc straight from its bytes
+    // and any other doc from its Locale.ROOT-lowercased chars; both must
+    // equal the String formulas on texts mixing the regex-\s separators,
+    // spaces that \s does not match (U+001C-U+001F, U+00A0, U+2003), case-
+    // changing non-ASCII letters (final sigma, dotted capital I) and
+    // surrogate pairs, read through UTF8String views at a non-zero offset
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.DedupKernels
+    val rnd = new scala.util.Random(1313)
+    val regexSpace = Seq(" ", "\t", "\n", "\u000B", "\f", "\r")
+    val otherSpace = Seq("\u001C", "\u001D", "\u001E", "\u001F", "\u00A0", "\u2003")
+    val nonAscii = Seq("É", "İ", "Σ", "ΟΔΟΣ", "\uD83D\uDE00", "é")
+    def word(): String = (0 until 1 + rnd.nextInt(6)).map { _ =>
+      val c = ('a' + rnd.nextInt(26)).toChar
+      if (rnd.nextBoolean()) c.toUpper else c
+    }.mkString
+    def text(ascii: Boolean): String = (0 until rnd.nextInt(14)).map { _ =>
+      rnd.nextInt(10) match {
+        case 0 | 1 | 2 | 3 => word()
+        case 4 | 5 => regexSpace(rnd.nextInt(regexSpace.size)) * (1 + rnd.nextInt(2))
+        case 6 | 7 if !ascii => nonAscii(rnd.nextInt(nonAscii.size))
+        case 8 if !ascii => otherSpace(rnd.nextInt(otherSpace.size))
+        case 8 => otherSpace(rnd.nextInt(4)) // U+001C-U+001F are ASCII
+        case _ => " "
+      }
+    }.mkString
+    // a view of the text's bytes inside a larger buffer: A-Z padding on
+    // both sides changes the signature if the scan strays outside the view
+    def view(t: String): UTF8String = {
+      val b = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val pad = 3 + rnd.nextInt(9)
+      val buf = Array.fill[Byte](b.length + 2 * pad)('Q'.toByte)
+      System.arraycopy(b, 0, buf, pad, b.length)
+      UTF8String.fromBytes(buf, pad, b.length)
+    }
+    var asciiDocs = 0
+    for (i <- 0 until 2000) {
+      val t = text(ascii = i % 2 == 0)
+      val u = if (i % 4 < 2) view(t) else UTF8String.fromString(t)
+      if (u.isFullAscii) asciiDocs += 1
+      assert(u.toString == t)
+      for (n <- Seq(1, 3, 5); k <- Seq(8, 64)) {
+        val want = refSig(t, k, n).toSeq
+        assert(DedupKernels.minhashSig(u, k, n).toLongArray().toSeq == want,
+          s"n=$n k=$k text=${t.map(_.toInt.toHexString).mkString(",")}")
+        assert(graft.ops.Dedup.minhashSignature(t, k, n).toSeq == want, s"n=$n k=$k")
+      }
+      assert(DedupKernels.simhash(u) == refSimhash(t), t)
+      assert(graft.ops.Dedup.simhash(t) == refSimhash(t), t)
+    }
+    assert(asciiDocs >= 1000 && asciiDocs < 2000, s"$asciiDocs all-ASCII docs of 2000")
+  }
+
+  test("signatures do not depend on the JVM's default locale") {
+    // under tr-TR, String.toLowerCase() maps ASCII 'I' to dotless 'ı'
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.DedupKernels
+    val t = "IMPORTANT Items In Istanbul: INDIA\tIRIS iris"
+    def all() = (graft.ops.Dedup.minhashSignature(t, 64, 3).toSeq,
+      DedupKernels.minhashSig(UTF8String.fromString(t), 64, 3).toLongArray().toSeq,
+      graft.ops.Dedup.shingles(t, 3).toSeq, graft.ops.Dedup.simhash(t))
+    val before = all()
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+      assert("I".toLowerCase != "i", "tr-TR must lowercase I to a dotless i")
+      assert(all() == before)
+    } finally java.util.Locale.setDefault(saved)
+    assert(before._1 == before._2)
+    assert(before._3.head == "important items in")
   }
 
   test("tokens, slotMatch and exciseTokens equal the higher-order formulas they replace") {

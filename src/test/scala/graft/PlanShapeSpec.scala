@@ -337,6 +337,27 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(probes.size == 1, s"eval n-gram probe must run once, ran ${probes.size} times")
   }
 
+  test("keepFirstTwoPhase: the exact pre-pass finds content-free docs without a split") {
+    // the pre-pass filter needs only "has a whitespace token", a regex
+    // match that stops at the first non-space char; the size of the
+    // tokens array split the whole corpus into token strings to learn it
+    import org.apache.spark.sql.catalyst.expressions.RLike
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val plans = executedPlans { Dedup.keepFirstTwoPhase(spark, docs).collect() }
+    val prePass = plans.filter(p => nodes(p).exists(_.isInstanceOf[WindowExec]))
+    assert(prePass.nonEmpty, "the exact pre-pass plan was not captured")
+    for (p <- prePass) {
+      val all = nodes(p)
+      assert(!all.exists(_.toString.contains("split(")), s"the pre-pass splits the text:\n$p")
+      assert(all.exists {
+        case f: FilterExec => f.condition.exists(_.isInstanceOf[RLike])
+        case _ => false
+      }, s"the pre-pass filters on a regex match:\n$p")
+    }
+  }
+
   test("connectedComponents runs no whole-stage-codegen'd limit") {
     // a limit compiled into a whole-stage class names its row counter from
     // a JVM-wide counter, so every convergence check generated a new class

@@ -3,7 +3,7 @@
 
 Usage:
   python3 tools/jfr_hotspots.py REC.jfr --bench-result RESULT.json
-      [--caller java.util.Formatter ...]
+      [--top N] [--caller java.util.Formatter ...] [--contains SUBSTR ...]
 
 Reads `jdk.ExecutionSample` events through the JDK's `jfr print` (streamed,
 so a large recording is never held in memory) at the recording depth DEPTH.
@@ -13,10 +13,14 @@ generation, warm-up) from the perfbench result file of the recorded run.
 Prints:
 
 - each frame's self share (top of stack) and inclusive share (anywhere in
-  the stack, once per sample), the TOP of each;
+  the stack, once per sample), the --top N (default 25) of each;
 - for each --caller prefix, the first `graft.` frame (outside the prefix)
   below the first frame that starts with it, with its line: who calls into
-  that JDK code, or into that graft class.
+  that JDK code, or into that graft class;
+- for each --contains substring, the share of samples with a frame whose
+  name holds it, e.g. `--contains minhashSignature UTF8String.split
+  java.util.regex` attributes the samples under a method or a JDK/Spark
+  routine in one line each (Scala objects' frames read `Dedup$.name`).
 
 Line numbers are approximate inside frames that C2 inlined: JFR charges an
 inlined callee's samples to a nearby line of the caller, so a "hot line"
@@ -45,7 +49,6 @@ TIME = re.compile(r"startTime = (\d+):(\d+):(\d+(?:\.\d+)?)")
 SAMPLED_THREAD = re.compile(r'sampledThread = "(.*)" \(')
 DEPTH = 512
 THREAD = "Executor task launch worker"
-TOP = 25
 
 
 def samples(path):
@@ -85,8 +88,11 @@ def main():
     ap.add_argument("jfr")
     ap.add_argument("--bench-result", required=True,
                     help="perfbench result JSON of the recorded run; its set-up seconds are dropped")
+    ap.add_argument("--top", type=int, default=25, help="frames listed per table (default 25)")
     ap.add_argument("--caller", action="append", default=[],
                     help="frame prefix, e.g. java.util.Formatter; repeatable")
+    ap.add_argument("--contains", nargs="+", action="extend", default=[], metavar="SUBSTR",
+                    help="print the share of samples with a frame name holding each SUBSTR")
     args = ap.parse_args()
     with open(args.bench_result) as f:
         r = json.load(f)
@@ -94,6 +100,7 @@ def main():
 
     self_n, incl_n = collections.Counter(), collections.Counter()
     callers = {p: collections.Counter() for p in args.caller}
+    contains = collections.Counter()
     t0, kept, dropped = None, 0, 0
     for t, thread, frames in samples(args.jfr):
         if t0 is None:
@@ -105,8 +112,12 @@ def main():
             continue
         kept += 1
         self_n[frames[0][0]] += 1
-        for name in {f for f, _ in frames}:
+        names = {f for f, _ in frames}
+        for name in names:
             incl_n[name] += 1
+        for sub in args.contains:
+            if any(sub in name for name in names):
+                contains[sub] += 1
         for prefix, counter in callers.items():
             hit = next((i for i, (f, _) in enumerate(frames) if f.startswith(prefix)), None)
             if hit is None:
@@ -120,14 +131,19 @@ def main():
     if not kept:
         return
     for title, counter in (("self", self_n), ("inclusive", incl_n)):
-        print("\n%s share (top %d)" % (title, TOP))
-        for name, n in counter.most_common(TOP):
+        print("\n%s share (top %d)" % (title, args.top))
+        for name, n in counter.most_common(args.top):
             print("  %5.1f%%  %6d  %s" % (100.0 * n / kept, n, name))
     for prefix, counter in callers.items():
         total = sum(counter.values())
         print("\nfirst graft. caller below %s (%d samples, %.1f%%)" % (prefix, total, 100.0 * total / kept))
-        for name, n in counter.most_common(TOP):
+        for name, n in counter.most_common(args.top):
             print("  %6d  %s" % (n, name))
+    if args.contains:
+        print("\nsamples with a frame containing")
+        for sub in args.contains:
+            n = contains[sub]
+            print("  %5.1f%%  %6d  %s" % (100.0 * n / kept, n, sub))
 
 
 if __name__ == "__main__":
