@@ -36,42 +36,50 @@ class GuardsSpec extends AnyFunSuite {
     assert(Dedup.bandHashesOf(Array.emptyLongArray, 16).isEmpty)
   }
 
-  test("MinHash operators reject a non-positive shingleN, and bad k or bands, before any job") {
+  /** Calls every MinHash operator with (k, bands, shingleN) and asserts each
+    * throws an IllegalArgumentException naming `msg` before any Spark job:
+    * keepFirstTwoPhase runs its exact pre-pass job first, so its guard must
+    * come before that job. */
+  private def assertMinhashGuards(k: Int, bands: Int, n: Int, msg: String): Unit = {
     val spark = SparkTestBase.spark
     import spark.implicits._
     import graft.spark.StreamingPipeline
     val docs = Seq((1L, "a b c d", new java.sql.Timestamp(0L)))
       .toDF("doc_id", "text", "warc_ts")
-    // a shingle of no tokens hashes no text: every doc got the same
-    // signature, and keepFirstTwoPhase kept one doc of the whole corpus.
-    // bands = 0 would divide by zero; k = 0 would make every signature
-    // empty, so the streaming operators would silently return nothing.
-    // keepFirstTwoPhase runs its exact pre-pass job first, so its guard
-    // must come before that job.
-    val badKBands = "positive multiple of bands"
-    for ((k, bands, n, msg) <- Seq((64, 16, 0, "shingleN > 0"), (64, 16, -1, "shingleN > 0"),
-        (0, 16, 3, badKBands), (64, 0, 3, badKBands), (0, 0, 3, badKBands))) {
-      val sites = Seq[() => Any](
-        () => graft.ops.MinhashIndex(docs, docs, k, bands, n),
-        () => Dedup.minhashIndex(spark, docs, k = k, bands = bands, shingleN = n),
-        () => Dedup.minhashPairs(spark, docs, k = k, bands = bands, shingleN = n),
-        () => Dedup.minhashPairsIncremental(spark, docs, docs, k = k, bands = bands,
-          shingleN = n),
-        () => Dedup.keepFirstTwoPhase(spark, docs, k = k, bands = bands, shingleN = n),
-        () => Dedup.applyIncremental(spark, docs, docs, k = k, bands = bands, shingleN = n),
-        () => StreamingPipeline.nearDupPairs(docs, k = k, bands = bands, shingleN = n),
-        () => StreamingPipeline.corpusDedupMatches(docs, docs, k = k, bands = bands,
-          shingleN = n))
-      for ((site, i) <- sites.zipWithIndex) {
-        val group = s"minhash-param-guard-$k-$bands-$n-$i"
-        spark.sparkContext.setJobGroup(group, group)
-        val e = try intercept[IllegalArgumentException](site())
-          finally spark.sparkContext.clearJobGroup()
-        assert(e.getMessage.contains(msg), s"site $i: ${e.getMessage}")
-        assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
-          s"site $i ran a Spark job before rejecting k=$k bands=$bands shingleN=$n")
-      }
+    val sites = Seq[() => Any](
+      () => graft.ops.MinhashIndex(docs, docs, k, bands, n),
+      () => Dedup.minhashIndex(spark, docs, k = k, bands = bands, shingleN = n),
+      () => Dedup.minhashPairs(spark, docs, k = k, bands = bands, shingleN = n),
+      () => Dedup.minhashPairsIncremental(spark, docs, docs, k = k, bands = bands,
+        shingleN = n),
+      () => Dedup.keepFirstTwoPhase(spark, docs, k = k, bands = bands, shingleN = n),
+      () => Dedup.applyIncremental(spark, docs, docs, k = k, bands = bands, shingleN = n),
+      () => StreamingPipeline.nearDupPairs(docs, k = k, bands = bands, shingleN = n),
+      () => StreamingPipeline.corpusDedupMatches(docs, docs, k = k, bands = bands,
+        shingleN = n))
+    for ((site, i) <- sites.zipWithIndex) {
+      val group = s"minhash-param-guard-$k-$bands-$n-$i"
+      spark.sparkContext.setJobGroup(group, group)
+      val e = try intercept[IllegalArgumentException](site())
+        finally spark.sparkContext.clearJobGroup()
+      assert(e.getMessage.contains(msg), s"site $i: ${e.getMessage}")
+      assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+        s"site $i ran a Spark job before rejecting k=$k bands=$bands shingleN=$n")
     }
+  }
+
+  test("MinHash operators reject k = 0 and bands = 0 with one loud guard") {
+    // bands = 0 would divide by zero; k = 0 would make every signature
+    // empty, so the streaming operators would silently return nothing
+    for ((k, bands) <- Seq((0, 16), (64, 0), (0, 0)))
+      assertMinhashGuards(k, bands, 3, "positive multiple of bands")
+  }
+
+  test("MinHash operators reject a non-positive shingleN before any job") {
+    // a shingle of no tokens hashes no text: every doc got the same
+    // signature, and keepFirstTwoPhase kept one doc of the whole corpus
+    for (n <- Seq(0, -1))
+      assertMinhashGuards(64, 16, n, "shingleN > 0")
   }
 
   test("LSH operators reject a non-positive bucketCap") {
