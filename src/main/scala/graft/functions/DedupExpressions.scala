@@ -16,10 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object DedupKernels {
   // static entry points for doGenCode (codegen emits direct calls)
-  def simhash(s: UTF8String): Long = simhash(TokenScan(s))
+  def simhash(s: UTF8String): Long = simhash(new TokenScan(s.toString))
 
   def minhashSig(s: UTF8String, k: Int, shingleN: Int): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(minhashSignature(TokenScan(s), k, shingleN))
+    UnsafeArrayData.fromPrimitiveArray(minhashSignature(new TokenScan(s.toString), k, shingleN))
 
   /** splitmix64's finalizer: the per-slot remix of the MinHash signature
     * and the band fold.
@@ -30,12 +30,6 @@ object DedupKernels {
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
     z ^ (z >>> 31)
   }
-
-  /** Slot i's remix seed, i * 0xA24BAED4963EE407 (mod 2^64); `k` beyond
-    * the table computes its own.
-    */
-  private val Seeds: Array[Long] = seeds(256)
-  private def seeds(k: Int): Array[Long] = Array.tabulate(k)(_.toLong * 0xA24BAED4963EE407L)
 
   /** 64-bit simhash over the doc's tokens: per token, the bit votes of
     * mix64 of its FNV-1a hash.
@@ -57,18 +51,27 @@ object DedupKernels {
   }
 
   /** k-permutation MinHash signature over the doc's word `shingleN`-grams
-    * (all its tokens as one shingle when it has fewer): slot i is the
-    * minimum over shingles of mix64(fnv ^ seed_i), where fnv is the FNV-1a
-    * hash of the shingle's tokens joined by single spaces. The fold reads
-    * the tokens in place (a ring of the last `shingleN` token bounds), so
-    * no shingle or token string is built. A doc without tokens has an
-    * EMPTY signature.
+    * (all its tokens as one shingle when it has fewer; the shingles of
+    * [[graft.ops.Dedup.shingles]]): slot i is the minimum over shingles of
+    * mix64(fnv ^ seed_i), where fnv is the FNV-1a hash of the shingle's
+    * tokens joined by single spaces. The fold reads the tokens in place (a
+    * ring of the last `shingleN` token bounds), so no shingle or token
+    * string is built. A doc without tokens has an EMPTY signature: callers
+    * filter these out before banding (an all-MaxValue sentinel would
+    * band-collide uniformly). FunctionsSpec pins it against the
+    * `shingles()`-based formula, and the q_dedup_minhash DuckDB oracle
+    * replays the same fold in hugeint arithmetic.
     */
   private[graft] def minhashSignature(t: TokenScan, k: Int, shingleN: Int): Array[Long] = {
     require(shingleN > 0, s"shingleN > 0, got $shingleN")
     val starts = new Array[Int](shingleN)
     val ends = new Array[Int](shingleN)
-    val seed = if (k <= Seeds.length) Seeds else seeds(k)
+    // slot i's remix seed, i * 0xA24BAED4963EE407 (mod 2^64): read from a
+    // table, remix vectorizes; computed in its loop, it does not and takes
+    // about twice as long per shingle
+    val seed = new Array[Long](k)
+    var i = 0
+    while (i < k) { seed(i) = i.toLong * 0xA24BAED4963EE407L; i += 1 }
     var sig = Array.emptyLongArray
     var count = 0
     var slot = 0

@@ -2,54 +2,42 @@ package graft.functions
 
 import java.util.Locale
 
-import org.apache.spark.unsafe.Platform
-import org.apache.spark.unsafe.types.UTF8String
-
 /** The whitespace tokens of one doc, lowercased: the one tokenizer of the
   * doc signatures ([[DedupKernels.minhashSignature]], [[DedupKernels.simhash]]).
   * Yields exactly the non-empty tokens of
-  * `text.toLowerCase(Locale.ROOT).split("\\s+")`, as unit offsets
-  * [`start`, `end`), without building a token string:
-  *
-  *  - an all-ASCII doc is read straight from its UTF-8 bytes (byte = char),
-  *    A–Z folded to lower case on read: no decode, no lowercase copy;
-  *  - any other doc is read from the chars of its
-  *    `toLowerCase(Locale.ROOT)` (whole-string lowercasing keeps its
-  *    context rules, e.g. the final sigma).
+  * `text.toLowerCase(Locale.ROOT).split("\\s+")`, as char offsets
+  * [`start`, `end`) into the lowercased doc, without building a token
+  * string. The doc is lowercased whole, which keeps the context rules of
+  * `toLowerCase` (e.g. the final sigma).
   *
   * Token separators are the regex `\s` set [ \t\n\x0B\f\r] only: the
   * separators `Character.isWhitespace` adds (U+001C–U+001F, U+2003) and
   * U+00A0 are token chars.
   */
-private[graft] final class TokenScan private (base: AnyRef, off: Long, chars: String,
-    len: Int) {
-  /** The current token's unit offsets, after [[next]] returned true. */
+private[graft] final class TokenScan(text: String) {
+  private val lower = text.toLowerCase(Locale.ROOT)
+  private val len = lower.length
+
+  /** The current token's char offsets, after [[next]] returned true. */
   var start = 0
   var end = 0
-
-  /** Unit `i` of the lowercased doc. */
-  @inline def unit(i: Int): Int =
-    if (chars eq null) {
-      val b = Platform.getByte(base, off + i)
-      if (b >= 'A' && b <= 'Z') b + ('a' - 'A') else b
-    } else chars.charAt(i)
 
   /** Advances to the next token; false once the doc has no more. */
   def next(): Boolean = {
     var i = end
-    while (i < len && TokenScan.isSpace(unit(i))) i += 1
+    while (i < len && TokenScan.isSpace(lower.charAt(i))) i += 1
     if (i == len) return false
     start = i
-    while (i < len && !TokenScan.isSpace(unit(i))) i += 1
+    while (i < len && !TokenScan.isSpace(lower.charAt(i))) i += 1
     end = i
     true
   }
 
-  /** FNV-1a fold of units [`from`, `until`) onto `h`. */
+  /** FNV-1a fold of chars [`from`, `until`) onto `h`. */
   @inline def fnv(h0: Long, from: Int, until: Int): Long = {
     var h = h0
     var i = from
-    while (i < until) { h ^= unit(i); h *= TokenScan.FnvPrime; i += 1 }
+    while (i < until) { h ^= lower.charAt(i); h *= TokenScan.FnvPrime; i += 1 }
     h
   }
 }
@@ -59,14 +47,5 @@ private[graft] object TokenScan {
   val FnvPrime = 0x100000001b3L
 
   /** The regex `\s` set: ' ' and \t \n \x0B \f \r (9–13). */
-  @inline def isSpace(c: Int): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
-
-  def apply(s: UTF8String): TokenScan =
-    if (s.isFullAscii) new TokenScan(s.getBaseObject, s.getBaseOffset, null, s.numBytes)
-    else apply(s.toString)
-
-  def apply(text: String): TokenScan = {
-    val lower = text.toLowerCase(Locale.ROOT)
-    new TokenScan(null, 0L, lower, lower.length)
-  }
+  @inline def isSpace(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
 }

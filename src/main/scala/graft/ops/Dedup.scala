@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{DedupFunctions, DedupKernels, TokenScan}
+import graft.functions.{DedupFunctions, DedupKernels}
 
 /** Deduplication operators for web-scale corpora.
   *
@@ -64,32 +64,16 @@ object Dedup {
 
   /** True iff `text` has a whitespace token, i.e. [[shingles]]' `\s+`
     * split leaves a non-empty one (lowercasing cannot change that): a
-    * non-`\s` char exists. The regex match stops at the first one, where
+    * non-`\s` char exists. RLike still decodes every doc into a Java
+    * String, but the match then stops at the first non-space char, where
     * `size(tokens(text)) > 0` split the whole doc into token strings.
     */
   private def hasTokens(text: Column): Column = coalesce(text, lit("")).rlike("\\S")
 
-  /** k-permutation minhash signature (map-side only, no shuffle): slot i
-    * is the minimum over the [[shingles]] of mix64(fnv ^ i·0xA24BAED4963EE407),
-    * fnv being the FNV-1a hash of the shingle text. No tokens → an EMPTY
-    * signature (callers filter these out before banding; an all-MaxValue
-    * sentinel would band-collide uniformly).
-    *
-    * One byte-level scanner computes it ([[graft.functions.TokenScan]],
-    * [[graft.functions.DedupKernels.minhashSignature]]): an all-ASCII doc
-    * is shingled straight from its UTF-8 bytes, with no decode, regex,
-    * lowercase copy or token string; any other doc goes through the same
-    * scanner over its `toLowerCase(Locale.ROOT)` chars. FunctionsSpec pins
-    * both against the `shingles()`-based formula, and the q_dedup_minhash
-    * DuckDB oracle replays the same fold in hugeint arithmetic.
-    */
-  def minhashSignature(text: String, k: Int, shingleN: Int = 3): Array[Long] =
-    if (text == null) Array.emptyLongArray
-    else DedupKernels.minhashSignature(TokenScan(text), k, shingleN)
-
   /** Per-band FNV fold over a signature (the LSH banding hash).
     *
-    * An EMPTY signature (content-free doc — see [[minhashSignature]]) yields
+    * An EMPTY signature (content-free doc — see
+    * [[graft.functions.DedupKernels.minhashSignature]]) yields
     * an empty band array: the doc simply lands in no bucket. Total at the
     * expression layer, so a caller that forgets the `size(sig) > 0`
     * pre-filter degrades to the same drop semantics instead of killing the
@@ -442,12 +426,6 @@ object Dedup {
   }
 
   // ---- SimHash ----
-
-  /** 64-bit simhash over whitespace tokens, tokenized by the MinHash
-    * signature's scanner ([[graft.functions.DedupKernels.simhash]]).
-    */
-  def simhash(text: String): Long =
-    if (text == null) 0L else DedupKernels.simhash(TokenScan(text))
 
   /** SimHash near-dup pairs: block on 4×16-bit chunks (any pair within
     * hamming distance ≤3 shares at least one chunk — pigeonhole), verify

@@ -338,9 +338,10 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("keepFirstTwoPhase: the exact pre-pass finds content-free docs without a split") {
-    // the pre-pass filter needs only "has a whitespace token", a regex
-    // match that stops at the first non-space char; the size of the
-    // tokens array split the whole corpus into token strings to learn it
+    // the pre-pass filter needs only "has a whitespace token": a regex
+    // match over the decoded doc that stops at the first non-space char;
+    // the size of the tokens array split the whole corpus into token
+    // strings to learn it
     import org.apache.spark.sql.catalyst.expressions.RLike
     import org.apache.spark.sql.execution.FilterExec
     import org.apache.spark.sql.execution.window.WindowExec

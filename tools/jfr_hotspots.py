@@ -3,7 +3,7 @@
 
 Usage:
   python3 tools/jfr_hotspots.py REC.jfr --bench-result RESULT.json
-      [--top N] [--caller java.util.Formatter ...] [--contains SUBSTR ...]
+      [--caller java.util.Formatter ...] [--contains SUBSTR ...]
 
 Reads `jdk.ExecutionSample` events through the JDK's `jfr print` (streamed,
 so a large recording is never held in memory) at the recording depth DEPTH.
@@ -13,7 +13,7 @@ generation, warm-up) from the perfbench result file of the recorded run.
 Prints:
 
 - each frame's self share (top of stack) and inclusive share (anywhere in
-  the stack, once per sample), the --top N (default 25) of each;
+  the stack, once per sample), the TOP of each;
 - for each --caller prefix, the first `graft.` frame (outside the prefix)
   below the first frame that starts with it, with its line: who calls into
   that JDK code, or into that graft class;
@@ -49,6 +49,7 @@ TIME = re.compile(r"startTime = (\d+):(\d+):(\d+(?:\.\d+)?)")
 SAMPLED_THREAD = re.compile(r'sampledThread = "(.*)" \(')
 DEPTH = 512
 THREAD = "Executor task launch worker"
+TOP = 25
 
 
 def samples(path):
@@ -88,7 +89,6 @@ def main():
     ap.add_argument("jfr")
     ap.add_argument("--bench-result", required=True,
                     help="perfbench result JSON of the recorded run; its set-up seconds are dropped")
-    ap.add_argument("--top", type=int, default=25, help="frames listed per table (default 25)")
     ap.add_argument("--caller", action="append", default=[],
                     help="frame prefix, e.g. java.util.Formatter; repeatable")
     ap.add_argument("--contains", nargs="+", action="extend", default=[], metavar="SUBSTR",
@@ -131,13 +131,13 @@ def main():
     if not kept:
         return
     for title, counter in (("self", self_n), ("inclusive", incl_n)):
-        print("\n%s share (top %d)" % (title, args.top))
-        for name, n in counter.most_common(args.top):
+        print("\n%s share (top %d)" % (title, TOP))
+        for name, n in counter.most_common(TOP):
             print("  %5.1f%%  %6d  %s" % (100.0 * n / kept, n, name))
     for prefix, counter in callers.items():
         total = sum(counter.values())
         print("\nfirst graft. caller below %s (%d samples, %.1f%%)" % (prefix, total, 100.0 * total / kept))
-        for name, n in counter.most_common(args.top):
+        for name, n in counter.most_common(TOP):
             print("  %6d  %s" % (n, name))
     if args.contains:
         print("\nsamples with a frame containing")
