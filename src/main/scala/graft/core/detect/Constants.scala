@@ -42,15 +42,6 @@ object FmtConst {
   val MixedBorders = "mixed"
 }
 
-/** reference: constants.py:230-264 (Keywords). */
-object Keywords {
-  val Subtotal = Vector("subtotal", "sub-total")
-  val GrandTotal = Vector("grand total", "total", "sum")
-  val Section = Vector("section", "category", "group")
-  val HierarchicalSubtotal =
-    Vector("total", "subtotal", "sum", "sub-total", "grand total", "net", "gross", "overall")
-}
-
 /** Per-run extraction configuration. The reference's detection `Config`
   * (config.py:8-142 + detection.py:36-82) is a set of per-run knobs; here
   * they are fixed at the reference defaults, which is what every query,

@@ -1,7 +1,7 @@
 package graft.core.detect
 
 import scala.collection.mutable
-import graft.core.grid.{A1, CellGrid, GridCursor, LongHashSet, Span, TableHit}
+import graft.core.grid.{CellGrid, GridCursor, LongHashSet, Span, TableHit}
 
 /** A connected region of data (reference: detectors/island_detector.py:22-539).
   */
@@ -61,9 +61,6 @@ final class DataIsland extends Serializable {
     if (other.minCol >= 0) minCol = math.min(minCol, other.minCol)
     if (other.maxCol >= 0) maxCol = math.max(maxCol, other.maxCol)
   }
-
-  def toRange: String =
-    if (minRow < 0) "" else Span(minRow, minCol, maxRow, maxCol).a1
 
   /** reference: island_detector.py:53-103. */
   def calculateMetrics(g: CellGrid): Unit = {

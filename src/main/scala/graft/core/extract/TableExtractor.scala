@@ -65,7 +65,7 @@ private[graft] final class SpanStats(val g: CellGrid, val r0: Int, val c0: Int,
   def nonBlank(r: Int, c: Int): Boolean =
     present_(r * cols + c) && { cur.moveTo(r0 + r, c0 + c); cur.valueNonBlank }
 
-  /** TypeInfer.extractorType as a code (EtEmpty for absent cells),
+  /** TypeInfer.extractorTypeCode (EtEmpty for absent cells),
     * memoized per cell — candidate header windows overlap heavily.
     */
   def etypeCode(r: Int, c: Int): Int = {

@@ -92,13 +92,6 @@ class Cell private[grid] (
     */
   @inline def valueIsNull: Boolean = _v == null
 
-  /** `value != null && value.nonEmpty` without materializing. */
-  def valueNonEmpty: Boolean = _v match {
-    case s: String => s.length > 0
-    case null => false
-    case _ => vLen > 0
-  }
-
   /** `value != null && value.exists(_ > ' ')` — the extractor's blankness
     * predicate (String.trim's char class, NOT Character.isWhitespace) —
     * without materializing span-backed values.
@@ -184,11 +177,6 @@ class Cell private[grid] (
       }
       true
   }
-
-  /** Memoized TypeInfer.extractorType verdict — the extractor's header
-    * scoring queries the same cell O(candidate-windows) times per span.
-    */
-  private[grid] var extractorTypeCache: String = null
 
   @inline def hasBorder(s: String): Boolean = s != null && s != "none"
 }
@@ -450,7 +438,7 @@ final case class TableHit(
     meta: Map[String, String] = Map.empty
 )
 
-/** Excel A1 address codec (reference: utils/excel_utils.py:6-133). */
+/** Excel A1 column letters (reference: utils/excel_utils.py:6-133). */
 object A1 {
   def colLetter(col0: Int): String = {
     var c = col0
@@ -460,26 +448,5 @@ object A1 {
       c = c / 26 - 1
     }
     sb.toString
-  }
-
-  def colIndex(letters: String): Int = {
-    var c = 0
-    letters.foreach { ch => c = c * 26 + (ch.toUpper - 'A' + 1) }
-    c - 1
-  }
-
-  /** "B3" -> (2, 1), 0-based. */
-  def cellToIndices(cell: String): (Int, Int) = {
-    val letters = cell.takeWhile(_.isLetter)
-    val digits = cell.drop(letters.length)
-    (digits.toInt - 1, colIndex(letters))
-  }
-
-  /** "A1:C3" -> Span. */
-  def parseRange(s: String): Span = {
-    val Array(a, b) = s.split(":", 2)
-    val (r0, c0) = cellToIndices(a)
-    val (r1, c1) = cellToIndices(b)
-    Span(r0, c0, r1, c1)
   }
 }

@@ -45,7 +45,6 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
   private var _size = 0
   private var _maxRow: Int = 0
   private var _maxCol: Int = 0
-  private var sortedCache: Array[Cell] = null
   private var coordsCache: Array[Long] = null
 
   if (denseRows > 0 && denseCols > 0) {
@@ -95,9 +94,9 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
     if (dRef == null) dRef = new Array[AnyRef](dPacked.length)
 
   /** Materialize the Cell object for columnar slot `i` and cache it there —
-    * object-API consumers (get/cellsSorted) see ONE stable Cell per
-    * position, bit-identical to what the pre-columnar parse constructed
-    * (same span layout, same packed bits, same backing refs).
+    * object-API consumers ([[get]]) see ONE stable Cell per position,
+    * bit-identical to what the pre-columnar parse constructed (same span
+    * layout, same packed bits, same backing refs).
     */
   private def slotCell(i: Int, r: Int, c: Int): Cell = {
     val p = dPacked(i)
@@ -142,7 +141,6 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
       }
       if (cell.row > _maxRow) _maxRow = cell.row
       if (cell.col > _maxCol) _maxCol = cell.col
-      sortedCache = null
       coordsCache = null
     }
   }
@@ -228,7 +226,6 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
   @inline private def bump(r: Int, c: Int): Unit = {
     if (r > _maxRow) _maxRow = r
     if (c > _maxCol) _maxCol = c
-    sortedCache = null
     coordsCache = null
   }
 
@@ -366,39 +363,6 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
     backing
   }
 
-  /** All stored cells, sorted by (row, col) for deterministic traversal.
-    * Materializes (and caches) Cell objects on the columnar backing —
-    * object-API consumers only; kernel paths iterate [[coordsSorted]].
-    */
-  def cellsSorted: Array[Cell] = {
-    if (sortedCache == null) {
-      val arr = new Array[Cell](_size)
-      if (dPacked != null) {
-        // row-major scan IS (row, col) order — no sort needed
-        val n = dPacked.length
-        var i = 0
-        var j = 0
-        while (i < n) {
-          if ((dPacked(i) & Present) != 0) {
-            val r = i / dW
-            arr(j) = slotCell(i, r, i - r * dW)
-            j += 1
-          }
-          i += 1
-        }
-      } else {
-        var i = 0
-        map.foreachValue { c => arr(i) = c; i += 1 }
-        java.util.Arrays.sort(arr, (a: Cell, b: Cell) => {
-          val dr = Integer.compare(a.row, b.row)
-          if (dr != 0) dr else Integer.compare(a.col, b.col)
-        })
-      }
-      sortedCache = arr
-    }
-    sortedCache
-  }
-
   /** Packed coordinates of all (non-empty) cells, sorted — the kernel's
     * iteration primitive (no Cell objects on the columnar backing).
     */
@@ -514,7 +478,7 @@ object CellGrid {
   * [[Cell]]'s exactly. A loaded position is guaranteed non-empty (the grid
   * never stores empty cells), so `moveTo(r, c)` returning true corresponds
   * to the old `get(r, c) != null` guard — and, for stored cells, to
-  * `!valueIsNull` / `valueNonEmpty` / `!isEmpty` as well.
+  * `!valueIsNull` / `!isEmpty` as well.
   *
   * MUTATION INVARIANT: cursor reads are valid only until the grid mutates.
   * An out-of-bounds `put` migrates a dense grid to the sparse map, which

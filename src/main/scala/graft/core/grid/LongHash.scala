@@ -152,15 +152,6 @@ final class LongObjMap[V >: Null <: AnyRef](initialCapacity: Int = 16) extends S
     }
   }
 
-  def foreachValue(f: V => Unit): Unit = {
-    var i = 0
-    while (i < cap) {
-      val v = vals(i)
-      if (v != null) f(v.asInstanceOf[V])
-      i += 1
-    }
-  }
-
   def foreachKey(f: Long => Unit): Unit = {
     var i = 0
     while (i < cap) {

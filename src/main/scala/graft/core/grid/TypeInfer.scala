@@ -349,33 +349,17 @@ object TypeInfer {
     */
   private val BoolWords = Set("true", "false", "yes", "no", "y", "n")
 
-  /** Extractor type codes (indexes into [[ExtractorTypes]]) — primitive
-    * tallies and the SpanStats byte memo use these; [[extractorType]] maps
-    * them to the reference's strings.
+  /** Extractor type codes for the reference's "empty", "numeric", "text",
+    * "date" and "boolean" — primitive tallies and the SpanStats byte memo
+    * use these.
     */
   final val EtEmpty = 0
   final val EtNumeric = 1
   final val EtText = 2
   final val EtDate = 3
   final val EtBool = 4
-  val ExtractorTypes: Array[String] =
-    Array("empty", "numeric", "text", "date", "boolean")
 
-  def extractorType(c: Cell): String = {
-    if (c == null || c.isEmpty) return "empty"
-    val cached = c.extractorTypeCache
-    if (cached != null) return cached
-    val t = c.dataType match {
-      case "boolean" => "boolean"
-      case "number" => "numeric"
-      case _ =>
-        ExtractorTypes(classifyExtractor(c.valueCs, c.valueCsFrom, c.valueCsUntil))
-    }
-    c.extractorTypeCache = t
-    t
-  }
-
-  /** [[extractorType]] as a code for a loaded cursor position — no Cell
+  /** The extractor's cell type code for a loaded cursor position — no Cell
     * object, no cache (the extractor memoizes per span in its byte matrix).
     * A loaded position is never empty (grids store no empty cells), so
     * EtEmpty is unreachable here; dataType codes 2/3 are number/boolean
@@ -410,10 +394,10 @@ object TypeInfer {
     * The float/date arithmetic is char-exact for ALL inputs (Java's \d is
     * ASCII; the date test is plain char equality); only the BoolWords
     * lowercase needs locale semantics, so a non-ASCII candidate falls back
-    * to String.toLowerCase there. extractorType ≡ this replay is
+    * to String.toLowerCase there. The reference formula ≡ this replay is
     * property-pinned over arbitrary unicode in PropertySpec.
     */
-  private def classifyExtractor(cs: CharSequence, from0: Int, until0: Int): Int = {
+  private[grid] def classifyExtractor(cs: CharSequence, from0: Int, until0: Int): Int = {
     var a = from0
     var b = until0
     while (a < b && cs.charAt(a) <= ' ') a += 1

@@ -8,8 +8,8 @@ package graft.core.html
   *    code (`Tag`). ASCII letters fold to lowercase during the scan; a name
   *    holding a non-ASCII char is lowercased with `String.toLowerCase`
   *    first, so e.g. a KELVIN SIGN spelling of `blockquote` still resolves.
-  *    Every name outside `Tag.Names` gets `Tag.Other`; its lowercased name
-  *    is materialized only by a sink that calls `tagName`.
+  *    Every name outside `Tag.Names` gets `Tag.Other`; the sink gets its
+  *    name as a source span and never a lowercased string.
   *  - A start tag hands over its attribute list as the source span
   *    [attrFrom, attrUntil): from the end of the name to the tag's closing
   *    `>` (the `/` of a closing `/>`, or the end of input when the tag is
@@ -31,7 +31,7 @@ object HtmlTokenizer {
 
   /** Allocation-free event sink; see the contract above. A tag's name is
     * the span [nameFrom, attrFrom) of `src` for a start tag and
-    * [nameFrom, nameUntil) for an end tag (`tagName` reads it).
+    * [nameFrom, nameUntil) for an end tag.
     */
   trait TokSink {
     def onStartTag(tag: Int, src: String, nameFrom: Int, attrFrom: Int, attrUntil: Int,
@@ -178,12 +178,6 @@ object HtmlTokenizer {
     /** Code of an already lowercased name. */
     private[HtmlTokenizer] def lookup(lower: String): Int = lookup(keyOf(lower))
   }
-
-  /** Lowercased name of a tag event: the canonical name for a known code,
-    * else the name span lowercased.
-    */
-  def tagName(tag: Int, src: String, nameFrom: Int, nameUntil: Int): String =
-    if (tag != Tag.Other) Tag.Names(tag) else src.substring(nameFrom, nameUntil).toLowerCase
 
   private val CloseTags: Array[String] = Tag.Names.map(n => if (n == null) null else "</" + n)
 

@@ -3,7 +3,7 @@ package graft.core.html
 import scala.annotation.switch
 import scala.collection.mutable
 import graft.core.detect.GridKind
-import graft.core.grid.{A1, Cell, CellGrid, Span, SpanCodec}
+import graft.core.grid.{Cell, CellGrid, Span, SpanCodec}
 import graft.core.html.HtmlTokenizer.{Tag, TokSink}
 
 /** A tabular region found in a page, in document order. */

@@ -120,14 +120,12 @@ object Dedup {
     * bomb at corpus scale.
     */
   def minhashIndex(spark: SparkSession, df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", k: Int = 64, bands: Int = 16, shingleN: Int = 3,
-      materialize: Materialize.Strategy = Materialize.fromEnv): MinhashIndex = {
+      textCol: String = "text", k: Int = 64, bands: Int = 16, shingleN: Int = 3): MinhashIndex = {
     MinhashIndex.checkParams(k, bands, shingleN)
     val sigs = Materialize(df.select(col(idCol).cast("long").as("id"),
         DedupFunctions.minhashSig(coalesce(col(textCol), lit("")), k, shingleN).as("sig"))
-      .filter(size(col("sig")) > 0),
-      materialize)
-    indexFromSigs(sigs, k, bands, shingleN, materialize)
+      .filter(size(col("sig")) > 0))
+    indexFromSigs(sigs, k, bands, shingleN)
   }
 
   /** Re-band a precomputed (id, sig) signature set — the cheap per-row fold,
@@ -146,8 +144,7 @@ object Dedup {
     * `sigs`; persisted indexes still write banded rows once
     * ([[MinhashIndex.write]]) and load them as plain parquet scans.
     */
-  def indexFromSigs(sigs: DataFrame, k: Int, bands: Int, shingleN: Int,
-      materialize: Materialize.Strategy = Materialize.fromEnv): MinhashIndex = {
+  def indexFromSigs(sigs: DataFrame, k: Int, bands: Int, shingleN: Int): MinhashIndex = {
     val banded = sigs.select(col("id"),
         posexplode(DedupFunctions.minhashBandHashes(col("sig"), bands)))
       .toDF("id", "band", "bhash")
@@ -170,11 +167,10 @@ object Dedup {
     */
   def minhashPairs(spark: SparkSession, df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 64, bands: Int = 16, shingleN: Int = 3,
-      threshold: Double = 0.8, bucketCap: Int = 65536,
-      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
+      threshold: Double = 0.8, bucketCap: Int = 65536): DataFrame = {
     checkBucketCap(bucketCap)
     minhashPairsOfIndex(
-      minhashIndex(spark, df, idCol, textCol, k, bands, shingleN, materialize),
+      minhashIndex(spark, df, idCol, textCol, k, bands, shingleN),
       threshold, bucketCap)
   }
 
@@ -282,12 +278,11 @@ object Dedup {
   def minhashPairsIncremental(spark: SparkSession, corpus: DataFrame,
       batch: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       k: Int = 64, bands: Int = 16, shingleN: Int = 3, threshold: Double = 0.8,
-      bucketCap: Int = 65536,
-      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
+      bucketCap: Int = 65536): DataFrame = {
     checkBucketCap(bucketCap)
     minhashPairsBetween(
-      minhashIndex(spark, corpus, idCol, textCol, k, bands, shingleN, materialize),
-      minhashIndex(spark, batch, idCol, textCol, k, bands, shingleN, materialize),
+      minhashIndex(spark, corpus, idCol, textCol, k, bands, shingleN),
+      minhashIndex(spark, batch, idCol, textCol, k, bands, shingleN),
       threshold, bucketCap)
   }
 
@@ -323,12 +318,11 @@ object Dedup {
   def applyIncremental(spark: SparkSession, corpus: DataFrame, batch: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", k: Int = 64,
       bands: Int = 16, shingleN: Int = 3, threshold: Double = 0.8,
-      bucketCap: Int = 65536,
-      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
+      bucketCap: Int = 65536): DataFrame = {
     checkBucketCap(bucketCap)
     applyIncrementalFromIndex(spark,
-      minhashIndex(spark, corpus, idCol, textCol, k, bands, shingleN, materialize),
-      batch, idCol, textCol, threshold, bucketCap, materialize)
+      minhashIndex(spark, corpus, idCol, textCol, k, bands, shingleN),
+      batch, idCol, textCol, threshold, bucketCap)
   }
 
   /** [[applyIncremental]] against a prebuilt (usually [[MinhashIndex.load]]ed)
@@ -339,11 +333,10 @@ object Dedup {
     */
   def applyIncrementalFromIndex(spark: SparkSession, corpusIdx: MinhashIndex,
       batch: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-      threshold: Double = 0.8, bucketCap: Int = 65536,
-      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
+      threshold: Double = 0.8, bucketCap: Int = 65536): DataFrame = {
     checkBucketCap(bucketCap)
     ingestIncremental(spark, corpusIdx, batch, idCol, textCol, threshold,
-      bucketCap, materialize).survivors
+      bucketCap).survivors
   }
 
   /** One incremental-ingest step, with per-doc verdicts.
@@ -365,23 +358,21 @@ object Dedup {
 
   def ingestIncremental(spark: SparkSession, corpusIdx: MinhashIndex,
       batch: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-      threshold: Double = 0.8, bucketCap: Int = 65536,
-      materialize: Materialize.Strategy = Materialize.fromEnv): IngestResult = {
+      threshold: Double = 0.8, bucketCap: Int = 65536): IngestResult = {
     checkBucketCap(bucketCap)
     // the batch is signatured ONCE, here; every later stage (cross verify,
     // in-batch self-dedup, the appendable survivor delta) reuses these sigs
     val bIdx = minhashIndex(spark, batch, idCol, textCol, corpusIdx.k,
-      corpusIdx.bands, corpusIdx.shingleN, materialize)
+      corpusIdx.bands, corpusIdx.shingleN)
     val cross = minhashPairsBetween(corpusIdx, bIdx, threshold, bucketCap)
-    // materialized (iterative: never a no-op): the corpus-drop verdict set
+    // materialized: the corpus-drop verdict set
     // feeds the remaining anti-join, the signature filter AND the verdict
     // union — left unmaterialized, each consumer re-runs the cross
     // band-join + verify, the ingest job's biggest shuffle (the r4-VERDICT
     // connectedComponents recompute class)
-    val corpusDrops = Materialize.iterative(
+    val corpusDrops = Materialize(
       cross.groupBy(col("batch_id").as("_dup_id"))
-        .agg(min(col("corpus_id")).as("_match_id")),
-      materialize)
+        .agg(min(col("corpus_id")).as("_match_id")))
     val dropped = corpusDrops.select(col("_dup_id"))
     // NOT materialized (round 8): `remaining` has exactly one consumer (the
     // survivors anti-join below — remSigs restricts bIdx.sigs, not this),
@@ -394,9 +385,9 @@ object Dedup {
     // to surviving docs (one id-keyed anti-join of 1-row-per-doc sigs) and
     // re-band — no second tokenize+shingle pass over the batch text
     val remSigs = bIdx.sigs.join(dropped, col("id") === col("_dup_id"), "left_anti")
-    val remIdx = indexFromSigs(remSigs, bIdx.k, bIdx.bands, bIdx.shingleN, materialize)
+    val remIdx = indexFromSigs(remSigs, bIdx.k, bIdx.bands, bIdx.shingleN)
     val inBatch = minhashPairsOfIndex(remIdx, threshold, bucketCap)
-    val labels = connectedComponents(spark, inBatch, materialize = materialize)
+    val labels = connectedComponents(spark, inBatch)
     // NOT materialized (round 8): a filter+projection of the CC output,
     // which connectedComponents already materialized — each of the three
     // consumers re-runs only a narrow scan of that checkpoint, not the
@@ -422,7 +413,7 @@ object Dedup {
     // delta has exactly one consumer (the appendSegment parquet write).
     val survivorSigs = remSigs.join(losers, col("id") === col("_loser_id"), "left_anti")
     IngestResult(survivors, verdicts,
-      indexFromSigs(survivorSigs, bIdx.k, bIdx.bands, bIdx.shingleN, materialize))
+      indexFromSigs(survivorSigs, bIdx.k, bIdx.bands, bIdx.shingleN))
   }
 
   // ---- SimHash ----
@@ -432,8 +423,7 @@ object Dedup {
     * hamming distance within buckets.
     */
   def simhashPairs(spark: SparkSession, df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", maxHamming: Int = 3,
-      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
+      textCol: String = "text", maxHamming: Int = 3): DataFrame = {
     // content-free docs (no whitespace tokens) all share simhash 0 — the
     // same O(n²) degenerate pair class as empty minhash shingles; drop them
     // before the signature (see hasTokens)
@@ -444,8 +434,7 @@ object Dedup {
     val sigs = Materialize(
       df.filter(hasTokens(col(textCol))).select(col(idCol).cast("long").as("id"),
         graft.functions.DedupFunctions.simhash64(coalesce(col(textCol), lit("")))
-          .as("sim")),
-      materialize)
+          .as("sim")))
 
     val chunked = sigs.select(col("id"), col("sim"),
       explode(array((0 until 4).map { c =>
@@ -489,9 +478,8 @@ object Dedup {
     * label move.
     */
   def connectedComponents(spark: SparkSession, pairs: DataFrame,
-      maxIter: Int = 25,
-      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame =
-    connectedComponentsRounds(spark, pairs, maxIter, materialize)._1
+      maxIter: Int = 25): DataFrame =
+    connectedComponentsRounds(spark, pairs, maxIter)._1
 
   /** [[connectedComponents]] plus the number of propagate+jump rounds it
     * took to converge — the observable for the O(log diameter) claim: a
@@ -499,8 +487,7 @@ object Dedup {
     * propagation alone needs D.
     */
   def connectedComponentsRounds(spark: SparkSession, pairs: DataFrame,
-      maxIter: Int = 25,
-      materialize: Materialize.Strategy = Materialize.fromEnv): (DataFrame, Int) = {
+      maxIter: Int = 25): (DataFrame, Int) = {
     // edges MUST be materialized: the incoming `pairs` is typically the tail
     // of the whole minhash/LSH candidate pipeline (banded self-join + pair
     // distinct + signature re-attach + verify — the job's biggest shuffle),
@@ -512,17 +499,16 @@ object Dedup {
     // unmaterialized) pair pipeline's post-exchange tail — candidate join,
     // pair distinct, both signature re-attach joins, the verify — would
     // execute TWICE inside this one materialization job (ReuseExchange
-    // only dedups the exchanges themselves). Loop state uses
-    // Materialize.iterative (Recompute upgraded to Local): a no-op here
+    // only dedups the exchanges themselves). Loop state is materialized
+    // too: the checkpoint truncates lineage, where an un-truncated plan
     // would nest the pointer-jumping self-join's double reference each
     // round — lineage and recompute cost exponential in the iteration
     // count.
-    val edges = Materialize.iterative(
+    val edges = Materialize(
       pairs.select(explode(array(
           struct(col("id_a"), col("id_b")),
           struct(col("id_b").as("id_a"), col("id_a").as("id_b")))).as("_e"))
-        .select(col("_e.id_a").as("id_a"), col("_e.id_b").as("id_b")),
-      materialize)
+        .select(col("_e.id_a").as("id_a"), col("_e.id_b").as("id_b")))
     // fused round 0: labels start as the identity (label(v) = v), so the
     // first propagate is exactly min(v, min over neighbors u of u) — one
     // aggregate over the symmetric edge set (every node appears as id_b).
@@ -535,10 +521,9 @@ object Dedup {
       // 1) propagate: candidate label of v = min over neighbors' labels
       val prop =
         if (iter == 0)
-          Materialize.iterative(
+          Materialize(
             edges.groupBy(col("id_b").as("id")).agg(min(col("id_a")).as("nl"))
-              .select(col("id"), least(col("id"), col("nl")).as("label")),
-            materialize)
+              .select(col("id"), least(col("id"), col("nl")).as("label")))
         else {
           val nbrMin = edges
             .join(labels.select(col("id").as("id_a"), col("label").as("la")), Seq("id_a"))
@@ -546,11 +531,10 @@ object Dedup {
           // materialized: the pointer-jumping self-join references prop
           // TWICE — without this each round runs the propagate join+groupBy
           // twice
-          Materialize.iterative(
+          Materialize(
             labels.join(nbrMin, Seq("id"), "left")
               .select(col("id"),
-                least(col("label"), coalesce(col("nl"), col("label"))).as("label")),
-            materialize)
+                least(col("label"), coalesce(col("nl"), col("label"))).as("label")))
         }
       // 2) converged iff no edge joins two labels. Labels only fall, each
       //    to an id of the node's own component, and label(v) <= v; so a
@@ -568,11 +552,10 @@ object Dedup {
       // 3) pointer jumping: label(v) <- label(label(v)) (halves chains)
       labels =
         if (converged) prop
-        else Materialize.iterative(
+        else Materialize(
           prop.join(prop.select(col("id").as("label"), col("label").as("ll")),
               Seq("label"), "left")
-            .select(col("id"), coalesce(col("ll"), col("label")).as("label")),
-          materialize)
+            .select(col("id"), coalesce(col("ll"), col("label")).as("label")))
       iter += 1
     }
     // fail loudly, not silently-wrong cluster ids: practically unreachable
@@ -597,16 +580,14 @@ object Dedup {
     * scale; AQE may still choose broadcast when it measures small).
     */
   def keepFirstByPairs(spark: SparkSession, df: DataFrame, pairs: DataFrame,
-      idCol: String = "doc_id",
-      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
-    val losers = componentLosers(spark, pairs, materialize).withColumnRenamed("id", "_loser_id")
+      idCol: String = "doc_id"): DataFrame = {
+    val losers = componentLosers(spark, pairs).withColumnRenamed("id", "_loser_id")
     df.join(losers, df(idCol) === col("_loser_id"), "left_anti")
   }
 
   /** (id) of every paired node that is not its component's min id. */
-  private def componentLosers(spark: SparkSession, pairs: DataFrame,
-      materialize: Materialize.Strategy): DataFrame =
-    connectedComponents(spark, pairs, materialize = materialize)
+  private def componentLosers(spark: SparkSession, pairs: DataFrame): DataFrame =
+    connectedComponents(spark, pairs)
       .filter(col("id") =!= col("cluster_id"))
       .select(col("id"))
 
@@ -625,9 +606,8 @@ object Dedup {
     * join, never a forced broadcast.
     */
   def keepBestByPairs(spark: SparkSession, df: DataFrame, pairs: DataFrame,
-      idCol: String = "doc_id", qualityCol: String = "n_chars",
-      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
-    val labels = connectedComponents(spark, pairs, materialize = materialize)
+      idCol: String = "doc_id", qualityCol: String = "n_chars"): DataFrame = {
+    val labels = connectedComponents(spark, pairs)
     val withQ = labels.join(
       df.select(col(idCol).as("id"), col(qualityCol).as("_q")), Seq("id"))
     // explicit null ordering: a null quality must never beat a real one
@@ -678,8 +658,7 @@ object Dedup {
   def keepFirstTwoPhase(spark: SparkSession, df: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", k: Int = 64,
       bands: Int = 16, shingleN: Int = 3, threshold: Double = 0.8,
-      bucketCap: Int = 65536,
-      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
+      bucketCap: Int = 65536): DataFrame = {
     MinhashIndex.checkParams(k, bands, shingleN)
     checkBucketCap(bucketCap)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("_th"))
@@ -690,13 +669,11 @@ object Dedup {
         .select(col(idCol).as("_xid"), sha2(col(textCol), 256).as("_th"))
         .withColumn("_keep", min(col("_xid")).over(w))
         .filter(col("_xid") =!= col("_keep"))
-        .select(col("_xid")),
-      materialize)
+        .select(col("_xid")))
     val exactKept = df.join(exactLosers, df(idCol) === col("_xid"), "left_anti")
     val nearLosers = componentLosers(spark,
       minhashPairs(spark, exactKept, idCol, textCol, k, bands, shingleN,
-        threshold, bucketCap, materialize),
-      materialize)
+        threshold, bucketCap))
     // ONE anti-join against both loser sets. Every consumer re-derives the
     // kept corpus from this plan, and with one anti-join per set the exact
     // losers' broadcast sat below the corpus side of the near-dup losers'
@@ -810,13 +787,12 @@ object Dedup {
   def decontaminate(spark: SparkSession, corpus: DataFrame, evalSet: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", n: Int = 13,
       minShared: Int = 1): DataFrame = {
-    // materialized (never a no-op): the decontaminated corpus is typically
+    // materialized: the decontaminated corpus is typically
     // read twice downstream (the passage strip scans its input, then joins
     // it back), and every read would re-run the whole n-gram probe
-    val flagged = Materialize.iterative(
+    val flagged = Materialize(
       ngramContamination(spark, corpus, evalSet, idCol, textCol, n, minShared)
-        .select(col("doc_id").as("_contam_id")).distinct(),
-      Materialize.fromEnv)
+        .select(col("doc_id").as("_contam_id")).distinct())
     corpus.join(flagged, corpus(idCol) === col("_contam_id"), "left_anti")
   }
 

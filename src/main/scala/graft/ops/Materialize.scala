@@ -2,69 +2,21 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 
-/** Materialization strategy for multi-branch intermediates (the LSH/minhash
-  * signature sets and the once-materialized corpus vectors, each feeding
-  * 2–4 plan branches).
+/** Materialization of multi-branch intermediates (the LSH/minhash signature
+  * sets and the once-materialized corpus vectors, each feeding 2–4 plan
+  * branches) and of iterative loop state (the per-round labels in
+  * [[Dedup.connectedComponents]]).
   *
-  * Durability policy — an explicit choice, not a silent default:
+  * `localCheckpoint()` computes `df` once and truncates its lineage: the
+  * result's plan is a single `LogicalRDD` leaf that no longer references
+  * `df`'s plan, so a loop that feeds each round into the next stays one
+  * round deep instead of growing with iterations.
   *
-  *  - [[Local]] (default): `localCheckpoint()` — executor-local,
-  *    UNREPLICATED blocks, auto-cleaned by the ContextCleaner. Fastest, and
-  *    correct on a single machine or for retried interactive jobs. On a
-  *    1000-executor run losing ONE executor mid-query kills the job:
-  *    lineage is truncated, so the lost blocks cannot be recomputed. Use
-  *    when preemption is rare or the job is cheap to rerun.
-  *  - [[Reliable]]: `checkpoint()` to the session's checkpoint dir
-  *    (HDFS / object store — `sc.setCheckpointDir`). Survives executor
-  *    loss; costs one write + read of the materialized set. The right
-  *    default for long dedup/ANN jobs on preemptible fleets.
-  *  - [[Recompute]]: no materialization — every consuming branch recomputes
-  *    from lineage. No durability risk and no storage cost; pays the
-  *    (shingling / signature) map stage once per branch. Right when input
-  *    scans are cheap relative to storage, or storage is the bottleneck.
-  *
-  * Selected per call (`materialize` parameter on the dedup/ANN operators)
-  * or fleet-wide via `GRAFT_MATERIALIZE=local|reliable|recompute`.
+  * Durability policy: the blocks are executor-local and unreplicated
+  * (auto-cleaned by the ContextCleaner). Losing an executor mid-query fails
+  * the query, since truncated lineage cannot recompute the lost blocks; the
+  * job has to be rerun.
   */
 object Materialize {
-  sealed trait Strategy
-  case object Local extends Strategy
-  case object Reliable extends Strategy
-  case object Recompute extends Strategy
-
-  def fromEnv: Strategy = sys.env.get("GRAFT_MATERIALIZE").map(_.toLowerCase) match {
-    case Some("reliable") => Reliable
-    case Some("recompute") => Recompute
-    case Some("local") | None => Local
-    case Some(other) =>
-      throw new IllegalArgumentException(
-        s"GRAFT_MATERIALIZE='$other' (expected local|reliable|recompute)")
-  }
-
-  def apply(df: DataFrame, s: Strategy): DataFrame = s match {
-    case Local => df.localCheckpoint()
-    case Reliable =>
-      // fail fast with the fix spelled out, not a SparkException deep inside
-      // a dedup/ANN job hours in: checkpoint() requires a checkpoint dir
-      if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-        throw new IllegalStateException(
-          "GRAFT_MATERIALIZE=reliable (Materialize.Reliable) requires " +
-            "SparkContext.setCheckpointDir(<hdfs/object-store path>) before the job")
-      df.checkpoint()
-    case Recompute => df
-  }
-
-  /** Materialization for ITERATIVE loop state (per-round labels in
-    * [[Dedup.connectedComponents]]): [[Recompute]] is upgraded to [[Local]].
-    * A no-op inside a loop is not "recompute the map stage once per branch" —
-    * each round's plan would reference the previous round's un-truncated plan
-    * twice (the pointer-jumping self-join), so lineage and cost grow
-    * EXPONENTIALLY with iterations. The three strategies are proven
-    * value-identical (OpsSpec), so this only changes cost, never results;
-    * [[Reliable]] is honored as requested.
-    */
-  def iterative(df: DataFrame, s: Strategy): DataFrame = s match {
-    case Recompute => apply(df, Local)
-    case other => apply(df, other)
-  }
+  def apply(df: DataFrame): DataFrame = df.localCheckpoint()
 }

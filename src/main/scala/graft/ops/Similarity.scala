@@ -121,8 +121,7 @@ object Similarity {
   def lshNearNeighbors(spark: SparkSession, corpus: DataFrame, nBits: Int = 12,
       nTables: Int = 16, seed: Long = 42L, minCosine: Double = 0.9,
       bucketCap: Int = 4096, idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      materialize: Materialize.Strategy = Materialize.fromEnv): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = {
     import spark.implicits._
     require(nBits > 0 && nBits <= 24, "nBits in (0, 24]")
     require(nTables > 0, "nTables > 0")
@@ -156,8 +155,7 @@ object Similarity {
     val sigged = Materialize(vecs
       .select(col("id"), posexplode(graft.functions.LshFunctions
         .lshSignatures(col("v"), planes, nTables, nBits)))
-      .toDF("id", "tbl", "bucket"),
-      materialize)
+      .toDF("id", "tbl", "bucket"))
 
     // candidate pairs: ids only, deduped across tables BEFORE the verify so
     // each surviving pair pays the exact cosine once; oversized

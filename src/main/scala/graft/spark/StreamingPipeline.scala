@@ -220,9 +220,8 @@ object StreamingPipeline {
     *    join on (band, bhash) — no watermark, no state store, nothing to
     *    expire. A stream-static join re-evaluates the static plan every
     *    micro-batch, so the corpus band index + signature set are
-    *    materialized ONCE at query start (Materialize.iterative: the
-    *    per-micro-batch re-read is the loop case, a Recompute no-op would
-    *    re-run the corpus sig expressions per batch).
+    *    materialized ONCE at query start (unmaterialized, every
+    *    micro-batch would re-run the corpus sig expressions).
     *  - The persisted corpus artifact is scalar-only (id + band + 8-byte
     *    hash); corpus signatures attach by id for the verify, exactly as
     *    in the batch operator.
@@ -240,17 +239,15 @@ object StreamingPipeline {
       threshold: Double = 0.8): DataFrame = {
     MinhashIndex.checkParams(k, bands, shingleN)
     import graft.functions.DedupFunctions
-    val cSigs = Materialize.iterative(
+    val cSigs = Materialize(
       corpus.select(col(idCol).cast("long").as("corpus_id"),
           DedupFunctions.minhashSig(coalesce(col(textCol), lit("")), k, shingleN)
             .as("corpus_sig"))
-        .filter(size(col("corpus_sig")) > 0),
-      Materialize.fromEnv)
-    val cBand = Materialize.iterative(
+        .filter(size(col("corpus_sig")) > 0))
+    val cBand = Materialize(
       cSigs.select(col("corpus_id"),
           posexplode(DedupFunctions.minhashBandHashes(col("corpus_sig"), bands)))
-        .toDF("corpus_id", "band", "bhash"),
-      Materialize.fromEnv)
+        .toDF("corpus_id", "band", "bhash"))
     val banded = docs
       .filter(col(tsCol).isNotNull)
       .select(col(idCol).cast("long").as("doc_id"), col(tsCol).as("ts"),

@@ -96,8 +96,10 @@ object FixtureLoader {
     }.toMap
   }
 
-  /** Raw golden JSON per fixture (extraction / multi_header / structure
-    * sections).
+  /** Raw golden JSON per fixture. The suites read its `extraction`
+    * section; the `multi_header` and `structure` sections pin analyzers
+    * this port no longer has and stay only because the file cannot be
+    * regenerated without the reference.
     */
   lazy val goldenNodes: Map[String, JsonNode] = {
     resource("/golden/expected.json").get("goldens").elements().asScala
@@ -138,7 +140,7 @@ object FixtureLoader {
     if (fix.kind == "formatted") {
       // positions covered by a merge (not the anchor) are not emitted
       val covered = fix.cells.filter(_.mr != null).flatMap { fc =>
-        val span = graft.core.grid.A1.parseRange(fc.mr)
+        val span = graft.core.grid.GridHelpers.parseRange(fc.mr)
         for {
           r <- span.r0 to span.r1
           c <- span.c0 to span.c1
@@ -161,7 +163,7 @@ object FixtureLoader {
               ).flatten
               sb.append("<td")
               if (fc.mr != null) {
-                val span = graft.core.grid.A1.parseRange(fc.mr)
+                val span = graft.core.grid.GridHelpers.parseRange(fc.mr)
                 if (span.colCount > 1) sb.append(" colspan=\"").append(span.colCount).append('"')
                 if (span.rowCount > 1) sb.append(" rowspan=\"").append(span.rowCount).append('"')
               }

@@ -169,18 +169,21 @@ class GuardsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("maxIter"))
   }
 
-  test("Materialize.iterative never degrades to a no-op under Recompute") {
+  test("Materialize returns the same rows behind a single LogicalRDD leaf") {
     val spark = SparkTestBase.spark
     import spark.implicits._
-    val df = Seq((1L, 2L)).toDF("a", "b")
-    // plain Recompute is the identity (no materialization)...
-    assert(graft.ops.Materialize(df, graft.ops.Materialize.Recompute) eq df)
-    // ...but iterative loop state upgrades to Local: lineage must truncate
-    // per round or the pointer-jumping self-join's double reference grows
-    // the plan exponentially with iterations
-    val it = graft.ops.Materialize.iterative(df, graft.ops.Materialize.Recompute)
-    assert(!(it eq df))
-    assert(it.collect().toSeq == df.collect().toSeq)
+    val df = Seq((1L, 2L), (3L, 4L)).toDF("a", "b").filter($"a" > 0L)
+    val m = graft.ops.Materialize(df)
+    assert(m.collect().toSeq == df.collect().toSeq)
+    // lineage is truncated: the connectedComponents loop feeds each round's
+    // labels into the next, and an un-truncated plan would nest the
+    // pointer-jumping self-join's double reference every round
+    val plan = m.queryExecution.analyzed
+    assert(plan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD], plan.treeString)
+    assert(plan.children.isEmpty, plan.treeString)
+    val src = df.queryExecution.analyzed
+    assert(plan.find(p => (p eq src) || p.sameResult(src)).isEmpty,
+      s"materialized plan still references the input plan:\n${plan.treeString}")
   }
 
   test("GridCursor deferred reads fail loudly after a dense->map migration") {

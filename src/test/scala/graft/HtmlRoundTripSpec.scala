@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.detect.Cascade
 import graft.core.extract.Extractor
-import graft.core.grid.PyFloat
+import graft.core.grid.{GridHelpers, PyFloat}
 import graft.core.html.PageParser
 
 /** The fixture-renderer ↔ tokenizer contract: rendering a fixture to HTML
@@ -28,7 +28,7 @@ class HtmlRoundTripSpec extends AnyFunSuite {
       val want = FixtureLoader.buildGrid(fix)
       val got = region.grid
       assert(got.size == want.size, s"cell count ${got.size} vs ${want.size}")
-      want.cellsSorted.foreach { w =>
+      GridHelpers.cellsSorted(want).foreach { w =>
         val g = got.get(w.row, w.col)
         assert(g != null, s"missing cell (${w.row},${w.col})")
         assert(g.value == w.value, s"value at (${w.row},${w.col}): ${g.value} vs ${w.value}")

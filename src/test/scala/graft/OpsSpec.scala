@@ -829,42 +829,6 @@ class OpsSpec extends AnyFunSuite {
       "real exact-dup pair still found with junk present")
   }
 
-  test("materialization strategies (local/reliable/recompute) agree exactly") {
-    import graft.ops.Materialize
-    // durability policy must be value-invisible: the same pairs come out
-    // whether intermediates are executor-local blocks, reliable checkpoints
-    // (survive executor loss at cluster scale), or recomputed lineage
-    val ckptDir = java.nio.file.Files.createTempDirectory("reliable_ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckptDir)
-    val df = docsWithDups
-    def mh(s: Materialize.Strategy) =
-      Dedup.minhashPairs(spark, df, k = 128, bands = 32, threshold = 0.5,
-        materialize = s).collect().map(_.toSeq).toSet
-    val mhLocal = mh(Materialize.Local)
-    assert(mh(Materialize.Reliable) == mhLocal)
-    assert(mh(Materialize.Recompute) == mhLocal)
-    assert(mhLocal.nonEmpty)
-    val emb = embWithNearDups
-    def lsh(s: Materialize.Strategy) =
-      Similarity.lshNearNeighbors(spark, emb, nBits = 12, nTables = 16,
-        minCosine = 0.9, materialize = s).collect().map(_.toSeq).toSet
-    val lshLocal = lsh(Materialize.Local)
-    assert(lsh(Materialize.Reliable) == lshLocal)
-    assert(lsh(Materialize.Recompute) == lshLocal)
-    assert(lshLocal.nonEmpty)
-    // the composed incremental ingest (cross pipeline + within-batch
-    // keepFirst + the materialized remaining set) is strategy-invariant too
-    def incr(s: Materialize.Strategy) =
-      Dedup.applyIncremental(spark,
-        df.filter(col("doc_id") % 2 =!= 0), df.filter(col("doc_id") % 2 === 0),
-        threshold = 0.5, materialize = s)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-    val incrLocal = incr(Materialize.Local)
-    assert(incr(Materialize.Reliable) == incrLocal)
-    assert(incr(Materialize.Recompute) == incrLocal)
-    assert(incrLocal.nonEmpty)
-  }
-
   test("simhash blocking finds exact duplicates (hamming 0)") {
     val pairs = Dedup.simhashPairs(spark, docsWithDups, maxHamming = 3).collect()
     val pairSet = pairs.map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -192,7 +192,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("index-fed incremental dedup plans no signature computation at all") {
-    import graft.ops.{Materialize, MinhashIndex}
+    import graft.ops.MinhashIndex
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val corpus = docs.filter(pmod(col("doc_id"), lit(2)) =!= 0)
     val batch = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
@@ -203,7 +203,6 @@ class PlanShapeSpec extends AnyFunSuite {
     // both sides index-fed: the whole cross-pair plan must be parquet scans
     // of scalar index rows — ZERO graft_minhash_sig projections anywhere
     // (the r5 shape re-signatured the corpus from text on every ingest).
-    // Recompute keeps lineage visible, so a hidden sig stage WOULD show.
     val pairs = Dedup.minhashPairsBetween(
       MinhashIndex.load(spark, cDir), MinhashIndex.load(spark, bDir),
       threshold = 0.5)
@@ -218,7 +217,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // fold expression is in the plan, the shingling expression is NOT
     // (the r5 shape re-shingled the surviving batch docs from text)
     val remIdx = Dedup.indexFromSigs(
-      MinhashIndex.load(spark, bDir).sigs, 64, 16, 3, Materialize.Recompute)
+      MinhashIndex.load(spark, bDir).sigs, 64, 16, 3)
     val inBatch = Dedup.minhashPairsOfIndex(remIdx, threshold = 0.5)
     val inStr = inBatch.queryExecution.executedPlan.toString
     assert(inStr.contains("graft_minhash_band_hashes"),

@@ -4,7 +4,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.detect.{Cascade, GridKind, IslandDetector}
-import graft.core.grid.{A1, Cell, CellGrid, PyFloat}
+import graft.core.grid.{A1, Cell, CellGrid, GridHelpers, PyFloat}
 import graft.core.html.{HtmlTokenizer, PageParser}
 
 /** Property tests (SURVEY.md §5.2.3): island partition covers all cells,
@@ -133,14 +133,18 @@ class PropertySpec extends AnyFunSuite {
     */
   private class Recorder extends HtmlTokenizer.TokSink {
     val lines = Vector.newBuilder[String]
+    // the canonical name for a known code, else the name span lowercased
+    private def tagName(tag: Int, src: String, from: Int, until: Int): String =
+      if (tag != HtmlTokenizer.Tag.Other) HtmlTokenizer.Tag.Names(tag)
+      else src.substring(from, until).toLowerCase
     def onStartTag(tag: Int, src: String, nameFrom: Int, attrFrom: Int, attrUntil: Int,
         selfClosing: Boolean): Unit = {
       val attrs = HtmlTokenizer.attributes(src, attrFrom, attrUntil)
-      lines += s"S:${HtmlTokenizer.tagName(tag, src, nameFrom, attrFrom)}:" +
+      lines += s"S:${tagName(tag, src, nameFrom, attrFrom)}:" +
         s"${attrs.toSeq.sorted.mkString(",")}:$selfClosing"
     }
     def onEndTag(tag: Int, src: String, nameFrom: Int, nameUntil: Int): Unit =
-      lines += s"E:${HtmlTokenizer.tagName(tag, src, nameFrom, nameUntil)}"
+      lines += s"E:${tagName(tag, src, nameFrom, nameUntil)}"
     def onText(src: String, from: Int, until: Int, hasAmp: Boolean): Unit =
       lines += s"T:$hasAmp:${src.substring(from, until)}"
   }
@@ -317,8 +321,8 @@ class PropertySpec extends AnyFunSuite {
         dense.put(Cell.str(s"v$r-$c", r, c))
         sparse.put(Cell.str(s"v$r-$c", r, c))
       }
-      dense.cellsSorted.map(c => (c.row, c.col, c.value)).toSeq ==
-        sparse.cellsSorted.map(c => (c.row, c.col, c.value)).toSeq &&
+      GridHelpers.cellsSorted(dense).map(c => (c.row, c.col, c.value)).toSeq ==
+        GridHelpers.cellsSorted(sparse).map(c => (c.row, c.col, c.value)).toSeq &&
         dense.size == sparse.size && dense.maxRow == sparse.maxRow &&
         dense.maxCol == sparse.maxCol &&
         (0 to 31).forall(r => (0 to 21).forall(c =>
@@ -343,7 +347,7 @@ class PropertySpec extends AnyFunSuite {
         sparse.put(Cell.str(s"v$r-$c", r, c))
       }
       def obs(g: CellGrid) = IslandDetector.detectIslands(g).map(i =>
-        (i.toRange, i.cells.size, i.confidence, i.density, i.hasHeaders))
+        (i.minRow, i.minCol, i.maxRow, i.maxCol, i.cells.size, i.confidence, i.density, i.hasHeaders))
       obs(dense) == obs(sparse)
     })
   }
@@ -382,7 +386,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("A1 codec round-trips arbitrary coordinates") {
     check(Prop.forAll(Gen.choose(0, 100000), Gen.choose(0, 20000)) { (r, c) =>
-      A1.cellToIndices(s"${A1.colLetter(c)}${r + 1}") == ((r, c))
+      GridHelpers.cellToIndices(s"${A1.colLetter(c)}${r + 1}") == ((r, c))
     })
   }
 
@@ -637,7 +641,6 @@ class PropertySpec extends AnyFunSuite {
         spanCell.appendValueTo(sb1)
         // probe BEFORE materialization, then force it, then re-check
         val preChecks = spanCell.valueIsNull == stringCell.valueIsNull &&
-          spanCell.valueNonEmpty == stringCell.valueNonEmpty &&
           spanCell.isEmpty == stringCell.isEmpty
         preChecks &&
           spanCell.value == stringCell.value &&
@@ -756,7 +759,6 @@ class PropertySpec extends AnyFunSuite {
     // equality with the reference formula over arbitrary unicode — incl.
     // comma soup, malformed floats, İ/Kelvin lowercase traps, fullwidth
     // letters, control chars — for String-backed AND span-backed cells.
-    import graft.core.grid.TypeInfer
     import graft.core.html.DelimitedText
     val FloatRe = "^[+-]?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?$".r
     val BoolWords = Set("true", "false", "yes", "no", "y", "n")
@@ -786,7 +788,7 @@ class PropertySpec extends AnyFunSuite {
         .map(_.mkString.take(14)))
     check(Prop.forAll(anyVal) { v =>
       val c = new Cell(v, v, "string", 0, 0)
-      TypeInfer.extractorType(c) == oracle(c) && c.valueNonBlank == v.exists(_ > ' ')
+      GridHelpers.extractorType(c) == oracle(c) && c.valueNonBlank == v.exists(_ > ' ')
     })
     // span-backed cells (StrView backing, converted slots, dataType
     // shortcut branches) via the delimited parser
@@ -795,8 +797,8 @@ class PropertySpec extends AnyFunSuite {
         v.replace('\t', ' ').replace('\n', ' ').replace('\r', ' ')).mkString("\t"))
         .mkString("\n")
       val (g, _) = DelimitedText.parse(text, '\t')
-      g.cellsSorted.forall { c =>
-        val got = TypeInfer.extractorType(c)
+      GridHelpers.cellsSorted(g).forall { c =>
+        val got = GridHelpers.extractorType(c)
         got == oracle(c) &&
           c.valueNonBlank == (c.value != null && c.value.exists(_ > ' '))
       }

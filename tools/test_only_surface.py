@@ -4,16 +4,16 @@
     python3 tools/test_only_surface.py [REPO_ROOT]
 
 Lists every public `def`, `object`, `class`, `case class` and `trait` in
-src/main/scala/graft/{ops,spark,functions} that no code in src/main (outside
-those three packages) or perfbench/src reaches, following references
+src/main/scala/graft/{core,ops,spark,functions} that no code in src/main
+(outside those four packages) or perfbench/src reaches, following references
 transitively through the bodies of the declarations it does reach. Exits 1
 if it lists any, 0 otherwise.
 
 The scan works on names, after comments are stripped:
 
-  - Roots are every source file under src/main outside the three packages
-    (the queries in SparkEntry, the tool mains, Bench, Verify, the kernel)
-    and every file under perfbench/src.
+  - Roots are every source file under src/main outside the four packages
+    (the queries in SparkEntry, the tool mains, Bench, Verify) and every
+    file under perfbench/src.
   - A declaration is reached when an identifier with its name occurs in a
     root or in the body of a reached declaration, and, for a member, its
     enclosing object, class or trait is reached too. Overloads and members
@@ -24,6 +24,8 @@ The scan works on names, after comments are stripped:
     its members: reaching `Dedup` does not reach every operator in it.
   - An `override` member is reached with its enclosing type (the runtime
     calls it, not our code).
+  - A setter `def x_=` is reached whenever `x` is: an assignment
+    `o.x = v` calls it without ever naming `x_=`.
   - String literals stay in: a name in a string counts as a reference.
   - ENTRY_POINTS names the classes that configuration loads by name.
 """
@@ -32,7 +34,7 @@ import re
 import sys
 from collections import defaultdict
 
-PACKAGES = ("ops", "spark", "functions")
+PACKAGES = ("core", "ops", "spark", "functions")
 REPORTED = ("def", "object", "class", "trait")
 CONTAINERS = ("object", "class", "trait")
 # Loaded by class name from configuration, never named in code.
@@ -43,7 +45,7 @@ DECL = re.compile(
     r"(?P<mods>(?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|implicit\s+|override\s+"
     r"|sealed\s+|abstract\s+|case\s+|lazy\s+)*)"
     r"(?P<kind>def|val|var|object|class|trait|type)\s+"
-    r"(?P<name>[A-Za-z_]\w*|`[^`]+`)")
+    r"(?P<name>[A-Za-z_]\w*_=|[A-Za-z_]\w*|`[^`]+`)")
 IDENT = re.compile(r"[A-Za-z_]\w*")
 
 
@@ -95,7 +97,9 @@ class Decl:
         self.path, self.line, self.indent = path, line, indent
         self.kind = "case class" if kind == "class" and "case" in mods.split() else kind
         self.base_kind = kind
-        self.name = name.strip("`")
+        self.shown = name.strip("`")
+        # a setter `x_=` goes by its getter's name: `o.x = v` reaches it
+        self.name = self.shown[:-2] if self.shown.endswith("_=") else self.shown
         self.private = "private" in mods or "protected" in mods
         self.override = "override" in mods.split()
         self.parent = None
@@ -113,7 +117,7 @@ class Decl:
     def qualified(self):
         names, d = [], self
         while d is not None:
-            names.append(d.name)
+            names.append(d.shown)
             d = d.parent
         return ".".join(reversed(names))
 
