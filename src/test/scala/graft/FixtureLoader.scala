@@ -96,9 +96,9 @@ object FixtureLoader {
     }.toMap
   }
 
-  /** Raw golden JSON per fixture. The suites read its `extraction`
-    * section; the `multi_header` and `structure` sections pin analyzers
-    * this port no longer has and stay only because the file cannot be
+  /** Raw golden JSON per fixture. The suites read its `extraction` and
+    * `structure` sections; the `multi_header` section pins an analyzer
+    * this port no longer has and stays only because the file cannot be
     * regenerated without the reference.
     */
   lazy val goldenNodes: Map[String, JsonNode] = {

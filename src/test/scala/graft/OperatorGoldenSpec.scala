@@ -4,12 +4,14 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.detect.SemanticFormatAnalyzer
 import graft.core.extract.TableExtractor
 import graft.core.grid.{GridHelpers, PyFloat}
 
-/** Pins the extractor (DataFrameExtractor port) against the reference's
-  * outputs over the same fixture grids (the expected.json `extraction`
-  * section, generated by tools/gen_goldens.py from the reference).
+/** Pins the extractor (DataFrameExtractor port) and the test-side semantic
+  * format analyzer against the reference's outputs over the same fixture
+  * grids (the expected.json `extraction` and `structure` sections,
+  * generated by tools/gen_goldens.py from the reference).
   */
 class OperatorGoldenSpec extends AnyFunSuite {
 
@@ -52,6 +54,24 @@ class OperatorGoldenSpec extends AnyFunSuite {
         assert(shape == table.map(t => (t.rowCount, t.colCount)), "extractStats shape")
         assert(hiS == hiOpt, "extractStats header info")
         assert(qS == quality, "extractStats quality (bit-exact)")
+      }
+
+      test(s"structure golden: ${fix.name}") {
+        val exp = node.get("structure")
+        val st = new SemanticFormatAnalyzer().analyzeTableStructure(grid, span, headerRows = 1)
+        val expTypes = exp.get("row_types").elements().asScala.map(_.asText()).toVector
+        assert(st.semanticRows.map(_.rowType) == expTypes,
+          s"row_types ${st.semanticRows.map(_.rowType)} vs $expTypes")
+        val expSections = exp.get("sections").elements().asScala
+          .map(s => (s.get(0).asInt(), s.get(1).asInt())).toVector
+        assert(st.sections == expSections, s"sections ${st.sections} vs $expSections")
+        assert(st.hasSubtotals == exp.get("has_subtotals").asBoolean(), "has_subtotals")
+        assert(st.hasGrandTotal == exp.get("has_grand_total").asBoolean(), "has_grand_total")
+        assert(st.preserveBlankRows ==
+          exp.get("preserve_blank_rows").elements().asScala.map(_.asInt()).toVector,
+          "preserve_blank_rows")
+        assert(st.formatPatterns.size == exp.get("n_patterns").asInt(),
+          s"n_patterns ${st.formatPatterns} vs ${exp.get("n_patterns").asInt()}")
       }
     }
   }

@@ -18,6 +18,7 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, "/root/reference/src")
 
 from gridgulp.detection import TableDetectionAgent  # noqa: E402
+from gridgulp.detectors.format_analyzer import SemanticFormatAnalyzer  # noqa: E402
 from gridgulp.extractors.dataframe_extractor import DataFrameExtractor  # noqa: E402
 from gridgulp.models.file_info import FileType  # noqa: E402
 from gridgulp.models.sheet_data import CellData, SheetData  # noqa: E402
@@ -132,8 +133,8 @@ def main():
             "method_used": res.processing_metadata["method_used"],
             "tables": tables,
         }
-        # pin the extractor over the first detected table range (reference
-        # public API surface)
+        # pin the extractor / structure operators over the first detected
+        # table range (reference public API surface)
         if res.tables:
             tr = res.tables[0].range
             rng = TableRange(
@@ -153,6 +154,15 @@ def main():
                 "table_type": hi.table_type if hi else "standard",
                 "quality": repr(quality),
                 "df_shape": list(df.shape) if df is not None else None,
+            }
+            st = SemanticFormatAnalyzer().analyze_table_structure(sd, rng, header_rows=1)
+            entry["structure"] = {
+                "row_types": [r.row_type.value for r in st.semantic_rows],
+                "sections": [list(sc) for sc in st.sections],
+                "has_subtotals": st.has_subtotals,
+                "has_grand_total": st.has_grand_total,
+                "preserve_blank_rows": st.preserve_blank_rows,
+                "n_patterns": len(st.format_patterns),
             }
         out.append(entry)
         print(
