@@ -1,6 +1,5 @@
 package graft.core.detect
 
-import scala.collection.mutable
 import graft.core.grid.{CellGrid, GridCursor, Span, TableHit}
 
 /** Detector for fully bordered tables
@@ -16,22 +15,29 @@ object BoxTable {
   def detect(g: CellGrid): Vector[TableHit] = {
     if (!g.hasData) return Vector.empty
     val tables = Vector.newBuilder[TableHit]
-    val processed = mutable.HashSet.empty[Long]
-    @inline def key(r: Int, c: Int): Long = (r.toLong << 32) | (c & 0xffffffffL)
+    // cells inside an accepted box: a bitset over the used
+    // (maxRow+1) × (maxCol+1) box, row-major
+    val w = g.maxCol + 1
+    val processed = new Array[Long](((g.maxRow + 1) * w + 63) >>> 6)
 
     val cur = g.cursor
     var row = 0
     while (row <= g.maxRow) {
       var col = 0
       while (col <= g.maxCol) {
-        if (!processed.contains(key(row, col))) {
+        val idx = row * w + col
+        if ((processed(idx >>> 6) & (1L << (idx & 63))) == 0L) {
           if (cur.moveTo(row, col) && cur.hasBorderTop && cur.hasBorderLeft) {
             findBoxExtent(g, cur, row, col) match {
               case Some(span) if verifyCompleteBox(g, cur, span) =>
                 var r = span.r0
                 while (r <= span.r1) {
                   var c = span.c0
-                  while (c <= span.c1) { processed += key(r, c); c += 1 }
+                  while (c <= span.c1) {
+                    val i = r * w + c
+                    processed(i >>> 6) |= 1L << (i & 63)
+                    c += 1
+                  }
                   r += 1
                 }
                 val hasHeaders = detectHeaders(g, cur, span)

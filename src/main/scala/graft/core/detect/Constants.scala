@@ -5,7 +5,6 @@ package graft.core.detect
   */
 object IslandConst {
   val MinCellsGood = 20
-  val MinCellsMedium = 10
   val MinCellsSmall = 4
 
   val DensityHigh = 0.8

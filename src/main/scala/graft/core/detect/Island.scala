@@ -356,7 +356,6 @@ object IslandDetector {
 
   @inline private[detect] def rowOf(k: Long): Int = (k >> 32).toInt
   @inline private[detect] def colOf(k: Long): Int = k.toInt
-  @inline private def key(r: Int, c: Int): Long = (r.toLong << 32) | (c & 0xffffffffL)
 
   /** reference: island_detector.py:594-732. */
   def detectIslands(g: CellGrid): Vector[DataIsland] = {
@@ -370,48 +369,27 @@ object IslandDetector {
 
     val cs = g.coordsSorted // cached on the grid — no per-detect coord array
     var islands = Vector.newBuilder[DataIsland]
-    if (g.denseWidth > 0) {
-      // dense backing: the grid itself is the data-cell membership test and
-      // a bitset over the declared bounds replaces the visited hash set —
-      // no per-detect LongHashSets at all on the common parse paths
-      val w = g.denseWidth
-      // bitset over the USED rows (data exists only in [0, maxRow]), with
-      // the backing width as the row stride — declared-but-empty tail rows
-      // cost nothing
-      val h = math.min(g.denseHeight, g.maxRow + 1)
-      val visited = new Array[Long]((h * w + 63) >>> 6)
-      var i = 0
-      while (i < cs.length) {
-        val r = rowOf(cs(i))
-        val c = colOf(cs(i))
-        val idx = r * w + c
-        if ((visited(idx >>> 6) & (1L << (idx & 63))) == 0L) {
-          val island = floodFillDense(r, c, g, w, h, visited)
-          if (island.cells.size >= effectiveMinSize) {
-            island.totalSheetCells = totalSheetCells
-            island.calculateMetrics(g)
-            islands += island
-          }
+    // the grid itself is the data-cell membership test, and a bitset over
+    // the USED rows (data exists only in [0, maxRow]) with the grid width
+    // as the row stride is the visited set: declared-but-empty tail rows
+    // cost nothing
+    val w = g.width
+    val h = g.maxRow + 1
+    val visited = new Array[Long]((h * w + 63) >>> 6)
+    var i = 0
+    while (i < cs.length) {
+      val r = rowOf(cs(i))
+      val c = colOf(cs(i))
+      val idx = r * w + c
+      if ((visited(idx >>> 6) & (1L << (idx & 63))) == 0L) {
+        val island = floodFill(r, c, g, w, h, visited)
+        if (island.cells.size >= effectiveMinSize) {
+          island.totalSheetCells = totalSheetCells
+          island.calculateMetrics(g)
+          islands += island
         }
-        i += 1
       }
-    } else {
-      val dataCells = new LongHashSet(cs.length)
-      cs.foreach(dataCells.add(_))
-      val visited = new LongHashSet(cs.length)
-      var i = 0
-      while (i < cs.length) {
-        val k = cs(i)
-        if (!visited.contains(k)) {
-          val island = floodFill(k, dataCells, visited)
-          if (island.cells.size >= effectiveMinSize) {
-            island.totalSheetCells = totalSheetCells
-            island.calculateMetrics(g)
-            islands += island
-          }
-        }
-        i += 1
-      }
+      i += 1
     }
     var out = islands.result().sortBy(isl => (-isl.cells.size, isl.minRow, isl.minCol))
 
@@ -445,12 +423,13 @@ object IslandDetector {
     out
   }
 
-  /** [[floodFill]] for dense-backed grids: membership is a null check on
-    * the flat backing (via `g.get`) and visited is a bitset over the
-    * declared h×w bounds — island content is identical to the hash-set
-    * variant (traversal order does not affect a set + bbox).
+  /** Flood fill over the 8-connected component of (startR, startC)
+    * (reference: island_detector.py:734-844 — BFS there; traversal order
+    * does not affect island content, a set + bbox). Membership is the
+    * grid's presence flag and `visited` a bitset over the h×w box; a
+    * primitive stack avoids boxing.
     */
-  private def floodFillDense(startR: Int, startC: Int, g: CellGrid, w: Int, h: Int,
+  private def floodFill(startR: Int, startC: Int, g: CellGrid, w: Int, h: Int,
       visited: Array[Long]): DataIsland = {
     val island = new DataIsland
     var stack = new Array[Int](64)
@@ -478,47 +457,6 @@ object IslandDetector {
                 visited(ni >>> 6) |= 1L << (ni & 63)
                 if (top == stack.length) stack = java.util.Arrays.copyOf(stack, top * 2)
                 stack(top) = ni
-                top += 1
-              }
-            }
-          }
-          dc += 1
-        }
-        dr += 1
-      }
-    }
-    island
-  }
-
-  /** Flood fill over the connected component (reference:
-    * island_detector.py:734-844 — BFS there; traversal order does not
-    * affect island content, and we use a primitive stack to avoid boxing).
-    */
-  private def floodFill(start: Long, dataCells: LongHashSet,
-      visited: LongHashSet): DataIsland = {
-    val island = new DataIsland
-    var stack = new Array[Long](64)
-    var top = 0
-    stack(top) = start
-    top += 1
-    visited.add(start)
-    while (top > 0) {
-      top -= 1
-      val k = stack(top)
-      val r = rowOf(k)
-      val c = colOf(k)
-      island.addCell(r, c)
-      var dr = -1
-      while (dr <= 1) {
-        var dc = -1
-        while (dc <= 1) {
-          if (!(dr == 0 && dc == 0)) {
-            if (r + dr >= 0 && c + dc >= 0) {
-              val nk = key(r + dr, c + dc)
-              if (dataCells.contains(nk) && !visited.contains(nk)) {
-                visited.add(nk)
-                if (top == stack.length) stack = java.util.Arrays.copyOf(stack, top * 2)
-                stack(top) = nk
                 top += 1
               }
             }

@@ -1,19 +1,20 @@
 package graft.core.grid
 
-/** Sparse cell grid keyed by packed (row,col) longs.
+/** Cell grid over flat row-major columnar arrays.
   *
-  * Mirrors the reference's sparse dict-of-cells sheet model
-  * (reference: models/sheet_data.py:109-325) with O(1) random access and a
-  * deterministic sorted iteration order (the reference re-sorts before any
-  * order-sensitive step, island_detector.py:658).
+  * Ports the reference's sheet model (reference: models/sheet_data.py:
+  * 109-325, a sparse dict of cells) with O(1) random access and a
+  * deterministic (row, col) iteration order (the reference re-sorts before
+  * any order-sensitive step, island_detector.py:658). The bounds are
+  * declared before the first write: every parse path knows its extent, and
+  * [[CellGrid.MaxGridArea]] caps it. A write outside the bounds throws
+  * IllegalArgumentException.
   *
-  * COLUMNAR DENSE BACKING (round 5, late): a bounds-declared grid
-  * (CellGrid.dense — the parse paths know their dimensions) stores per-cell
-  * state in parallel primitive arrays instead of Cell objects: one packed
-  * span long (Cell's exact span layout, see [[SpanCodec]]), one attribute
-  * int (Cell's packed layout plus a PRESENT flag; converted-ness is
-  * encoded by the ref slot's type, below), and a lazily-allocated override
-  * ref slot —
+  * Per-cell state lives in parallel primitive arrays instead of Cell
+  * objects: one packed span long (Cell's exact span layout, see
+  * [[SpanCodec]]), one attribute int (Cell's packed layout plus a PRESENT
+  * flag; converted-ness is encoded by the ref slot's type, below), and a
+  * lazily-allocated override ref slot —
   *   - `null`  → identity span cell: value = backing[vFrom, vFrom+vLen),
   *     raw widened by the trim fields; NO per-cell object exists;
   *   - String  → the materialized (or converted-render) value; raw still
@@ -24,37 +25,23 @@ package graft.core.grid
   * kernel reads through [[GridCursor]] / the primitive accessors without
   * materializing. `get` materializes (and caches in the ref slot) a
   * bit-identical [[Cell]] for object-API consumers (the opt-in extraction
-  * path, tests), so both APIs observe the same cells. A cell outside the
-  * declared bounds migrates the grid to the sparse object map
-  * transparently (ragged rows).
+  * path, tests), so both APIs observe the same cells.
   */
-final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
-    extends Serializable {
+final class CellGrid(rows: Int, cols: Int) extends Serializable {
   import CellGrid.{Present, LowMask}
+  require(rows >= 0 && cols >= 0 && rows.toLong * cols <= CellGrid.MaxGridArea,
+    s"grid bounds ${rows}x$cols outside [0, MaxGridArea]")
 
-  private var map: LongObjMap[Cell] = null
-  // columnar dense backing (active when bounds were declared up front)
-  private var dSpan: Array[Long] = null
-  private var dPacked: Array[Int] = null
-  private var dRef: Array[AnyRef] = null // lazy: most delimited grids never need it
+  private val spans = new Array[Long](rows * cols)
+  private val packs = new Array[Int](rows * cols)
+  private var refs: Array[AnyRef] = null // lazy: most delimited grids never need it
   // the single shared span backing (StrView | CharSlab) of this grid's
   // span cells; set by the first span put, must be identical (eq) for all
   private var backing: CharSequence = null
-  private var dW = 0
-  private var dH = 0
   private var _size = 0
   private var _maxRow: Int = 0
   private var _maxCol: Int = 0
   private var coordsCache: Array[Long] = null
-
-  if (denseRows > 0 && denseCols > 0) {
-    dSpan = new Array[Long](denseRows * denseCols)
-    dPacked = new Array[Int](denseRows * denseCols)
-    dH = denseRows
-    dW = denseCols
-  } else map = new LongObjMap[Cell](math.max(8, capacityHint))
-
-  def this(capacityHint: Int = 8) = this(capacityHint, 0, 0)
 
   @inline private def key(r: Int, c: Int): Long = (r.toLong << 32) | (c & 0xffffffffL)
 
@@ -63,35 +50,26 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
   def size: Int = _size
   def hasData: Boolean = _size > 0
 
-  /** Dense-backing geometry for detector fast paths: width (resp. height)
-    * of the flat row-major backing, or -1 when map-backed. A dense grid
-    * stores only non-empty cells inside [0,h)×[0,w), so [[presentAt]] is a
+  /** Declared geometry for detector fast paths: the grid stores only
+    * non-empty cells inside [0,height)×[0,width), so [[presentAt]] is a
     * complete membership test over that box.
     */
-  private[graft] def denseWidth: Int = if (dPacked != null) dW else -1
-  private[graft] def denseHeight: Int = if (dPacked != null) dH else -1
+  private[graft] def width: Int = cols
+  private[graft] def height: Int = rows
 
-  private def migrateToMap(): Unit = {
-    map = new LongObjMap[Cell](math.max(8, _size * 2))
-    val n = dPacked.length
-    var i = 0
-    while (i < n) {
-      if ((dPacked(i) & Present) != 0) {
-        val r = i / dW
-        val c = i - r * dW
-        map.put(key(r, c), slotCell(i, r, c))
-      }
-      i += 1
-    }
-    dSpan = null
-    dPacked = null
-    dRef = null
-    dW = 0
-    dH = 0
+  /** Slot of (r,c), or -1 outside the declared bounds. */
+  @inline private def slotOf(r: Int, c: Int): Int =
+    if (r < 0 || c < 0 || r >= rows || c >= cols) -1 else r * cols + c
+
+  /** Slot of (r,c) for a write: outside the declared bounds throws. */
+  @inline private def writeSlot(r: Int, c: Int): Int = {
+    val i = slotOf(r, c)
+    require(i >= 0, s"cell ($r, $c) outside the declared ${rows}x$cols grid bounds")
+    i
   }
 
   @inline private def ensureRef(): Unit =
-    if (dRef == null) dRef = new Array[AnyRef](dPacked.length)
+    if (refs == null) refs = new Array[AnyRef](packs.length)
 
   /** Materialize the Cell object for columnar slot `i` and cache it there —
     * object-API consumers ([[get]]) see ONE stable Cell per position,
@@ -99,21 +77,21 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
     * layout, same packed bits, same backing refs).
     */
   private def slotCell(i: Int, r: Int, c: Int): Cell = {
-    val p = dPacked(i)
-    val ref = if (dRef == null) null else dRef(i)
+    val p = packs(i)
+    val ref = if (refs == null) null else refs(i)
     ref match {
       case cell: Cell => cell
       case s: String =>
         // cached identity value OR converted render; either way _v is the
         // string and _r materializes lazily from the span over the backing
-        val cell = new Cell(s, backing, r, c, p & LowMask, dSpan(i))
+        val cell = new Cell(s, backing, r, c, p & LowMask, spans(i))
         ensureRef()
-        dRef(i) = cell
+        refs(i) = cell
         cell
       case _ =>
-        val cell = new Cell(backing, backing, r, c, p & LowMask, dSpan(i))
+        val cell = new Cell(backing, backing, r, c, p & LowMask, spans(i))
         ensureRef()
-        dRef(i) = cell
+        refs(i) = cell
         cell
     }
   }
@@ -123,25 +101,13 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
     */
   def put(cell: Cell): Unit = {
     if (cell != null && !cell.isEmpty) {
-      // fail loudly on both backings (the map path would throw inside
-      // LongObjMap; the dense path would index out of bounds or corrupt)
-      require(cell.row >= 0 && cell.col >= 0, "negative cell coordinates")
-      if (dPacked != null && cell.row < dH && cell.col < dW) {
-        val i = cell.row * dW + cell.col
-        if ((dPacked(i) & Present) == 0) _size += 1
-        dSpan(i) = 0L
-        dPacked(i) = (cell.packedBits & LowMask) | Present
-        ensureRef()
-        dRef(i) = cell
-      } else {
-        if (dPacked != null) migrateToMap()
-        val before = map.size
-        map.put(key(cell.row, cell.col), cell)
-        if (map.size != before) _size += 1
-      }
-      if (cell.row > _maxRow) _maxRow = cell.row
-      if (cell.col > _maxCol) _maxCol = cell.col
-      coordsCache = null
+      val i = writeSlot(cell.row, cell.col)
+      if ((packs(i) & Present) == 0) _size += 1
+      spans(i) = 0L
+      packs(i) = (cell.packedBits & LowMask) | Present
+      ensureRef()
+      refs(i) = cell
+      bump(cell.row, cell.col)
     }
   }
 
@@ -156,15 +122,13 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
       vFrom: Int, vUntil: Int, dataType: String, r: Int, c: Int,
       fmtBits: Int = 0): Unit = {
     if (CellGrid.wsOnly(b, vFrom, vUntil)) return // ≡ put's cell.isEmpty skip
-    require(r >= 0 && c >= 0, "negative cell coordinates")
+    val i = writeSlot(r, c)
     val span = SpanCodec.encodeIdentity(rFrom, rUntil, vFrom, vUntil)
-    if (dPacked != null && r < dH && c < dW && span != SpanCodec.Invalid &&
-        backingOk(b)) {
-      val i = r * dW + c
-      if ((dPacked(i) & Present) == 0) _size += 1
-      dSpan(i) = span
-      dPacked(i) = (fmtBits & LowMask) | (Cell.dtCode(dataType) << 10) | Present
-      if (dRef != null) dRef(i) = null
+    if (span != SpanCodec.Invalid && backingOk(b)) {
+      if ((packs(i) & Present) == 0) _size += 1
+      spans(i) = span
+      packs(i) = (fmtBits & LowMask) | (Cell.dtCode(dataType) << 10) | Present
+      if (refs != null) refs(i) = null
       bump(r, c)
     } else put(Cell.spanned(b, rFrom, rUntil, vFrom, vUntil, dataType, r, c, fmtBits))
   }
@@ -177,16 +141,14 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
   private[core] def putConverted(py: String, b: CharSequence, rFrom: Int,
       rUntil: Int, dataType: String, r: Int, c: Int, fmtBits: Int = 0): Unit = {
     if (py == null || CellGrid.wsOnly(py, 0, py.length)) return
-    require(r >= 0 && c >= 0, "negative cell coordinates")
+    val i = writeSlot(r, c)
     val span = SpanCodec.encodeRaw(rFrom, rUntil)
-    if (dPacked != null && r < dH && c < dW && span != SpanCodec.Invalid &&
-        backingOk(b)) {
-      val i = r * dW + c
-      if ((dPacked(i) & Present) == 0) _size += 1
-      dSpan(i) = span
-      dPacked(i) = (fmtBits & LowMask) | (Cell.dtCode(dataType) << 10) | Present
+    if (span != SpanCodec.Invalid && backingOk(b)) {
+      if ((packs(i) & Present) == 0) _size += 1
+      spans(i) = span
+      packs(i) = (fmtBits & LowMask) | (Cell.dtCode(dataType) << 10) | Present
       ensureRef()
-      dRef(i) = py
+      refs(i) = py
       bump(r, c)
     } else put(Cell.convertedSpan(py, b, rFrom, rUntil, dataType, r, c, fmtBits))
   }
@@ -194,9 +156,8 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
   /** Raw slot write from a parse-side buffer (the HTML TableBuilder stages
     * slots before the dimensions are known): a String `ref` is a converted
     * render over a raw span, a Cell `ref` is a full object cell (formatted
-    * tier / encode fallback), null is an identity span. Falls back to
-    * object cells when this grid is map-backed. Empty-value skips match
-    * `put`'s per state.
+    * tier / encode fallback), null is an identity span. Empty-value skips
+    * match `put`'s per state.
     */
   private[core] def putSlot(r: Int, c: Int, span: Long, packedBits: Int,
       ref: AnyRef, b: CharSequence): Unit = {
@@ -209,14 +170,13 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
             CellGrid.wsOnly(b, SpanCodec.vFrom(span), SpanCodec.vUntil(span))
         }
         if (!skip) {
-          require(r >= 0 && c >= 0, "negative cell coordinates")
-          if (dPacked != null && r < dH && c < dW && backingOk(b)) {
-            val i = r * dW + c
-            if ((dPacked(i) & Present) == 0) _size += 1
-            dSpan(i) = span
-            dPacked(i) = (packedBits & LowMask) | Present
-            if (ref != null) { ensureRef(); dRef(i) = ref }
-            else if (dRef != null) dRef(i) = null
+          val i = writeSlot(r, c)
+          if (backingOk(b)) {
+            if ((packs(i) & Present) == 0) _size += 1
+            spans(i) = span
+            packs(i) = (packedBits & LowMask) | Present
+            if (ref != null) { ensureRef(); refs(i) = ref }
+            else if (refs != null) refs(i) = null
             bump(r, c)
           } else put(CellGrid.slotToCell(span, packedBits, ref, b, r, c))
         }
@@ -237,52 +197,40 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
     else backing eq b
   }
 
-  def get(r: Int, c: Int): Cell =
-    if (r < 0 || c < 0) null
-    else if (dPacked != null) {
-      if (r < dH && c < dW) {
-        val i = r * dW + c
-        if ((dPacked(i) & Present) == 0) null else slotCell(i, r, c)
-      } else null
-    } else map.get(key(r, c))
+  def get(r: Int, c: Int): Cell = {
+    val i = slotOf(r, c)
+    if (i < 0 || (packs(i) & Present) == 0) null else slotCell(i, r, c)
+  }
 
   /** Non-empty cell at (r,c)? Stored cells are never empty (put filters),
-    * so this is both the old `get(r,c) != null` and `contains`. On the
-    * columnar backing it is a flag test — no object access at all.
+    * so this is both the old `get(r,c) != null` and `contains`. A flag
+    * test — no object access at all.
     */
-  def presentAt(r: Int, c: Int): Boolean =
-    if (r < 0 || c < 0) false
-    else if (dPacked != null)
-      r < dH && c < dW && (dPacked(r * dW + c) & Present) != 0
-    else map.get(key(r, c)) != null
+  def presentAt(r: Int, c: Int): Boolean = {
+    val i = slotOf(r, c)
+    i >= 0 && (packs(i) & Present) != 0
+  }
 
   def contains(r: Int, c: Int): Boolean = presentAt(r, c)
 
   /** The materialized value string at (r,c), or null when absent. Caches
-    * the string in the ref slot (NOT a full Cell) on the columnar path.
+    * the string in the ref slot (NOT a full Cell).
     */
-  def valueAt(r: Int, c: Int): String =
-    if (r < 0 || c < 0) null
-    else if (dPacked != null) {
-      if (r < dH && c < dW) {
-        val i = r * dW + c
-        if ((dPacked(i) & Present) == 0) null else slotValue(i)
-      } else null
-    } else {
-      val cell = map.get(key(r, c))
-      if (cell == null) null else cell.value
-    }
+  def valueAt(r: Int, c: Int): String = {
+    val i = slotOf(r, c)
+    if (i < 0 || (packs(i) & Present) == 0) null else slotValue(i)
+  }
 
-  private def slotValue(i: Int): String = {
-    val ref = if (dRef == null) null else dRef(i)
+  private[grid] def slotValue(i: Int): String = {
+    val ref = if (refs == null) null else refs(i)
     ref match {
       case s: String => s
       case cell: Cell => cell.value
       case _ =>
-        val sp = dSpan(i)
+        val sp = spans(i)
         val s = SpanCodec.sub(backing, SpanCodec.vFrom(sp), SpanCodec.vUntil(sp))
         ensureRef()
-        dRef(i) = s
+        refs(i) = s
         s
     }
   }
@@ -291,24 +239,16 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
     * (absent → no-op) — the serialize phase's per-cell path.
     */
   def appendValueAt(r: Int, c: Int, sb: java.lang.StringBuilder): Unit = {
-    if (r < 0 || c < 0) return
-    if (dPacked != null) {
-      if (r < dH && c < dW) {
-        val i = r * dW + c
-        if ((dPacked(i) & Present) != 0) {
-          val ref = if (dRef == null) null else dRef(i)
-          ref match {
-            case s: String => sb.append(s)
-            case cell: Cell => cell.appendValueTo(sb)
-            case _ =>
-              val sp = dSpan(i)
-              SpanCodec.append(sb, backing, SpanCodec.vFrom(sp), SpanCodec.vUntil(sp))
-          }
-        }
+    val i = slotOf(r, c)
+    if (i >= 0 && (packs(i) & Present) != 0) {
+      val ref = if (refs == null) null else refs(i)
+      ref match {
+        case s: String => sb.append(s)
+        case cell: Cell => cell.appendValueTo(sb)
+        case _ =>
+          val sp = spans(i)
+          SpanCodec.append(sb, backing, SpanCodec.vFrom(sp), SpanCodec.vUntil(sp))
       }
-    } else {
-      val cell = map.get(key(r, c))
-      if (cell != null) cell.appendValueTo(sb)
     }
   }
 
@@ -318,73 +258,37 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
   def cursor: GridCursor = new GridCursor(this)
 
   private[grid] def loadCursor(cur: GridCursor, r: Int, c: Int): Boolean = {
-    if (r < 0 || c < 0) return false
-    if (dPacked != null) {
-      if (r >= dH || c >= dW) return false
-      val i = r * dW + c
-      val p = dPacked(i)
-      if ((p & Present) == 0) return false
-      val ref = if (dRef == null) null else dRef(i)
-      ref match {
-        case cell: Cell => cur.loadObj(cell)
-        case s: String => cur.loadSlot(this, p & LowMask, dSpan(i), s, i)
-        case _ => cur.loadSlot(this, p & LowMask, dSpan(i), null, i)
-      }
-      true
-    } else {
-      val cell = map.get(key(r, c))
-      if (cell == null) false
-      else { cur.loadObj(cell); true }
+    val i = slotOf(r, c)
+    if (i < 0) return false
+    val p = packs(i)
+    if ((p & Present) == 0) return false
+    val ref = if (refs == null) null else refs(i)
+    ref match {
+      case cell: Cell => cur.loadObj(cell)
+      case s: String => cur.loadSlot(p & LowMask, spans(i), s, i)
+      case _ => cur.loadSlot(p & LowMask, spans(i), null, i)
     }
+    true
   }
 
-  /** GridCursor invariant (deferred reads): a loaded cursor position stays
-    * valid only while the grid keeps its dense backing — an out-of-bounds
-    * `put` migrates the grid to the sparse map and nulls the columnar
-    * arrays, so a cursor slot captured before the migration is stale. The
-    * kernel never trips this (detect passes are read-only after parse);
-    * fail with the contract spelled out instead of an anonymous NPE if a
-    * future call site interleaves writes with a live cursor.
-    */
-  private[grid] def cursorValue(i: Int): String = {
-    if (dPacked == null)
-      throw new IllegalStateException(
-        "GridCursor read after the grid migrated to the sparse map (a put " +
-          "outside the declared dense bounds invalidates live cursors; " +
-          "re-position with moveTo after any mutation)")
-    slotValue(i)
-  }
-  private[grid] def cursorBacking: CharSequence = {
-    if (dPacked == null)
-      throw new IllegalStateException(
-        "GridCursor read after the grid migrated to the sparse map (a put " +
-          "outside the declared dense bounds invalidates live cursors; " +
-          "re-position with moveTo after any mutation)")
-    backing
-  }
+  private[grid] def spanBacking: CharSequence = backing
 
   /** Packed coordinates of all (non-empty) cells, sorted — the kernel's
-    * iteration primitive (no Cell objects on the columnar backing).
+    * iteration primitive (no Cell objects).
     */
   def coordsSorted: Array[Long] = {
     if (coordsCache == null) {
       val out = new Array[Long](_size)
-      if (dPacked != null) {
-        val n = dPacked.length
-        var i = 0
-        var j = 0
-        while (i < n) {
-          if ((dPacked(i) & Present) != 0) {
-            val r = i / dW
-            out(j) = key(r, i - r * dW)
-            j += 1
-          }
-          i += 1
+      val n = packs.length
+      var i = 0
+      var j = 0
+      while (i < n) {
+        if ((packs(i) & Present) != 0) {
+          val r = i / cols
+          out(j) = key(r, i - r * cols)
+          j += 1
         }
-      } else {
-        var j = 0
-        map.foreachKey { k => out(j) = k; j += 1 }
-        java.util.Arrays.sort(out)
+        i += 1
       }
       coordsCache = out
     }
@@ -432,17 +336,28 @@ final class CellGrid private (capacityHint: Int, denseRows: Int, denseCols: Int)
 }
 
 object CellGrid {
-  /** Max dense-backing area: beyond this the flat arrays themselves become
-    * the allocation (and sparse-grid waste); fall back to the hash map.
+  /** Max slots (rows × cols) of one grid: 4M slots hold a table far larger
+    * than any real page's, while a hostile one (one row of colspan=1000
+    * cells above thousands of one-cell rows) costs at most 48 MB of span
+    * and attribute arrays (plus the lazy ref slots) and a bounded
+    * detect/serialize walk. A fixed bound like `DetectConfig.MaxHtmlBytes`,
+    * not a setting.
     */
-  private[grid] val MaxDenseArea = 1 << 16
+  val MaxGridArea: Int = 1 << 22
+
+  /** How many of `rows` rows of width `cols` fit under [[MaxGridArea]]: the
+    * parsers drop the trailing rows beyond it (a row wider than the cap
+    * alone fits nowhere, so none are kept).
+    */
+  def rowsWithin(rows: Int, cols: Int): Int =
+    if (cols <= 0) rows else math.min(rows, MaxGridArea / cols)
 
   // columnar slot presence flag (disjoint from Cell's packed layout, bits 0-12)
   private[grid] final val Present = 1 << 30
   private[grid] final val LowMask = (1 << 13) - 1
 
-  /** Rebuild the object Cell a staged slot describes (map-backed fallback
-    * for [[CellGrid.putSlot]]).
+  /** Rebuild the object Cell a staged slot describes (the backing-mismatch
+    * fallback of [[CellGrid.putSlot]]).
     */
   private[core] def slotToCell(span: Long, packedBits: Int, ref: AnyRef,
       b: CharSequence, r: Int, c: Int): Cell = ref match {
@@ -460,17 +375,6 @@ object CellGrid {
     }
     true
   }
-
-  /** Grid with pre-declared bounds: cells live in flat row-major columnar
-    * arrays — O(1) exact random access with no hash probes, object-free
-    * span cells, and already-sorted traversal. A cell outside the bounds
-    * (ragged input) migrates the grid to the sparse map transparently;
-    * bounds beyond [[MaxDenseArea]] use the map from the start.
-    */
-  def dense(rows: Int, cols: Int): CellGrid =
-    if (rows > 0 && cols > 0 && rows.toLong * cols <= MaxDenseArea)
-      new CellGrid(8, rows, cols)
-    else new CellGrid()
 }
 
 /** Flyweight cell reader: one state load per (row, col) via [[moveTo]], no
@@ -480,12 +384,11 @@ object CellGrid {
   * to the old `get(r, c) != null` guard — and, for stored cells, to
   * `!valueIsNull` / `!isEmpty` as well.
   *
-  * MUTATION INVARIANT: cursor reads are valid only until the grid mutates.
-  * An out-of-bounds `put` migrates a dense grid to the sparse map, which
-  * invalidates every live cursor position; a deferred `value` /
-  * `appendValueTo` read then throws IllegalStateException (never a silent
-  * wrong-cell read or an anonymous NPE). Re-position with [[moveTo]] after
-  * any mutation. The kernel never mutates a grid while cursors are live —
+  * MUTATION INVARIANT: a loaded position reads the state its cell had at
+  * [[moveTo]]. The grid's arrays never move (a write outside the declared
+  * bounds throws instead), so a put elsewhere leaves a live cursor reading
+  * its cell; after overwriting the loaded cell itself, re-position with
+  * [[moveTo]]. The kernel never mutates a grid while cursors are live —
   * detect passes are read-only after parse.
   */
 final class GridCursor private[grid] (g: CellGrid) {
@@ -521,7 +424,7 @@ final class GridCursor private[grid] (g: CellGrid) {
     slot = -1
   }
 
-  private[grid] def loadSlot(grid: CellGrid, p: Int, sp: Long, sv: String, i: Int): Unit = {
+  private[grid] def loadSlot(p: Int, sp: Long, sv: String, i: Int): Unit = {
     cObj = null
     packed = p
     span = sp
@@ -558,7 +461,7 @@ final class GridCursor private[grid] (g: CellGrid) {
     else {
       if (slot < 0)
         throw new IllegalStateException("cursor is not positioned on a cell")
-      val s = g.cursorValue(slot)
+      val s = g.slotValue(slot)
       sval = s
       s
     }
@@ -570,7 +473,7 @@ final class GridCursor private[grid] (g: CellGrid) {
     else {
       if (slot < 0)
         throw new IllegalStateException("cursor is not positioned on a cell")
-      SpanCodec.append(sb, g.cursorBacking, SpanCodec.vFrom(span), SpanCodec.vUntil(span))
+      SpanCodec.append(sb, g.spanBacking, SpanCodec.vFrom(span), SpanCodec.vUntil(span))
     }
   }
 
@@ -599,7 +502,7 @@ final class GridCursor private[grid] (g: CellGrid) {
     else {
       if (slot < 0)
         throw new IllegalStateException("cursor is not positioned on a cell")
-      g.cursorBacking
+      g.spanBacking
     }
   }
   private[core] def valueCsFrom: Int = {

@@ -1,13 +1,12 @@
 package graft.core.grid
 
-/** Primitive open-addressing hash structures for packed (row,col) long keys.
+/** Primitive open-addressing hash set for packed (row,col) long keys (an
+  * island's cells, the HTML table builder's rowspan shadows).
   *
-  * The detection kernel random-accesses cells millions of times per
-  * partition (border scans, gap checks, flood fill); boxed
-  * java.lang.Long keys made the kernel GC-bound and capped thread scaling
-  * at ~1.7× from 8→32 cores. Keys are always >= 0 (row,col >= 0), so -1 is
-  * a free empty sentinel. Linear probing, power-of-two capacity, no
-  * deletion (the kernel never removes).
+  * Boxed java.lang.Long keys made the kernel GC-bound and capped thread
+  * scaling at ~1.7× from 8→32 cores. Keys are always >= 0 (row,col >= 0),
+  * so -1 is a free empty sentinel. Linear probing, power-of-two capacity,
+  * no deletion (the kernel never removes).
   */
 object LongHash {
   final val Empty = -1L
@@ -103,73 +102,6 @@ final class LongHashSet(initialCapacity: Int = 16) extends Serializable {
     while (i < old.length) {
       val k = old(i)
       if (k != Empty) add(k)
-      i += 1
-    }
-  }
-}
-
-final class LongObjMap[V >: Null <: AnyRef](initialCapacity: Int = 16) extends Serializable {
-  import LongHash._
-  private var cap = Integer.highestOneBit(math.max(16, initialCapacity * 2) - 1) << 1
-  private var keys = new Array[Long](cap)
-  private var vals = new Array[AnyRef](cap) // null == empty slot
-  private var _size = 0
-
-  def size: Int = _size
-  def isEmpty: Boolean = _size == 0
-
-  def get(k: Long): V = {
-    if (k < 0) return null
-    val mask = cap - 1
-    var i = mix(k) & mask
-    while (true) {
-      val v = vals(i)
-      if (v == null) return null
-      if (keys(i) == k) return v.asInstanceOf[V]
-      i = (i + 1) & mask
-    }
-    null
-  }
-
-  def put(k: Long, v: V): Unit = {
-    require(k >= 0 && v != null, "negative key or null value")
-    if (_size * 2 >= cap) grow()
-    val mask = cap - 1
-    var i = mix(k) & mask
-    while (true) {
-      val cur = vals(i)
-      if (cur == null) {
-        keys(i) = k
-        vals(i) = v
-        _size += 1
-        return
-      }
-      if (keys(i) == k) {
-        vals(i) = v
-        return
-      }
-      i = (i + 1) & mask
-    }
-  }
-
-  def foreachKey(f: Long => Unit): Unit = {
-    var i = 0
-    while (i < cap) {
-      if (vals(i) != null) f(keys(i))
-      i += 1
-    }
-  }
-
-  private def grow(): Unit = {
-    val oldK = keys
-    val oldV = vals
-    cap = cap << 1
-    keys = new Array[Long](cap)
-    vals = new Array[AnyRef](cap)
-    _size = 0
-    var i = 0
-    while (i < oldK.length) {
-      if (oldV(i) != null) put(oldK(i), oldV(i).asInstanceOf[V])
       i += 1
     }
   }

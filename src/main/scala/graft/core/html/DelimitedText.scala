@@ -120,15 +120,41 @@ object DelimitedText {
   /** 1M-row safety cap (reference: csv_reader.py:252-255). */
   val MaxRows = 1000000
 
-  /** Allocation-free line count ('\n' count + 1), capped at MaxRows + 1. */
-  private def countLines(text: String): Int = {
-    var n = 1
-    var i = 0
-    while (i < text.length && n <= MaxRows) {
-      if (text.charAt(i) == '\n') n += 1
-      i += 1
+  /** The extent of `parse(text, delimiter)`'s grid, packed as
+    * `rows << 32 | cols`, in one allocation-free scan that splits lines
+    * the way `parse` does: the rows it emits (at most MaxRows + 1) and the
+    * most fields on any of them. For the delimiter chars a field count is
+    * the delimiter count plus 1, exact on unquoted lines and an upper bound
+    * on quoted ones; for the space delimiter it counts the runs `parse`
+    * keeps, as [[columnCounts]] does.
+    */
+  private def extent(text: String, delimiter: Char): Long = {
+    var rows = 0
+    var cols = 0
+    val n = text.length
+    var lineStart = 0
+    while (lineStart < n && rows <= MaxRows) {
+      var fields = if (delimiter == ' ') 0 else 1
+      var visible = false // space delimiter: the current run holds a char above ' '
+      var le = lineStart
+      while (le < n && text.charAt(le) != '\n' && text.charAt(le) != '\r') {
+        val c = text.charAt(le)
+        if (delimiter != ' ') { if (c == delimiter) fields += 1 }
+        else if (isWsSplitChar(c)) { if (visible) fields += 1; visible = false }
+        else if (c > ' ') visible = true
+        le += 1
+      }
+      if (visible) fields += 1
+      if (le == lineStart) rows += 1 // empty line: the row counter only
+      else if (fields > 0) { // a space line of zero kept runs emits no row
+        rows += 1
+        if (fields > cols) cols = fields
+      }
+      lineStart =
+        if (le < n && text.charAt(le) == '\r' && le + 1 < n && text.charAt(le + 1) == '\n') le + 2
+        else le + 1
     }
-    n
+    (rows.toLong << 32) | cols
   }
 
   /** Parse delimited text to a grid.
@@ -155,7 +181,12 @@ object DelimitedText {
     // quoted-CSV dialect (doubled-quote escapes change the field text)
     // falls back to the materializing path per line — quotes are rare in
     // crawl-embedded CSV and that path's semantics stay byte-identical.
-    var g: CellGrid = null
+    // declared bounds: every line's fields fit (ragged lines included),
+    // less the trailing rows beyond MaxGridArea
+    val ext = extent(text, delimiter)
+    val cols = ext.toInt
+    val rows = CellGrid.rowsWithin((ext >>> 32).toInt, cols)
+    val g = new CellGrid(rows, cols)
     val res = new graft.core.grid.TypeInfer.Res // reused across cells (tuple-free)
     // one backing wrapper per document (a bare String cannot back spans —
     // see StrView); every span cell of this grid shares it
@@ -171,7 +202,7 @@ object DelimitedText {
         fUntil = java.util.Arrays.copyOf(fUntil, k * 2)
       }
     var lineStart = 0
-    while (lineStart < n && r <= MaxRows) {
+    while (lineStart < n && r < rows) {
       // linesIterator semantics: terminators \n, \r\n, \r; no trailing
       // empty line after a final terminator
       var le = lineStart
@@ -204,7 +235,6 @@ object DelimitedText {
           }
         }
         if (k > 0) {
-          if (g == null) g = CellGrid.dense(countLines(text), k)
           var c = 0
           while (c < k) {
             g.putSpanned(view, fFrom(c), fUntil(c), fFrom(c), fUntil(c),
@@ -234,7 +264,6 @@ object DelimitedText {
         }
         if (hasQuote) {
           val parts = splitQuoted(text.substring(lineStart, le), delimiter)
-          if (g == null && parts.nonEmpty) g = CellGrid.dense(countLines(text), parts.length)
           var c = 0
           while (c < parts.length) {
             val v = parts(c)
@@ -242,7 +271,6 @@ object DelimitedText {
             c += 1
           }
         } else {
-          if (g == null) g = CellGrid.dense(countLines(text), k)
           var c = 0
           while (c < k) {
             graft.core.grid.TypeInfer.inferSpan(text, fFrom(c), fUntil(c), res)
@@ -265,7 +293,6 @@ object DelimitedText {
           else le + 1
       } else lineStart = n
     }
-    if (g == null) g = new CellGrid
     val kind = delimiter match {
       case '\t' | ' ' => GridKind.DelimitedText
       case _ => GridKind.Csv

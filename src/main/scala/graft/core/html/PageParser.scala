@@ -333,9 +333,8 @@ object PageParser {
   /** Builds a CellGrid from table markup with rowspan/colspan handling. */
   private final class TableBuilder(tableAttrs: Map[String, String]) {
     // cell SLOTS buffer until build(): the final dimensions are only known
-    // at </table>, and a bounds-declared columnar CellGrid.dense beats
-    // incremental hash-map puts on both allocation and the detect path's
-    // random access. Slots are the grid's own columnar encoding — the
+    // at </table>, and a CellGrid declares its bounds before the first
+    // write. Slots are the grid's own columnar encoding — the
     // common slim-tier cell stages NO object at all. Staging is CHUNKED
     // (×4-growing chunk sizes, append-only): a doubling parallel-array
     // buffer would re-copy ~2× the slot bytes in growth churn, which is
@@ -347,8 +346,8 @@ object PageParser {
     private def stage(r: Int, c: Int, span: Long, pack: Int, ref: AnyRef): Unit = {
       if (cur == null || cur.n == cur.rowcol.length) {
         // ×4 growth capped low: chunk waste is only the LAST chunk's unused
-        // tail, so a small max chunk bounds it (256 slots ≈ 5 KB) while
-        // keeping the chunk count trivial even for the 64k-cell cap
+        // tail, so a small max chunk bounds it (256 slots ≈ 5 KB) at one
+        // chunk per 256 staged cells
         val cap = if (cur == null) 16 else math.min(cur.rowcol.length * 4, 256)
         cur = new PageParser.SlotChunk(cap)
         chunks = cur :: chunks
@@ -564,13 +563,17 @@ object PageParser {
           i += 1
         }
       }
-      val g = CellGrid.dense(mr + 1, mc + 1)
+      // the exact extent, less the trailing rows beyond MaxGridArea
+      val rows = CellGrid.rowsWithin(mr + 1, mc + 1)
+      val g = new CellGrid(rows, mc + 1)
       chunks.reverse.foreach { ch =>
         var i = 0
         while (i < ch.n) {
           val rc = ch.rowcol(i)
-          g.putSlot((rc >> 32).toInt, rc.toInt, ch.span(i), ch.pack(i),
-            if (ch.refs == null) null else ch.refs(i), slab)
+          val r = (rc >> 32).toInt
+          if (r < rows)
+            g.putSlot(r, rc.toInt, ch.span(i), ch.pack(i),
+              if (ch.refs == null) null else ch.refs(i), slab)
           i += 1
         }
       }

@@ -4,11 +4,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.detect.DetectConfig
 import graft.core.extract.Extractor
-import graft.core.html.DelimitedText
+import graft.core.grid.CellGrid
+import graft.core.html.{DelimitedText, PageParser}
+import graft.spark.{Page, Pipeline}
 
-/** The two hard safety caps (SURVEY §2 O3/O4) that no golden fixture
-  * exceeds: the 1M-row delimited-parse cap (reference: csv_reader.py:252-255)
-  * and the max-tables-per-sheet cap (reference config max_tables_per_sheet).
+/** The hard safety caps (SURVEY §2 O3/O4) that no golden fixture
+  * exceeds: the 1M-row delimited-parse cap (reference: csv_reader.py:252-255),
+  * the max-tables-per-sheet cap (reference config max_tables_per_sheet) and
+  * the grid-area cap `CellGrid.MaxGridArea`.
   */
 class CapsSpec extends AnyFunSuite {
 
@@ -21,6 +24,37 @@ class CapsSpec extends AnyFunSuite {
     assert(g.maxRow + 1 <= DelimitedText.MaxRows + 1,
       s"grid has ${g.maxRow + 1} rows, cap is ${DelimitedText.MaxRows}")
     assert(g.maxRow + 1 >= DelimitedText.MaxRows, "cap must not truncate early")
+  }
+
+  test("a table over MaxGridArea keeps its leading rows and extracts in bounded time") {
+    // five colspan=1000 cells make the table 4,001 columns wide, and the
+    // one-cell rows below take its extent to 2,001 × 4,001 slots, about
+    // twice the cap: the rows past the cap are dropped, the way the 1M-row
+    // cap truncates delimited text
+    val sb = new StringBuilder("<html><body><table><tr>")
+    (0 until 5).foreach(i => sb.append(s"<td colspan=1000>h$i</td>"))
+    sb.append("</tr>")
+    (1 to 2000).foreach(r => sb.append(s"<tr><td>r$r</td></tr>"))
+    sb.append("</table></body></html>")
+    val html = sb.toString
+    val keep = CellGrid.MaxGridArea / 4001
+    assert(keep == 1048 && 2001L * 4001 > CellGrid.MaxGridArea)
+
+    val t0 = System.nanoTime()
+    val g = PageParser.parse(html).regions.head.grid
+    val local = Extractor.extractHtml(html.getBytes("UTF-8"))
+    assert((System.nanoTime() - t0) < 30e9, "parse and extract must stay bounded")
+    assert(g.height == keep && g.width == 4001)
+    assert((0 until 5).forall(i => g.get(0, i * 1000).value == s"h$i"))
+    assert((1 until keep).forall(r => g.get(r, 0).value == s"r$r"), "leading rows kept")
+    assert(g.size == 5 + keep - 1 && g.maxRow == keep - 1, "trailing rows dropped")
+    assert(local.text.contains("r1047") && !local.text.contains("r1048"), local.text.take(300))
+
+    import SparkTestBase.spark.implicits._
+    val page = Page("u:wide", new java.sql.Timestamp(0), html.getBytes("UTF-8"), "", "en")
+    val out = Pipeline.extract(SparkTestBase.spark, Seq(page).toDS()).collect()
+    assert(out.length == 1 && !out(0).parse_failed && out(0).n_regions == 1)
+    assert(out(0).text_sha256 == local.sha256)
   }
 
   test("O4: max_tables_per_sheet caps detected tables per region") {

@@ -115,7 +115,7 @@ object FixtureLoader {
 
   /** Build the grid exactly as gen_goldens.py builds the SheetData. */
   def buildGrid(fix: Fixture): CellGrid = {
-    val g = new CellGrid
+    val g = new CellGrid(fix.cells.map(_.r).max + 1, fix.cells.map(_.c).max + 1)
     fix.cells.foreach { fc =>
       val (value, dt) =
         if (fix.kind == "txt") (fc.v.trim, "string")

@@ -186,23 +186,30 @@ class GuardsSpec extends AnyFunSuite {
       s"materialized plan still references the input plan:\n${plan.treeString}")
   }
 
-  test("GridCursor deferred reads fail loudly after a dense->map migration") {
-    // round-5 ADVICE: a cursor slot captured before an out-of-bounds put is
-    // stale once the grid migrates to the sparse map (the columnar arrays
-    // are nulled). Deferred value reads must throw the documented
-    // IllegalStateException, never NPE on the freed backing or silently
-    // read the wrong cell. (The kernel never mutates with a live cursor —
-    // this pins the contract for future call sites.)
+  test("a put outside the declared bounds throws and a live cursor still reads its cell") {
+    // a grid's bounds are declared before the first write and never grow:
+    // an out-of-bounds put fails loudly instead of corrupting a neighbour
+    // slot, and leaves the arrays a live cursor reads from in place
     val (g, _) = graft.core.html.DelimitedText.parse("aa\tbb\ncc\tdd", '\t')
     val cur = g.cursor
-    assert(cur.moveTo(0, 1) && cur.value == "bb", "span-backed dense parse")
-    // re-position WITHOUT materializing, then migrate via out-of-bounds put
+    assert(cur.moveTo(0, 1) && cur.value == "bb", "span-backed parse")
+    // position WITHOUT materializing, then attempt out-of-bounds puts
     assert(cur.moveTo(1, 0))
-    g.put(graft.core.grid.Cell.str("far", 5000, 5000)) // beyond dense bounds
-    val e = intercept[IllegalStateException] { cur.value }
-    assert(e.getMessage.contains("migrated"), e.getMessage)
-    // a fresh moveTo against the migrated grid reads correctly
-    assert(cur.moveTo(1, 0) && cur.value == "cc")
+    intercept[IllegalArgumentException] {
+      g.put(Cell.str("far", 5000, 5000))
+    }
+    intercept[IllegalArgumentException] {
+      g.put(Cell.str("right", 0, 2)) // one past the last column
+    }
+    intercept[IllegalArgumentException] {
+      g.put(Cell.str("neg", -1, 0))
+    }
+    assert(cur.value == "cc", "the deferred read sees its cell")
+    val sb = new java.lang.StringBuilder
+    cur.appendValueTo(sb)
+    assert(sb.toString == "cc")
+    assert(g.size == 4 && g.maxRow == 1 && g.maxCol == 1, "the failed puts stored nothing")
+    assert(g.get(5000, 5000) == null && !g.presentAt(0, 2))
   }
 
   test("manifest reader falls back to the legacy wall_ms field name") {

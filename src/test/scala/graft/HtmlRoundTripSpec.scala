@@ -119,4 +119,46 @@ class HtmlRoundTripSpec extends AnyFunSuite {
         s"canonical text changed for ${fix.name}")
     }
   }
+
+  test("ragged delimited lines keep every field, in plain text and in <pre>") {
+    // the third line has two more fields than the first: the grid's
+    // declared width comes from the widest line, so every field lands in
+    // its column, and the pin fixes the canonical text of both documents
+    val text = "name,qty,price\napple,3,1.25\npear,4,2.50,extra,more\n" +
+      "plum,5,0.75\nfig,6,3.00\nkiwi,7,1.10\n"
+    val lines = text.split('\n').map(_.split(','))
+    val plain = Extractor.parsePlainText(text)
+    val pre = PageParser.parse("<html><body><pre>" + text + "</pre></body></html>")
+    Seq(plain, pre).foreach { page =>
+      val g = page.regions.head.grid
+      assert(g.size == lines.map(_.length).sum && g.width == 5)
+      lines.zipWithIndex.foreach { case (fields, r) =>
+        fields.zipWithIndex.foreach { case (v, c) =>
+          assert(g.get(r, c) != null && g.get(r, c).raw == v, s"($r, $c)")
+        }
+      }
+    }
+    val pin = "2c3d70daf2595c0013bcef8c3722599df448c9567f753b6bc055525cbbfc359c"
+    assert(Extractor.extractHtml(text.getBytes("UTF-8")).sha256 == pin)
+    val preDoc = "<html><body><pre>" + text + "</pre></body></html>"
+    val res = Extractor.extractHtml(preDoc.getBytes("UTF-8"))
+    assert(res.sha256 == pin && res.text.contains("pear\t4\t2.5\textra\tmore"), res.text)
+  }
+
+  test("a regular 400 x 200 table keeps its canonical text SHA") {
+    // a grid of 80,000 slots, over 64k: the pin fixes its canonical text
+    val sb = new StringBuilder("<html><body><table>")
+    (0 until 400).foreach { r =>
+      sb.append("<tr>")
+      (0 until 200).foreach { c =>
+        if (r == 0) sb.append("<th>col").append(c).append("</th>")
+        else sb.append("<td>").append(r * 1000 + c).append("</td>")
+      }
+      sb.append("</tr>")
+    }
+    sb.append("</table></body></html>")
+    val res = Extractor.extractHtml(sb.toString.getBytes("UTF-8"))
+    assert(res.tables.size == 1 && res.tables.head.hit.span.a1 == "A1:GR400")
+    assert(res.sha256 == "22ddee7c28f16c84e9b19b4b42d4182c43b8e7504ace5e80505a1064ace0a745")
+  }
 }

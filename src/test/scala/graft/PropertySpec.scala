@@ -27,7 +27,8 @@ class PropertySpec extends AnyFunSuite {
   } yield (r, c)
 
   private def gridOf(coords: Seq[(Int, Int)]): CellGrid = {
-    val g = new CellGrid
+    val g = new CellGrid(coords.map(_._1).maxOption.fold(0)(_ + 1),
+      coords.map(_._2).maxOption.fold(0)(_ + 1))
     coords.foreach { case (r, c) => g.put(Cell.str(s"v$r-$c", r, c)) }
     g
   }
@@ -306,49 +307,50 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
-  test("dense-backed grid == map-backed grid (incl. ragged migration)") {
-    // CellGrid.dense stores cells in a flat row-major array; cells outside
-    // the declared bounds migrate the grid to the sparse map. Every
-    // observable (sorted traversal, random access, size, bounds, counts)
-    // must be identical to a map-backed grid over the same puts —
-    // including duplicates (overwrite) and the migration path (cellGen
-    // spans 0..30 × 0..20, often exceeding the declared bounds).
-    check(Prop.forAll(Gen.listOfN(80, cellGen),
-        Gen.chooseNum(1, 35), Gen.chooseNum(1, 25)) { (coords, dr, dc) =>
-      val dense = CellGrid.dense(dr, dc)
-      val sparse = new CellGrid
-      coords.foreach { case (r, c) =>
-        dense.put(Cell.str(s"v$r-$c", r, c))
-        sparse.put(Cell.str(s"v$r-$c", r, c))
+  test("grid observables == a Map model over the same in-bounds puts") {
+    // every observable (sorted traversal, random access, size, bounds,
+    // counts) equals a plain Map[(row, col), value] fed the same puts —
+    // duplicates included, where the later put overwrites; cellGen spans
+    // 0..30 × 0..20, so the puts are filtered to the declared bounds
+    check(Prop.forAll(Gen.listOfN(80, Gen.zip(cellGen, Gen.alphaStr.map(_.take(4)))),
+        Gen.chooseNum(1, 35), Gen.chooseNum(1, 25)) { (puts, dr, dc) =>
+      val inBounds = puts.filter { case ((r, c), _) => r < dr && c < dc }
+      val g = new CellGrid(dr, dc)
+      var model = Map.empty[(Int, Int), String]
+      inBounds.foreach { case ((r, c), v) =>
+        val value = s"v$r-$c$v"
+        g.put(Cell.str(value, r, c))
+        model += (r, c) -> value
       }
-      GridHelpers.cellsSorted(dense).map(c => (c.row, c.col, c.value)).toSeq ==
-        GridHelpers.cellsSorted(sparse).map(c => (c.row, c.col, c.value)).toSeq &&
-        dense.size == sparse.size && dense.maxRow == sparse.maxRow &&
-        dense.maxCol == sparse.maxCol &&
+      def count(r0: Int, r1: Int, c0: Int, c1: Int) =
+        model.keys.count { case (r, c) => r >= r0 && r <= r1 && c >= c0 && c <= c1 }
+      GridHelpers.cellsSorted(g).map(c => (c.row, c.col, c.value)).toSeq ==
+        model.toSeq.sorted.map { case ((r, c), v) => (r, c, v) } &&
+        g.size == model.size &&
+        g.maxRow == model.keys.map(_._1).maxOption.getOrElse(0) &&
+        g.maxCol == model.keys.map(_._2).maxOption.getOrElse(0) &&
         (0 to 31).forall(r => (0 to 21).forall(c =>
-          (dense.get(r, c) == null) == (sparse.get(r, c) == null))) &&
-        dense.countIn(0, 31, 0, 21) == sparse.countIn(0, 31, 0, 21)
+          Option(g.get(r, c)).map(_.value) == model.get((r, c)))) &&
+        g.countIn(0, 31, 0, 21) == model.size &&
+        g.countIn(2, 9, 3, 7) == count(2, 9, 3, 7)
     })
   }
 
-  test("detectIslands: dense flood fill == hash-set flood fill") {
-    // the dense backing takes a different detect path (bitset visited +
-    // grid-null membership, floodFillDense) than the map backing (LongHashSet
-    // flood fill); islands must be indistinguishable — same ranges, sizes,
-    // and float-exact confidences — over arbitrary sparse layouts incl.
-    // multi-island, diagonal-connected, and empty-tail-row shapes
+  test("detectIslands: identical when the declared bounds are padded") {
+    // the flood fill strides its visited bitset by the declared width and
+    // spans the used rows only; islands must be indistinguishable — same
+    // ranges, sizes, and float-exact confidences — when the same cells sit
+    // in a grid padded with empty rows and columns, over arbitrary sparse
+    // layouts incl. multi-island and diagonal-connected shapes
     check(Prop.forAll(Gen.listOfN(70, cellGen),
-        Gen.chooseNum(10, 35), Gen.chooseNum(8, 25)) { (coords, dr, dc) =>
-      val inBounds = coords.distinct.filter { case (r, c) => r < dr && c < dc }
-      val dense = CellGrid.dense(dr, dc)
-      val sparse = new CellGrid
-      inBounds.foreach { case (r, c) =>
-        dense.put(Cell.str(s"v$r-$c", r, c))
-        sparse.put(Cell.str(s"v$r-$c", r, c))
-      }
+        Gen.chooseNum(1, 40), Gen.chooseNum(1, 30)) { (coords, padR, padC) =>
+      val cells = coords.distinct
+      val tight = gridOf(cells)
+      val padded = new CellGrid(tight.maxRow + 1 + padR, tight.maxCol + 1 + padC)
+      cells.foreach { case (r, c) => padded.put(Cell.str(s"v$r-$c", r, c)) }
       def obs(g: CellGrid) = IslandDetector.detectIslands(g).map(i =>
         (i.minRow, i.minCol, i.maxRow, i.maxCol, i.cells.size, i.confidence, i.density, i.hasHeaders))
-      obs(dense) == obs(sparse)
+      obs(tight) == obs(padded)
     })
   }
 
@@ -653,7 +655,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("columnar grid: cursor/primitive reads == materialized Cell reads") {
-    // the detect kernel reads dense grids through GridCursor / presentAt /
+    // the detect kernel reads grids through GridCursor / presentAt /
     // valueAt / appendValueAt without materializing Cell objects, while the
     // extraction path materializes (and caches) Cells via get. Both views
     // must agree on every observable, in BOTH probe orders: cursor-first

@@ -3,11 +3,13 @@
 
     python3 tools/test_only_surface.py [REPO_ROOT]
 
-Lists every public `def`, `object`, `class`, `case class` and `trait` in
-src/main/scala/graft/{core,ops,spark,functions} that no code in src/main
-(outside those four packages) or perfbench/src reaches, following references
-transitively through the bodies of the declarations it does reach. Exits 1
-if it lists any, 0 otherwise.
+Lists every public `def`, `val`, `lazy val`, `object`, `class`, `case class`
+and `trait` in src/main/scala/graft/{core,ops,spark,functions} that no code
+in src/main (outside those four packages) or perfbench/src reaches,
+following references transitively through the bodies of the declarations it
+does reach. Exits 1 if it lists any, 0 otherwise. A `val` local to a def is
+part of that def's body, not a declaration; constructor parameters and
+`var`s are not reported.
 
 The scan works on names, after comments are stripped:
 
@@ -35,7 +37,7 @@ import sys
 from collections import defaultdict
 
 PACKAGES = ("core", "ops", "spark", "functions")
-REPORTED = ("def", "object", "class", "trait")
+REPORTED = ("def", "val", "object", "class", "trait")
 CONTAINERS = ("object", "class", "trait")
 # Loaded by class name from configuration, never named in code.
 ENTRY_POINTS = ("GraftExtensions",)  # spark.sql.extensions
